@@ -35,9 +35,9 @@ from .kernel.geom import (
     within_bbox_mask,
 )
 from .kernel.layout import (
-    assemble_text_layout,
-    build_word_chars,
     page_text,
+    page_textmap,
+    resolve_layout_kwargs,
     search_text,
     simple_text,
 )
@@ -480,38 +480,9 @@ class Page:
     # --- text ---------------------------------------------------------------
     def extract_text(self, **kwargs) -> str:
         settings, rest = _split_kwargs(kwargs)
-        layout = bool(rest.pop("layout", False))
-        layout_kwargs = {}
-        # render directions apply to BOTH layout and plain assembly
-        # (reference text.py extract_text kwargs) — route them through
-        # instead of silently dropping (round-5 reference-port finding)
-        for k in ("line_dir_render", "char_dir_render"):
-            if k in rest:
-                layout_kwargs[k] = rest.pop(k)
-        if layout:
-            # only a DEFAULT-derived width/height yields to *_chars; an
-            # explicit user value must conflict (reference WordMap
-            # to_textmap raises — test_utils.py:386-394)
-            explicit_w = "layout_width" in rest
-            explicit_h = "layout_height" in rest
-            layout_kwargs.update(
-                layout_bbox=rest.pop("layout_bbox", self.bbox),
-                layout_width=rest.pop(
-                    "layout_width", self.bbox[2] - self.bbox[0]
-                ),
-                layout_height=rest.pop(
-                    "layout_height", self.bbox[3] - self.bbox[1]
-                ),
-            )
-            for k in ("x_density", "y_density", "x_shift", "y_shift",
-                      "layout_width_chars", "layout_height_chars"):
-                if k in rest:
-                    layout_kwargs[k] = rest.pop(k)
-            if "layout_width_chars" in layout_kwargs and not explicit_w:
-                layout_kwargs.pop("layout_width", None)
-            if "layout_height_chars" in layout_kwargs and not explicit_h:
-                layout_kwargs.pop("layout_height", None)
-        return page_text(self._chars, settings, layout=layout, **layout_kwargs)
+        return page_text(
+            self._chars, settings, **resolve_layout_kwargs(rest, self.bbox)
+        )
 
     def extract_text_simple(self, **kwargs) -> str:
         return simple_text(self._chars, **kwargs)
@@ -521,32 +492,12 @@ class Page:
         words, _, _ = extract_words_frame(self._chars, settings)
         return words.to_dict("records")
 
-    def _textmap(self, settings, layout: bool):
-        """(rendered, provenance) in layout or plain mode (reference
-        get_textmap: layout=False is the DEFAULT for search/lines)."""
-        words, cwid, cwpos = extract_words_frame(self._chars, settings)
-        if len(words) == 0:
-            return None
-        wc = build_word_chars(self._chars, cwid, cwpos, len(words))
-        if layout:
-            return assemble_text_layout(
-                words, wc, layout_bbox=self.bbox,
-                layout_width=self.bbox[2] - self.bbox[0],
-                layout_height=self.bbox[3] - self.bbox[1],
-            )
-        from .kernel.layout import assemble_text_plain_map
-
-        return assemble_text_plain_map(
-            words, wc, y_tolerance=settings.y_tolerance,
-            use_text_flow=settings.use_text_flow,
-        )
-
     def search(self, pattern, regex: bool = True, case: bool = True,
                main_group: int = 0, return_chars: bool = True,
                **kwargs) -> List[dict]:
         layout = bool(kwargs.pop("layout", False))
         settings, _ = _split_kwargs(kwargs)
-        tm = self._textmap(settings, layout)
+        tm = page_textmap(self._chars, settings, layout, self.bbox)
         if tm is None:
             return []
         rendered, prov = tm
@@ -563,7 +514,7 @@ class Page:
         layout = bool(kwargs.pop("layout", False))
         pat = r" *([^\n]+?) *(\n|$)" if strip else r"([^\n]+)"
         settings, _ = _split_kwargs(kwargs)
-        tm = self._textmap(settings, layout)
+        tm = page_textmap(self._chars, settings, layout, self.bbox)
         if tm is None:
             return []
         rendered, prov = tm

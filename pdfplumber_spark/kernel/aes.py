@@ -162,28 +162,6 @@ def _encrypt_block_words(cols, kwords, nr) -> int:
     return (o0 << 96) | (o1 << 64) | (o2 << 32) | o3
 
 
-def decrypt_block(block: bytes, rk: list) -> bytes:
-    nr = len(rk) - 1
-    s = bytes(a ^ b for a, b in zip(block, rk[nr]))
-    for rnd in range(nr - 1, 0, -1):
-        # InvShiftRows + InvSubBytes
-        t = bytes(
-            _INV_SBOX[s[(i - 4 * (i % 4)) % 16]] for i in range(16)
-        )
-        x = bytes(a ^ b for a, b in zip(t, rk[rnd]))
-        # InvMixColumns
-        m = bytearray(16)
-        for c in range(4):
-            a0, a1, a2, a3 = x[4 * c:4 * c + 4]
-            m[4 * c + 0] = _M14[a0] ^ _M11[a1] ^ _M13[a2] ^ _M9[a3]
-            m[4 * c + 1] = _M9[a0] ^ _M14[a1] ^ _M11[a2] ^ _M13[a3]
-            m[4 * c + 2] = _M13[a0] ^ _M9[a1] ^ _M14[a2] ^ _M11[a3]
-            m[4 * c + 3] = _M11[a0] ^ _M13[a1] ^ _M9[a2] ^ _M14[a3]
-        s = bytes(m)
-    t = bytes(_INV_SBOX[s[(i - 4 * (i % 4)) % 16]] for i in range(16))
-    return bytes(a ^ b for a, b in zip(t, rk[0]))
-
-
 def _decrypt_blocks_np(data: bytes, key: bytes):
     """Vectorized AES-ECB decrypt of all 16-byte blocks at once (numpy).
 

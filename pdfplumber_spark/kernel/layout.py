@@ -1,7 +1,14 @@
 """Text assembly: words -> lines -> rendered page text (+ provenance map).
 
+``page_text_ca`` is the one char -> text implementation: plain and layout
+mode plus render directions, straight from :class:`CharArrays` (parser
+buffers or a char frame). ``page_text`` adapts a char frame to it and
+``page_textmap`` builds the provenance-carrying textmap that search and
+text-line extraction read; ``resolve_layout_kwargs`` turns
+``extract_text`` kwargs into their arguments.
+
 Re-expresses the reference's WordMap/TextMap
-(``/root/reference/pdfplumber/utils/text.py:95-420,713-781``):
+(``pdfplumber/utils/text.py:95-420,713-781``):
 
 - ``assemble_text`` — the simple (non-layout) path: words clustered into
   lines on the line-direction key, joined with single spaces / newlines
@@ -9,6 +16,7 @@ Re-expresses the reference's WordMap/TextMap
 - ``assemble_text_layout`` — density-based layout imputation: newlines
   imputed from line position / y_density, spaces from word position /
   x_density, with Python banker's ``round`` (``text.py:241-420``).
+- ``assemble_text_plain_map`` — the non-layout textmap with provenance.
 - ``render_directions`` — btt/rtl render post-transforms: reverse lines /
   reverse chars / pad + transpose columns (``text.py:113-143``).
 - ``simple_text`` — extract_text_simple: doctop clusters + collate_line
@@ -29,12 +37,14 @@ import numpy as np
 import pandas as pd
 
 from .cluster import assign_clusters, group_rows_by_cluster
+from .geom import frame_bbox
 from .words import (
     DEFAULT_X_TOLERANCE,
     DEFAULT_Y_TOLERANCE,
     LIGATURES,
+    CharArrays,
     WordSettings,
-    extract_words_frame,
+    extract_words_ca,
     line_cluster_values,
     validate_directions,
 )
@@ -44,10 +54,6 @@ DEFAULT_Y_DENSITY = 13.0
 
 _BBOX_ORIGIN_IDX = {"ttb": 1, "btt": 3, "ltr": 0, "rtl": 2}
 _POSITION_COL = {"ttb": "top", "btt": "bottom", "ltr": "x0", "rtl": "x1"}
-
-
-def word_line_key(words: pd.DataFrame, line_dir: str) -> np.ndarray:
-    return line_cluster_values(words, line_dir)
 
 
 def render_directions(text: str, line_dir_render: str, char_dir_render: str) -> str:
@@ -71,7 +77,7 @@ def render_directions(text: str, line_dir_render: str, char_dir_render: str) -> 
 
 
 def assemble_text(
-    words: pd.DataFrame,
+    words,
     line_dir: str = "ttb",
     char_dir: str = "ltr",
     x_tolerance: float = DEFAULT_X_TOLERANCE,
@@ -82,9 +88,10 @@ def assemble_text(
 ) -> str:
     """Non-layout extract_text body (``text.py:730-758``).
 
-    Words arrive in extractor emission order; they are clustered on the
-    line key (tolerance chooses y vs x by the *render* line direction, a
-    reference quirk at ``text.py:743-747``) and joined.
+    Words (``WordArrays`` columns) arrive in extractor emission order;
+    they are clustered on the line key (tolerance chooses y vs x by the
+    *render* line direction, a reference quirk at ``text.py:743-747``) and
+    joined.
     ``preserve_order`` (use_text_flow, issue #982) groups adjacent runs
     instead of re-sorting clusters, keeping stream order.
     """
@@ -92,7 +99,7 @@ def assemble_text(
         return ""
     ldr = line_dir_render or line_dir
     cdr = char_dir_render or char_dir
-    vals = word_line_key(words, line_dir)
+    vals = line_cluster_values(words, line_dir)
     tol = y_tolerance if ldr in ("ttb", "btt") else x_tolerance
     cids = assign_clusters(vals, tol)
     groups = group_rows_by_cluster(cids, preserve_order=preserve_order)
@@ -101,9 +108,21 @@ def assemble_text(
     return render_directions(base, ldr, cdr)
 
 
+def _word_text(word_chars: Tuple[np.ndarray, np.ndarray], expansions: dict):
+    """(text, provenance rows) of one word: each char ligature-expanded,
+    every output character tagged with its source row."""
+    pieces: List[str] = []
+    prow: List[int] = []
+    for t, r in zip(*word_chars):
+        expanded = expansions.get(t, t)
+        pieces.append(expanded)
+        prow.extend([r] * len(expanded))
+    return "".join(pieces), np.asarray(prow, dtype=np.int64)
+
+
 def assemble_text_layout(
-    words: pd.DataFrame,
-    word_chars: List[pd.DataFrame],
+    words,
+    word_chars: List[Tuple[np.ndarray, np.ndarray]],
     layout_bbox: Tuple[float, float, float, float],
     layout_width: float = 0,
     layout_height: float = 0,
@@ -118,16 +137,15 @@ def assemble_text_layout(
     char_dir: str = "ltr",
     line_dir_render: Optional[str] = None,
     char_dir_render: Optional[str] = None,
-    presorted: bool = True,
-    use_text_flow: bool = False,
     expand_ligatures: bool = True,
 ) -> Tuple[str, np.ndarray]:
     """Layout-mode textmap (``text.py:241-420``), returning
     ``(rendered_string, provenance)``.
 
-    ``word_chars[i]`` is the char frame of word i **in emission order** with
-    a ``_row`` column giving each char's global row id. Provenance indexes
-    refer to ``_row`` values; -1 marks imputed whitespace/newlines.
+    Words arrive presorted in extractor emission order (the reference's
+    ``presorted=True`` call); ``word_chars[i]`` is word i's
+    ``(texts, rows)`` pair from :func:`build_word_char_arrays`. Provenance
+    indexes refer to those rows; -1 marks imputed whitespace/newlines.
 
     Note: provenance is tracked for the pre-render string (identical to the
     rendered string for ttb/ltr, the only case search() needs here).
@@ -148,20 +166,8 @@ def assemble_text_layout(
     if not layout_height_chars:
         layout_height_chars = int(round(layout_height / y_density))
 
-    keep_input_order = presorted or use_text_flow
-    if not keep_input_order and not hasattr(words, "iloc"):
-        # reorder path needs row indexing — promote WordArrays to a frame
-        import pandas as pd
-
-        words = pd.DataFrame(dict(words))
-    vals = word_line_key(words, line_dir)
-    if not keep_input_order:
-        order = np.argsort(vals, kind="stable")
-        words = words.iloc[order].reset_index(drop=True)
-        word_chars = [word_chars[i] for i in order]
-        vals = vals[order]
-    cids = assign_clusters(vals, y_tolerance)
-    line_groups = group_rows_by_cluster(cids, preserve_order=keep_input_order)
+    cids = assign_clusters(line_cluster_values(words, line_dir), y_tolerance)
+    line_groups = group_rows_by_cluster(cids, preserve_order=True)
 
     y_origin = layout_bbox[_BBOX_ORIGIN_IDX[line_dir]]
     x_origin = layout_bbox[_BBOX_ORIGIN_IDX[char_dir]]
@@ -205,16 +211,7 @@ def assemble_text_layout(
         num_newlines += prepend
 
         line_len = 0
-        # within line: sort words by char key unless preserving order
-        if keep_input_order:
-            word_order = grp
-        else:
-            from .words import char_sort_keys
-
-            k1, k2 = char_sort_keys(words.iloc[grp], char_dir)
-            word_order = np.asarray(grp)[np.lexsort((k2, k1))]
-
-        for wi in word_order:
+        for wi in grp:
             x_dist = (
                 (char_pos_vals[wi] - (x_origin + x_shift)) * x_adj / x_density
             )
@@ -224,21 +221,9 @@ def assemble_text_layout(
                 total_len += n_spaces
                 last_char = " "
             line_len += n_spaces
-            wc = word_chars[wi]
-            if isinstance(wc, tuple):  # array-native fast path
-                txts, rows = wc
-            else:
-                txts = wc["text"].to_numpy(dtype=object)
-                rows = wc["_row"].to_numpy(dtype=np.int64)
-            pieces = []
-            prow = []
-            for t, r in zip(txts, rows):
-                expanded = expansions.get(t, t)
-                pieces.append(expanded)
-                prow.extend([r] * len(expanded))
-            txt = "".join(pieces)
+            txt, rows = _word_text(word_chars[wi], expansions)
             if txt:
-                emit(txt, np.asarray(prow, dtype=np.int64))
+                emit(txt, rows)
                 total_len += len(txt)
                 last_char = txt[-1]
             line_len += len(txt)
@@ -293,65 +278,35 @@ def simple_text(
     return "\n".join(collate_line(chars.iloc[g], x_tolerance) for g in groups)
 
 
-def page_text(
-    chars: pd.DataFrame,
-    settings: Optional[WordSettings] = None,
-    layout: bool = False,
-    layout_bbox: Optional[Tuple[float, float, float, float]] = None,
-    x_density: float = DEFAULT_X_DENSITY,
-    y_density: float = DEFAULT_Y_DENSITY,
-    x_shift: float = 0,
-    y_shift: float = 0,
-    layout_width: float = 0,
-    layout_height: float = 0,
-    layout_width_chars: int = 0,
-    layout_height_chars: int = 0,
-    line_dir_render: Optional[str] = None,
-    char_dir_render: Optional[str] = None,
-) -> str:
-    """extract_text over a char frame (``text.py:713-758`` semantics)."""
-    s = settings or WordSettings()
-    if len(chars) == 0:
-        return ""
-    words, char_word_id, char_word_pos = extract_words_frame(chars, s)
-    if not layout:
-        return assemble_text(
-            words,
-            line_dir=s.line_dir,
-            char_dir=s.char_dir,
-            x_tolerance=s.x_tolerance,
-            y_tolerance=s.y_tolerance,
-            line_dir_render=line_dir_render,
-            char_dir_render=char_dir_render,
-            preserve_order=s.use_text_flow,
-        )
-    if layout_bbox is None:
-        from .geom import frame_bbox
+_LAYOUT_KEYS = (
+    "x_density", "y_density", "x_shift", "y_shift",
+    "layout_width", "layout_height", "layout_width_chars", "layout_height_chars",
+)
 
-        layout_bbox = frame_bbox(chars)
-    word_chars = build_word_chars(chars, char_word_id, char_word_pos, len(words))
-    text, _ = assemble_text_layout(
-        words,
-        word_chars,
-        layout_bbox=layout_bbox,
-        layout_width=layout_width,
-        layout_height=layout_height,
-        layout_width_chars=layout_width_chars,
-        layout_height_chars=layout_height_chars,
-        x_density=x_density,
-        y_density=y_density,
-        x_shift=x_shift,
-        y_shift=y_shift,
-        y_tolerance=s.y_tolerance,
-        line_dir=s.line_dir,
-        char_dir=s.char_dir,
-        line_dir_render=line_dir_render,
-        char_dir_render=char_dir_render,
-        presorted=True,
-        use_text_flow=s.use_text_flow,
-        expand_ligatures=s.expand_ligatures,
-    )
-    return text
+
+def resolve_layout_kwargs(rest: dict, bbox) -> dict:
+    """Pop ``extract_text``'s layout and render kwargs out of ``rest`` ->
+    keyword arguments for :func:`page_text`.
+
+    ``bbox`` supplies the layout defaults: ``layout_bbox`` itself and the
+    ``layout_width``/``layout_height`` extent. Only a default-derived
+    width/height yields to ``*_chars``; an explicit one conflicts
+    (reference WordMap.to_textmap raises — test_utils.py:386-394). Render
+    directions apply to both layout and plain assembly."""
+    out = {"layout": bool(rest.pop("layout", False))}
+    for k in ("line_dir_render", "char_dir_render"):
+        if k in rest:
+            out[k] = rest.pop(k)
+    if out["layout"]:
+        out["layout_bbox"] = rest.pop("layout_bbox", bbox)
+        for k in _LAYOUT_KEYS:
+            if k in rest:
+                out[k] = rest.pop(k)
+        if "layout_width" not in out and "layout_width_chars" not in out:
+            out["layout_width"] = bbox[2] - bbox[0]
+        if "layout_height" not in out and "layout_height_chars" not in out:
+            out["layout_height"] = bbox[3] - bbox[1]
+    return out
 
 
 def build_word_char_arrays(
@@ -360,9 +315,9 @@ def build_word_char_arrays(
     char_word_pos: np.ndarray,
     n_words: int,
 ) -> list:
-    """Array-native ``build_word_chars``: per-word (texts, rows) tuples in
-    word order, chars within each word in assignment order — no per-word
-    pandas frames (the layout fast path's unlock)."""
+    """Per-word ``(texts, rows)`` pairs in word order, chars within each
+    word in extractor assignment order (``char_word_pos``); ``rows`` are
+    the chars' 0..n-1 positions, the provenance the textmaps carry."""
     kept = np.flatnonzero(char_word_id >= 0)
     order = kept[np.lexsort((char_word_pos[kept], char_word_id[kept]))]
     wids = char_word_id[order]
@@ -378,82 +333,105 @@ def build_word_char_arrays(
     return out
 
 
-def page_text_layout_ca(
-    ca,
+def page_text_ca(
+    ca: CharArrays,
     settings: Optional[WordSettings] = None,
+    layout: bool = False,
     layout_bbox: Optional[Tuple[float, float, float, float]] = None,
-    layout_width: float = 0,
-    layout_height: float = 0,
+    line_dir_render: Optional[str] = None,
+    char_dir_render: Optional[str] = None,
     **layout_kwargs,
 ) -> str:
-    """layout=True extract_text straight from CharArrays (parser buffers) —
-    the layout-branch fast path (byte-identical to ``page_text(layout=True)``,
-    pinned by tests/test_kernel_layout.py)."""
-    from .words import extract_words_ca
+    """extract_text (``text.py:713-758``) straight from CharArrays — the
+    one char -> text implementation, no pandas for the char table.
 
+    Layout mode needs ``layout_bbox``; ``layout_kwargs`` are the rest of
+    :func:`assemble_text_layout`'s geometry (``layout_width``/``_height``
+    [``_chars``], ``x``/``y_density``, ``x``/``y_shift``)."""
     s = settings or WordSettings()
     if ca.n == 0:
         return ""
     words, cwid, cwpos = extract_words_ca(ca, s, as_frame=False)
-    word_chars = build_word_char_arrays(ca.text, cwid, cwpos, len(words))
+    if not layout:
+        return assemble_text(
+            words,
+            line_dir=s.line_dir,
+            char_dir=s.char_dir,
+            x_tolerance=s.x_tolerance,
+            y_tolerance=s.y_tolerance,
+            line_dir_render=line_dir_render,
+            char_dir_render=char_dir_render,
+            preserve_order=s.use_text_flow,
+        )
     text, _ = assemble_text_layout(
         words,
-        word_chars,
+        build_word_char_arrays(ca.text, cwid, cwpos, len(words)),
         layout_bbox=layout_bbox,
-        layout_width=layout_width,
-        layout_height=layout_height,
         y_tolerance=s.y_tolerance,
         line_dir=s.line_dir,
         char_dir=s.char_dir,
-        presorted=True,
-        use_text_flow=s.use_text_flow,
+        line_dir_render=line_dir_render,
+        char_dir_render=char_dir_render,
         expand_ligatures=s.expand_ligatures,
         **layout_kwargs,
     )
     return text
 
 
-def page_text_ca(ca, settings: Optional[WordSettings] = None) -> str:
-    """Non-layout extract_text straight from CharArrays (parser buffers) —
-    the extraction fast path (no pandas for the char table)."""
-    from .words import extract_words_ca
-
-    s = settings or WordSettings()
-    if ca.n == 0:
-        return ""
-    words, _, _ = extract_words_ca(ca, s, as_frame=False)
-    return assemble_text(
-        words,
-        line_dir=s.line_dir,
-        char_dir=s.char_dir,
-        x_tolerance=s.x_tolerance,
-        y_tolerance=s.y_tolerance,
-        preserve_order=s.use_text_flow,
-    )
-
-
-def build_word_chars(
+def page_text(
     chars: pd.DataFrame,
-    char_word_id: np.ndarray,
-    char_word_pos: np.ndarray,
-    n_words: int,
-) -> List[pd.DataFrame]:
-    """Per-word char frames (with ``_row`` provenance), in word order; chars
-    within each word in extractor assignment order (``char_word_pos``)."""
-    df = chars.reset_index(drop=True)
-    df = df.assign(
-        _row=np.arange(len(df)), _wid=char_word_id, _pos=char_word_pos
+    settings: Optional[WordSettings] = None,
+    layout: bool = False,
+    layout_bbox: Optional[Tuple[float, float, float, float]] = None,
+    **kwargs,
+) -> str:
+    """extract_text over a char frame: :func:`page_text_ca` on the frame's
+    arrays; layout mode defaults ``layout_bbox`` to the chars' extent."""
+    s = settings or WordSettings()
+    if len(chars) == 0:
+        return ""
+    if layout and layout_bbox is None:
+        layout_bbox = frame_bbox(chars)
+    ca = CharArrays(chars.reset_index(drop=True), s.extra_attrs)
+    return page_text_ca(ca, s, layout=layout, layout_bbox=layout_bbox, **kwargs)
+
+
+def page_textmap(
+    chars: pd.DataFrame,
+    settings: Optional[WordSettings] = None,
+    layout: bool = False,
+    layout_bbox: Optional[Tuple[float, float, float, float]] = None,
+) -> Optional[Tuple[str, np.ndarray]]:
+    """``(rendered, provenance)`` textmap of a char frame — the reference
+    get_textmap read by search and extract_text_lines (layout=False is its
+    default). Provenance indexes the frame's rows by position. Layout mode
+    spans ``layout_bbox`` (default: the chars' extent). None when the page
+    has no words."""
+    s = settings or WordSettings()
+    if len(chars) == 0:
+        return None
+    ca = CharArrays(chars.reset_index(drop=True), s.extra_attrs)
+    words, cwid, cwpos = extract_words_ca(ca, s, as_frame=False)
+    if len(words) == 0:
+        return None
+    word_chars = build_word_char_arrays(ca.text, cwid, cwpos, len(words))
+    if layout:
+        bbox = frame_bbox(chars) if layout_bbox is None else layout_bbox
+        return assemble_text_layout(
+            words, word_chars, layout_bbox=bbox,
+            layout_width=bbox[2] - bbox[0], layout_height=bbox[3] - bbox[1],
+            y_tolerance=s.y_tolerance, line_dir=s.line_dir,
+            char_dir=s.char_dir, expand_ligatures=s.expand_ligatures,
+        )
+    return assemble_text_plain_map(
+        words, word_chars, line_dir=s.line_dir, y_tolerance=s.y_tolerance,
+        use_text_flow=s.use_text_flow, expand_ligatures=s.expand_ligatures,
     )
-    kept = df[df["_wid"] >= 0].sort_values(["_wid", "_pos"], kind="stable")
-    out: List[pd.DataFrame] = [kept.iloc[0:0]] * n_words
-    for wid, grp in kept.groupby("_wid", sort=True):
-        out[int(wid)] = grp
-    return out
 
 
 def assemble_text_plain_map(
-    words: pd.DataFrame,
-    word_chars: List[pd.DataFrame],
+    words,
+    word_chars: List[Tuple[np.ndarray, np.ndarray]],
     line_dir: str = "ttb",
     y_tolerance: float = DEFAULT_Y_TOLERANCE,
     use_text_flow: bool = False,
@@ -467,8 +445,7 @@ def assemble_text_plain_map(
     if len(words) == 0:
         return "", np.zeros(0, dtype=np.int64)
     expansions = LIGATURES if expand_ligatures else {}
-    vals = word_line_key(words, line_dir)
-    cids = assign_clusters(vals, y_tolerance)
+    cids = assign_clusters(line_cluster_values(words, line_dir), y_tolerance)
     groups = group_rows_by_cluster(cids, preserve_order=use_text_flow)
     out: List[str] = []
     prov: List[np.ndarray] = []
@@ -480,22 +457,10 @@ def assemble_text_plain_map(
             if k:
                 out.append(" ")
                 prov.append(np.full(1, -1, dtype=np.int64))
-            wc = word_chars[wi]
-            if isinstance(wc, tuple):
-                txts, rows = wc
-            else:
-                txts = wc["text"].to_numpy(dtype=object)
-                rows = wc["_row"].to_numpy(dtype=np.int64)
-            pieces: List[str] = []
-            prow: List[int] = []
-            for t, r in zip(txts, rows):
-                expanded = expansions.get(t, t)
-                pieces.append(expanded)
-                prow.extend([r] * len(expanded))
-            txt = "".join(pieces)
+            txt, rows = _word_text(word_chars[wi], expansions)
             if txt:
                 out.append(txt)
-                prov.append(np.asarray(prow, dtype=np.int64))
+                prov.append(rows)
     return "".join(out), (
         np.concatenate(prov) if prov else np.zeros(0, dtype=np.int64)
     )
@@ -561,10 +526,3 @@ def search_text(
         cols.append("chars")
     return pd.DataFrame(rows, columns=cols)
 
-
-def extract_text_lines_frame(
-    text: str, provenance: np.ndarray, chars: pd.DataFrame, strip: bool = True
-) -> pd.DataFrame:
-    """Line records from a layout textmap (``text.py:212-230``)."""
-    pat = r" *([^\n]+?) *(\n|$)" if strip else r"([^\n]+)"
-    return search_text(text, provenance, chars, pat, main_group=1)

@@ -1,5 +1,5 @@
-"""Corpus text-analysis kernels: language ID, quality scoring, token
-counting, fingerprinting, shingling / MinHash / SimHash.
+"""Corpus text-analysis kernels: token counting, language stopword
+profiles, FNV hashing, shingling / MinHash / SimHash.
 
 All functions are vectorized over pandas Series / numpy arrays and are
 deterministic — the Spark operators in ``operators/`` call them Arrow-batched;
@@ -34,7 +34,7 @@ def count_ws_tokens(texts: pd.Series) -> np.ndarray:
     return texts.fillna("").str.split().str.len().fillna(0).to_numpy(np.int64)
 
 
-# --- language ID ------------------------------------------------------------
+# --- language profiles ----------------------------------------------------
 
 # tiny stopword profiles (top function words) — n-gram-free heuristic that is
 # fully SQL-expressible for the oracle
@@ -44,66 +44,6 @@ LANG_PROFILES = {
     "fr": {"le", "la", "les", "et", "de", "des", "un", "une", "est", "que"},
     "es": {"el", "la", "los", "las", "de", "que", "y", "en", "un", "es"},
 }
-
-_WORD_RE = re.compile(r"[a-zA-ZäöüßéèêàâçñáíóúÄÖÜ]+")
-
-
-def detect_language(texts: pd.Series) -> pd.Series:
-    """Best-scoring stopword profile per text; 'und' (unknown) if no hits."""
-    out = []
-    for t in texts.fillna(""):
-        words = [w.lower() for w in _WORD_RE.findall(t)]
-        if not words:
-            out.append("und")
-            continue
-        best_lang, best_hits = "und", 0
-        for lang, prof in LANG_PROFILES.items():
-            hits = sum(1 for w in words if w in prof)
-            if hits > best_hits:
-                best_lang, best_hits = lang, hits
-        out.append(best_lang)
-    return pd.Series(out, index=texts.index, dtype=object)
-
-
-# --- quality scoring --------------------------------------------------------
-
-def quality_features(texts: pd.Series) -> pd.DataFrame:
-    """Shallow quality features (Gopher/C4-style heuristics, public rules):
-    n_chars, n_words, mean_word_len, alpha_ratio, punct_ratio, stop_ratio,
-    and a composite [0,1] quality score."""
-    s = texts.fillna("")
-    n_chars = s.str.len().to_numpy(np.int64)
-    words = s.str.split()
-    n_words = words.str.len().fillna(0).to_numpy(np.int64)
-    total_word_chars = s.str.count(r"\S").to_numpy(np.int64)
-    mean_word_len = np.where(n_words > 0, total_word_chars / np.maximum(n_words, 1), 0.0)
-    alpha = s.str.count(r"[A-Za-z]").to_numpy(np.int64)
-    punct = s.str.count(r"[^\w\s]").to_numpy(np.int64)
-    alpha_ratio = np.where(n_chars > 0, alpha / np.maximum(n_chars, 1), 0.0)
-    punct_ratio = np.where(n_chars > 0, punct / np.maximum(n_chars, 1), 0.0)
-    stop_hits = (
-        s.str.lower().str.count(r"\b(?:the|and|of|to|in|is|that|it|for|was)\b")
-        .to_numpy(np.int64)
-    )
-    stop_ratio = np.where(n_words > 0, stop_hits / np.maximum(n_words, 1), 0.0)
-    score = (
-        0.25 * np.clip(n_words / 100.0, 0, 1)
-        + 0.25 * np.clip(alpha_ratio / 0.7, 0, 1)
-        + 0.25 * (1.0 - np.clip(punct_ratio / 0.3, 0, 1))
-        + 0.25 * np.clip((mean_word_len - 2.0) / 6.0, 0, 1)
-    )
-    return pd.DataFrame(
-        {
-            "n_chars": n_chars,
-            "n_words": n_words,
-            "mean_word_len": mean_word_len,
-            "alpha_ratio": alpha_ratio,
-            "punct_ratio": punct_ratio,
-            "stop_ratio": stop_ratio,
-            "quality_score": score,
-        },
-        index=texts.index,
-    )
 
 
 # --- hashing / fingerprints -------------------------------------------------
@@ -120,15 +60,6 @@ def fnv1a_64(data: bytes) -> int:
         h ^= b
         h = (h * 0x100000001B3) & 0xFFFFFFFFFFFFFFFF
     return h
-
-
-def fingerprint64(texts: pd.Series) -> np.ndarray:
-    """Per-text 64-bit content fingerprint (FNV-1a over utf-8 bytes),
-    returned as int64 (reinterpreted) for parquet friendliness."""
-    out = np.empty(len(texts), dtype=np.uint64)
-    for i, t in enumerate(texts.fillna("")):
-        out[i] = fnv1a_64(t.encode("utf-8"))
-    return out.view(np.int64)
 
 
 def shingles(text: str, k: int = 5) -> List[str]:

@@ -179,7 +179,7 @@ def _char_key_arrays(
     return -ca.x1[idx], -ca.x0[idx]  # rtl
 
 
-# DataFrame-facing shims (used by layout.py and tests)
+# word-column shim (used by layout.py)
 def _f64(col) -> np.ndarray:
     """Column -> float64 ndarray; accepts pandas Series AND the raw numpy
     columns of WordArrays (the no-pandas fast path)."""
@@ -194,19 +194,6 @@ def line_cluster_values(df, line_dir: str) -> np.ndarray:
     if line_dir == "ltr":
         return _f64(df["x0"])
     return -_f64(df["x1"])
-
-
-def char_sort_keys(df, char_dir: str) -> Tuple[np.ndarray, np.ndarray]:
-    if char_dir == "ttb":
-        return _f64(df["top"]), _f64(df["bottom"])
-    if char_dir == "btt":
-        t = _f64(df["top"])
-        h = _f64(df["height"])
-        return -(t + h), -t
-    if char_dir == "ltr":
-        x = _f64(df["x0"])
-        return x, x
-    return -_f64(df["x1"]), -_f64(df["x0"])
 
 
 def _page_text_tables(ca: CharArrays, s: WordSettings):
@@ -244,23 +231,17 @@ def _page_text_tables(ca: CharArrays, s: WordSettings):
     return is_blank, is_punct, etext
 
 
-def _page_char_flags(ca: CharArrays, s: WordSettings):
-    b, p, _ = _page_text_tables(ca, s)
-    return b, p
-
-
 def _boundary_word_ids(
     ca: CharArrays, idx: np.ndarray, direction: str, s: WordSettings,
-    flags=None,
+    flags: Tuple[np.ndarray, np.ndarray],
 ) -> np.ndarray:
     """Word id per char of one line (indices ``idx``, already in final char
     order); -1 marks dropped blanks. Implements the stateful splitter
     (``text.py:593-639``) via shifts: the reference's ``current_word[-1]``
     is always the previous *kept* char; forced boundaries at/after
-    punctuation words and after dropped blanks."""
+    punctuation words and after dropped blanks. ``flags`` are the page's
+    (is_blank, is_punct) arrays from ``_page_text_tables``."""
     n = len(idx)
-    if flags is None:
-        flags = _page_char_flags(ca, s)
     is_blank = flags[0][idx]
     is_punct = flags[1][idx]
 
@@ -497,29 +478,47 @@ def extract_words_ca(
     return pd.DataFrame(data, columns=cols), char_word_id, char_word_pos
 
 
-def dedupe_chars_frame(chars: pd.DataFrame, tolerance: float = 1) -> pd.DataFrame:
-    """Drop near-duplicate chars (``text.py:784-804``).
+def dedupe_keep_mask(
+    keys: Sequence, doctop: np.ndarray, x0: np.ndarray, tolerance: float = 1
+) -> np.ndarray:
+    """Keep mask of ``dedupe_chars`` (``text.py:784-804``) over per-char
+    arrays.
 
-    Within each (fontname, size, upright, text) group, cluster positions on
-    doctop then x0 (chained, tolerance) and keep the (doctop, x0)-minimum of
-    each 2-D cluster; output restored to ingestion order.
-    """
+    ``keys`` holds the per-char (fontname, size, upright, text) columns.
+    Within each key group, positions cluster on doctop then x0 (chained,
+    ``tolerance``) and the (doctop, x0)-minimum of each 2-D cluster is
+    kept, the earliest char on ties. None is an ordinary key value, as in the reference's
+    ``itertools.groupby`` (a pandas groupby would drop those chars)."""
+    groups: dict = {}
+    cols = [k.tolist() if hasattr(k, "tolist") else k for k in keys]
+    for i, k in enumerate(zip(*cols)):
+        groups.setdefault(k, []).append(i)
+    keep = np.zeros(len(doctop), dtype=bool)
+    for rows in groups.values():
+        if len(rows) == 1:
+            keep[rows[0]] = True
+            continue
+        rows = np.asarray(rows)
+        ycl = assign_clusters(doctop[rows], tolerance)
+        for yc in np.unique(ycl):
+            sub = rows[ycl == yc]
+            xcl = assign_clusters(x0[sub], tolerance)
+            for xc in np.unique(xcl):
+                cell = sub[xcl == xc]
+                keep[cell[np.lexsort((x0[cell], doctop[cell]))[0]]] = True
+    return keep
+
+
+def dedupe_chars_frame(chars: pd.DataFrame, tolerance: float = 1) -> pd.DataFrame:
+    """Drop near-duplicate chars (``text.py:784-804``) through
+    :func:`dedupe_keep_mask`; output in ingestion order."""
     if len(chars) == 0:
         return chars
     df = chars.reset_index(drop=True)
-    key_cols = ["fontname", "size", "upright", "text"]
-    keep = np.zeros(len(df), dtype=bool)
-    dt_all = df["doctop"].to_numpy(np.float64)
-    x0_all = df["x0"].to_numpy(np.float64)
-    for _, grp in df.groupby(key_cols, sort=False):
-        rows = grp.index.to_numpy()
-        dt = dt_all[rows]
-        ycl = assign_clusters(dt, tolerance)
-        for yc in np.unique(ycl):
-            sub = rows[ycl == yc]
-            xcl = assign_clusters(x0_all[sub], tolerance)
-            for xc in np.unique(xcl):
-                cell = sub[xcl == xc]
-                k = np.lexsort((x0_all[cell], dt_all[cell]))[0]
-                keep[cell[k]] = True
+    keep = dedupe_keep_mask(
+        [df[c] for c in ("fontname", "size", "upright", "text")],
+        df["doctop"].to_numpy(np.float64),
+        df["x0"].to_numpy(np.float64),
+        tolerance,
+    )
     return df[keep]

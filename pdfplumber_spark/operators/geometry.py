@@ -112,25 +112,6 @@ def rects_to_edges_df(rects: DataFrame) -> DataFrame:
     )
 
 
-def filter_edges_df(
-    edges: DataFrame,
-    orientation: str = None,
-    edge_type: str = None,
-    min_length: float = 1.0,
-) -> DataFrame:
-    """``filter_edges`` (``geometry.py:263-278``): length axis depends on
-    orientation."""
-    length = F.when(
-        F.col("orientation") == "v", F.col("height")
-    ).otherwise(F.col("width"))
-    out = edges.where(length >= F.lit(float(min_length)))
-    if orientation is not None:
-        out = out.where(F.col("orientation") == orientation)
-    if edge_type is not None:
-        out = out.where(F.col("object_type") == edge_type)
-    return out
-
-
 def edge_intersections_df(
     v_edges: DataFrame, h_edges: DataFrame, x_tol: float = 1.0, y_tol: float = 1.0
 ) -> DataFrame:

@@ -36,15 +36,6 @@ IMAGE_META_SCHEMA = T.StructType(
     ]
 )
 
-FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("feature", T.ArrayType(T.FloatType()), True),
-        T.StructField("status", T.StringType(), False),
-    ]
-)
-
-
 def _payload_to_image_row(url, payload) -> tuple:
     """Per-payload metadata row (IMAGE_META_SCHEMA order) — shared by the
     Spark operator and the materialized single-process oracle. REAL
@@ -196,34 +187,6 @@ def pdf_image_stats(
 
     return _spread_payloads(df, url_col, bin_col, num_partitions).mapInPandas(
         run, schema=IMAGE_STATS_SCHEMA
-    )
-
-
-def binary_features(
-    df: DataFrame, url_col: str = "url", bin_col: str = "html", dim: int = 16,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Deterministic byte-histogram feature vector per payload — the fake
-    stand-in for an image-embedding model, with the real batch shape."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[bin_col]):
-                if payload is None:
-                    rows.append((url, None, "error"))
-                    continue
-                arr = np.frombuffer(bytes(payload), dtype=np.uint8)
-                if len(arr) == 0:
-                    rows.append((url, [0.0] * dim, "ok"))
-                    continue
-                hist, _ = np.histogram(arr, bins=dim, range=(0, 256))
-                feat = (hist / max(1, len(arr))).astype(np.float32)
-                rows.append((url, feat.tolist(), "ok"))
-            yield pd.DataFrame(rows, columns=["url", "feature", "status"])
-
-    return _spread_payloads(df, url_col, bin_col, num_partitions).mapInPandas(
-        run, schema=FEATURE_SCHEMA
     )
 
 

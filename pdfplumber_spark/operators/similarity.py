@@ -84,24 +84,6 @@ def random_hyperplanes(dim: int, n_planes: int, seed: int = 20260816) -> np.ndar
     return rng.standard_normal((n_planes, dim))
 
 
-def lsh_bucket_col(vec_col, planes: np.ndarray):
-    """Sign-bit bucket id from fixed hyperplanes — pure column expr."""
-    bits = None
-    for i, p in enumerate(planes):
-        proj = F.aggregate(
-            F.zip_with(
-                vec_col,
-                F.array(*[F.lit(float(v)) for v in p]),
-                lambda x, y: x.cast("double") * y,
-            ),
-            F.lit(0.0).cast("double"),
-            lambda acc, v: acc + v,
-        )
-        bit = F.when(proj >= 0, F.lit(1 << i)).otherwise(F.lit(0))
-        bits = bit if bits is None else bits + bit
-    return bits
-
-
 def lsh_topk(
     embeddings: DataFrame,
     queries: DataFrame,

@@ -107,9 +107,9 @@ def repetition_stats(
     Plan shape (round-8): the array metrics are pure column exprs; the
     word ARRAY (already in document order) is cached once and both top-k
     branches explode from it — bigrams come straight from adjacent array
-    elements (``element_at`` over a position sequence), which removes the
-    pre-round-8 ``lead()`` window's exchange + sort entirely (the array
-    IS the order; identical bigram strings by construction). Two
+    elements (``zip_with`` over the array and its one-shifted slice), which
+    removes the pre-round-8 ``lead()`` window's exchange + sort entirely
+    (the array IS the order; identical bigram strings by construction). Two
     aggregation shuffles on the doc key remain, no corpus-wide state.
     Ratios are int/int divisions rounded to 6, mirrored exactly by the
     DuckDB oracle."""
@@ -343,24 +343,4 @@ def quality_filter(
         id_col,
         reason.isNull().alias("keep"),
         reason.alias("reject_reason"),
-    )
-
-
-def with_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """64-bit FNV-1a content fingerprint via the Arrow kernel + md5 (SQL
-    parity column)."""
-    from ..kernel.textstats import fingerprint64
-
-    schema = T.StructType(
-        df.schema.fields + [T.StructField("fingerprint", T.LongType(), True)]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            b = b.copy()
-            b["fingerprint"] = fingerprint64(b[text_col])
-            yield b
-
-    return df.mapInPandas(run, schema=schema).withColumn(
-        "content_md5", F.md5(F.col(text_col))
     )

@@ -1,9 +1,10 @@
 """Search / text-line extraction over the corpus (TextMap.search family,
-``/root/reference/pdfplumber/utils/text.py:145-230``).
+``pdfplumber/utils/text.py:145-230``).
 
-Per page: assemble the layout textmap in the kernel, regex over the rendered
-string, map spans back to source chars through the provenance array, emit
-match rows with bboxes. One mapInPandas pass, partition-local.
+Per page: build the plain textmap in the kernel (``page_textmap``), regex
+over the rendered string, map spans back to source chars through the
+provenance array, emit match rows with bboxes. One mapInPandas pass,
+partition-local.
 """
 
 from __future__ import annotations
@@ -13,14 +14,8 @@ from typing import Iterator, Optional
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from ..kernel.geom import frame_bbox
-from ..kernel.layout import (
-    assemble_text_layout,
-    build_word_chars,
-    search_text,
-)
+from ..kernel.layout import page_textmap, search_text
 from ..kernel.pdfparse import pdf_to_frames
-from ..kernel.words import WordSettings, extract_words_frame
 
 MATCHES_SCHEMA = T.StructType(
     [
@@ -39,26 +34,11 @@ MATCHES_SCHEMA = T.StructType(
 
 
 def _page_matches(chars: pd.DataFrame, pattern: str, regex: bool, case: bool,
-                  strip_lines: bool, layout: bool = False) -> pd.DataFrame:
-    s = WordSettings()
-    words, cwid, cwpos = extract_words_frame(chars, s)
-    if len(words) == 0:
+                  strip_lines: bool) -> pd.DataFrame:
+    tm = page_textmap(chars)
+    if tm is None:
         return pd.DataFrame()
-    wc = build_word_chars(chars, cwid, cwpos, len(words))
-    if layout:
-        bbox = frame_bbox(chars)
-        rendered, prov = assemble_text_layout(
-            words, wc, layout_bbox=bbox,
-            layout_width=bbox[2] - bbox[0], layout_height=bbox[3] - bbox[1],
-        )
-    else:
-        # reference default (get_textmap layout=False): plain textmap
-        from ..kernel.layout import assemble_text_plain_map
-
-        rendered, prov = assemble_text_plain_map(
-            words, wc, y_tolerance=s.y_tolerance,
-            use_text_flow=s.use_text_flow,
-        )
+    rendered, prov = tm
     if strip_lines:
         pattern = r" *([^\n]+?) *(\n|$)"
         return search_text(rendered, prov, chars, pattern, main_group=1)

@@ -43,8 +43,9 @@ def stream_extract_text(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     pages = reader.parquet(input_dir)
-    # num_partitions=None: keep the stream's file-batch partitioning; the
-    # extraction is stateless so no repartition shuffle is needed per batch
+    # extract_text repartitions each micro-batch by url hash (sized from the
+    # cluster's core count, partition_by_url); the extraction is stateless,
+    # so that exchange is the batch's only shuffle
     extracted = extract_text(pages, layout=layout)
     writer = (
         extracted.writeStream.format("parquet")

@@ -17,11 +17,13 @@ import pandas as pd
 
 from .kernel.cluster import assign_clusters, group_rows_by_cluster
 from .kernel.cluster import cluster_list as _cluster_list_kernel
+from .kernel.geom import frame_bbox
 from .kernel.layout import (
     DEFAULT_X_DENSITY,
     DEFAULT_Y_DENSITY,
     collate_line as _collate_line_frame,
     page_text,
+    resolve_layout_kwargs,
     simple_text,
 )
 from .kernel.words import (
@@ -417,34 +419,10 @@ def extract_text(chars, **kwargs) -> str:
     if len(frame) == 0:
         return ""
     settings, rest = _split_text_kwargs(kwargs)
-    layout = bool(rest.pop("layout", False))
-    layout_kwargs = {}
-    for k in ("line_dir_render", "char_dir_render"):
-        if k in rest:
-            layout_kwargs[k] = rest.pop(k)
-    if layout:
-        explicit_w = "layout_width" in rest
-        explicit_h = "layout_height" in rest
-        bbox = rest.pop("layout_bbox", None)
-        if bbox is None:
-            bbox = (float(frame["x0"].min()), float(frame["top"].min()),
-                    float(frame["x1"].max()), float(frame["bottom"].max()))
-        layout_kwargs.update(
-            layout_bbox=bbox,
-            layout_width=rest.pop("layout_width", bbox[2] - bbox[0]),
-            layout_height=rest.pop("layout_height", bbox[3] - bbox[1]),
-        )
-        for k in ("x_density", "y_density", "x_shift", "y_shift",
-                  "layout_width_chars", "layout_height_chars"):
-            if k in rest:
-                layout_kwargs[k] = rest.pop(k)
-        # explicit width/height + *_chars must conflict downstream
-        # (reference to_textmap ValueError); only defaults yield
-        if "layout_width_chars" in layout_kwargs and not explicit_w:
-            layout_kwargs.pop("layout_width", None)
-        if "layout_height_chars" in layout_kwargs and not explicit_h:
-            layout_kwargs.pop("layout_height", None)
-    return page_text(frame, settings, layout=layout, **layout_kwargs)
+    bbox = rest.pop("layout_bbox", None)
+    if bbox is None:
+        bbox = frame_bbox(frame)
+    return page_text(frame, settings, **resolve_layout_kwargs(rest, bbox))
 
 
 def extract_text_simple(chars, x_tolerance=DEFAULT_X_TOLERANCE,

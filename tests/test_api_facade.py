@@ -242,3 +242,22 @@ def test_basics_custom_laparams_reading_order():
         f"{P}/cupertino_usd_4-6-16.pdf", laparams=dict(line_margin=0.2)
     ) as pdf:
         assert round(pdf.pages[0].chars[0]["top"], 3) == 66.384
+
+
+def test_search_layout_honours_word_settings():
+    """Both textmap modes read the word settings (reference get_textmap
+    passes them to to_textmap): with expand_ligatures=False the one-char
+    ligature stays unexpanded in the layout textmap as in the plain one."""
+    from pdfplumber_spark.kernel.pdfgen import make_pdf
+
+    pdf_bytes = make_pdf(
+        [{"width": 300, "height": 200,
+          "texts": [{"x": 20, "top": 20, "size": 12, "text": "a ﬁne day"}]}]
+    )
+    with pdfplumber.open(pdf_bytes) as pdf:
+        p = pdf.pages[0]
+        for layout in (False, True):
+            assert [m["text"] for m in p.search("fine", layout=layout)] == ["fine"]
+            assert p.search("fine", layout=layout, expand_ligatures=False) == []
+            hits = p.search("ﬁne", layout=layout, expand_ligatures=False)
+            assert [m["text"] for m in hits] == ["ﬁne"]

@@ -8,8 +8,7 @@ from pdfplumber_spark.kernel.layout import (
     search_text,
     simple_text,
 )
-from pdfplumber_spark.kernel.words import WordSettings, extract_words_frame
-from pdfplumber_spark.kernel.layout import build_word_chars, assemble_text_layout
+from pdfplumber_spark.kernel.words import WordSettings
 from reforacle import ref_module
 
 
@@ -103,10 +102,16 @@ def test_search_differential(seed):
     exp = tm.search(r"[a-zA-Z]{3,}", return_chars=False, return_groups=False)
 
     df = chars_frame(rows)
-    s = WordSettings()
-    words, cwid, cwpos = extract_words_frame(df, s)
-    wc = build_word_chars(df, cwid, cwpos, len(words))
     from pdfplumber_spark.kernel.geom import frame_bbox
+    from pdfplumber_spark.kernel.layout import (
+        assemble_text_layout,
+        build_word_char_arrays,
+    )
+    from pdfplumber_spark.kernel.words import CharArrays, extract_words_ca
+
+    ca = CharArrays(df)
+    words, cwid, cwpos = extract_words_ca(ca, WordSettings(), as_frame=False)
+    wc = build_word_char_arrays(ca.text, cwid, cwpos, len(words))
     rendered, prov = assemble_text_layout(
         words, wc, layout_bbox=frame_bbox(df), layout_width=612, layout_height=792,
     )
@@ -121,14 +126,75 @@ def test_search_differential(seed):
         assert got["bottom"].iloc[i] == pytest.approx(e["bottom"])
 
 
+def _frame_vs_buffer_texts(data: bytes, layout: bool, dedupe: bool):
+    """Per-page text two ways: the frame route (pdf_to_frames ->
+    dedupe_chars_frame -> page_text) and the buffer route the extraction
+    plan runs (_payload_to_text_rows)."""
+    from pdfplumber_spark.kernel.pdfparse import pdf_to_frames
+    from pdfplumber_spark.kernel.words import dedupe_chars_frame
+    from pdfplumber_spark.plans.extract import _payload_to_text_rows
+
+    frames = pdf_to_frames(data, style=False)
+    chars = frames["chars"]
+    slow = []
+    for pn, w, h in frames["pages"][["page_number", "width", "height"]].itertuples(
+        index=False
+    ):
+        sub = chars[chars["page_number"] == pn]
+        if dedupe:
+            sub = dedupe_chars_frame(sub)
+        kwargs = {}
+        if layout:
+            kwargs = dict(
+                layout=True, layout_bbox=(0, 0, float(w), float(h)),
+                layout_width=float(w), layout_height=float(h),
+            )
+        slow.append((int(pn), page_text(sub, WordSettings(), **kwargs), len(sub)))
+    rows = _payload_to_text_rows("u", data, layout, dedupe)
+    assert all(r[5] == "ok" for r in rows), rows
+    fast = [(r[1], r[2], r[3]) for r in rows]
+    return slow, fast
+
+
+@pytest.mark.parametrize("layout", [False, True])
+@pytest.mark.parametrize("dedupe", [False, True])
+def test_layout_fast_path_byte_identical_pdfgen(layout, dedupe):
+    """The extraction plan's buffer route (CharArrays straight from the
+    parser, array dedupe) is byte-identical to the frame route, on an
+    in-repo page with several lines and one overprinted (doubled) string."""
+    from pdfplumber_spark.kernel.pdfgen import make_pdf
+
+    texts = [
+        {"x": 40, "top": 40, "size": 12, "text": "Quarterly report"},
+        {"x": 40, "top": 60, "size": 10, "text": "Revenue grew by 12 percent"},
+        {"x": 260, "top": 60, "size": 10, "text": "see table"},
+        {"x": 40, "top": 76, "size": 10, "text": "Costs were flat"},
+        {"x": 40, "top": 120, "size": 12, "text": "Bold heading"},
+        {"x": 40.4, "top": 120, "size": 12, "text": "Bold heading"},
+        {"x": 40, "top": 140, "size": 10, "text": "Closing line"},
+    ]
+    data = make_pdf([{"width": 400, "height": 300, "texts": texts}])
+    slow, fast = _frame_vs_buffer_texts(data, layout, dedupe)
+    assert fast == slow
+    text = fast[0][1]
+    if dedupe:
+        assert "Bold heading" in text
+        assert fast[0][2] == sum(len(t["text"]) for t in texts) - len("Bold heading")
+    else:
+        assert "Bold heading" not in text  # doubled chars garble it
+        assert fast[0][2] == sum(len(t["text"]) for t in texts)
+    assert "Revenue grew by 12 percent" in text
+
+
 def test_layout_fast_path_byte_identical():
-    """page_text_layout_ca (CharArrays fast path) must be byte-identical to
-    page_text(layout=True) — including the scotus reference golden."""
+    """page_text_ca on parser buffers must be byte-identical to
+    page_text(layout=True) on the char frame — including the scotus
+    reference golden."""
     import numpy as np
 
-    from pdfplumber_spark.kernel.layout import page_text, page_text_layout_ca
+    from pdfplumber_spark.kernel.layout import page_text_ca
     from pdfplumber_spark.kernel.pdfparse import parse_pdf, pdf_to_frames
-    from pdfplumber_spark.kernel.words import CharArrays, WordSettings
+    from pdfplumber_spark.kernel.words import CharArrays
 
     data = open(
         "/root/reference/tests/pdfs/scotus-transcript-p1.pdf", "rb"
@@ -143,8 +209,8 @@ def test_layout_fast_path_byte_identical():
     )
     it = parse_pdf(data, style=False)[0]
     nums = np.frombuffer(it.ch_num, dtype=np.float64).reshape(it.n_chars, 12)
-    fast = page_text_layout_ca(
-        CharArrays.from_arrays(it.ch_text, nums), WordSettings(),
+    fast = page_text_ca(
+        CharArrays.from_arrays(it.ch_text, nums), WordSettings(), layout=True,
         layout_bbox=(0, 0, float(it.width), float(it.height)),
         layout_width=float(it.width), layout_height=float(it.height),
     )

@@ -117,3 +117,26 @@ def test_dedupe_chars_differential(seed):
         assert got["text"].iloc[i] == e["text"]
         assert got["x0"].iloc[i] == pytest.approx(e["x0"])
         assert got["doctop"].iloc[i] == pytest.approx(e["doctop"])
+
+
+def test_dedupe_chars_none_key_kept():
+    """None is an ordinary dedupe key (the reference groups with
+    itertools.groupby). The two fontname=None `a` chars share a key and sit
+    within tolerance 1 on doctop (0 vs 0.2) and x0 (0 vs 0.3), so they form
+    one cluster whose (doctop, x0)-minimum is the first; `b` has its own
+    key. Expected, by hand: `a` at (0, 0), then `b`."""
+    import pandas as pd
+
+    from pdfplumber_spark import utils
+
+    def char(text, fontname, doctop, x0):
+        return {"text": text, "fontname": fontname, "size": 10.0, "upright": 1,
+                "doctop": doctop, "top": doctop, "bottom": doctop + 10,
+                "x0": x0, "x1": x0 + 5}
+
+    rows = [char("a", None, 0.0, 0.0), char("a", None, 0.2, 0.3),
+            char("b", "F", 0.0, 10.0)]
+    got = dedupe_chars_frame(pd.DataFrame(rows))
+    assert got["text"].tolist() == ["a", "b"]
+    assert (got["doctop"].iloc[0], got["x0"].iloc[0]) == (0.0, 0.0)
+    assert utils.dedupe_chars(rows) == [rows[0], rows[2]]
