@@ -41,16 +41,19 @@ from .kernel.layout import (
     search_text,
     simple_text,
 )
-from .kernel.pdfparse import parse_pdf
+from .kernel.pdfparse import LINE_COLUMNS, parse_pdf
 from .kernel.tables import (
     extract_table_text,
     find_tables_frame,
     table_rows,
 )
 from .kernel.words import (
-    WordSettings,
+    NUM_FIELDS,
+    STYLE_ATTRS,
+    CharArrays,
     dedupe_chars_frame,
     extract_words_frame,
+    split_word_settings,
 )
 
 def _attr_filter(include_attrs=None, exclude_attrs=None):
@@ -229,15 +232,6 @@ class CTM(NamedTuple):
         return self.f
 
 
-_WS_FIELDS = set(WordSettings.__dataclass_fields__)
-
-
-def _split_kwargs(kwargs: dict):
-    ws = {k: v for k, v in kwargs.items() if k in _WS_FIELDS}
-    rest = {k: v for k, v in kwargs.items() if k not in _WS_FIELDS}
-    return WordSettings(**ws), rest
-
-
 # reference table.py:439-452 NON_NEGATIVE_SETTINGS
 _NON_NEGATIVE_TABLE_SETTINGS = (
     "snap_tolerance", "snap_x_tolerance", "snap_y_tolerance",
@@ -251,7 +245,7 @@ _NON_NEGATIVE_TABLE_SETTINGS = (
 def _resolve_table_settings(table_settings) -> dict:
     """TableSettings.resolve parity (reference table.py:482-552): None ->
     defaults; non-dict -> ValueError; negative tolerances -> ValueError.
-    Unknown keys raise TypeError downstream (find_tables_frame signature),
+    Unknown keys raise TypeError downstream (kernel find_tables signature),
     matching the reference dataclass's unexpected-keyword TypeError."""
     if table_settings is None:
         return {}
@@ -261,6 +255,10 @@ def _resolve_table_settings(table_settings) -> dict:
         if (table_settings.get(k) or 0) < 0:
             raise ValueError(f"Table setting '{k}' cannot be negative")
     return dict(table_settings)
+
+
+# leading per-char columns of a facade page's chars frame
+_CHAR_HEAD = ("char_index", "text", "fontname", *NUM_FIELDS)
 
 
 class Page:
@@ -479,7 +477,7 @@ class Page:
 
     # --- text ---------------------------------------------------------------
     def extract_text(self, **kwargs) -> str:
-        settings, rest = _split_kwargs(kwargs)
+        settings, rest = split_word_settings(kwargs)
         return page_text(
             self._chars, settings, **resolve_layout_kwargs(rest, self.bbox)
         )
@@ -488,7 +486,7 @@ class Page:
         return simple_text(self._chars, **kwargs)
 
     def extract_words(self, **kwargs) -> List[dict]:
-        settings, _ = _split_kwargs(kwargs)
+        settings, _ = split_word_settings(kwargs)
         words, _, _ = extract_words_frame(self._chars, settings)
         return words.to_dict("records")
 
@@ -496,7 +494,7 @@ class Page:
                main_group: int = 0, return_chars: bool = True,
                **kwargs) -> List[dict]:
         layout = bool(kwargs.pop("layout", False))
-        settings, _ = _split_kwargs(kwargs)
+        settings, _ = split_word_settings(kwargs)
         tm = page_textmap(self._chars, settings, layout, self.bbox)
         if tm is None:
             return []
@@ -513,7 +511,7 @@ class Page:
                            return_chars: bool = True, **kwargs) -> List[dict]:
         layout = bool(kwargs.pop("layout", False))
         pat = r" *([^\n]+?) *(\n|$)" if strip else r"([^\n]+)"
-        settings, _ = _split_kwargs(kwargs)
+        settings, _ = split_word_settings(kwargs)
         tm = page_textmap(self._chars, settings, layout, self.bbox)
         if tm is None:
             return []
@@ -524,7 +522,8 @@ class Page:
         ).to_dict("records")
 
     # --- tables --------------------------------------------------------------
-    def find_tables(self, table_settings: Optional[dict] = None):
+    def _find_tables(self, table_settings: Optional[dict], debug: bool):
+        """(text settings, find_tables_frame result) for this page."""
         ts = _resolve_table_settings(table_settings)
         text_settings = {
             k[5:]: ts.pop(k) for k in list(ts) if k.startswith("text_")
@@ -532,11 +531,15 @@ class Page:
         words = None
         if "text" in (ts.get("vertical_strategy", "lines"),
                       ts.get("horizontal_strategy", "lines")):
-            settings, _ = _split_kwargs(text_settings)
+            settings, _ = split_word_settings(text_settings)
             words, _, _ = extract_words_frame(self._chars, settings)
-        tables = find_tables_frame(
-            self._edges_frame(), words=words, page_bbox=self.bbox, **ts
+        return text_settings, find_tables_frame(
+            self._edges_frame(), words=words, page_bbox=self.bbox,
+            debug=debug, **ts
         )
+
+    def find_tables(self, table_settings: Optional[dict] = None):
+        text_settings, tables = self._find_tables(table_settings, False)
         return [Table(self, cells, text_settings) for cells in tables]
 
     def extract_tables(self, table_settings: Optional[dict] = None):
@@ -549,19 +552,7 @@ class Page:
         as a namespace object)."""
         from types import SimpleNamespace
 
-        ts = _resolve_table_settings(table_settings)
-        text_settings = {
-            k[5:]: ts.pop(k) for k in list(ts) if k.startswith("text_")
-        }
-        words = None
-        if "text" in (ts.get("vertical_strategy", "lines"),
-                      ts.get("horizontal_strategy", "lines")):
-            settings, _ = _split_kwargs(text_settings)
-            words, _, _ = extract_words_frame(self._chars, settings)
-        dbg = find_tables_frame(
-            self._edges_frame(), words=words, page_bbox=self.bbox,
-            debug=True, **ts
-        )
+        text_settings, dbg = self._find_tables(table_settings, True)
         return SimpleNamespace(
             edges=dbg["edges"],
             intersections=dbg["intersections"],
@@ -761,75 +752,23 @@ class PDF:
         for interp in interps:
             if pages is not None and interp.page_number not in pages:
                 continue
-            n = interp.n_chars
-            import numpy as np
-
-            from .kernel.pdfparse import CHAR_COLUMNS, LINE_COLUMNS
-
-            if n:
-                nums = np.frombuffer(interp.ch_num, dtype=np.float64).reshape(n, 12)
-                chars = pd.DataFrame(
-                    {
-                        "char_index": np.arange(n),
-                        "text": interp.ch_text,
-                        "fontname": interp.ch_font,
-                        **{
-                            name: nums[:, k]
-                            for k, name in enumerate(
-                                ("size", "adv", "upright", "x0", "x1", "y0",
-                                 "y1", "top", "bottom", "doctop", "width",
-                                 "height")
-                            )
-                        },
-                    }
-                )
-                chars["upright"] = chars["upright"].astype(int)
-                chars["object_type"] = "char"
+            if interp.n_chars:
                 # mcid/tag are ALWAYS present (reference emits the keys as
                 # None on untagged pages — round-5 ADVICE: schema must not
-                # differ between tagged and untagged documents)
-                mcid_arr = np.full(n, None, dtype=object)
-                tag_arr = np.full(n, None, dtype=object)
-                spans = interp.mc_spans
-                for i, (start, mcid, mtag) in enumerate(spans):
-                    end = spans[i + 1][0] if i + 1 < len(spans) else n
-                    if end > start:
-                        mcid_arr[start:end] = mcid
-                        tag_arr[start:end] = mtag
-                chars["mcid"] = mcid_arr
-                chars["tag"] = tag_arr
-                if len(interp.ch_style) == n:
-                    chars["matrix"] = [
-                        tuple(s[0]) for s in interp.ch_style
-                    ]
-                    chars["stroking_color"] = [
-                        tuple(s[1]) if s[1] is not None else None
-                        for s in interp.ch_style
-                    ]
-                    chars["non_stroking_color"] = [
-                        tuple(s[2]) if s[2] is not None else None
-                        for s in interp.ch_style
-                    ]
-                    # reference LTChar extras: ncs colorspace NAME +
-                    # pattern names from normalize_color (page.py:351-380)
-                    chars["ncs"] = [
-                        s[3] if len(s) > 3 else None
-                        for s in interp.ch_style
-                    ]
-                    chars["stroking_pattern"] = [
-                        s[4] if len(s) > 4 else None
-                        for s in interp.ch_style
-                    ]
-                    chars["non_stroking_pattern"] = [
-                        s[5] if len(s) > 5 else None
-                        for s in interp.ch_style
-                    ]
+                # differ between tagged and untagged documents); the style
+                # columns add the reference LTChar extras (ncs colorspace
+                # name, pattern names — page.py:351-380)
+                tail = ("mcid", "tag", *STYLE_ATTRS)
+                ca = CharArrays.from_interp(interp, _CHAR_HEAD + tail)
+                cols = {k: ca.extra[k] for k in _CHAR_HEAD}
+                cols["object_type"] = "char"
+                cols.update((k, ca.extra[k]) for k in tail)
+                for k in STYLE_ATTRS[:3]:  # reference colors are tuples
+                    cols[k] = [None if v is None else tuple(v) for v in cols[k]]
+                chars = pd.DataFrame(cols)
             else:
                 chars = pd.DataFrame(
-                    columns=["char_index", "text", "fontname", "size", "adv",
-                             "upright", "x0", "x1", "y0", "y1", "top",
-                             "bottom", "doctop", "width", "height",
-                             "object_type", "mcid", "tag"]
+                    columns=[*_CHAR_HEAD, "object_type", "mcid", "tag"]
                 )
             lines = pd.DataFrame(
                 [ln for ln in interp.lines], columns=LINE_COLUMNS

@@ -15,8 +15,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from .cluster import assign_clusters
-
 BBOX_COLS = ["x0", "top", "x1", "bottom"]
 
 
@@ -80,77 +78,6 @@ def crop_frame(df: pd.DataFrame, bbox) -> pd.DataFrame:
     out["width"] = out["x1"] - out["x0"]
     out["height"] = out["bottom"] - out["top"]
     return out
-
-
-def shift_frame(df: pd.DataFrame, axis: str, delta) -> pd.DataFrame:
-    """Translate along one axis with dependent-attr updates.
-
-    Reference ``move_object`` (``geometry.py:128-147``): a vertical move
-    adjusts top/bottom/doctop and *subtracts* from y0/y1 (y axis points up).
-    ``delta`` may be a scalar or a per-row array.
-    """
-    out = df.copy()
-    if axis == "h":
-        out["x0"] = out["x0"] + delta
-        out["x1"] = out["x1"] + delta
-    elif axis == "v":
-        out["top"] = out["top"] + delta
-        out["bottom"] = out["bottom"] + delta
-        if "doctop" in out.columns:
-            out["doctop"] = out["doctop"] + delta
-        if "y0" in out.columns:
-            out["y0"] = out["y0"] - delta
-        if "y1" in out.columns:
-            out["y1"] = out["y1"] - delta
-    else:
-        raise ValueError("axis must be 'h' or 'v'")
-    return out
-
-
-def set_edge_coord(df: pd.DataFrame, key: str, values) -> pd.DataFrame:
-    """Resize one bbox coordinate with dependent-attr updates.
-
-    Reference ``resize_object`` (``geometry.py:162-186``): moving ``top``
-    shifts doctop/height/y1; moving ``bottom`` shifts height/y0; x moves
-    update width only.
-    """
-    out = df.copy()
-    old = out[key].to_numpy()
-    diff = np.asarray(values, dtype=np.float64) - old
-    out[key] = np.asarray(values, dtype=np.float64)
-    if key == "x0":
-        out["width"] = out["x1"] - out["x0"]
-    elif key == "x1":
-        out["width"] = out["x1"] - out["x0"]
-    elif key == "top":
-        if "doctop" in out.columns:
-            out["doctop"] = out["doctop"] + diff
-        out["height"] = out["height"] - diff
-        if "y1" in out.columns:
-            out["y1"] = out["y1"] - diff
-    elif key == "bottom":
-        out["height"] = out["height"] + diff
-        if "y0" in out.columns:
-            out["y0"] = out["y0"] - diff
-    else:
-        raise ValueError(key)
-    return out
-
-
-def snap_frame(df: pd.DataFrame, attr: str, tolerance: float) -> pd.DataFrame:
-    """Cluster rows on ``attr``; translate each row so ``attr`` equals the
-    cluster mean. Reference ``snap_objects`` (``geometry.py:150-159``) —
-    note the mean is over *rows* (repeats weighted), not distinct values.
-    """
-    if len(df) == 0 or tolerance is None:
-        return df
-    axis = {"x0": "h", "x1": "h", "top": "v", "bottom": "v"}[attr]
-    vals = df[attr].to_numpy(dtype=np.float64)
-    cids = assign_clusters(vals, tolerance)
-    sums = np.bincount(cids, weights=vals)
-    counts = np.bincount(cids)
-    avgs = sums / counts
-    return shift_frame(df, axis, avgs[cids] - vals)
 
 
 # --- object -> edge decomposition -------------------------------------------
@@ -225,6 +152,24 @@ def lines_to_edges(lines: pd.DataFrame) -> pd.DataFrame:
     return out
 
 
+def curve_segments(pts_lists):
+    """Consecutive point pairs of each curve's ``pts`` list of (x, top):
+    ``(owner, a, b)`` with ``owner`` the curve's position and ``a``/``b``
+    the (k, 2) start/end points, curves in order (``geometry.py:189-204``)."""
+    npts = np.fromiter((len(p) for p in pts_lists), dtype=np.int64,
+                       count=len(pts_lists))
+    if npts.sum() == 0:
+        empty = np.zeros((0, 2))
+        return np.zeros(0, dtype=np.int64), empty, empty
+    flat = np.concatenate([np.asarray(p, dtype=np.float64).reshape(-1, 2)
+                           for p in pts_lists if len(p)])
+    # Row index of each flattened point's parent curve.
+    owner = np.repeat(np.arange(len(pts_lists)), npts)
+    # A segment starts at every point whose successor has the same owner.
+    seg = owner[:-1] == owner[1:]
+    return owner[:-1][seg], flat[:-1][seg], flat[1:][seg]
+
+
 def curves_to_edges(curves: pd.DataFrame) -> pd.DataFrame:
     """Consecutive pts pairs -> edges (``geometry.py:189-204``).
 
@@ -235,52 +180,52 @@ def curves_to_edges(curves: pd.DataFrame) -> pd.DataFrame:
         "object_type", "x0", "x1", "top", "doctop", "bottom",
         "width", "height", "orientation",
     ]
-    if not len(curves):
+    pts = curves["pts"].to_list() if len(curves) else []
+    if not any(len(p) for p in pts):
         return pd.DataFrame(columns=cols)
-    # Flatten all pts into one array; segment i..i+1 within each curve.
-    pts_lists = curves["pts"].to_list()
-    npts = np.fromiter((len(p) for p in pts_lists), dtype=np.int64,
-                       count=len(pts_lists))
-    if npts.sum() == 0:
-        return pd.DataFrame(columns=cols)
-    flat = np.concatenate([np.asarray(p, dtype=np.float64).reshape(-1, 2)
-                           for p in pts_lists if len(p)])
-    # Row index of each flattened point's parent curve.
-    owner = np.repeat(np.arange(len(pts_lists)), npts)
-    # A segment starts at every point whose successor has the same owner.
-    seg_mask = np.empty(len(flat), dtype=bool)
-    seg_mask[:-1] = owner[:-1] == owner[1:]
-    seg_mask[-1] = False
-    a = flat[:-1][seg_mask[:-1]]
-    b = flat[1:][seg_mask[:-1]]
-    own = owner[:-1][seg_mask[:-1]]
+    own, a, b = curve_segments(pts)
     ax, ay, bx, by = a[:, 0], a[:, 1], b[:, 0], b[:, 1]
-    x0 = np.minimum(ax, bx)
-    x1 = np.maximum(ax, bx)
     top = np.minimum(ay, by)
-    bottom = np.maximum(ay, by)
     if "doctop" in curves.columns:
         dt_adj = (curves["doctop"].to_numpy(dtype=np.float64)
                   - curves["top"].to_numpy(dtype=np.float64))[own]
     else:
         dt_adj = np.zeros(len(own))
-    orientation = np.where(
-        ax == bx, "v", np.where(ay == by, "h", None)
-    )
     return pd.DataFrame(
         {
             "object_type": "curve_edge",
-            "x0": x0,
-            "x1": x1,
+            "x0": np.minimum(ax, bx),
+            "x1": np.maximum(ax, bx),
             "top": top,
             "doctop": top + dt_adj,
-            "bottom": bottom,
+            "bottom": np.maximum(ay, by),
             "width": np.abs(ax - bx),
             "height": np.abs(ay - by),
-            "orientation": orientation,
+            "orientation": curve_orientation(ax, ay, bx, by),
         },
         columns=cols,
     )
+
+
+def curve_orientation(ax, ay, bx, by) -> np.ndarray:
+    """'v' iff a segment's xs are equal, 'h' iff its ys are, else None."""
+    return np.where(ax == bx, "v", np.where(ay == by, "h", None))
+
+
+def edge_mask(orientation, object_type, width, height, ori=None,
+              edge_type=None, min_length: float = 1) -> np.ndarray:
+    """Edge predicate (``geometry.py:263-278``) over edge columns: the
+    length that must reach ``min_length`` is height for vertical edges,
+    width for horizontal; ``ori``/``edge_type`` keep one orientation /
+    object_type."""
+    if ori not in ("v", "h", None):
+        raise ValueError("Orientation must be 'v' or 'h'")
+    mask = np.where(orientation == "v", height, width) >= min_length
+    if ori is not None:
+        mask &= orientation == ori
+    if edge_type is not None:
+        mask &= object_type == edge_type
+    return mask
 
 
 def filter_edges_frame(
@@ -289,17 +234,12 @@ def filter_edges_frame(
     edge_type=None,
     min_length: float = 1,
 ) -> pd.DataFrame:
-    """Edge predicate (``geometry.py:263-278``): the length that must reach
-    ``min_length`` is height for vertical edges, width for horizontal."""
+    """:func:`edge_mask` over an edge frame."""
     if orientation not in ("v", "h", None):
         raise ValueError("Orientation must be 'v' or 'h'")
     if len(edges) == 0:
         return edges
-    ori = edges["orientation"].to_numpy()
-    dim = np.where(ori == "v", edges["height"].to_numpy(), edges["width"].to_numpy())
-    mask = dim >= min_length
-    if orientation is not None:
-        mask &= ori == orientation
-    if edge_type is not None:
-        mask &= edges["object_type"].to_numpy() == edge_type
-    return edges[mask]
+    return edges[edge_mask(
+        *(edges[c].to_numpy() for c in ("orientation", "object_type", "width", "height")),
+        orientation, edge_type, min_length,
+    )]

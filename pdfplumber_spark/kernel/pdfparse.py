@@ -2583,41 +2583,16 @@ def pdf_to_frames(data: bytes, style: bool = True, password: str = "") -> Dict[s
 
     ``style=False`` skips per-char matrix/color capture (text-extraction
     fast path; the columns are present but null)."""
+    from .words import CharArrays
+
     pages = parse_pdf(data, style=style, password=password)
     lines_rows, rects_rows, curves_rows, pages_rows = [], [], [], []
-    # chars: zero-copy from the interpreters' flat typed buffers
-    num_parts = []
-    text_parts: List[str] = []
-    font_parts: List[str] = []
-    pn_parts = []
-    ci_parts = []
-    style_parts: List[tuple] = []
-    mcid_parts: List[np.ndarray] = []
-    tag_parts: List[np.ndarray] = []
-    any_mc = any(p.mc_spans for p in pages)
+    char_cols = ["page_number", "char_index"] + CHAR_COLUMNS
+    char_parts = []
     for p in pages:
-        n = p.n_chars
-        if n:
-            num_parts.append(
-                np.frombuffer(p.ch_num, dtype=np.float64).reshape(n, 12)
-            )
-            text_parts.extend(p.ch_text)
-            font_parts.extend(p.ch_font)
-            pn_parts.append(np.full(n, p.page_number, dtype=np.int64))
-            ci_parts.append(np.arange(n, dtype=np.int64))
-            if style:
-                style_parts.extend(p.ch_style)
-            if any_mc:
-                mcid_arr = np.full(n, None, dtype=object)
-                tag_arr = np.full(n, None, dtype=object)
-                spans = p.mc_spans
-                for i, (start, mcid, tag) in enumerate(spans):
-                    end = spans[i + 1][0] if i + 1 < len(spans) else n
-                    if end > start:
-                        mcid_arr[start:end] = mcid
-                        tag_arr[start:end] = tag
-                mcid_parts.append(mcid_arr)
-                tag_parts.append(tag_arr)
+        if p.n_chars:
+            ca = CharArrays.from_interp(p, char_cols)
+            char_parts.append([ca.extra[c] for c in char_cols])
         for i, ln in enumerate(p.lines):
             lines_rows.append((p.page_number, i) + ln)
         for i, r in enumerate(p.rects):
@@ -2625,40 +2600,11 @@ def pdf_to_frames(data: bytes, style: bool = True, password: str = "") -> Dict[s
         for i, cv in enumerate(p.curves):
             curves_rows.append((p.page_number, i) + cv)
         pages_rows.append((p.page_number, p.width, p.height, p.rotation))
-    if num_parts:
-        nums = np.vstack(num_parts)
-        data_cols = {
-            "page_number": np.concatenate(pn_parts),
-            "char_index": np.concatenate(ci_parts),
-            "text": np.array(text_parts, dtype=object),
-            "fontname": np.array(font_parts, dtype=object),
-        }
-        for k, name in enumerate(
-            ("size", "adv", "upright", "x0", "x1", "y0", "y1", "top",
-             "bottom", "doctop", "width", "height")
-        ):
-            data_cols[name] = nums[:, k]
-        data_cols["upright"] = data_cols["upright"].astype(np.int64)
-        if style and style_parts:
-            data_cols["matrix"] = [s[0] for s in style_parts]
-            data_cols["stroking_color"] = [s[1] for s in style_parts]
-            data_cols["non_stroking_color"] = [s[2] for s in style_parts]
-        else:
-            data_cols["matrix"] = None
-            data_cols["stroking_color"] = None
-            data_cols["non_stroking_color"] = None
-        if any_mc and mcid_parts:
-            data_cols["mcid"] = np.concatenate(mcid_parts)
-            data_cols["tag"] = np.concatenate(tag_parts)
-        else:
-            data_cols["mcid"] = None
-            data_cols["tag"] = None
-        chars = pd.DataFrame(data_cols)
-        chars = chars[["page_number", "char_index"] + CHAR_COLUMNS]
-    else:
-        chars = pd.DataFrame(
-            columns=["page_number", "char_index"] + CHAR_COLUMNS
-        )
+    chars = pd.DataFrame(
+        {c: np.concatenate([part[k] for part in char_parts])
+         for k, c in enumerate(char_cols)} if char_parts else None,
+        columns=char_cols,
+    )
     lines = pd.DataFrame(
         lines_rows, columns=["page_number", "line_index"] + LINE_COLUMNS
     )

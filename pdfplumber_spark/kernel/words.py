@@ -101,8 +101,63 @@ class WordSettings:
         return self.line_dir if upright else self._line_dir_rotated
 
 
+# the parser's per-char numeric block columns, in block order
+NUM_FIELDS = (
+    "size", "adv", "upright", "x0", "x1", "y0", "y1", "top", "bottom",
+    "doctop", "width", "height",
+)
+# per-char style columns in PageInterpreter.ch_style tuple order; only a
+# style=True parse records them
+STYLE_ATTRS = (
+    "matrix", "stroking_color", "non_stroking_color", "ncs",
+    "stroking_pattern", "non_stroking_pattern",
+)
+
+
+def needs_style(attrs: Sequence[str]) -> bool:
+    """Whether char columns ``attrs`` need a style=True parse."""
+    return any(a in STYLE_ATTRS for a in attrs)
+
+
+def split_word_settings(kwargs: dict):
+    """Split keyword arguments into (WordSettings, the rest)."""
+    ws = {k: v for k, v in kwargs.items() if k in WordSettings.__dataclass_fields__}
+    rest = {k: v for k, v in kwargs.items() if k not in ws}
+    return WordSettings(**ws), rest
+
+
+def _interp_column(it, attr: str, nums: np.ndarray) -> np.ndarray:
+    """One per-char column of a parsed page (see CharArrays.from_interp)."""
+    n = it.n_chars
+    if attr in NUM_FIELDS:
+        col = nums[:, NUM_FIELDS.index(attr)]
+        return col.astype(np.int64) if attr == "upright" else col
+    if attr == "fontname":
+        return np.array(it.ch_font, dtype=object)
+    if attr in ("mcid", "tag"):
+        # marked-content spans: (chars emitted before the change, mcid, tag)
+        k = 1 if attr == "mcid" else 2
+        col = np.full(n, None, dtype=object)
+        spans = it.mc_spans
+        for i, span in enumerate(spans):
+            end = spans[i + 1][0] if i + 1 < len(spans) else n
+            if end > span[0]:
+                col[span[0]:end] = span[k]
+        return col
+    if attr in STYLE_ATTRS:
+        if len(it.ch_style) != n:  # style=False parse
+            return np.full(n, None, dtype=object)
+        k = STYLE_ATTRS.index(attr)
+        return np.fromiter((st[k] for st in it.ch_style), dtype=object, count=n)
+    if attr == "page_number":
+        return np.full(n, it.page_number, dtype=np.int64)
+    if attr == "char_index":
+        return np.arange(n, dtype=np.int64)
+    raise KeyError(attr)
+
+
 class CharArrays:
-    """Struct-of-arrays view of a char frame (extracted once)."""
+    """Struct-of-arrays view of one page's chars."""
 
     __slots__ = (
         "n", "text", "x0", "x1", "top", "bottom", "doctop", "height",
@@ -133,14 +188,17 @@ class CharArrays:
         self.extra = {a: chars[a].to_numpy(dtype=object) for a in extra_attrs}
 
     @classmethod
-    def from_arrays(cls, text, nums) -> "CharArrays":
-        """Build directly from the parser's flat buffers (no pandas):
-        ``nums`` is the (n, 12) float64 block with columns
-        (size, adv, upright, x0, x1, y0, y1, top, bottom, doctop, width,
-        height)."""
+    def from_interp(cls, it, extra_attrs: Sequence[str] = ()) -> "CharArrays":
+        """The one PageInterpreter -> char columns constructor, straight
+        from the parser's buffers (no pandas). ``extra_attrs`` names the
+        further columns to carry in ``extra``: text, fontname, any
+        :data:`NUM_FIELDS` column, mcid/tag (marked-content spans expanded
+        per char), page_number, char_index and the :data:`STYLE_ATTRS`
+        (None unless the page was parsed with ``style=True``)."""
+        nums = it.ch_num
         self = cls.__new__(cls)
-        self.n = len(text)
-        self.text = np.asarray(text, dtype=object)
+        self.n = it.n_chars
+        self.text = np.array(it.ch_text, dtype=object)
         self.size = nums[:, 0]
         self.upright = nums[:, 2].astype(np.int64)
         self.x0 = nums[:, 3]
@@ -149,8 +207,22 @@ class CharArrays:
         self.bottom = nums[:, 8]
         self.doctop = nums[:, 9]
         self.height = nums[:, 11]
-        self.extra = {}
+        self.extra = {
+            a: self.text if a == "text" else _interp_column(it, a, nums)
+            for a in extra_attrs
+        }
         return self
+
+    def take(self, idx) -> "CharArrays":
+        """The chars at ``idx`` (indices or a boolean mask), in that order."""
+        out = CharArrays.__new__(CharArrays)
+        for f in ("text", "x0", "x1", "top", "bottom", "doctop", "height",
+                  "upright"):
+            setattr(out, f, getattr(self, f)[idx])
+        out.n = len(out.text)
+        out.size = None if self.size is None else self.size[idx]
+        out.extra = {a: v[idx] for a, v in self.extra.items()}
+        return out
 
 
 def _line_key_arrays(ca: CharArrays, idx: np.ndarray, line_dir: str) -> np.ndarray:

@@ -205,7 +205,8 @@ def ivf_train(
     corpus size). The update aggregates exact int64 sums of 1e-6-quantized
     values (integer addition commutes), so the centroids are BIT-identical
     regardless of partition count/order — the index is reproducible and
-    matches the single-process oracle exactly."""
+    matches the single-process oracle exactly. The centroids are as wide as
+    the vectors, whatever ``dim`` says."""
     import pandas as pd
     from pyspark.sql import types as T
 
@@ -274,7 +275,7 @@ def ivf_train(
             partials = vecs.mapInPandas(
                 _iter_stats(cents), schema=stats_schema
             ).collect()
-            qsum = np.zeros((n_clusters, dim), dtype=np.int64)
+            qsum = np.zeros((n_clusters, cents.shape[-1]), dtype=np.int64)
             cnt = np.zeros(n_clusters, dtype=np.int64)
             for r in partials:
                 qsum[r["cluster"]] += np.asarray(r["qsum"], dtype=np.int64)
@@ -282,7 +283,7 @@ def ivf_train(
             new = cents.copy()  # empty clusters keep their previous centroid
             nz = np.nonzero(cnt)[0]
             for i in nz:
-                for p in range(dim):
+                for p in range(qsum.shape[1]):
                     new[i, p] = (int(qsum[i, p]) / int(cnt[i])) / 1e6
             cents = np.round(new, 6)
     finally:

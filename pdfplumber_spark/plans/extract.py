@@ -9,6 +9,11 @@ Physical design (SURVEY.md §3.1, §4):
 - ``mapInPandas`` runs the Arrow-batched kernels; whole-document parse and
   per-page text assembly happen inside one task — text extraction is a
   single-pass, shuffle-free plan.
+- Text, words and tables parse each payload once (``parse_pdf``, no
+  per-char style unless a word setting names a style column) and run their
+  kernels on the parser's buffers (``CharArrays.from_interp``,
+  ``tables.EdgeArrays.from_interp``): no per-page pandas frames. Objects,
+  annotations and page metadata build ``pdf_to_frames`` frames.
 - Binary payloads are sniffed (%PDF- magic) and routed to the PDF or HTML
   kernel; malformed payloads yield ``status='error'`` rows with a reason
   instead of failing the job (reference analogue: the repair path,
@@ -27,13 +32,16 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from ..kernel import pdfparse
 from ..kernel.htmlstrip import extract_main_text_bytes
 from ..kernel.pdfparse import pdf_to_frames
 from ..kernel.words import (
     CharArrays,
     WordSettings,
     dedupe_keep_mask,
-    extract_words_frame,
+    extract_words_ca,
+    extract_words_frame,  # noqa: F401 - perfbench.tracing hook name
+    needs_style,
 )
 from ..schemas import EXTRACTED_SCHEMA, OBJECTS_SCHEMA, TABLES_SCHEMA, WORDS_SCHEMA
 
@@ -113,12 +121,12 @@ def _payload_to_text_rows(
 def _payload_rows_inner(url: str, data: bytes, layout: bool, dedupe: bool) -> list:
     try:
         if data[:5] == b"%PDF-":
-            # parser buffers -> CharArrays, no pandas; page_text_ca is looked
-            # up per call so the traced benchmark's wrapper sees it
+            # parser buffers -> CharArrays, no pandas; parse_pdf and
+            # page_text_ca are looked up per call so the traced benchmark's
+            # wrappers see them
             from ..kernel.layout import page_text_ca
-            from ..kernel.pdfparse import parse_pdf
 
-            interps = parse_pdf(data, style=False)
+            interps = pdfparse.parse_pdf(data, style=False)
             if not interps:
                 return [(url, 0, None, None, None, "error", "unparseable pdf")]
             rows = []
@@ -126,17 +134,14 @@ def _payload_rows_inner(url: str, data: bytes, layout: bool, dedupe: bool) -> li
                 n = it.n_chars
                 txt = ""
                 if n:
-                    text = it.ch_text
-                    nums = np.frombuffer(it.ch_num, dtype=np.float64).reshape(n, 12)
+                    ca = CharArrays.from_interp(it, ("fontname",) if dedupe else ())
                     if dedupe:
                         # key (fontname, size, upright, text) at (doctop, x0)
-                        keep = dedupe_keep_mask(
-                            (it.ch_font, nums[:, 0], nums[:, 2], text),
-                            nums[:, 9], nums[:, 3],
-                        )
-                        text = np.asarray(text, dtype=object)[keep]
-                        nums = nums[keep]
-                        n = len(nums)
+                        ca = ca.take(dedupe_keep_mask(
+                            (ca.extra["fontname"], ca.size, ca.upright, ca.text),
+                            ca.doctop, ca.x0,
+                        ))
+                        n = ca.n
                     kwargs = {}
                     if layout:
                         w, h = float(it.width), float(it.height)
@@ -144,9 +149,7 @@ def _payload_rows_inner(url: str, data: bytes, layout: bool, dedupe: bool) -> li
                             layout=True, layout_bbox=(0.0, 0.0, w, h),
                             layout_width=w, layout_height=h,
                         )
-                    txt = page_text_ca(
-                        CharArrays.from_arrays(text, nums), WordSettings(), **kwargs
-                    )
+                    txt = page_text_ca(ca, WordSettings(), **kwargs)
                 rows.append(
                     (url, it.page_number, txt, n,
                      txt.count(" ") + 1 if txt else 0, "ok", None)
@@ -348,28 +351,44 @@ def extract_objects(
 
 # --- words ------------------------------------------------------------------
 
+_WORD_COLS = [f.name for f in WORDS_SCHEMA.fields]
+
+
 def _payload_to_word_frames(url: str, payload, s: WordSettings) -> list:
-    """Per-payload word frames (WORDS_SCHEMA column order) — shared by the
-    Spark plan and the materialized single-process oracle."""
-    cols = [f.name for f in WORDS_SCHEMA.fields]
+    """Per-payload word rows as ONE frame in WORDS_SCHEMA column order (an
+    empty list when there are none) — shared by the Spark plan and the
+    materialized single-process oracle. One parse, words straight from the
+    parser buffers; per-char style is captured only when ``s.extra_attrs``
+    names a style column."""
     if payload is None or bytes(payload)[:5] != b"%PDF-":
         return []
     try:
-        frames = pdf_to_frames(bytes(payload))
+        interps = pdfparse.parse_pdf(bytes(payload), style=needs_style(s.extra_attrs))
     except Exception:  # noqa: BLE001
         return []
-    outs = []
-    chars = frames["chars"]
-    for pn, sub in chars.groupby("page_number", sort=True):
-        words, _, _ = extract_words_frame(sub, s)
-        if len(words) == 0:
-            continue
-        w = words.copy()
-        w["url"] = url
-        w["page_number"] = int(pn)
-        w["word_index"] = np.arange(len(w))
-        outs.append(w[cols])
-    return outs
+    pages = []
+    for it in interps:
+        if it.n_chars:
+            words = extract_words_ca(
+                CharArrays.from_interp(it, s.extra_attrs), s, as_frame=False
+            )[0]
+            if len(words):
+                pages.append((it.page_number, words))
+    if not pages:
+        return []
+    counts = [len(w) for _, w in pages]
+    data = {
+        "url": url,
+        "page_number": np.repeat([pn for pn, _ in pages], counts),
+        "word_index": np.concatenate([np.arange(k) for k in counts]),
+    }
+    for c in _WORD_COLS[3:]:  # WordArrays: numeric arrays, other lists
+        vals = [w[c] for _, w in pages]
+        data[c] = (
+            np.concatenate(vals) if isinstance(vals[0], np.ndarray)
+            else [v for page_vals in vals for v in page_vals]
+        )
+    return [pd.DataFrame(data, columns=_WORD_COLS)]
 
 
 def extract_words(
@@ -381,7 +400,6 @@ def extract_words(
     s = settings or WordSettings()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in WORDS_SCHEMA.fields]
         for batch in batches:
             outs = []
             for url, payload in zip(batch["url"], batch["html"]):
@@ -389,7 +407,7 @@ def extract_words(
             yield (
                 pd.concat(outs, ignore_index=True)
                 if outs
-                else pd.DataFrame(columns=cols)
+                else pd.DataFrame(columns=_WORD_COLS)
             )
 
     src = partition_by_url(pages.select("url", "html"), num_partitions)
@@ -406,53 +424,30 @@ def _payload_to_table_rows(
     **table_kwargs,
 ) -> list:
     """Per-payload table-cell rows (TABLES_SCHEMA order) — shared by the
-    Spark plan and the materialized single-process oracle."""
-    from ..kernel.geom import curves_to_edges, lines_to_edges, rects_to_edges
-    from ..kernel.tables import extract_table_text, find_tables_frame, table_rows
+    Spark plan and the materialized single-process oracle. One style-free
+    parse; per page, the edges (lines, rects and, as in the reference's
+    page.edges, curves) and chars go straight from the parser buffers into
+    the array table kernel."""
+    from ..kernel import tables as T
 
     if payload is None or bytes(payload)[:5] != b"%PDF-":
         return []
     try:
-        frames = pdf_to_frames(bytes(payload))
+        interps = pdfparse.parse_pdf(bytes(payload), style=False)
     except Exception:  # noqa: BLE001
         return []
     out_rows = []
-    for pmeta in frames["pages"].itertuples(index=False):
-        pn = pmeta.page_number
-        chars = frames["chars"]
-        chars_p = chars[chars["page_number"] == pn]
-        edge_parts = []
-        ln = frames["lines"]
-        ln_p = ln[ln["page_number"] == pn]
-        if len(ln_p):
-            edge_parts.append(lines_to_edges(ln_p))
-        rc = frames["rects"]
-        rc_p = rc[rc["page_number"] == pn]
-        if len(rc_p):
-            edge_parts.append(rects_to_edges(rc_p))
-        # Reference includes curve-derived edges in page.edges
-        # (container.py:85-90); curve-ruled tables need them.
-        cv = frames.get("curves")
-        if cv is not None and "pts" in cv.columns:
-            cv_p = cv[cv["page_number"] == pn]
-            if len(cv_p):
-                edge_parts.append(curves_to_edges(cv_p))
-        edges = (
-            pd.concat(edge_parts, ignore_index=True)
-            if edge_parts
-            else pd.DataFrame(
-                columns=["x0", "x1", "top", "bottom", "width",
-                         "height", "orientation", "object_type"]
-            )
-        )
+    for it in interps:
+        pn = it.page_number
+        ca = CharArrays.from_interp(it)
         words = None
         if "text" in (vertical_strategy, horizontal_strategy):
-            words, _, _ = extract_words_frame(chars_p, WordSettings())
+            words = extract_words_ca(ca, WordSettings(), as_frame=False)[0]
         try:
-            tables = find_tables_frame(
-                edges,
+            tables = T.find_tables(
+                T.EdgeArrays.from_interp(it),
                 words=words,
-                page_bbox=(0.0, 0.0, pmeta.width, pmeta.height),
+                page_bbox=(0.0, 0.0, it.width, it.height),
                 vertical_strategy=vertical_strategy,
                 horizontal_strategy=horizontal_strategy,
                 **table_kwargs,
@@ -460,8 +455,8 @@ def _payload_to_table_rows(
         except Exception:  # noqa: BLE001
             continue
         for ti, cells in enumerate(tables):
-            grid = table_rows(cells)
-            texts = extract_table_text(cells, chars_p)
+            grid = T.table_rows(cells)
+            texts = T.extract_table_text(cells, ca)
             for ri, (row_cells, row_texts) in enumerate(zip(grid, texts)):
                 for ci, (cell, txt) in enumerate(zip(row_cells, row_texts)):
                     bbox = cell or (None, None, None, None)

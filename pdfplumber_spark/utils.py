@@ -29,9 +29,9 @@ from .kernel.layout import (
 from .kernel.words import (
     DEFAULT_X_TOLERANCE,
     DEFAULT_Y_TOLERANCE,
-    WordSettings,
     dedupe_chars_frame,
     extract_words_frame,
+    split_word_settings,
 )
 
 __all__ = [
@@ -400,15 +400,6 @@ def get_dict_type(d) -> Optional[str]:
 
 # --- text (reference utils/text.py public helpers) --------------------------
 
-_WS_FIELD_NAMES = set(WordSettings.__dataclass_fields__)
-
-
-def _split_text_kwargs(kwargs: dict):
-    ws = {k: v for k, v in kwargs.items() if k in _WS_FIELD_NAMES}
-    rest = {k: v for k, v in kwargs.items() if k not in _WS_FIELD_NAMES}
-    return WordSettings(**ws), rest
-
-
 def extract_text(chars, **kwargs) -> str:
     """Free-standing ``utils.extract_text`` over any iterable of char
     records — generators included (reference ``text.py`` extract_text;
@@ -418,7 +409,7 @@ def extract_text(chars, **kwargs) -> str:
     frame = _frame(chars)
     if len(frame) == 0:
         return ""
-    settings, rest = _split_text_kwargs(kwargs)
+    settings, rest = split_word_settings(kwargs)
     bbox = rest.pop("layout_bbox", None)
     if bbox is None:
         bbox = frame_bbox(frame)
@@ -442,7 +433,7 @@ def extract_words(chars, **kwargs) -> List[dict]:
     frame = _frame(chars)
     if len(frame) == 0:
         return []
-    settings, _ = _split_text_kwargs(kwargs)
+    settings, _ = split_word_settings(kwargs)
     words, _, _ = extract_words_frame(frame, settings)
     return words.to_dict("records")
 

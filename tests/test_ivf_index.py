@@ -123,3 +123,18 @@ def test_ivf_save_load_roundtrip(spark, emb, tmp_path):
     import pdfplumber_spark
 
     pdfplumber_spark.unpersist_all()
+
+
+def test_ivf_train_vector_width_not_dim(spark):
+    """Vectors shorter than ``dim`` (default 64) train at their own width.
+    Init is the two smallest ids (0 and 1); one Lloyd step moves each
+    centroid to the mean of its members: (0 + 0.1) / 2 and (1 + 0.9) / 2."""
+    import numpy as np
+
+    from pdfplumber_spark.operators.similarity import ivf_train
+
+    rows = [(i, [v] * 8) for i, v in enumerate((0.0, 1.0, 0.1, 0.9))]
+    emb8 = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    cents = ivf_train(emb8, n_clusters=2, iters=1)
+    assert cents.shape == (2, 8)
+    np.testing.assert_array_equal(cents, [[0.05] * 8, [0.95] * 8])

@@ -1,4 +1,3 @@
-import numpy as np
 import pandas as pd
 import pytest
 
@@ -14,64 +13,6 @@ def obj(**kw):
     }
     base.update(kw)
     return base
-
-
-def frames_equal(df, dicts, cols):
-    exp = pd.DataFrame(dicts)
-    for c in cols:
-        np.testing.assert_allclose(
-            df[c].to_numpy(np.float64), exp[c].to_numpy(np.float64), rtol=0, atol=1e-9,
-            err_msg=c,
-        )
-
-
-def test_shift_frame_matches_move_object():
-    ref = ref_module("utils.geometry")
-    o = obj()
-    got = G.shift_frame(pd.DataFrame([o]), "v", 7.0)
-    exp = ref.move_object(dict(o), "v", 7.0)
-    frames_equal(got, [exp], ["x0", "x1", "top", "bottom", "doctop", "y0", "y1"])
-    got = G.shift_frame(pd.DataFrame([o]), "h", -3.0)
-    exp = ref.move_object(dict(o), "h", -3.0)
-    frames_equal(got, [exp], ["x0", "x1", "top", "bottom"])
-
-
-@pytest.mark.parametrize("key,val", [("x0", 12.0), ("x1", 30.0), ("top", 2.0), ("bottom", 22.0)])
-def test_set_edge_coord_matches_resize_object(key, val):
-    ref = ref_module("utils.geometry")
-    o = obj()
-    got = G.set_edge_coord(pd.DataFrame([o]), key, np.array([val]))
-    exp = ref.resize_object(dict(o), key, val)
-    cols = ["x0", "x1", "top", "bottom", "width", "height", "doctop", "y0", "y1"]
-    frames_equal(got, [exp], [c for c in cols if c in exp])
-
-
-@pytest.mark.parametrize("seed", range(5))
-@pytest.mark.parametrize("attr", ["x0", "top"])
-def test_snap_differential(seed, attr):
-    ref = ref_module("utils.geometry")
-    rng = np.random.default_rng(seed)
-    objs = []
-    for _ in range(40):
-        x0 = round(float(rng.uniform(0, 100)), 2)
-        top = round(float(rng.uniform(0, 100)), 2)
-        w = round(float(rng.uniform(1, 20)), 2)
-        h = round(float(rng.uniform(1, 20)), 2)
-        objs.append(
-            {
-                "x0": x0, "x1": x0 + w, "top": top, "bottom": top + h,
-                "width": w, "height": h, "doctop": top + 500.0,
-            }
-        )
-    exp = ref.snap_objects([dict(o) for o in objs], attr, 3)
-    got = G.snap_frame(pd.DataFrame(objs), attr, 3)
-    # reference reorders by cluster; ours preserves input order. Compare as sets
-    key = ["x0", "x1", "top", "bottom", "doctop"]
-    exp_sorted = sorted([tuple(round(e[k], 6) for k in key) for e in exp])
-    got_sorted = sorted(
-        tuple(round(v, 6) for v in row) for row in got[key].to_numpy()
-    )
-    assert got_sorted == exp_sorted
 
 
 def test_rects_to_edges_matches_reference():

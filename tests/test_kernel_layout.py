@@ -190,8 +190,6 @@ def test_layout_fast_path_byte_identical():
     """page_text_ca on parser buffers must be byte-identical to
     page_text(layout=True) on the char frame — including the scotus
     reference golden."""
-    import numpy as np
-
     from pdfplumber_spark.kernel.layout import page_text_ca
     from pdfplumber_spark.kernel.pdfparse import parse_pdf, pdf_to_frames
     from pdfplumber_spark.kernel.words import CharArrays
@@ -208,9 +206,8 @@ def test_layout_fast_path_byte_identical():
         layout_width=float(meta.width), layout_height=float(meta.height),
     )
     it = parse_pdf(data, style=False)[0]
-    nums = np.frombuffer(it.ch_num, dtype=np.float64).reshape(it.n_chars, 12)
     fast = page_text_ca(
-        CharArrays.from_arrays(it.ch_text, nums), WordSettings(), layout=True,
+        CharArrays.from_interp(it), WordSettings(), layout=True,
         layout_bbox=(0, 0, float(it.width), float(it.height)),
         layout_width=float(it.width), layout_height=float(it.height),
     )

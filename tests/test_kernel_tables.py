@@ -98,14 +98,14 @@ def test_words_to_edges_differential(seed):
     wdicts = words.to_dict("records")
 
     exp_h = rt.words_to_edges_h(wdicts, 1)
-    got_h = T.words_to_edges_h(words, 1)
+    got_h = T.words_to_edges_h(words, 1).to_frame()
     key_h = ["x0", "x1", "top", "bottom"]
     assert sorted(tuple(round(e[k], 6) for k in key_h) for e in exp_h) == sorted(
         tuple(round(v, 6) for v in r) for r in got_h[key_h].to_numpy()
     )
 
     exp_v = rt.words_to_edges_v(wdicts, 2)
-    got_v = T.words_to_edges_v(words, 2)
+    got_v = T.words_to_edges_v(words, 2).to_frame()
     assert sorted(tuple(round(e[k], 6) for k in key_h) for e in exp_v) == sorted(
         tuple(round(v, 6) for v in r) for r in got_v[key_h].to_numpy()
     )
