@@ -20,18 +20,33 @@ returns, so a per-page or per-payload frame split hashes the same. The
 corpora are ``sources.corpus.generate_rows`` inputs (the sizes the sf0.01
 and sf0.1 pages corpora use, 80 and 400 docs at seed 42, and two more
 seeds) plus ``ruled``: ``kernel.pdfgen`` pages whose tables are ruled by
-lines, rects or curves, with split and jittered rulings. Name corpora after
-the checkout to hash only those. Run it on two checkouts and diff the
-output; single process, no Spark.
+lines, rects or curves, with split and jittered rulings.
+
+The ``spark`` surface starts a local Spark session (4 cores) and hashes,
+per Spark plan (the payload plans of ``plans.extract``, ``plans.search`` and
+``operators.multimodal``) over the ``ruled`` and ``seed7`` corpora, the
+collected rows sorted, and the ``executedPlan`` string of each of those
+plans and of every ``__spark_entry__.queries()`` entry (over
+``$SPARK_GRAFT_TESTDATA/sf0.001``; the variable must be set). Plan strings
+are normalised: ``#<id>`` expression ids, ``plan_id=<n>`` and the Python
+function name of ``MapInPandas`` are stripped.
+
+Name corpora (or ``spark``) after the checkout to hash only those. Run it
+on two checkouts and diff the output.
 """
 
 import hashlib
 import os
 import random
+import re
 import sys
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, sys.argv[1] if len(sys.argv) > 1 else HERE)
+CHECKOUT = os.path.abspath(sys.argv[1] if len(sys.argv) > 1 else HERE)
+sys.path.insert(0, CHECKOUT)
+# Spark's Python workers import the package from PYTHONPATH
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (CHECKOUT, os.environ.get("PYTHONPATH")) if p)
 
 import pdfplumber_spark.api as pdfplumber  # noqa: E402
 from pdfplumber_spark.kernel.pdfgen import make_pdf  # noqa: E402
@@ -184,9 +199,88 @@ def facade_words_tables(payload) -> list:
     return out
 
 
+def spark_plans(pages) -> dict:
+    """name -> DataFrame of every payload plan over ``pages``."""
+    from pdfplumber_spark.operators import multimodal as M
+
+    return {
+        "extract_text": X.extract_text(pages),
+        "extract_text[layout,dedupe]": X.extract_text(pages, layout=True, dedupe=True),
+        "extract_objects": X.extract_objects(pages),
+        "extract_objects[laparams]": X.extract_objects(pages, laparams={}),
+        "extract_words": X.extract_words(pages),
+        "extract_tables": X.extract_tables(pages),
+        "extract_tables[text]": X.extract_tables(
+            pages, vertical_strategy="text", horizontal_strategy="text"),
+        "explode_skewed": X.explode_skewed(pages, page_threshold=3),
+        "extract_text_salted": X.extract_text_salted(pages, page_threshold=3),
+        "extract_structure": X.extract_structure(pages, with_text=True),
+        "extract_page_meta": X.extract_page_meta(pages),
+        "extract_metadata": X.extract_metadata(pages),
+        "extract_annots": X.extract_annots(pages),
+        "search_pages": S.search_pages(pages, r"[a-z]{6,}"),
+        "extract_text_lines": S.extract_text_lines(pages),
+        "image_metadata": M.image_metadata(pages),
+        "pdf_image_stats": M.pdf_image_stats(pages),
+        "render_debug_png": M.render_debug_png(pages),
+    }
+
+
+def normalized_plan(df) -> str:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = re.sub(r"#\d+", "", plan)
+    plan = re.sub(r"plan_id=\d+", "plan_id", plan)
+    return re.sub(r"MapInPandas \w+\(", "MapInPandas (", plan)
+
+
+def spark_hashes() -> None:
+    import tempfile
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as E
+    import pdfplumber_spark
+    from pdfplumber_spark.session import get_spark
+
+    testdata = os.environ.get("SPARK_GRAFT_TESTDATA")
+    if not testdata:
+        sys.exit("the spark surface needs SPARK_GRAFT_TESTDATA, the directory "
+                 "holding the sf0.001 tables")
+
+    def digest(val) -> str:
+        return hashlib.sha256(repr(val).encode()).hexdigest()[:16]
+
+    spark = get_spark(app_name="output-hashes", cores=4, shuffle_partitions=8)
+    tmp = os.path.join(tempfile.gettempdir(), "output_hashes")
+    os.makedirs(tmp, exist_ok=True)
+    try:
+        for name in ("ruled", "seed7"):
+            path = os.path.join(tmp, f"{name}.parquet")
+            rows = [{"url": r["url"], "html": r["html"]} for r in CORPORA[name]()]
+            pq.write_table(pa.Table.from_pylist(rows, schema=pa.schema(
+                [("url", pa.string()), ("html", pa.binary())])), path)
+            pages = X.read_pages(spark, path)
+            for key, df in spark_plans(pages).items():
+                rows = sorted((tuple(r) for r in df.collect()), key=repr)
+                print(f"{name:8s} {'spark_rows[' + key + ']':48s} {digest(rows)}", flush=True)
+                print(f"{name:8s} {'spark_plan[' + key + ']':48s} "
+                      f"{digest(normalized_plan(df))}", flush=True)
+        sf = os.path.join(testdata, "sf0.001")
+        for key, q in E.queries().items():
+            print(f"{'board':8s} {'spark_plan[' + key + ']':48s} "
+                  f"{digest(normalized_plan(q(spark, sf)))}", flush=True)
+            pdfplumber_spark.unpersist_all()
+    finally:
+        spark.stop()
+
+
 def main() -> None:
-    names = sys.argv[2:] or list(CORPORA)
+    names = sys.argv[2:] or list(CORPORA) + ["spark"]
     for name in names:
+        if name == "spark":
+            spark_hashes()
+            continue
         hashes: dict = {}
 
         def add(key, val):

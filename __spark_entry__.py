@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pdfplumber_spark.kernel.textstats import LANG_PROFILES
+from pdfplumber_spark.plans.extract import spread
 
 _TOKEN_PATTERN = r"[A-Za-z]+|[0-9]+|[^\sA-Za-z0-9]"
 
@@ -39,20 +40,6 @@ _COSINE_PAIRS_SQL = """
 
 def _tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def _spread(df: DataFrame, *keys: str) -> DataFrame:
-    """Key-hash repartition right after the read: the sf tables are
-    single-row-group parquet files (one input split), so per-row-heavy
-    expressions (regexp counts, explodes, md5) otherwise evaluate in ONE
-    task regardless of cluster size (guide §2.5: repartition immediately
-    after an unsplittable read). The count derives from the running
-    cluster; results are partitioning-invariant. Count = defaultParallelism
-    (x1, not x2): these are light per-row expressions where extra waves of
-    tiny tasks cost more than they balance — the 2x factor is reserved for
-    the heavy skewed per-doc decode paths (plans.extract)."""
-    n = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(n, *[F.col(k) for k in keys])
 
 
 def _corpus_path(sf_dir: str) -> str:
@@ -104,7 +91,7 @@ def q_interval_merge(spark, sf_dir):
     segments."""
     from pdfplumber_spark.operators.clustering import interval_merge
 
-    li = _spread(
+    li = spread(
         _tbl(spark, sf_dir, "lineitem").select(
             "l_returnflag",
             F.col("l_quantity").alias("seg_start"),
@@ -172,7 +159,7 @@ def q_collate_line(spark, sf_dir):
     """collate_line ordered concat (text.py:761-772): per-order flag string
     in (linenumber, flag) order — full unique sort key, the same stable-sort
     discipline byte-identical text requires (SURVEY §4.3)."""
-    li = _spread(
+    li = spread(
         _tbl(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_linenumber", "l_returnflag"
         ),
@@ -405,7 +392,7 @@ def q_winnow_overlap(spark, sf_dir):
 def q_langid(spark, sf_dir):
     from pdfplumber_spark.operators.text_analysis import with_language
 
-    docs = _spread(_tbl(spark, sf_dir, "documents"), "doc_id")
+    docs = spread(_tbl(spark, sf_dir, "documents"), "doc_id")
     return with_language(docs, "text").select("doc_id", "lang_detected")
 
 
@@ -568,7 +555,7 @@ def q_minhash_pairs_scale(spark, sf_dir):
 
     # full-corpus legs: spread BEFORE the signature kernel (the sliced
     # <300-doc rows skip this; see minhash_signatures note)
-    docs = _spread(_tbl(spark, sf_dir, "documents"), "doc_id")
+    docs = spread(_tbl(spark, sf_dir, "documents"), "doc_id")
     full = minhash_lsh_candidates(
         minhash_signatures(docs, "doc_id", "text")
     ).select(

@@ -17,11 +17,12 @@ Reference analogue: PIL decode in display.py:36-90.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
+from functools import partial
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
+
+from ..plans.extract import map_payloads, spread
 
 IMAGE_META_SCHEMA = T.StructType(
     [
@@ -67,40 +68,27 @@ def _payload_to_image_row(url, payload) -> tuple:
         return (url, len(data), fmt, None, None, None, sha, "error")
 
 
-def _spread_payloads(
-    df: DataFrame, url_col: str, bin_col: str, num_partitions: int | None
-) -> DataFrame:
-    """Url-hash repartition before a per-payload decode kernel. Decode cost
-    scales with payload complexity, not byte count — a single-row-group
-    parquet scan of a KB-sized corpus is ONE input split, so without this
-    exchange every decode below would run in one task (measured: the whole
-    render_png board row serialized on one core). Count defaults to the
-    scale-adaptive cluster-derived value (plans.extract.default_doc_partitions)."""
-    from ..plans.extract import default_doc_partitions
+def _payload_to_image_rows(url, payload) -> list:
+    return [_payload_to_image_row(url, payload)]
 
-    src = df.select(url_col, bin_col)
-    # factor=2: decode cost per doc is strongly skewed (page counts,
-    # raster sizes) — twice the core count rebalances the tail
-    n = num_partitions or default_doc_partitions(src, factor=2)
-    return src.repartition(n, F.xxhash64(url_col))
 
+# Every decode plan below spreads (url, payload) by url hash first: decode
+# cost scales with payload complexity, not byte count, and a single-row-group
+# parquet scan of a KB-sized corpus is ONE input split (measured: without the
+# exchange the whole render_png board row serialized on one core). factor=2:
+# per-doc decode cost is strongly skewed (page counts, raster sizes), and
+# twice the core count rebalances the tail.
 
 def image_metadata(
     df: DataFrame, url_col: str = "url", bin_col: str = "html",
     num_partitions: int | None = None,
 ) -> DataFrame:
     """binary column -> typed metadata rows (mapInPandas, Arrow-batched)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = [
-                _payload_to_image_row(url, payload)
-                for url, payload in zip(b[url_col], b[bin_col])
-            ]
-            yield pd.DataFrame(rows, columns=[f.name for f in IMAGE_META_SCHEMA.fields])
-
-    return _spread_payloads(df, url_col, bin_col, num_partitions).mapInPandas(
-        run, schema=IMAGE_META_SCHEMA
+    return map_payloads(
+        spread(df.select(url_col, bin_col), F.xxhash64(url_col), factor=2,
+               num_partitions=num_partitions),
+        _payload_to_image_rows,
+        IMAGE_META_SCHEMA,
     )
 
 
@@ -121,8 +109,6 @@ IMAGE_STATS_SCHEMA = T.StructType(
         T.StructField("status", T.StringType(), False),
     ]
 )
-
-_STATS_COLS = [f.name for f in IMAGE_STATS_SCHEMA.fields]
 
 
 def _image_stat_rows(url, payload) -> list:
@@ -177,16 +163,11 @@ def pdf_image_stats(
     this costs a full (style-free) page parse per doc — the price of
     reference semantics; the resource-walk shortcut remains as the
     fallback for uninterpretable streams."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[bin_col]):
-                rows.extend(_image_stat_rows(url, payload))
-            yield pd.DataFrame(rows, columns=_STATS_COLS)
-
-    return _spread_payloads(df, url_col, bin_col, num_partitions).mapInPandas(
-        run, schema=IMAGE_STATS_SCHEMA
+    return map_payloads(
+        spread(df.select(url_col, bin_col), F.xxhash64(url_col), factor=2,
+               num_partitions=num_partitions),
+        _image_stat_rows,
+        IMAGE_STATS_SCHEMA,
     )
 
 
@@ -246,14 +227,9 @@ def render_debug_png(
     row per page with PNG dimensions + sha256. mapInPandas over the
     url-hash partitioning — render is per-doc independent, so the plan
     is embarrassingly parallel; the PNG payload is hashed, not shuffled."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for url, payload in zip(b[url_col], b[bin_col]):
-                rows.extend(_render_rows(url, payload, resolution))
-            yield pd.DataFrame(rows, columns=_RENDER_COLS)
-
-    return _spread_payloads(df, url_col, bin_col, num_partitions).mapInPandas(
-        run, schema=RENDER_SCHEMA
+    return map_payloads(
+        spread(df.select(url_col, bin_col), F.xxhash64(url_col), factor=2,
+               num_partitions=num_partitions),
+        partial(_render_rows, resolution=resolution),
+        RENDER_SCHEMA,
     )

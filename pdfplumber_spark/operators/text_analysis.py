@@ -14,16 +14,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from ..kernel.textstats import LANG_PROFILES, TOKEN_RE
-
-
-def _spread_by_id(df: DataFrame, id_col: str) -> DataFrame:
-    """Hash-repartition on the id before a per-row Python kernel: the
-    bench corpus tables are single-row-group parquet files (one input
-    split), so without an exchange the kernel below runs in ONE task no
-    matter the cluster size. Count is cluster-derived (2x cores), the
-    same scale rule as plans.extract.default_doc_partitions."""
-    n = df.sparkSession.sparkContext.defaultParallelism * 2
-    return df.repartition(n, F.col(id_col))
+from ..plans.extract import spread
 
 # Java + RE2 compatible token pattern (same semantics both engines)
 TOKEN_PATTERN = TOKEN_RE.pattern
@@ -225,7 +216,7 @@ def winnow_table(
     # single-row-group corpus files scan as ONE split — spread docs by id
     # before the hash kernel so it parallelizes (guide: repartition right
     # after an unsplittable read; count derives from the cluster)
-    src = _spread_by_id(df.select(id_col, text_col), id_col)
+    src = spread(df.select(id_col, text_col), id_col, factor=2)
     return src.mapInPandas(run, schema=schema)
 
 

@@ -3,17 +3,21 @@ tables DataFrames.
 
 Physical design (SURVEY.md §3.1, §4):
 
-- ONE shuffle total: ``repartition(xxhash64(url))`` right after the scan
+- ONE shuffle per plan: ``spread(df, xxhash64(url))`` right after the scan
   spreads documents evenly; every downstream operator is partition-local
-  (all reference joins are page-local — SURVEY.md §2.3).
-- ``mapInPandas`` runs the Arrow-batched kernels; whole-document parse and
-  per-page text assembly happen inside one task — text extraction is a
-  single-pass, shuffle-free plan.
-- Text, words and tables parse each payload once (``parse_pdf``, no
-  per-char style unless a word setting names a style column) and run their
-  kernels on the parser's buffers (``CharArrays.from_interp``,
-  ``tables.EdgeArrays.from_interp``): no per-page pandas frames. Objects,
-  annotations and page metadata build ``pdf_to_frames`` frames.
+  (all reference joins are page-local — SURVEY.md §2.3). The one exception
+  is ``extract_text_salted``, which spreads a second time on
+  ``xxhash64(url, page_base)`` after exploding mega-documents into pages.
+- Every plan is a per-payload function (``_payload_to_*``: url, payload ->
+  rows) run by ``map_payloads``, the one ``mapInPandas`` batch loop; the
+  single-process oracles call the same functions. Whole-document parse and
+  per-page text assembly happen inside one task.
+- Text, words, tables and page metadata parse each payload once
+  (``parse_pdf``, no per-char style unless a word setting names a style
+  column) and run their kernels on the parser's buffers
+  (``CharArrays.from_interp``, ``tables.EdgeArrays.from_interp``): no
+  per-page pandas frames. Objects and annotations build ``pdf_to_frames``
+  frames.
 - Binary payloads are sniffed (%PDF- magic) and routed to the PDF or HTML
   kernel; malformed payloads yield ``status='error'`` rows with a reason
   instead of failing the job (reference analogue: the repair path,
@@ -25,12 +29,12 @@ Physical design (SURVEY.md §3.1, §4):
 
 from __future__ import annotations
 
-import traceback
-from typing import Iterator, Optional
+from functools import partial
+from typing import Callable, Iterator, Optional
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..kernel import pdfparse
 from ..kernel.htmlstrip import extract_main_text_bytes
@@ -43,7 +47,17 @@ from ..kernel.words import (
     extract_words_frame,  # noqa: F401 - perfbench.tracing hook name
     needs_style,
 )
-from ..schemas import EXTRACTED_SCHEMA, OBJECTS_SCHEMA, TABLES_SCHEMA, WORDS_SCHEMA
+from ..schemas import (
+    ANNOTS_SCHEMA,
+    EXPLODED_SCHEMA,
+    EXTRACTED_SCHEMA,
+    METADATA_SCHEMA,
+    OBJECTS_SCHEMA,
+    PAGE_GEOMETRY_SCHEMA,
+    STRUCTURE_SCHEMA,
+    TABLES_SCHEMA,
+    WORDS_SCHEMA,
+)
 
 PAGE_SEP = "\n\n"
 
@@ -55,30 +69,49 @@ def read_pages(spark, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def default_doc_partitions(df: DataFrame, factor: int = 1) -> int:
-    """Scale-adaptive partition count for per-document kernel stages:
-    the running cluster's core count times ``factor``
-    (``defaultParallelism`` tracks the executor fleet, so the same code
-    parallelizes local[2] tests and a 1000-executor cluster). An EXPLICIT
-    count matters here: a keyless ``repartition(hash)`` inherits
-    ``spark.sql.shuffle.partitions`` and is then AQE-coalescible by
-    BYTES — a small-bytes corpus of expensive payloads (PDFs are KBs of
-    input but seconds of kernel work) would collapse to one task.
-    ``factor=1`` for parse-weight kernels (measured best: extra task
-    waves cost more than they balance); callers with strongly skewed
-    per-doc cost (rasterization) pass ``factor=2``."""
-    return df.sparkSession.sparkContext.defaultParallelism * factor
+def spread(
+    df: DataFrame, *keys, factor: int = 1, num_partitions: Optional[int] = None
+) -> DataFrame:
+    """Hash-repartition ``df`` on ``keys`` (column names or expressions)
+    before per-row Python work: the one place a partition count is derived
+    from the cluster.
+
+    The sf tables and page corpora are single-row-group parquet files (one
+    input split), so without this exchange every kernel downstream runs in
+    ONE task. The count is ``num_partitions`` or the cluster's core count
+    (``defaultParallelism``, which tracks the executor fleet) times
+    ``factor``. An EXPLICIT count matters: a keyless ``repartition(hash)``
+    inherits ``spark.sql.shuffle.partitions`` and is then AQE-coalescible
+    by BYTES, and a small-bytes corpus of expensive payloads (PDFs are KBs
+    of input but seconds of kernel work) would collapse to one task.
+    ``factor=1`` for parse-weight kernels and light per-row expressions
+    (measured best: extra task waves cost more than they balance);
+    ``factor=2`` for strongly skewed per-row cost (rasterization, image
+    decode, winnow hashing)."""
+    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism * factor
+    return df.repartition(n, *keys)
 
 
-def partition_by_url(df: DataFrame, num_partitions: Optional[int] = None) -> DataFrame:
-    """THE shuffle of the pipeline: spread documents by url hash.
+def map_payloads(df: DataFrame, fn: Callable, schema: T.StructType) -> DataFrame:
+    """THE per-row ``mapInPandas`` batch loop of the payload plans: call
+    ``fn(*row)`` for each row of ``df`` (its columns in order) and emit the
+    rows it returns as ``schema``. ``fn`` returns a list of row tuples in
+    ``schema`` order or a list of DataFrames holding ``schema``'s columns
+    (either list may be empty)."""
+    in_cols = df.columns
+    out_cols = [f.name for f in schema.fields]
 
-    ``num_partitions=None`` sizes the exchange from the cluster
-    (``default_doc_partitions``) rather than from data bytes — per-doc
-    decode cost, not byte count, is the load unit of this pipeline."""
-    if not num_partitions:
-        num_partitions = default_doc_partitions(df)
-    return df.repartition(num_partitions, F.xxhash64("url"))
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for batch in batches:
+            out = []
+            for row in zip(*(batch[c] for c in in_cols)):
+                out.extend(fn(*row))
+            if out and isinstance(out[0], pd.DataFrame):
+                yield pd.concat(out, ignore_index=True)[out_cols]
+            else:
+                yield pd.DataFrame(out, columns=out_cols)
+
+    return df.mapInPandas(run, schema=schema)
 
 
 # --- single-pass text extraction -------------------------------------------
@@ -159,10 +192,7 @@ def _payload_rows_inner(url: str, data: bytes, layout: bool, dedupe: bool) -> li
         txt = extract_main_text_bytes(data)
         return [(url, 1, txt, len(txt), len(txt.split()), "ok", None)]
     except Exception as e:  # noqa: BLE001 - error-row contract
-        return [
-            (url, 0, None, None, None, "error",
-             f"{type(e).__name__}: {e}"[:200] or traceback.format_exc()[:200])
-        ]
+        return [(url, 0, None, None, None, "error", f"{type(e).__name__}: {e}"[:200])]
 
 
 def extract_text(
@@ -180,24 +210,12 @@ def extract_text(
     (reference PDF.open(repair=True), kernel/pdfrepair.py) — off by
     default, matching the reference's opt-in semantics.
     """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = []
-            for url, payload in zip(batch["url"], batch["html"]):
-                out.extend(
-                    _payload_to_text_rows(url, payload, layout, dedupe, repair)
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "url", "page_number", "text", "n_chars", "n_words",
-                    "status", "error",
-                ],
-            )
-
-    src = partition_by_url(pages.select("url", "html"), num_partitions)
-    return src.mapInPandas(run, schema=EXTRACTED_SCHEMA)
+    return map_payloads(
+        spread(pages.select("url", "html"), F.xxhash64("url"),
+               num_partitions=num_partitions),
+        partial(_payload_to_text_rows, layout=layout, dedupe=dedupe, repair=repair),
+        EXTRACTED_SCHEMA,
+    )
 
 
 def document_text(extracted: DataFrame) -> DataFrame:
@@ -258,7 +276,7 @@ def _frames_to_objects(url: str, frames) -> pd.DataFrame:
     return out[_OBJ_COLS]
 
 
-def _laparams_objects(url: str, frames, laparams) -> Optional[pd.DataFrame]:
+def _laparams_objects(url: str, frames, laparams) -> pd.DataFrame:
     """LAParams layout analysis over the objects output (reference
     cli.py:56 ``--laparams`` + page.py:269-277): adds textline*/textbox*
     rows and renumbers char ``obj_index`` to pdfminer reading order so
@@ -308,21 +326,22 @@ def _laparams_objects(url: str, frames, laparams) -> Optional[pd.DataFrame]:
     return pd.concat([out, extra], ignore_index=True)
 
 
-def _payload_to_objects(url: str, payload, laparams=None) -> Optional[pd.DataFrame]:
-    """Per-payload unified objects frame — shared by the Spark plan and the
+def _payload_to_objects(url: str, payload, laparams=None) -> list:
+    """Per-payload unified objects frame, as ``[frame]`` (``[]`` for a
+    non-PDF or unparseable payload) — shared by the Spark plan and the
     materialized single-process oracle."""
     if payload is None:
-        return None
+        return []
     data = bytes(payload)
     if data[:5] != b"%PDF-":
-        return None
+        return []
     try:
         frames = pdf_to_frames(data)
     except Exception:  # noqa: BLE001
-        return None
+        return []
     if laparams is not None:
-        return _laparams_objects(url, frames, laparams)
-    return _frames_to_objects(url, frames)
+        return [_laparams_objects(url, frames, laparams)]
+    return [_frames_to_objects(url, frames)]
 
 
 def extract_objects(
@@ -331,22 +350,12 @@ def extract_objects(
     """pages -> unified objects DataFrame (char/line/rect/curve rows;
     plus textline*/textbox* rows and reading-order char indices when
     ``laparams`` is given — reference cli.py:56)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            outs = []
-            for url, payload in zip(batch["url"], batch["html"]):
-                obj = _payload_to_objects(url, payload, laparams=laparams)
-                if obj is not None:
-                    outs.append(obj)
-            yield (
-                pd.concat(outs, ignore_index=True)
-                if outs
-                else pd.DataFrame(columns=_OBJ_COLS)
-            )
-
-    src = partition_by_url(pages.select("url", "html"), num_partitions)
-    return src.mapInPandas(run, schema=OBJECTS_SCHEMA)
+    return map_payloads(
+        spread(pages.select("url", "html"), F.xxhash64("url"),
+               num_partitions=num_partitions),
+        partial(_payload_to_objects, laparams=laparams),
+        OBJECTS_SCHEMA,
+    )
 
 
 # --- words ------------------------------------------------------------------
@@ -397,21 +406,12 @@ def extract_words(
     num_partitions: Optional[int] = None,
 ) -> DataFrame:
     """pages -> words DataFrame (per merge_chars semantics, text.py:490-514)."""
-    s = settings or WordSettings()
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            outs = []
-            for url, payload in zip(batch["url"], batch["html"]):
-                outs.extend(_payload_to_word_frames(url, payload, s))
-            yield (
-                pd.concat(outs, ignore_index=True)
-                if outs
-                else pd.DataFrame(columns=_WORD_COLS)
-            )
-
-    src = partition_by_url(pages.select("url", "html"), num_partitions)
-    return src.mapInPandas(run, schema=WORDS_SCHEMA)
+    return map_payloads(
+        spread(pages.select("url", "html"), F.xxhash64("url"),
+               num_partitions=num_partitions),
+        partial(_payload_to_word_frames, s=settings or WordSettings()),
+        WORDS_SCHEMA,
+    )
 
 
 # --- tables -----------------------------------------------------------------
@@ -476,26 +476,35 @@ def extract_tables(
 ) -> DataFrame:
     """pages -> tables DataFrame
     (url, page_number, table_index, row_index, col_index, text, bbox)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in TABLES_SCHEMA.fields]
-        for batch in batches:
-            out_rows = []
-            for url, payload in zip(batch["url"], batch["html"]):
-                out_rows.extend(
-                    _payload_to_table_rows(
-                        url, payload,
-                        vertical_strategy=vertical_strategy,
-                        horizontal_strategy=horizontal_strategy,
-                        **table_kwargs,
-                    )
-                )
-            yield pd.DataFrame(out_rows, columns=cols)
-
-    src = partition_by_url(pages.select("url", "html"), num_partitions)
-    return src.mapInPandas(run, schema=TABLES_SCHEMA)
+    return map_payloads(
+        spread(pages.select("url", "html"), F.xxhash64("url"),
+               num_partitions=num_partitions),
+        partial(
+            _payload_to_table_rows,
+            vertical_strategy=vertical_strategy,
+            horizontal_strategy=horizontal_strategy,
+            **table_kwargs,
+        ),
+        TABLES_SCHEMA,
+    )
 
 
 # --- skew handling: mega-document page explosion (SCALE.md §2.1) -------------
+
+def _explode_payload(url: str, payload, page_threshold: int) -> list:
+    """One (url, page_base, html) row per page of a PDF with more than
+    ``page_threshold`` pages, else the payload as one row with page_base 0."""
+    from ..kernel.pdfsplit import count_pages, split_pdf_pages
+
+    data = bytes(payload) if payload is not None else b""
+    if data[:5] == b"%PDF-" and count_pages(data) > page_threshold:
+        try:
+            parts = split_pdf_pages(data)
+        except Exception:  # noqa: BLE001
+            return [(url, 0, data)]
+        return [(url, i + 1, part) for i, part in enumerate(parts)]
+    return [(url, 0, payload)]
+
 
 def explode_skewed(
     pages: DataFrame,
@@ -509,37 +518,21 @@ def explode_skewed(
     page number for exploded rows, 0 for intact documents. The xref-only
     page count is cheap (~2 ms/page to split; stream bytes copied raw).
     """
-    from pyspark.sql import types as T
-
-    from ..kernel.pdfsplit import count_pages, split_pdf_pages
-
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("page_base", T.IntegerType(), False),
-            T.StructField("html", T.BinaryType(), True),
-        ]
+    return map_payloads(
+        spread(pages.select("url", "html"), F.xxhash64("url"),
+               num_partitions=num_partitions),
+        partial(_explode_payload, page_threshold=page_threshold),
+        EXPLODED_SCHEMA,
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for url, payload in zip(batch["url"], batch["html"]):
-                data = bytes(payload) if payload is not None else b""
-                if data[:5] == b"%PDF-" and count_pages(data) > page_threshold:
-                    try:
-                        parts = split_pdf_pages(data)
-                    except Exception:  # noqa: BLE001
-                        rows.append((url, 0, data))
-                        continue
-                    for i, part in enumerate(parts):
-                        rows.append((url, i + 1, part))
-                else:
-                    rows.append((url, 0, payload))
-            yield pd.DataFrame(rows, columns=["url", "page_base", "html"])
 
-    src = partition_by_url(pages.select("url", "html"), num_partitions)
-    return src.mapInPandas(run, schema=schema)
+def _salted_text_rows(url: str, page_base: int, payload, layout: bool) -> list:
+    """Text rows of one ``explode_skewed`` row: an exploded single-page
+    payload gets its original page number back."""
+    rows = _payload_to_text_rows(url, payload, layout)
+    if page_base:
+        return [(r[0], int(page_base)) + r[2:] for r in rows]
+    return rows
 
 
 def extract_text_salted(
@@ -550,33 +543,30 @@ def extract_text_salted(
 ) -> DataFrame:
     """extract_text with mega-document page salting: skewed docs explode to
     per-page rows BEFORE the parse stage; the second repartition spreads
-    the exploded pages across the cluster."""
+    the exploded pages across the cluster (exploded pages of one url get
+    distinct partitions)."""
     exploded = explode_skewed(pages, page_threshold, num_partitions)
-    # second spread: exploded pages of one url get distinct partitions
-    # (explicit count for the same AQE-coalescing reason as partition_by_url)
-    exploded = exploded.repartition(
-        num_partitions or default_doc_partitions(exploded),
-        F.xxhash64("url", "page_base"),
+    return map_payloads(
+        spread(exploded, F.xxhash64("url", "page_base"),
+               num_partitions=num_partitions),
+        partial(_salted_text_rows, layout=layout),
+        EXTRACTED_SCHEMA,
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = []
-            for url, base, payload in zip(
-                batch["url"], batch["page_base"], batch["html"]
-            ):
-                rows = _payload_to_text_rows(url, payload, layout)
-                if base:
-                    # single-page payload: restore the original page number
-                    rows = [(r[0], int(base)) + r[2:] for r in rows]
-                out.extend(rows)
-            yield pd.DataFrame(
-                out,
-                columns=["url", "page_number", "text", "n_chars", "n_words",
-                         "status", "error"],
-            )
 
-    return exploded.mapInPandas(run, schema=EXTRACTED_SCHEMA)
+def _payload_to_structure_rows(url: str, payload, with_text: bool = False,
+                               laparams=None) -> list:
+    """Per-payload ``[(url, structure_json)]`` (json None when the tree
+    cannot be read; no row for a non-PDF payload)."""
+    from ..kernel.structure import tree_to_json
+
+    if payload is None or bytes(payload)[:5] != b"%PDF-":
+        return []
+    try:
+        return [(url, tree_to_json(bytes(payload), with_text=with_text,
+                                   laparams=laparams))]
+    except Exception:  # noqa: BLE001
+        return [(url, None)]
 
 
 def extract_structure(
@@ -587,75 +577,37 @@ def extract_structure(
     column (SURVEY §1.2: Spark has no recursive StructType). ``with_text``
     is the CLI --structure-text form (cli.py:75-93); ``laparams`` makes
     mcid text concatenation follow pdfminer reading order (cli.py:29)."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("structure_json", T.StringType(), True),
-        ]
+    return map_payloads(
+        spread(pages.select("url", "html"), F.xxhash64("url"),
+               num_partitions=num_partitions),
+        partial(_payload_to_structure_rows, with_text=with_text, laparams=laparams),
+        STRUCTURE_SCHEMA,
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernel.structure import tree_to_json
 
-        for batch in batches:
-            rows = []
-            for url, payload in zip(batch["url"], batch["html"]):
-                if payload is None or bytes(payload)[:5] != b"%PDF-":
-                    continue
-                try:
-                    rows.append(
-                        (url, tree_to_json(bytes(payload),
-                                           with_text=with_text,
-                                           laparams=laparams))
-                    )
-                except Exception:  # noqa: BLE001
-                    rows.append((url, None))
-            yield pd.DataFrame(rows, columns=["url", "structure_json"])
-
-    src = partition_by_url(pages.select("url", "html"), num_partitions)
-    return src.mapInPandas(run, schema=schema)
+def _payload_to_page_geometry_rows(url: str, payload) -> list:
+    """Per-payload (url, page_number, width, height, rotation) rows, read
+    off the style-free parse's page interpreters."""
+    if payload is None or bytes(payload)[:5] != b"%PDF-":
+        return []
+    try:
+        interps = pdfparse.parse_pdf(bytes(payload), style=False)
+    except Exception:  # noqa: BLE001
+        return []
+    return [(url, it.page_number, it.width, it.height, it.rotation)
+            for it in interps]
 
 
 def extract_page_meta(
     pages: DataFrame, num_partitions: Optional[int] = None
 ) -> DataFrame:
     """pages -> (url, page_number, width, height, rotation) per PDF page."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("page_number", T.IntegerType(), False),
-            T.StructField("width", T.DoubleType(), True),
-            T.StructField("height", T.DoubleType(), True),
-            T.StructField("rotation", T.IntegerType(), True),
-        ]
+    return map_payloads(
+        spread(pages.select("url", "html"), F.xxhash64("url"),
+               num_partitions=num_partitions),
+        _payload_to_page_geometry_rows,
+        PAGE_GEOMETRY_SCHEMA,
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in schema.fields]
-        for batch in batches:
-            outs = []
-            for url, payload in zip(batch["url"], batch["html"]):
-                if payload is None or bytes(payload)[:5] != b"%PDF-":
-                    continue
-                try:
-                    meta = pdf_to_frames(bytes(payload), style=False)["pages"]
-                except Exception:  # noqa: BLE001
-                    continue
-                m = meta.copy()
-                m["url"] = url
-                outs.append(m[cols])
-            yield (
-                pd.concat(outs, ignore_index=True)
-                if outs
-                else pd.DataFrame(columns=cols)
-            )
-
-    src = partition_by_url(pages.select("url", "html"), num_partitions)
-    return src.mapInPandas(run, schema=schema)
 
 
 def with_doc_doctop(df: DataFrame, page_meta: DataFrame) -> DataFrame:
@@ -704,51 +656,35 @@ def extract_metadata(
     """pages -> (url, key, value) document-metadata rows. The MapType form
     is ``F.map_from_entries`` over this (SURVEY §2.1); the exploded form is
     the join/SQL-friendly one."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("key", T.StringType(), False),
-            T.StructField("value", T.StringType(), True),
-        ]
+    return map_payloads(
+        spread(pages.select("url", "html"), F.xxhash64("url"),
+               num_partitions=num_partitions),
+        _payload_to_metadata_rows,
+        METADATA_SCHEMA,
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for url, payload in zip(batch["url"], batch["html"]):
-                rows.extend(_payload_to_metadata_rows(url, payload))
-            yield pd.DataFrame(rows, columns=["url", "key", "value"])
-
-    src = partition_by_url(pages.select("url", "html"), num_partitions)
-    return src.mapInPandas(run, schema=schema)
 
 
 # --- annots / hyperlinks -----------------------------------------------------
 
-ANNOT_COLS = [
-    "url", "page_number", "x0", "top", "x1", "bottom", "doctop",
-    "uri", "title", "contents",
-]
+ANNOT_COLS = [f.name for f in ANNOTS_SCHEMA.fields]
 
 
-def _payload_to_annots(url: str, payload, cols=None) -> Optional[pd.DataFrame]:
-    """Per-payload annotation frame — shared by the Spark plan and the
-    materialized single-process oracle."""
-    cols = cols or ANNOT_COLS
+def _payload_to_annots(url: str, payload) -> list:
+    """Per-payload annotation frame, as ``[frame]`` (``[]`` when there are
+    none) — shared by the Spark plan and the materialized single-process
+    oracle."""
     if payload is None or bytes(payload)[:5] != b"%PDF-":
-        return None
+        return []
     try:
         frames = pdf_to_frames(bytes(payload), style=False)
     except Exception:  # noqa: BLE001
-        return None
+        return []
     a = frames["annots"]
     if len(a) == 0:
-        return None
+        return []
     a = a.copy()
     a["url"] = url
-    return a[cols]
+    return [a[ANNOT_COLS]]
 
 
 def extract_annots(
@@ -756,39 +692,12 @@ def extract_annots(
 ) -> DataFrame:
     """pages -> annotation rows (``page.py:280-323``); ``hyperlinks_only``
     keeps rows with a uri (``page.py:321-323``)."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("page_number", T.IntegerType(), False),
-            T.StructField("x0", T.DoubleType(), True),
-            T.StructField("top", T.DoubleType(), True),
-            T.StructField("x1", T.DoubleType(), True),
-            T.StructField("bottom", T.DoubleType(), True),
-            T.StructField("doctop", T.DoubleType(), True),
-            T.StructField("uri", T.StringType(), True),
-            T.StructField("title", T.StringType(), True),
-            T.StructField("contents", T.StringType(), True),
-        ]
+    out = map_payloads(
+        spread(pages.select("url", "html"), F.xxhash64("url"),
+               num_partitions=num_partitions),
+        _payload_to_annots,
+        ANNOTS_SCHEMA,
     )
-    cols = [f.name for f in schema.fields]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            outs = []
-            for url, payload in zip(batch["url"], batch["html"]):
-                a = _payload_to_annots(url, payload, cols)
-                if a is not None:
-                    outs.append(a)
-            yield (
-                pd.concat(outs, ignore_index=True)
-                if outs
-                else pd.DataFrame(columns=cols)
-            )
-
-    src = partition_by_url(pages.select("url", "html"), num_partitions)
-    out = src.mapInPandas(run, schema=schema)
     if hyperlinks_only:
         out = out.where(F.col("uri").isNotNull())
     return out
@@ -802,7 +711,4 @@ def oracle_extract_text(payloads, layout: bool = False) -> pd.DataFrame:
     rows = []
     for url, payload in payloads:
         rows.extend(_payload_to_text_rows(url, payload, layout))
-    return pd.DataFrame(
-        rows,
-        columns=["url", "page_number", "text", "n_chars", "n_words", "status", "error"],
-    )
+    return pd.DataFrame(rows, columns=[f.name for f in EXTRACTED_SCHEMA.fields])

@@ -3,19 +3,21 @@
 
 Per page: build the plain textmap in the kernel (``page_textmap``), regex
 over the rendered string, map spans back to source chars through the
-provenance array, emit match rows with bboxes. One mapInPandas pass,
-partition-local.
+provenance array, emit match rows with bboxes. One mapInPandas pass
+(``plans.extract.map_payloads``), partition-local.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from functools import partial
+from typing import Optional
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..kernel.layout import page_textmap, search_text
 from ..kernel.pdfparse import pdf_to_frames
+from .extract import map_payloads, spread
 
 MATCHES_SCHEMA = T.StructType(
     [
@@ -54,7 +56,13 @@ def search_pages(
 ) -> DataFrame:
     """Regex search across every PDF page of the corpus -> matches with
     bboxes (Page.search semantics, ``page.py:485-502``)."""
-    return _run(pages, pattern, regex, case, False, num_partitions)
+    return map_payloads(
+        spread(pages.select("url", "html"), F.xxhash64("url"),
+               num_partitions=num_partitions),
+        partial(_payload_to_match_frames, pattern=pattern, regex=regex,
+                case=case, strip_lines=False),
+        MATCHES_SCHEMA,
+    )
 
 
 def extract_text_lines(
@@ -62,7 +70,13 @@ def extract_text_lines(
 ) -> DataFrame:
     """Per-page stripped text lines with bboxes
     (``TextMap.extract_text_lines``, ``text.py:212-230``)."""
-    return _run(pages, "", True, True, True, num_partitions)
+    return map_payloads(
+        spread(pages.select("url", "html"), F.xxhash64("url"),
+               num_partitions=num_partitions),
+        partial(_payload_to_match_frames, pattern="", regex=True, case=True,
+                strip_lines=True),
+        MATCHES_SCHEMA,
+    )
 
 
 def _payload_to_match_frames(url, payload, pattern, regex, case,
@@ -88,25 +102,3 @@ def _payload_to_match_frames(url, payload, pattern, regex, case,
         outs.append(m[cols])
     return outs
 
-
-def _run(pages, pattern, regex, case, strip_lines, num_partitions):
-    from .extract import partition_by_url
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in MATCHES_SCHEMA.fields]
-        for batch in batches:
-            outs = []
-            for url, payload in zip(batch["url"], batch["html"]):
-                outs.extend(
-                    _payload_to_match_frames(
-                        url, payload, pattern, regex, case, strip_lines
-                    )
-                )
-            yield (
-                pd.concat(outs, ignore_index=True)
-                if outs
-                else pd.DataFrame(columns=cols)
-            )
-
-    src = partition_by_url(pages.select("url", "html"), num_partitions)
-    return src.mapInPandas(run, schema=MATCHES_SCHEMA)

@@ -64,17 +64,6 @@ OBJECTS_SCHEMA = T.StructType(
     ]
 )
 
-PAGE_META_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("page_number", T.IntegerType(), False),
-        T.StructField("width", T.DoubleType(), True),
-        T.StructField("height", T.DoubleType(), True),
-        T.StructField("rotation", T.IntegerType(), True),
-        T.StructField("initial_doctop", T.DoubleType(), True),
-    ]
-)
-
 EXTRACTED_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType(), False),
@@ -117,5 +106,55 @@ TABLES_SCHEMA = T.StructType(
         T.StructField("top", T.DoubleType(), True),
         T.StructField("x1", T.DoubleType(), True),
         T.StructField("bottom", T.DoubleType(), True),
+    ]
+)
+
+# mega-document page explosion: page_base is the original page number of an
+# exploded 1-page payload, 0 for an intact document
+EXPLODED_SCHEMA = T.StructType(
+    [
+        T.StructField("url", T.StringType(), False),
+        T.StructField("page_base", T.IntegerType(), False),
+        T.StructField("html", T.BinaryType(), True),
+    ]
+)
+
+STRUCTURE_SCHEMA = T.StructType(
+    [
+        T.StructField("url", T.StringType(), False),
+        T.StructField("structure_json", T.StringType(), True),
+    ]
+)
+
+PAGE_GEOMETRY_SCHEMA = T.StructType(
+    [
+        T.StructField("url", T.StringType(), False),
+        T.StructField("page_number", T.IntegerType(), False),
+        T.StructField("width", T.DoubleType(), True),
+        T.StructField("height", T.DoubleType(), True),
+        T.StructField("rotation", T.IntegerType(), True),
+    ]
+)
+
+METADATA_SCHEMA = T.StructType(
+    [
+        T.StructField("url", T.StringType(), False),
+        T.StructField("key", T.StringType(), False),
+        T.StructField("value", T.StringType(), True),
+    ]
+)
+
+ANNOTS_SCHEMA = T.StructType(
+    [
+        T.StructField("url", T.StringType(), False),
+        T.StructField("page_number", T.IntegerType(), False),
+        T.StructField("x0", T.DoubleType(), True),
+        T.StructField("top", T.DoubleType(), True),
+        T.StructField("x1", T.DoubleType(), True),
+        T.StructField("bottom", T.DoubleType(), True),
+        T.StructField("doctop", T.DoubleType(), True),
+        T.StructField("uri", T.StringType(), True),
+        T.StructField("title", T.StringType(), True),
+        T.StructField("contents", T.StringType(), True),
     ]
 )

@@ -159,9 +159,7 @@ def _b_extract_objects(sf_dir: str) -> pd.DataFrame:
 
     outs = []
     for url, payload in _read_corpus(sf_dir):
-        obj = _payload_to_objects(url, payload)
-        if obj is not None:
-            outs.append(obj)
+        outs.extend(_payload_to_objects(url, payload))
     cols = ["url", "page_number", "object_type", "obj_index", "text",
             "x0", "top", "x1", "bottom"]
     if not outs:
@@ -197,9 +195,7 @@ def _b_hyperlinks(sf_dir: str) -> pd.DataFrame:
 
     outs = []
     for url, payload in _read_corpus(sf_dir):
-        a = _payload_to_annots(url, payload)
-        if a is not None:
-            outs.append(a)
+        outs.extend(_payload_to_annots(url, payload))
     if not outs:
         return pd.DataFrame(columns=ANNOT_COLS)
     out = pd.concat(outs, ignore_index=True)

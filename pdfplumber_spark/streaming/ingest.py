@@ -11,8 +11,8 @@ analogue of the bucket manifests.
 
 Design notes for scale:
 - the pipeline inside each micro-batch is identical to the batch plan
-  (single mapInPandas, no shuffle) — watermarks/late data don't apply
-  because extraction is stateless per document;
+  (one url-hash exchange, then a single mapInPandas) — watermarks/late
+  data don't apply because extraction is stateless per document;
 - ``maxFilesPerTrigger`` bounds micro-batch size (parse cost ~ bytes);
 - ``Trigger.AvailableNow`` drains a backlog then stops — the scheduled-run
   mode; continuous mode just omits it.
@@ -44,7 +44,7 @@ def stream_extract_text(
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     pages = reader.parquet(input_dir)
     # extract_text repartitions each micro-batch by url hash (sized from the
-    # cluster's core count, partition_by_url); the extraction is stateless,
+    # cluster's core count, plans.extract.spread); the extraction is stateless,
     # so that exchange is the batch's only shuffle
     extracted = extract_text(pages, layout=layout)
     writer = (
