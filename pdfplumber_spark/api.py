@@ -28,17 +28,16 @@ import pandas as pd
 from .kernel.geom import (
     bbox_overlap_mask,
     crop_frame,
-    frame_bbox,
     lines_to_edges,
     rects_to_edges,
     curves_to_edges,
     within_bbox_mask,
 )
 from .kernel.layout import (
+    STRIP_LINES,
+    page_search,
     page_text,
-    page_textmap,
     resolve_layout_kwargs,
-    search_text,
     simple_text,
 )
 from .kernel.pdfparse import LINE_COLUMNS, parse_pdf
@@ -325,17 +324,13 @@ class Page:
 
     @property
     def chars(self) -> List[dict]:
+        recs = self._records(self._chars)
         la = self._layout_objects()
         if la is not None:
             # laparams: page objects rebuild in reading order (pdfminer
             # LTPage._objs = textboxes + ... ; reference test_basics.py:172)
-            order = la[2]
-            recs = self._records(self._chars)
-            ordered = [recs[i] for i in order if i < len(recs)]
-            seen = set(order)
-            ordered += [r for i, r in enumerate(recs) if i not in seen]
-            return ordered
-        return self._records(self._chars)
+            return [recs[i] for i in la[2]]
+        return recs
 
     @property
     def lines(self) -> List[dict]:
@@ -361,7 +356,9 @@ class Page:
         if cached is None:
             from .kernel.laparams import analyze
 
-            cached = self._la_cache = analyze(self._chars, lap)
+            cached = self._la_cache = analyze(
+                CharArrays(self._chars, ("y0", "y1")), lap
+            )
         return cached
 
     def _la_kind(self, kind: str) -> List[dict]:
@@ -493,33 +490,34 @@ class Page:
     def search(self, pattern, regex: bool = True, case: bool = True,
                main_group: int = 0, return_chars: bool = True,
                **kwargs) -> List[dict]:
-        layout = bool(kwargs.pop("layout", False))
-        settings, _ = split_word_settings(kwargs)
-        tm = page_textmap(self._chars, settings, layout, self.bbox)
-        if tm is None:
-            return []
-        rendered, prov = tm
-        out = search_text(rendered, prov, self._chars, pattern,
-                          regex=regex, case=case, main_group=main_group,
-                          return_chars=return_chars)
-        recs = out.to_dict("records")
+        recs = self._search(pattern, return_chars, kwargs, regex=regex,
+                            case=case, main_group=main_group)
         for r in recs:  # reference returns groups as a tuple
             r["groups"] = tuple(r["groups"])
         return recs
 
     def extract_text_lines(self, strip: bool = True,
                            return_chars: bool = True, **kwargs) -> List[dict]:
+        pat = STRIP_LINES if strip else r"([^\n]+)"
+        return self._search(pat, return_chars, kwargs, main_group=1)
+
+    def _search(self, pattern, return_chars: bool, kwargs: dict,
+                **search_kwargs) -> List[dict]:
+        """Match records of ``kernel.layout.page_search`` over this page's
+        chars; ``return_chars`` maps each match's char positions back to
+        char records."""
         layout = bool(kwargs.pop("layout", False))
-        pat = r" *([^\n]+?) *(\n|$)" if strip else r"([^\n]+)"
         settings, _ = split_word_settings(kwargs)
-        tm = page_textmap(self._chars, settings, layout, self.bbox)
-        if tm is None:
+        if len(self._chars) == 0:
             return []
-        rendered, prov = tm
-        return search_text(
-            rendered, prov, self._chars, pat, main_group=1,
-            return_chars=return_chars,
-        ).to_dict("records")
+        ca = CharArrays(self._chars, settings.extra_attrs)
+        recs = page_search(ca, pattern, settings, layout, self.bbox,
+                           **search_kwargs).to_dict("records")
+        for r in recs:
+            pos = r.pop("char_pos")
+            if return_chars:
+                r["chars"] = self._chars.iloc[pos].to_dict("records")
+        return recs
 
     # --- tables --------------------------------------------------------------
     def _find_tables(self, table_settings: Optional[dict], debug: bool):

@@ -19,6 +19,8 @@ import argparse
 import json
 import sys
 
+from .cli import parse_page_spec
+
 
 def _session(args):
     from .session import get_spark
@@ -28,14 +30,6 @@ def _session(args):
     from pyspark.sql import SparkSession
 
     return SparkSession.builder.appName(f"pdfplumber-spark-{args.cmd}").getOrCreate()
-
-
-def parse_page_spec(p_str: str):
-    """Reference cli.py:12-17: '3' or '2-5' -> page-number list."""
-    if "-" in p_str:
-        start, end = map(int, p_str.split("-"))
-        return list(range(start, end + 1))
-    return [int(p_str)]
 
 
 def main(argv=None) -> int:
@@ -152,7 +146,9 @@ _ALWAYS_COLS = ("url", "page_number", "object_type")
 def _apply_row_col_filters(out, args):
     """--types / --pages / --include-attrs / --exclude-attrs / --precision
     (reference cli.py:40-66 + convert.py serialization knobs)."""
-    from pyspark.sql import functions as F, types as T
+    from pyspark.sql import functions as F
+
+    from .operators.convert import round_floats
 
     if args.types and "object_type" in out.columns:
         out = out.where(F.col("object_type").isin(list(args.types)))
@@ -167,27 +163,23 @@ def _apply_row_col_filters(out, args):
                 if c not in args.exclude_attrs or c in _ALWAYS_COLS]
         out = out.select(*keep)
     if args.precision is not None:
-        for f_ in out.schema.fields:
-            if isinstance(f_.dataType, T.DoubleType):
-                out = out.withColumn(f_.name, F.round(f_.name, args.precision))
+        out = round_floats(out, args.precision)
     return out
 
 
 def _write(out, args):
+    if args.format == "csv":
+        # complex cols -> json strings (convert.py:15-30 analogue)
+        from .operators.convert import flatten_complex
+
+        out = flatten_complex(out)
     writer = out.write.mode("overwrite")
     if args.format == "parquet":
         writer.parquet(args.output)
     elif args.format == "json":
         writer.json(args.output)
     else:
-        # csv: flatten complex cols to json strings (convert.py:15-30 analogue)
-        from pyspark.sql import functions as F, types as T
-
-        flat = out
-        for f_ in out.schema.fields:
-            if isinstance(f_.dataType, (T.ArrayType, T.StructType, T.MapType)):
-                flat = flat.withColumn(f_.name, F.to_json(f_.name))
-        flat.write.mode("overwrite").option("header", True).csv(args.output)
+        writer.option("header", True).csv(args.output)
 
 
 if __name__ == "__main__":

@@ -817,14 +817,6 @@ def _reset_ctx(ctx):
     return ctx
 
 
-def t1_decode(data: bytes, w: int, h: int, band: str, mb: int,
-              npasses: int, segsym: bool = False
-              ) -> Tuple[List[int], List[int]]:
-    """Decode one code-block: returns (magnitudes, signs)."""
-    return t1_decode_segments([(data, npasses)], w, h, band, mb,
-                              segsym, False)
-
-
 class _T1Enc:
     def __init__(self, av: List[int], sg: List[int], mq):
         self.av = av

@@ -19,7 +19,6 @@ from dataclasses import dataclass
 from typing import List, Optional
 
 import numpy as np
-import pandas as pd
 
 INF = float("inf")
 
@@ -255,23 +254,24 @@ def _group_textlines(lines: List[_Line], laparams: LAParams):
     return out
 
 
-def analyze(chars: pd.DataFrame, laparams: LAParams):
-    """chars (rendering order) -> (textlines, textboxes) dict lists with
-    pdfplumber-style keys (x0/x1/top/bottom/text/object_type)."""
-    if len(chars) == 0:
-        return [], [], []
+def analyze(ca, laparams: LAParams):
+    """A page's chars (:class:`~.words.CharArrays` in rendering order,
+    ``y0``/``y1`` in ``extra``) -> (textlines, textboxes, char_order).
+    The line and box dict lists carry pdfplumber-style keys
+    (x0/x1/top/bottom/text/object_type); ``char_order`` is the reading
+    order, a permutation of the char positions with chars that fall in no
+    textline last, in rendering order."""
+    n = ca.n
+    if n == 0:
+        return [], [], np.zeros(0, dtype=np.int64)
     ch = {
-        "x0": chars["x0"].to_numpy(np.float64),
-        "x1": chars["x1"].to_numpy(np.float64),
-        "y0": chars["y0"].to_numpy(np.float64),
-        "y1": chars["y1"].to_numpy(np.float64),
-        "text": chars["text"].to_numpy(dtype=object),
+        "x0": ca.x0, "x1": ca.x1,
+        "y0": np.asarray(ca.extra["y0"], dtype=np.float64),
+        "y1": np.asarray(ca.extra["y1"], dtype=np.float64),
+        "text": ca.text,
     }
-    top_off = None
-    if "top" in chars.columns:
-        # page y-extent: top = extent - y1
-        top_off = (chars["top"].to_numpy(np.float64)[0]
-                   + chars["y1"].to_numpy(np.float64)[0])
+    # page y-extent: top = extent - y1
+    top_off = ca.top[0] + ch["y1"][0]
     all_lines = _group_chars(ch, laparams)
     # pdfminer fsplit: whitespace/empty lines skip box grouping but remain
     # page objects (LTPage._objs = textboxes + otherobjs + empties)
@@ -285,19 +285,19 @@ def analyze(chars: pd.DataFrame, laparams: LAParams):
     boxes.sort(key=lambda b: (-(b["bbox"][3]), b["bbox"][0]))
     ordered_line_ids = [j for b in boxes for j in b["lines"]]
     textlines = [grouped[j] for j in ordered_line_ids] + empties
-    char_order = [i for ln in textlines for i in ln.chars]
+    read = np.array([i for ln in textlines for i in ln.chars], dtype=np.int64)
+    unseen = np.ones(n, dtype=bool)
+    unseen[read] = False
+    char_order = np.concatenate([read, np.flatnonzero(unseen)])
 
     def mk(obj_type, x0, y0, x1, y1, text):
-        d = {
+        return {
             "object_type": obj_type,
             "x0": x0, "x1": x1, "y0": y0, "y1": y1,
             "width": x1 - x0, "height": y1 - y0,
             "text": text,
+            "top": top_off - y1, "bottom": top_off - y0,
         }
-        if top_off is not None:
-            d["top"] = top_off - y1
-            d["bottom"] = top_off - y0
-        return d
 
     line_rows = []
     for ln in textlines:

@@ -2,9 +2,12 @@
 
 ``page_text_ca`` is the one char -> text implementation: plain and layout
 mode plus render directions, straight from :class:`CharArrays` (parser
-buffers or a char frame). ``page_text`` adapts a char frame to it and
-``page_textmap`` builds the provenance-carrying textmap that search and
-text-line extraction read; ``resolve_layout_kwargs`` turns
+buffers or a char frame). ``page_text`` adapts a char frame to it.
+``page_search`` is the one search path: ``page_textmap`` builds the
+provenance-carrying textmap of a page's :class:`CharArrays` and
+``search_text`` maps each regex match back to its chars' bbox.
+``Page.search``, ``Page.extract_text_lines`` and the Spark search and
+text-line plans all call it. ``resolve_layout_kwargs`` turns
 ``extract_text`` kwargs into their arguments.
 
 Re-expresses the reference's WordMap/TextMap
@@ -22,7 +25,8 @@ Re-expresses the reference's WordMap/TextMap
 - ``simple_text`` — extract_text_simple: doctop clusters + collate_line
   (``text.py:761-781``).
 - ``search_text`` — regex over the rendered string, spans mapped back to
-  source chars through the provenance array (``text.py:145-210``).
+  source chars through the provenance array, match bboxes computed over
+  the ``CharArrays`` columns (``text.py:145-210``).
 
 The provenance array maps every output character to a source-char row index
 (-1 for imputed whitespace) — the columnar equivalent of TextMap.tuples.
@@ -397,29 +401,28 @@ def page_text(
 
 
 def page_textmap(
-    chars: pd.DataFrame,
+    ca: CharArrays,
     settings: Optional[WordSettings] = None,
     layout: bool = False,
     layout_bbox: Optional[Tuple[float, float, float, float]] = None,
 ) -> Optional[Tuple[str, np.ndarray]]:
-    """``(rendered, provenance)`` textmap of a char frame — the reference
+    """``(rendered, provenance)`` textmap of a page's chars — the reference
     get_textmap read by search and extract_text_lines (layout=False is its
-    default). Provenance indexes the frame's rows by position. Layout mode
-    spans ``layout_bbox`` (default: the chars' extent). None when the page
-    has no words."""
+    default). ``ca`` carries ``settings.extra_attrs``; provenance indexes
+    its chars by position. Layout mode spans ``layout_bbox``. None when
+    the page has no words."""
     s = settings or WordSettings()
-    if len(chars) == 0:
+    if ca.n == 0:
         return None
-    ca = CharArrays(chars.reset_index(drop=True), s.extra_attrs)
     words, cwid, cwpos = extract_words_ca(ca, s, as_frame=False)
     if len(words) == 0:
         return None
     word_chars = build_word_char_arrays(ca.text, cwid, cwpos, len(words))
     if layout:
-        bbox = frame_bbox(chars) if layout_bbox is None else layout_bbox
+        x0, top, x1, bottom = layout_bbox
         return assemble_text_layout(
-            words, word_chars, layout_bbox=bbox,
-            layout_width=bbox[2] - bbox[0], layout_height=bbox[3] - bbox[1],
+            words, word_chars, layout_bbox=layout_bbox,
+            layout_width=x1 - x0, layout_height=bottom - top,
             y_tolerance=s.y_tolerance, line_dir=s.line_dir,
             char_dir=s.char_dir, expand_ligatures=s.expand_ligatures,
         )
@@ -466,20 +469,27 @@ def assemble_text_plain_map(
     )
 
 
+# extract_text_lines(strip=True): each line, its edge spaces trimmed
+STRIP_LINES = r" *([^\n]+?) *(\n|$)"
+
+_MATCH_COLS = ["text", "x0", "top", "x1", "bottom", "start", "end", "groups",
+              "char_pos"]
+
+
 def search_text(
     text: str,
     provenance: np.ndarray,
-    chars: pd.DataFrame,
+    ca: CharArrays,
     pattern,
     regex: bool = True,
     case: bool = True,
     main_group: int = 0,
-    return_chars: bool = False,
 ) -> pd.DataFrame:
     """Regex search over assembled text, spans mapped back to chars
-    (``text.py:172-210``). Returns a frame with text/x0/top/x1/bottom/
-    start/end/groups columns (+ ``chars`` records when requested);
-    zero-length and whitespace-only matches are dropped.
+    (``text.py:172-210``). Returns one row per match: its text, its bbox
+    over the source chars, start/end offsets, the groups and ``char_pos``,
+    the sorted positions of its chars in ``ca``; zero-length and
+    whitespace-only matches are dropped.
     """
     if isinstance(pattern, re.Pattern):
         # reference parity (text.py search): compiled patterns conflict
@@ -507,22 +517,34 @@ def search_text(
         src = span_rows[span_rows >= 0]
         if len(src) == 0:
             continue
-        sub = chars.iloc[np.unique(src)]
-        rec = {
-            "text": frag,
-            "x0": float(sub["x0"].min()),
-            "top": float(sub["top"].min()),
-            "x1": float(sub["x1"].max()),
-            "bottom": float(sub["bottom"].max()),
-            "start": m.start(main_group),
-            "end": m.end(main_group),
-            "groups": list(m.groups()),
-        }
-        if return_chars:
-            rec["chars"] = sub.to_dict("records")
-        rows.append(rec)
-    cols = ["text", "x0", "top", "x1", "bottom", "start", "end", "groups"]
-    if return_chars:
-        cols.append("chars")
-    return pd.DataFrame(rows, columns=cols)
+        pos = np.unique(src)
+        rows.append((
+            frag,
+            float(ca.x0[pos].min()),
+            float(ca.top[pos].min()),
+            float(ca.x1[pos].max()),
+            float(ca.bottom[pos].max()),
+            m.start(main_group),
+            m.end(main_group),
+            list(m.groups()),
+            pos,
+        ))
+    return pd.DataFrame(rows, columns=_MATCH_COLS)
 
+
+def page_search(
+    ca: CharArrays,
+    pattern,
+    settings: Optional[WordSettings] = None,
+    layout: bool = False,
+    layout_bbox: Optional[Tuple[float, float, float, float]] = None,
+    **search_kwargs,
+) -> pd.DataFrame:
+    """Textmap + :func:`search_text` for one page — the one search path
+    behind ``Page.search``, ``Page.extract_text_lines`` and the Spark
+    search and text-line plans. ``search_kwargs`` are search_text's
+    ``regex``/``case``/``main_group``."""
+    tm = page_textmap(ca, settings, layout, layout_bbox)
+    if tm is None:
+        return pd.DataFrame(columns=_MATCH_COLS)
+    return search_text(*tm, ca, pattern, **search_kwargs)

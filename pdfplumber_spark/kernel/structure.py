@@ -19,7 +19,9 @@ import re
 from dataclasses import dataclass, field
 from typing import Callable, Iterator, List, Optional, Pattern, Union
 
-from .pdfparse import Name, PDFDocument, Ref
+from .laparams import LAParams, analyze
+from .pdfparse import Name, PDFDocument, Ref, parse_pdf
+from .words import CharArrays
 
 MatchType = Union[str, Pattern, Callable]
 
@@ -128,10 +130,6 @@ def _number_tree_values(doc: PDFDocument, node) -> Iterator[tuple]:
     if isinstance(kids, list):
         for kid in kids:
             yield from _number_tree_values(doc, kid)
-
-
-class StructTreeMissing(ValueError):
-    pass
 
 
 class StructTree:
@@ -520,31 +518,20 @@ def tree_to_json(
     tree = StructTree(doc, pages=pages)
     out = [el.to_dict() for el in tree.children]
     if with_text:
-        from .pdfparse import pdf_to_frames
-
-        chars = pdf_to_frames(data, style=True, password=password)["chars"]
-        if laparams is not None and len(chars):
-            import pandas as pd
-
-            from .laparams import LAParams, analyze
-
-            lap = LAParams.resolve(laparams)
-            parts = []
-            for _pn, sub in chars.groupby("page_number", sort=True):
-                _, _, order = analyze(sub, lap)
-                n = len(sub)
-                seen = set()
-                pos = [i for i in order if i < n and not (i in seen or seen.add(i))]
-                pos += [i for i in range(n) if i not in seen]
-                parts.append(sub.iloc[pos])
-            chars = pd.concat(parts, ignore_index=True)
+        lap = LAParams.resolve(laparams)
+        extra = ("mcid", "y0", "y1") if lap is not None else ("mcid",)
         contents: dict = {}
-        if "mcid" in chars.columns:
-            sub = chars[chars["mcid"].notna()]
-            for (pn, mcid), grp in sub.groupby(["page_number", "mcid"]):
-                contents.setdefault(int(pn), {})[int(mcid)] = "".join(
-                    grp["text"].fillna("")
-                )
+        for it in parse_pdf(data, style=False, password=password):
+            if it.n_chars == 0:
+                continue
+            ca = CharArrays.from_interp(it, extra)
+            order = range(ca.n) if lap is None else analyze(ca, lap)[2]
+            mcids = ca.extra["mcid"]
+            runs: dict = {}
+            for i in order:
+                if mcids[i] is not None:
+                    runs.setdefault(int(mcids[i]), []).append(ca.text[i] or "")
+            contents[it.page_number] = {m: "".join(t) for m, t in runs.items()}
         queue = list(out)
         while queue:
             el = queue.pop(0)

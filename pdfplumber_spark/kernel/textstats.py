@@ -15,23 +15,12 @@ import re
 from typing import List
 
 import numpy as np
-import pandas as pd
 
 # --- tokenization -----------------------------------------------------------
 
 # BPE-ish pre-tokenizer: word pieces, numbers, or single non-space symbols
 # (same shape as the GPT-2 pre-tokenizer regex family, simplified to stdlib re)
 TOKEN_RE = re.compile(r"[A-Za-z]+|[0-9]+|[^\sA-Za-z0-9]")
-
-
-def count_tokens(texts: pd.Series) -> np.ndarray:
-    """BPE-ish token counts per text (regex pre-tokenization)."""
-    return texts.fillna("").str.count(TOKEN_RE.pattern).to_numpy(np.int64)
-
-
-def count_ws_tokens(texts: pd.Series) -> np.ndarray:
-    """Whitespace token counts."""
-    return texts.fillna("").str.split().str.len().fillna(0).to_numpy(np.int64)
 
 
 # --- language profiles ----------------------------------------------------
@@ -227,18 +216,6 @@ def simhash64_batch(texts) -> np.ndarray:
     vals = (acc > 0).astype(np.uint64) << np.arange(64, dtype=np.uint64)
     out[nz] = vals.sum(axis=1, dtype=np.uint64).view(np.int64)
     return out
-
-
-def hamming64(a: int, b: int) -> int:
-    return bin((a ^ b) & 0xFFFFFFFFFFFFFFFF).count("1")
-
-
-def ngram_set(text: str, n: int = 3) -> set:
-    """Character n-grams of the lowercased text."""
-    t = text.lower()
-    if len(t) < n:
-        return {t} if t else set()
-    return {t[i : i + n] for i in range(len(t) - n + 1)}
 
 
 def jaccard(a: set, b: set) -> float:

@@ -181,12 +181,6 @@ class Type1Font:
         self._outline_cache[gid] = out
         return out
 
-    def _gid_for_name(self, name: str) -> Optional[int]:
-        try:
-            return self._gid2name.index(name)
-        except ValueError:
-            return None
-
     def _run(self, name: str) -> List[List[Tuple[float, float]]]:
         code = self.charstrings.get(name)
         if code is None:

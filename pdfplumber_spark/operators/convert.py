@@ -8,7 +8,7 @@ from __future__ import annotations
 
 from typing import List, Optional
 
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 # canonical CSV column ordering (convert.py:15-30)
 CSV_COLS_REQUIRED = ["object_type"]
@@ -42,21 +42,38 @@ def select_attrs(
     return df.select(*keep)
 
 
+def _has_double(dtype) -> bool:
+    if isinstance(dtype, T.ArrayType):
+        return _has_double(dtype.elementType)
+    if isinstance(dtype, T.StructType):
+        return any(_has_double(f.dataType) for f in dtype.fields)
+    return isinstance(dtype, T.DoubleType)
+
+
+def _round_doubles(col: Column, dtype, precision: int) -> Column:
+    """``col`` with every double in it rounded, at any array or struct
+    depth."""
+    if not _has_double(dtype):
+        return col
+    if isinstance(dtype, T.DoubleType):
+        return F.round(col, precision)
+    if isinstance(dtype, T.ArrayType):
+        return F.transform(
+            col, lambda x: _round_doubles(x, dtype.elementType, precision)
+        )
+    return F.when(col.isNotNull(), F.struct(*(
+        _round_doubles(col[f.name], f.dataType, precision).alias(f.name)
+        for f in dtype.fields
+    )))
+
+
 def round_floats(df: DataFrame, precision: int = 3) -> DataFrame:
-    """Serializer float rounding (``convert.py:62-78`` semantics)."""
-    exprs = []
-    for f in df.schema.fields:
-        if isinstance(f.dataType, T.DoubleType):
-            exprs.append(F.round(F.col(f.name), precision).alias(f.name))
-        elif isinstance(f.dataType, T.ArrayType) and isinstance(
-            f.dataType.elementType, T.DoubleType
-        ):
-            exprs.append(
-                F.transform(f.name, lambda x: F.round(x, precision)).alias(f.name)
-            )
-        else:
-            exprs.append(F.col(f.name))
-    return df.select(*exprs)
+    """Serializer float rounding (``convert.py:62-78`` semantics): every
+    double, top-level or nested in arrays and structs."""
+    return df.select(*(
+        _round_doubles(F.col(f.name), f.dataType, precision).alias(f.name)
+        for f in df.schema.fields
+    ))
 
 
 def csv_ordered(df: DataFrame) -> DataFrame:

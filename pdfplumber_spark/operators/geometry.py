@@ -31,16 +31,8 @@ def within_pred(bbox) -> Column:
     )
 
 
-def filter_intersecting(df: DataFrame, bbox) -> DataFrame:
-    return df.where(overlap_pred(bbox))
-
-
 def filter_within(df: DataFrame, bbox) -> DataFrame:
     return df.where(within_pred(bbox))
-
-
-def filter_outside(df: DataFrame, bbox) -> DataFrame:
-    return df.where(~overlap_pred(bbox))
 
 
 def crop(df: DataFrame, bbox) -> DataFrame:

@@ -12,12 +12,13 @@ Physical design (SURVEY.md §3.1, §4):
   rows) run by ``map_payloads``, the one ``mapInPandas`` batch loop; the
   single-process oracles call the same functions. Whole-document parse and
   per-page text assembly happen inside one task.
-- Text, words, tables and page metadata parse each payload once
+- Text, words, tables, annotations, structure text, page metadata and
+  the search plans (``plans.search``) parse each payload once
   (``parse_pdf``, no per-char style unless a word setting names a style
   column) and run their kernels on the parser's buffers
-  (``CharArrays.from_interp``, ``tables.EdgeArrays.from_interp``): no
-  per-page pandas frames. Objects and annotations build ``pdf_to_frames``
-  frames.
+  (``CharArrays.from_interp``, ``tables.EdgeArrays.from_interp``, the
+  interpreters' ``annot_rows``): no per-page pandas frames. Only the
+  objects plan builds ``pdf_to_frames`` frames, which are its output.
 - Binary payloads are sniffed (%PDF- magic) and routed to the PDF or HTML
   kernel; malformed payloads yield ``status='error'`` rows with a reason
   instead of failing the job (reference analogue: the repair path,
@@ -289,21 +290,14 @@ def _laparams_objects(url: str, frames, laparams) -> pd.DataFrame:
     chars = frames["chars"]
     extra_rows: list = []
     for pn, sub in chars.groupby("page_number", sort=True):
-        lines, boxes, char_order = analyze(sub, lap)
-        n = len(sub)
-        # reading rank per rendering-order position (unseen chars go last,
-        # matching the api.Page.chars ordering rule)
-        rank = {}
-        for i in char_order:
-            if i < n and i not in rank:
-                rank[i] = len(rank)
-        for i in range(n):
-            if i not in rank:
-                rank[i] = len(rank)
+        lines, boxes, char_order = analyze(CharArrays(sub, ("y0", "y1")), lap)
         mask = (out["object_type"] == "char") & (out["page_number"] == pn)
         idx = out.index[mask]
-        if len(idx) == n:
-            out.loc[idx, "obj_index"] = [rank[i] for i in range(n)]
+        if len(idx) == len(sub):
+            # reading rank per rendering-order position
+            rank = np.empty_like(char_order)
+            rank[char_order] = np.arange(len(char_order))
+            out.loc[idx, "obj_index"] = rank
         counters: dict = {}
         for o in lines + boxes:
             d = dict(o)
@@ -671,20 +665,21 @@ ANNOT_COLS = [f.name for f in ANNOTS_SCHEMA.fields]
 
 def _payload_to_annots(url: str, payload) -> list:
     """Per-payload annotation frame, as ``[frame]`` (``[]`` when there are
-    none) — shared by the Spark plan and the materialized single-process
+    none), built from the annotation rows ``parse_pdf`` attaches to each
+    page — shared by the Spark plan and the materialized single-process
     oracle."""
     if payload is None or bytes(payload)[:5] != b"%PDF-":
         return []
     try:
-        frames = pdf_to_frames(bytes(payload), style=False)
+        interps = pdfparse.parse_pdf(bytes(payload), style=False)
     except Exception:  # noqa: BLE001
         return []
-    a = frames["annots"]
-    if len(a) == 0:
+    rows = [r for it in interps for r in it.annot_rows]
+    if not rows:
         return []
-    a = a.copy()
+    a = pd.DataFrame(rows, columns=ANNOT_COLS)
     a["url"] = url
-    return [a[ANNOT_COLS]]
+    return [a]
 
 
 def extract_annots(

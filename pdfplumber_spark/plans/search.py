@@ -1,9 +1,11 @@
 """Search / text-line extraction over the corpus (TextMap.search family,
 ``pdfplumber/utils/text.py:145-230``).
 
-Per page: build the plain textmap in the kernel (``page_textmap``), regex
-over the rendered string, map spans back to source chars through the
-provenance array, emit match rows with bboxes. One mapInPandas pass
+Each payload is parsed once (``parse_pdf``, no per-char style); every page
+with chars runs the kernel's one search path (``page_search``) on its
+parser buffers (``CharArrays.from_interp``): the plain textmap, the regex
+over the rendered string, spans mapped back to source chars through the
+provenance array, match bboxes. One mapInPandas pass
 (``plans.extract.map_payloads``), partition-local.
 """
 
@@ -12,11 +14,11 @@ from __future__ import annotations
 from functools import partial
 from typing import Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from ..kernel.layout import page_textmap, search_text
-from ..kernel.pdfparse import pdf_to_frames
+from ..kernel.layout import STRIP_LINES, page_search
+from ..kernel.pdfparse import parse_pdf
+from ..kernel.words import CharArrays
 from .extract import map_payloads, spread
 
 MATCHES_SCHEMA = T.StructType(
@@ -33,18 +35,6 @@ MATCHES_SCHEMA = T.StructType(
         T.StructField("end", T.IntegerType(), True),
     ]
 )
-
-
-def _page_matches(chars: pd.DataFrame, pattern: str, regex: bool, case: bool,
-                  strip_lines: bool) -> pd.DataFrame:
-    tm = page_textmap(chars)
-    if tm is None:
-        return pd.DataFrame()
-    rendered, prov = tm
-    if strip_lines:
-        pattern = r" *([^\n]+?) *(\n|$)"
-        return search_text(rendered, prov, chars, pattern, main_group=1)
-    return search_text(rendered, prov, chars, pattern, regex=regex, case=case)
 
 
 def search_pages(
@@ -87,18 +77,23 @@ def _payload_to_match_frames(url, payload, pattern, regex, case,
     if payload is None or bytes(payload)[:5] != b"%PDF-":
         return []
     try:
-        frames = pdf_to_frames(bytes(payload), style=False)
+        interps = parse_pdf(bytes(payload), style=False)
     except Exception:  # noqa: BLE001
         return []
+    if strip_lines:
+        pattern, regex, case, main_group = STRIP_LINES, True, True, 1
+    else:
+        main_group = 0
     outs = []
-    for pn, sub in frames["chars"].groupby("page_number", sort=True):
-        m = _page_matches(sub, pattern, regex, case, strip_lines)
+    for it in interps:
+        if it.n_chars == 0:
+            continue
+        m = page_search(CharArrays.from_interp(it), pattern, regex=regex,
+                        case=case, main_group=main_group)
         if len(m) == 0:
             continue
-        m = m.drop(columns=["groups"], errors="ignore")
         m["url"] = url
-        m["page_number"] = int(pn)
+        m["page_number"] = it.page_number
         m["match_index"] = range(len(m))
         outs.append(m[cols])
     return outs
-

@@ -1,6 +1,6 @@
 """Test-only loader for the reference's pure-Python algorithm modules.
 
-Loads /root/reference/pdfplumber/{utils/*,table.py} under a synthetic
+Loads ``REFERENCE``/pdfplumber/{utils/*,table.py} under a synthetic
 package name with pdfminer stubbed, so tests can differential-check our
 vectorized kernels against the reference semantics as an executable spec.
 Used ONLY by tests — the engine itself never imports the reference.
@@ -9,10 +9,13 @@ Used ONLY by tests — the engine itself never imports the reference.
 from __future__ import annotations
 
 import importlib
+import os
 import sys
 import types
 
-REF_PATH = "/root/reference/pdfplumber"
+# the reference checkout: its pdfplumber sources, tests and fixture PDFs
+REFERENCE = os.environ.get("SPARK_GRAFT_REFERENCE", "/root/reference")
+REF_PATH = os.path.join(REFERENCE, "pdfplumber")
 PKG = "refpp"
 
 

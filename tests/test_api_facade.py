@@ -5,10 +5,11 @@ test_nics_report.py, test_table.py where runnable offline)."""
 import pytest
 
 import pdfplumber_spark.api as pdfplumber
+from reforacle import REFERENCE
 
-SCOTUS = "/root/reference/tests/pdfs/scotus-transcript-p1.pdf"
-WARN = "/root/reference/tests/pdfs/WARN-Report-for-7-1-2015-to-03-25-2016.pdf"
-NICS = "/root/reference/tests/pdfs/nics-background-checks-2015-11.pdf"
+SCOTUS = f"{REFERENCE}/tests/pdfs/scotus-transcript-p1.pdf"
+WARN = f"{REFERENCE}/tests/pdfs/WARN-Report-for-7-1-2015-to-03-25-2016.pdf"
+NICS = f"{REFERENCE}/tests/pdfs/nics-background-checks-2015-11.pdf"
 
 
 @pytest.fixture(scope="module")
@@ -40,7 +41,7 @@ def test_page_limiting():
 
 def test_extract_text_layout_golden(scotus):
     golden = open(
-        "/root/reference/tests/comparisons/scotus-transcript-p1.txt"
+        f"{REFERENCE}/tests/comparisons/scotus-transcript-p1.txt"
     ).read().strip("\n")
     assert scotus.pages[0].extract_text(layout=True) == golden
 
@@ -48,7 +49,7 @@ def test_extract_text_layout_golden(scotus):
 def test_extract_text_layout_cropped_golden(scotus):
     # reference test_utils.py:375-384
     golden = open(
-        "/root/reference/tests/comparisons/scotus-transcript-p1-cropped.txt"
+        f"{REFERENCE}/tests/comparisons/scotus-transcript-p1-cropped.txt"
     ).read().strip("\n")
     p = scotus.pages[0]
     cropped = p.crop((90, 70, p.width, 300))
@@ -212,7 +213,7 @@ def test_relative_and_strict_crop(scotus):
 
 def test_basics_ports():
     """Reference tests/test_basics.py expectations (verbatim values)."""
-    P = "/root/reference/tests/pdfs"
+    P = f"{REFERENCE}/tests/pdfs"
     with pdfplumber.open(f"{P}/nics-background-checks-2015-11.pdf") as pdf:
         assert isinstance(pdf.metadata["Producer"], str)
         assert len(pdf.pages) == 1
@@ -237,7 +238,7 @@ def test_basics_ports():
 def test_basics_custom_laparams_reading_order():
     # reference test_basics.py:167-172 (issue-168): with laparams, page
     # chars rebuild in reading order from the textbox tree
-    P = "/root/reference/tests/pdfs"
+    P = f"{REFERENCE}/tests/pdfs"
     with pdfplumber.open(
         f"{P}/cupertino_usd_4-6-16.pdf", laparams=dict(line_margin=0.2)
     ) as pdf:

@@ -14,8 +14,9 @@ import pytest
 from pdfplumber_spark.kernel.cff import CFFFont, STANDARD_STRINGS
 from pdfplumber_spark.kernel.pdfparse import PDFDocument
 from pdfplumber_spark.kernel.truetype import rasterize_glyph
+from reforacle import REFERENCE
 
-PDFS = "/root/reference/tests/pdfs/"
+PDFS = f"{REFERENCE}/tests/pdfs/"
 
 
 def _fontfile3(path, idx=0):

@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pdfplumber_spark.operators import convert as C
+from reforacle import REFERENCE
 
 
 @pytest.fixture(scope="module")
@@ -68,7 +69,7 @@ def _demo():
     import pdfplumber_spark.api as pdfplumber
 
     return pdfplumber.open(
-        "/root/reference/tests/pdfs/pdffill-demo.pdf", pages=[1, 2, 5]
+        f"{REFERENCE}/tests/pdfs/pdffill-demo.pdf", pages=[1, 2, 5]
     )
 
 

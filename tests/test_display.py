@@ -12,9 +12,10 @@ import pdfplumber_spark.api as api
 from pdfplumber_spark.kernel.raster import (
     Canvas, png_decode_size, png_encode,
 )
+from reforacle import REFERENCE
 
-SCOTUS = "/root/reference/tests/pdfs/scotus-transcript-p1.pdf"
-WARN = "/root/reference/tests/pdfs/WARN-Report-for-7-1-2015-to-03-25-2016.pdf"
+SCOTUS = f"{REFERENCE}/tests/pdfs/scotus-transcript-p1.pdf"
+WARN = f"{REFERENCE}/tests/pdfs/WARN-Report-for-7-1-2015-to-03-25-2016.pdf"
 
 
 def _png_pixels(png: bytes) -> np.ndarray:
@@ -167,7 +168,7 @@ def test_truetype_glyphs_in_render(monkeypatch):
     from pdfplumber_spark import api
     from pdfplumber_spark.kernel import pdfparse
 
-    path = "/root/reference/tests/pdfs/extra-attrs-example.pdf"
+    path = f"{REFERENCE}/tests/pdfs/extra-attrs-example.pdf"
     page = api.open(path).pages[0]
     png1 = page.to_image(resolution=72)._repr_png_()
     png2 = api.open(path).pages[0].to_image(resolution=72)._repr_png_()
@@ -186,7 +187,7 @@ def test_truetype_glyph_rasterizer_shapes():
     from pdfplumber_spark.kernel.pdfparse import PDFDocument
     from pdfplumber_spark.kernel.truetype import TrueTypeFont, rasterize_glyph
 
-    data = open("/root/reference/tests/pdfs/extra-attrs-example.pdf", "rb").read()
+    data = open(f"{REFERENCE}/tests/pdfs/extra-attrs-example.pdf", "rb").read()
     doc = PDFDocument(data)
     num = int(re.search(rb"/FontFile2 (\d+) 0 R", data).group(1))
     f = TrueTypeFont(bytes(doc.get_object(num).get_data(doc)))
@@ -208,7 +209,7 @@ def test_chars_render_in_fill_color():
     import numpy as np
 
     page = api.open(
-        "/root/reference/tests/pdfs/nics-background-checks-2015-11.pdf"
+        f"{REFERENCE}/tests/pdfs/nics-background-checks-2015-11.pdf"
     ).pages[0]
     assert any(
         tuple(c["non_stroking_color"] or ()) == (1, 0, 0)
@@ -230,7 +231,7 @@ def test_rotated_chars_stamp_quarter_turned_glyphs():
     upright masks, deterministically."""
     import hashlib
 
-    path = ("/root/reference/tests/pdfs/"
+    path = (f"{REFERENCE}/tests/pdfs/"
             "nics-background-checks-2015-11-rotated.pdf")
     h = [hashlib.sha256(
             api.open(path).pages[0].to_image(resolution=72)._repr_png_()

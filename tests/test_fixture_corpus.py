@@ -9,8 +9,9 @@ import pyarrow.parquet as pq
 import pytest
 
 from pdfplumber_spark.plans.extract import extract_text, read_pages
+from reforacle import REFERENCE
 
-PDFS = "/root/reference/tests/pdfs"
+PDFS = f"{REFERENCE}/tests/pdfs"
 
 
 @pytest.fixture(scope="module")

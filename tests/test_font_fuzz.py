@@ -12,6 +12,7 @@ from hypothesis import strategies as st
 from pdfplumber_spark.kernel.cff import CFFError, CFFFont
 from pdfplumber_spark.kernel.truetype import TrueTypeError, TrueTypeFont
 from pdfplumber_spark.kernel.type1 import Type1Error, Type1Font
+from reforacle import REFERENCE
 
 FUZZ = settings(max_examples=120, deadline=None,
                 suppress_health_check=[HealthCheck.too_slow])
@@ -20,7 +21,7 @@ FUZZ = settings(max_examples=120, deadline=None,
 def _real_cff():
     from pdfplumber_spark.kernel.pdfparse import PDFDocument
 
-    data = open("/root/reference/tests/pdfs/issue-316-example.pdf",
+    data = open(f"{REFERENCE}/tests/pdfs/issue-316-example.pdf",
                 "rb").read()
     doc = PDFDocument(data)
     num = int(re.search(rb"/FontFile3 (\d+) 0 R", data).group(1))

@@ -11,6 +11,7 @@ import pytest
 
 from pdfplumber_spark.kernel.images import image_xobjects
 from pdfplumber_spark.kernel.pdfgen import image_pixel, image_samples, make_pdf
+from reforacle import REFERENCE
 
 
 def _pdf(images, texts=()):
@@ -430,7 +431,7 @@ def test_real_world_acrobat_g4_masks_decode():
     black-pixel counts guard the code tables against regressions that
     encoder/decoder self-consistency could never catch."""
     data = open(
-        "/root/reference/tests/pdfs/issue-203-decimalize.pdf", "rb"
+        f"{REFERENCE}/tests/pdfs/issue-203-decimalize.pdf", "rb"
     ).read()
     rows = image_xobjects(data)
     by_status = {}
@@ -553,7 +554,7 @@ def test_jpeg_real_world_fixture_streams():
         ("2023-06-20-PV.pdf", "Im0", 256, 183),
     ]
     for fn, name, w, h in cases:
-        data = open(f"/root/reference/tests/pdfs/{fn}", "rb").read()
+        data = open(f"{REFERENCE}/tests/pdfs/{fn}", "rb").read()
         doc = PDFDocument(data)
         got = None
         for spec in doc.pages():

@@ -7,8 +7,9 @@ import pytest
 
 import pdfplumber_spark.api as pdfplumber
 from pdfplumber_spark.kernel.pdfparse import normalize_fontname
+from reforacle import REFERENCE
 
-PDFS = "/root/reference/tests/pdfs"
+PDFS = f"{REFERENCE}/tests/pdfs"
 
 
 def test_issue_140_cropped_table():

@@ -9,7 +9,7 @@ from pdfplumber_spark.kernel.layout import (
     simple_text,
 )
 from pdfplumber_spark.kernel.words import WordSettings
-from reforacle import ref_module
+from reforacle import REFERENCE, ref_module
 
 
 @pytest.mark.parametrize("seed", range(10))
@@ -116,7 +116,7 @@ def test_search_differential(seed):
         words, wc, layout_bbox=frame_bbox(df), layout_width=612, layout_height=792,
     )
     assert rendered == tm.as_string
-    got = search_text(rendered, prov, df, r"[a-zA-Z]{3,}")
+    got = search_text(rendered, prov, CharArrays(df), r"[a-zA-Z]{3,}")
     assert len(got) == len(exp)
     for i, e in enumerate(exp):
         assert got["text"].iloc[i] == e["text"]
@@ -195,7 +195,7 @@ def test_layout_fast_path_byte_identical():
     from pdfplumber_spark.kernel.words import CharArrays
 
     data = open(
-        "/root/reference/tests/pdfs/scotus-transcript-p1.pdf", "rb"
+        f"{REFERENCE}/tests/pdfs/scotus-transcript-p1.pdf", "rb"
     ).read()
     frames = pdf_to_frames(data, style=False)
     chars = frames["chars"]
@@ -213,6 +213,6 @@ def test_layout_fast_path_byte_identical():
     )
     assert fast == slow
     golden = open(
-        "/root/reference/tests/comparisons/scotus-transcript-p1.txt"
+        f"{REFERENCE}/tests/comparisons/scotus-transcript-p1.txt"
     ).read().strip("\n")
     assert fast == golden

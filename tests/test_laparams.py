@@ -3,8 +3,9 @@ algorithm: pdfminer.six 20231228 group_objects/group_textlines re-derived in
 kernel/laparams.py)."""
 
 import pdfplumber_spark.api as pdfplumber
+from reforacle import REFERENCE
 
-PDFS = "/root/reference/tests/pdfs"
+PDFS = f"{REFERENCE}/tests/pdfs"
 PATH = f"{PDFS}/issue-13-151201DSP-Fond-581-90D.pdf"
 
 

@@ -1,6 +1,6 @@
 """End-to-end goldens: from-scratch PDF parse -> byte-identical text vs the
 reference's own comparison fixtures (the strongest offline anchor —
-``/root/reference/tests/test_utils.py:357-384``)."""
+reference ``tests/test_utils.py:357-384``)."""
 
 import pandas as pd
 import pytest
@@ -10,10 +10,11 @@ from pdfplumber_spark.kernel.layout import page_text, simple_text
 from pdfplumber_spark.kernel.pdfgen import make_pdf
 from pdfplumber_spark.kernel.pdfparse import pdf_to_frames
 from pdfplumber_spark.kernel.words import WordSettings
+from reforacle import REFERENCE
 
-SCOTUS_PDF = "/root/reference/tests/pdfs/scotus-transcript-p1.pdf"
-SCOTUS_TXT = "/root/reference/tests/comparisons/scotus-transcript-p1.txt"
-SCOTUS_TXT_CROPPED = "/root/reference/tests/comparisons/scotus-transcript-p1-cropped.txt"
+SCOTUS_PDF = f"{REFERENCE}/tests/pdfs/scotus-transcript-p1.pdf"
+SCOTUS_TXT = f"{REFERENCE}/tests/comparisons/scotus-transcript-p1.txt"
+SCOTUS_TXT_CROPPED = f"{REFERENCE}/tests/comparisons/scotus-transcript-p1-cropped.txt"
 
 
 @pytest.fixture(scope="module")

@@ -15,9 +15,10 @@ from pdfplumber_spark.kernel.tables import (
     find_tables_frame,
     merge_edges_frame,
 )
+from reforacle import REFERENCE
 
-WARN = "/root/reference/tests/pdfs/WARN-Report-for-7-1-2015-to-03-25-2016.pdf"
-NICS = "/root/reference/tests/pdfs/nics-background-checks-2015-11.pdf"
+WARN = f"{REFERENCE}/tests/pdfs/WARN-Report-for-7-1-2015-to-03-25-2016.pdf"
+NICS = f"{REFERENCE}/tests/pdfs/nics-background-checks-2015-11.pdf"
 
 
 @pytest.fixture(scope="module")
@@ -213,7 +214,7 @@ def test_issue_848_parses_fast():
 
     from pdfplumber_spark.kernel.pdfparse import parse_pdf
 
-    data = open("/root/reference/tests/pdfs/issue-848.pdf", "rb").read()
+    data = open(f"{REFERENCE}/tests/pdfs/issue-848.pdf", "rb").read()
     t0 = time.time()
     interps = parse_pdf(data, style=False)
     wall = time.time() - t0

@@ -8,9 +8,10 @@ visible instead of silently unported."""
 import glob
 import os
 import re
+from reforacle import REFERENCE
 
 HERE = os.path.dirname(os.path.abspath(__file__))
-REF_TESTS = "/root/reference/tests"
+REF_TESTS = f"{REFERENCE}/tests"
 
 
 def test_every_reference_test_is_ported_or_cited():

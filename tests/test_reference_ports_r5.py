@@ -1,6 +1,6 @@
 """Round-5 ports of reference test_utils.py cases onto the api facade —
 each is the reference's own fixture + its exact expected output
-(/root/reference/tests/test_utils.py line refs per test). These are the
+(the reference checkout's tests/test_utils.py line refs per test). These are the
 hardest parity anchors available: real-world PDFs with pinned strings."""
 
 import re
@@ -10,8 +10,9 @@ from operator import itemgetter
 import pytest
 
 import pdfplumber_spark.api as api
+from reforacle import REFERENCE
 
-PDFS = "/root/reference/tests/pdfs"
+PDFS = f"{REFERENCE}/tests/pdfs"
 
 
 def test_x_tolerance_ratio():

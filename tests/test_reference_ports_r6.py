@@ -1,5 +1,5 @@
 """Round-6 reference-suite ports + regressions (continues
-tests/test_reference_ports_r5.py — reference: /root/reference/tests/).
+tests/test_reference_ports_r5.py — reference: the checkout's tests/).
 
 Each test pins EXACT expected output so any divergence from the
 reference's semantics fails loudly.
@@ -8,8 +8,9 @@ reference's semantics fails loudly.
 import pytest
 
 from pdfplumber_spark import api
+from reforacle import REFERENCE
 
-PDFS = "/root/reference/tests/pdfs"
+PDFS = f"{REFERENCE}/tests/pdfs"
 
 
 def test_layout_mode_keeps_render_directions():

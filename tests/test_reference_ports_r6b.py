@@ -10,9 +10,10 @@ import pytest
 
 import pdfplumber_spark.api as api
 from pdfplumber_spark import utils
+from reforacle import REFERENCE
 
-PDFS = "/root/reference/tests/pdfs"
-COMP = "/root/reference/tests/comparisons"
+PDFS = f"{REFERENCE}/tests/pdfs"
+COMP = f"{REFERENCE}/tests/comparisons"
 
 
 # --- clustering / generic (test_utils.py:34-48, 651-670) --------------------

@@ -12,8 +12,9 @@ from zipfile import ZipFile
 import pytest
 
 from pdfplumber_spark import api
+from reforacle import REFERENCE
 
-PDFS = "/root/reference/tests/pdfs/"
+PDFS = f"{REFERENCE}/tests/pdfs/"
 NICS = PDFS + "nics-background-checks-2015-11.pdf"
 
 
@@ -60,7 +61,7 @@ def test_bytes_stream_to_image():
 
 def test_curves_draw():
     # reference test_display.py:66 (ag-energy example has curves)
-    path = ("/root/reference/examples/pdfs/"
+    path = (f"{REFERENCE}/examples/pdfs/"
             "ag-energy-round-up-2017-02-24.pdf")
     if not os.path.exists(path):
         pytest.skip("examples corpus absent")

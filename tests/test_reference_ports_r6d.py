@@ -9,8 +9,9 @@ import pytest
 from pdfplumber_spark import api
 from pdfplumber_spark import utils as U
 from pdfplumber_spark.kernel import tables as T
+from reforacle import REFERENCE
 
-PDFS = "/root/reference/tests/pdfs"
+PDFS = f"{REFERENCE}/tests/pdfs"
 
 
 @pytest.fixture(scope="module")

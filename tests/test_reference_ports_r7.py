@@ -16,8 +16,9 @@ import tempfile
 import pytest
 
 from pdfplumber_spark import api
+from reforacle import REFERENCE
 
-PDFS = "/root/reference/tests/pdfs"
+PDFS = f"{REFERENCE}/tests/pdfs"
 DEMO = f"{PDFS}/pdffill-demo.pdf"
 SCOTUS = f"{PDFS}/scotus-transcript-p1.pdf"
 

@@ -11,8 +11,9 @@ import glob
 import hashlib
 
 from pdfplumber_spark import api
+from reforacle import REFERENCE
 
-PDFS = sorted(glob.glob("/root/reference/tests/pdfs/*.pdf"))
+PDFS = sorted(glob.glob(f"{REFERENCE}/tests/pdfs/*.pdf"))
 
 # by-design failures: no object structure at all / needs a password
 EXPECTED_UNRENDERABLE = {"empty.pdf", "password-example.pdf"}
@@ -46,7 +47,7 @@ def test_every_reference_fixture_renders():
 
 def test_render_determinism_across_font_classes():
     for name in DETERMINISM_SAMPLE:
-        path = "/root/reference/tests/pdfs/" + name
+        path = f"{REFERENCE}/tests/pdfs/" + name
         h = [
             hashlib.sha256(
                 api.open(path).pages[0].to_image(resolution=36)

@@ -17,6 +17,7 @@ import pdfplumber_spark.api as pdfplumber
 from pdfplumber_spark.kernel.pdfgen import make_pdf
 from pdfplumber_spark.kernel.pdfrepair import repair_bytes, strict_check
 from pdfplumber_spark.repair import repair
+from reforacle import REFERENCE
 
 
 def _sample_pdf() -> bytes:
@@ -127,7 +128,7 @@ def test_repair_unrecoverable_raises():
     "pdffill-demo.pdf",
 ])
 def test_repair_real_fixture_preserves_text(name):
-    data = open(f"/root/reference/tests/pdfs/{name}", "rb").read()
+    data = open(f"{REFERENCE}/tests/pdfs/{name}", "rb").read()
     fixed = repair_bytes(data)
     assert strict_check(fixed)
     assert _texts(fixed) == _texts(data)

@@ -67,13 +67,32 @@ def test_jobs_cli_flag_parity(corpus, tmp_path):
     --types/--pages/--include-attrs/--exclude-attrs/--precision + the
     structure sink."""
     import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pdfplumber_spark.kernel.pdfgen import make_pdf
+
+    # the corpus plus one page whose text origin and rect corners carry
+    # three decimals, so char matrices and rect pts need rounding
+    table = pq.read_table(corpus)
+    fractional = make_pdf([{
+        "width": 612, "height": 792,
+        "texts": [{"x": 72.123, "top": 72.456, "text": "Fraction"}],
+        "rects": [{"x0": 100.123, "top": 200.456, "x1": 150.789,
+                   "bottom": 250.321}],
+    }])
+    inp = str(tmp_path / "pages.parquet")
+    pq.write_table(pa.Table.from_pylist(
+        table.to_pylist() + [{"url": "gen://fractional", "html": fractional}],
+        schema=table.schema), inp)
 
     out = str(tmp_path / "objs")
     res = subprocess.run(
         [sys.executable, "-m", "pdfplumber_spark.jobs", "objects",
-         "--input", corpus, "--output", out, "--local-cores", "2",
+         "--input", inp, "--output", out, "--local-cores", "2",
          "--types", "char", "rect", "--pages", "1",
-         "--include-attrs", "text", "x0", "top", "--precision", "2"],
+         "--include-attrs", "text", "x0", "top", "matrix", "pts",
+         "--precision", "2"],
         capture_output=True, text=True, timeout=300,
         cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     )
@@ -82,10 +101,20 @@ def test_jobs_cli_flag_parity(corpus, tmp_path):
     assert set(df["object_type"]) <= {"char", "rect"}
     assert set(df["page_number"]) == {1}
     assert sorted(df.columns) == sorted(
-        ["url", "page_number", "object_type", "text", "x0", "top"]
+        ["url", "page_number", "object_type", "text", "x0", "top", "matrix",
+         "pts"]
     )
     # --precision 2: no more than 2 decimals survive
     assert (df["x0"].dropna() == df["x0"].dropna().round(2)).all()
+    # ... nested doubles included: char matrix (array<double>) and rect
+    # pts (array<struct<x,y>>)
+    matrix = [v for m in df.loc[df["object_type"] == "char", "matrix"]
+              for v in m]
+    pts = [c for p in df.loc[df["object_type"] == "rect", "pts"]
+           for pt in p for c in (pt["x"], pt["y"])]
+    assert matrix and pts
+    assert all(v == round(v, 2) for v in matrix)
+    assert all(c == round(c, 2) for c in pts)
 
     out2 = str(tmp_path / "struct")
     res = subprocess.run(

@@ -7,8 +7,9 @@ import re
 import pdfplumber_spark.api as pdfplumber
 from pdfplumber_spark.kernel.pdfparse import PDFDocument
 from pdfplumber_spark.kernel.structure import StructTree, tree_to_json
+from reforacle import REFERENCE
 
-PDFS = "/root/reference/tests/pdfs"
+PDFS = f"{REFERENCE}/tests/pdfs"
 
 
 def test_structure_tree_class_image():
@@ -93,7 +94,7 @@ def test_tree_to_json_and_spark_plan(spark, tmp_path):
 def _ref_constants():
     import ast
 
-    src = open("/root/reference/tests/test_structure.py").read()
+    src = open(f"{REFERENCE}/tests/test_structure.py").read()
     consts = {}
     for node in ast.parse(src).body:
         if (

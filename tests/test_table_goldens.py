@@ -3,8 +3,9 @@
 import pytest
 
 import pdfplumber_spark.api as pdfplumber
+from reforacle import REFERENCE
 
-PDFS = "/root/reference/tests/pdfs"
+PDFS = f"{REFERENCE}/tests/pdfs"
 
 
 def test_edges_strict():
@@ -114,7 +115,7 @@ def test_debug_tablefinder_warn_anchors():
     import pdfplumber_spark.api as pdfplumber
 
     with pdfplumber.open(
-        "/root/reference/tests/pdfs/WARN-Report-for-7-1-2015-to-03-25-2016.pdf"
+        f"{REFERENCE}/tests/pdfs/WARN-Report-for-7-1-2015-to-03-25-2016.pdf"
     ) as pdf:
         tf = pdf.pages[0].debug_tablefinder()
         assert len(tf.edges) == 46
@@ -130,7 +131,7 @@ def test_table_curves_discussion_808():
     import pdfplumber_spark.api as pdfplumber
 
     with pdfplumber.open(
-        "/root/reference/tests/pdfs/table-curves-example.pdf"
+        f"{REFERENCE}/tests/pdfs/table-curves-example.pdf"
     ) as pdf:
         page = pdf.pages[0]
         assert len(page.curves)
@@ -147,7 +148,7 @@ def test_issue_466_mixed_strategy():
     import pdfplumber_spark.api as pdfplumber
 
     with pdfplumber.open(
-        "/root/reference/tests/pdfs/issue-466-example.pdf"
+        f"{REFERENCE}/tests/pdfs/issue-466-example.pdf"
     ) as pdf:
         tables = pdf.pages[0].extract_tables(
             {
@@ -169,7 +170,7 @@ def test_discussion_539_full_settings():
     import pdfplumber_spark.api as pdfplumber
 
     with pdfplumber.open(
-        "/root/reference/tests/pdfs/nics-background-checks-2015-11.pdf"
+        f"{REFERENCE}/tests/pdfs/nics-background-checks-2015-11.pdf"
     ) as pdf:
         page = pdf.pages[0]
         table_settings = {
@@ -195,7 +196,7 @@ def test_edges_strict_golden():
     import pdfplumber_spark.api as pdfplumber
 
     with pdfplumber.open(
-        "/root/reference/tests/pdfs/issue-140-example.pdf"
+        f"{REFERENCE}/tests/pdfs/issue-140-example.pdf"
     ) as pdf:
         t = pdf.pages[0].extract_table(
             {"vertical_strategy": "lines_strict",
@@ -212,7 +213,7 @@ def test_text_tolerance_golden():
     import pdfplumber_spark.api as pdfplumber
 
     with pdfplumber.open(
-        "/root/reference/tests/pdfs/senate-expenditures.pdf"
+        f"{REFERENCE}/tests/pdfs/senate-expenditures.pdf"
     ) as pdf:
         cropped = pdf.pages[0].crop((70.332, 130.986, 420, 509.106))
         t = cropped.extract_table(

@@ -14,8 +14,9 @@ import pytest
 from pdfplumber_spark.kernel.pdfparse import PDFDocument
 from pdfplumber_spark.kernel.truetype import rasterize_glyph
 from pdfplumber_spark.kernel.type1 import Type1Error, Type1Font, _decrypt
+from reforacle import REFERENCE
 
-FIXTURE = "/root/reference/tests/pdfs/issue-982-example.pdf"
+FIXTURE = f"{REFERENCE}/tests/pdfs/issue-982-example.pdf"
 
 
 def _fonts():
