@@ -13,7 +13,14 @@ prints one sha256 prefix per (corpus, surface):
   plain/layout, ``extract_text_lines``, ``dedupe_chars().extract_text``,
   ``extract_words`` with ``extra_attrs``, and ``find_tables`` /
   ``extract_tables`` / ``debug_tablefinder`` under every table strategy,
-  numeric and object-dict explicit lines included.
+  numeric and object-dict explicit lines included;
+- the facade's object surfaces: ``chars``/``lines``/``rects``/``curves``/
+  ``images`` records; ``crop``, ``within_bbox``, ``outside_bbox`` and
+  ``filter`` pages, each read through ``chars``, ``extract_text``,
+  ``extract_words`` and ``extract_tables``; ``dedupe_chars().chars``,
+  ``extract_text_simple``, ``to_json(precision=3)`` and ``to_csv``; the
+  char order and textline/textbox records under ``laparams={}``; and the
+  ``utils`` char helpers over ``page.chars``.
 
 Word and match rows are hashed flattened across the frames a payload
 returns, so a per-page or per-payload frame split hashes the same. The
@@ -49,6 +56,7 @@ os.environ["PYTHONPATH"] = os.pathsep.join(
     p for p in (CHECKOUT, os.environ.get("PYTHONPATH")) if p)
 
 import pdfplumber_spark.api as pdfplumber  # noqa: E402
+from pdfplumber_spark import utils  # noqa: E402
 from pdfplumber_spark.kernel.pdfgen import make_pdf  # noqa: E402
 from pdfplumber_spark.kernel.words import WordSettings  # noqa: E402
 from pdfplumber_spark.plans import extract as X  # noqa: E402
@@ -199,6 +207,55 @@ def facade_words_tables(payload) -> list:
     return out
 
 
+def derived_pages(p) -> dict:
+    """name -> the derived pages of ``p`` the object surfaces hash."""
+    w, h = p.width, p.height
+    bbox = (w * 0.15, h * 0.1, w * 0.6, h * 0.55)
+    return {
+        "crop": lambda: p.crop(bbox),
+        "within_bbox": lambda: p.within_bbox(bbox),
+        "outside_bbox": lambda: p.outside_bbox(bbox),
+        "filter": lambda: p.filter(lambda o: o["x0"] < 300),
+    }
+
+
+def facade_objects(payload) -> list:
+    out = []
+    with pdfplumber.open(bytes(payload)) as pdf:
+        for p in pdf.pages:
+            for kind in ("chars", "lines", "rects", "curves", "images"):
+                out.append(outcome(lambda: getattr(p, kind)))
+            for name, derive in derived_pages(p).items():
+                out.append(name)
+                out.append(outcome(lambda: derive().chars))
+                out.append(outcome(lambda: derive().extract_text()))
+                out.append(outcome(lambda: derive().extract_words()))
+                out.append(outcome(lambda: derive().extract_tables()))
+            out.append(outcome(lambda: p.dedupe_chars().chars))
+            out.append(outcome(lambda: p.extract_text_simple()))
+            out.append(outcome(lambda: p.to_json(precision=3)))
+            out.append(outcome(lambda: p.to_csv()))
+            chars = p.chars
+            out.append(outcome(lambda: utils.extract_text(chars)))
+            out.append(outcome(lambda: utils.extract_text(chars, layout=True)))
+            out.append(outcome(lambda: utils.extract_text_simple(chars)))
+            out.append(outcome(lambda: utils.extract_words(chars)))
+            out.append(outcome(lambda: utils.collate_line(chars)))
+            out.append(outcome(lambda: utils.dedupe_chars(chars)))
+    return out
+
+
+def facade_laparams(payload) -> list:
+    out = []
+    with pdfplumber.open(bytes(payload), laparams={}) as pdf:
+        for p in pdf.pages:
+            out.append(outcome(lambda: [(c["text"], c["x0"], c["top"])
+                                        for c in p.chars]))
+            out.append(outcome(lambda: (p.textlinehorizontals,
+                                        p.textboxhorizontals)))
+    return out
+
+
 def spark_plans(pages) -> dict:
     """name -> DataFrame of every payload plan over ``pages``."""
     from pdfplumber_spark.operators import multimodal as M
@@ -307,6 +364,9 @@ def main() -> None:
                     outcome(lambda: facade_text(payload)))
                 add("facade[words,find_tables,extract_tables,debug]",
                     outcome(lambda: facade_words_tables(payload)))
+                add("facade[objects,derived,serialize,utils]",
+                    outcome(lambda: facade_objects(payload)))
+                add("facade[laparams]", outcome(lambda: facade_laparams(payload)))
         for key, h in hashes.items():
             print(f"{name:8s} {key:48s} {h.hexdigest()[:16]}", flush=True)
 
