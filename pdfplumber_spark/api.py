@@ -14,7 +14,10 @@ Lets a reference user switch with minimal changes:
 This facade is single-process (it drives the same kernels the Spark
 executors run — SURVEY §1.3: the corpus-scale path is the DataFrame API in
 ``plans/``). Objects are returned as list-of-dicts like the reference
-(``page.py:416-425``); frames back every accessor.
+(``page.py:416-425``). A page holds its chars as the parser's
+``CharArrays`` and hands them straight to the char kernels; lines, rects
+and curves stay ``LINE_COLUMNS`` frames, the rows the edge path and the
+records read.
 """
 
 from __future__ import annotations
@@ -23,10 +26,13 @@ import io
 import math
 from typing import List, NamedTuple, Optional, Union
 
+import numpy as np
 import pandas as pd
 
 from .kernel.geom import (
     bbox_overlap_mask,
+    clip_coords,
+    coords,
     crop_frame,
     lines_to_edges,
     rects_to_edges,
@@ -36,7 +42,7 @@ from .kernel.geom import (
 from .kernel.layout import (
     STRIP_LINES,
     page_search,
-    page_text,
+    page_text_ca,
     resolve_layout_kwargs,
     simple_text,
 )
@@ -50,8 +56,8 @@ from .kernel.words import (
     NUM_FIELDS,
     STYLE_ATTRS,
     CharArrays,
-    dedupe_chars_frame,
-    extract_words_frame,
+    dedupe_keep_mask,
+    extract_words_ca,
     split_word_settings,
 )
 
@@ -122,16 +128,11 @@ class _Serializer:
             return tuple(self.serialize(v) for v in obj)
         if isinstance(obj, list):
             return [self.serialize(v) for v in obj]
-        try:
-            import numpy as _np
-
-            if isinstance(obj, _np.floating):
-                x = float(obj)
-                return x if self.precision is None else round(x, self.precision)
-            if isinstance(obj, _np.integer):
-                return int(obj)
-        except ImportError:  # pragma: no cover
-            pass
+        if isinstance(obj, np.floating):
+            x = float(obj)
+            return x if self.precision is None else round(x, self.precision)
+        if isinstance(obj, np.integer):
+            return int(obj)
         return str(obj)
 
 
@@ -256,19 +257,40 @@ def _resolve_table_settings(table_settings) -> dict:
     return dict(table_settings)
 
 
-# leading per-char columns of a facade page's chars frame
-_CHAR_HEAD = ("char_index", "text", "fontname", *NUM_FIELDS)
+# a char record's keys, in order; the record appends page_number. mcid/tag
+# are ALWAYS present (reference emits the keys as None on untagged pages —
+# round-5 ADVICE: schema must not differ between tagged and untagged
+# documents); the style columns add the reference LTChar extras (ncs
+# colorspace name, pattern names — page.py:351-380)
+_CHAR_KEYS = ("text", "fontname", *NUM_FIELDS, "object_type", "mcid", "tag",
+              *STYLE_ATTRS)
+# the parser columns a facade page's CharArrays carries in ``extra`` (with
+# object_type): the record keys it holds no core field for, plus
+# char_index, the parser's emit order (display joins it to the char CIDs)
+_CHAR_EXTRA = ("char_index", "fontname", "adv", "y0", "y1", "width", "mcid",
+               "tag", *STYLE_ATTRS)
+
+
+def _crop_chars(ca: CharArrays, bbox) -> CharArrays:
+    """The chars overlapping ``bbox``, clipped to it (``crop_frame``'s
+    arithmetic over the char columns)."""
+    out = ca.take(bbox_overlap_mask(*coords(ca), bbox))
+    cols = clip_coords(*coords(out), out.doctop, bbox)
+    out.extra["width"] = cols.pop("width")
+    for k, v in cols.items():
+        setattr(out, k, v)
+    return out
 
 
 class Page:
-    def __init__(self, pdf: "PDF", interp, chars: pd.DataFrame,
+    def __init__(self, pdf: "PDF", interp, chars: CharArrays,
                  lines: pd.DataFrame, rects: pd.DataFrame,
                  curves: pd.DataFrame):
         self.pdf = pdf
         self.page_number = interp.page_number
         self.rotation = interp.rotation
         self.initial_doctop = interp.initial_doctop
-        self._chars = chars
+        self._ca = chars
         self._lines = lines
         self._rects = rects
         self._curves = curves
@@ -307,12 +329,18 @@ class Page:
 
     # --- object accessors (reference: container.py:32-66) -------------------
 
-    def _records(self, frame: pd.DataFrame) -> List[dict]:
-        recs = frame.to_dict("records")
-        for r in recs:  # reference process_object adds page_number
+    def _records(self, objs) -> List[dict]:
+        """Object records of a page's chars or of an object frame; the
+        reference's process_object adds page_number."""
+        if isinstance(objs, CharArrays):
+            cols = [v.tolist() for v in objs.select(_CHAR_KEYS).extra.values()]
+            return [
+                {**dict(zip(_CHAR_KEYS, vals)), "page_number": self.page_number}
+                for vals in zip(*cols)
+            ]
+        recs = objs.to_dict("records")
+        for r in recs:
             r["page_number"] = self.page_number
-            r.pop("char_index", None)  # internal ordering key, not a
-            # reference attr (ALL_ATTRS)
             for ck in ("stroking_color", "non_stroking_color"):
                 v = r.get(ck)
                 if isinstance(v, list):  # reference colors are tuples
@@ -324,7 +352,7 @@ class Page:
 
     @property
     def chars(self) -> List[dict]:
-        recs = self._records(self._chars)
+        recs = self._records(self._ca)
         la = self._layout_objects()
         if la is not None:
             # laparams: page objects rebuild in reading order (pdfminer
@@ -356,9 +384,7 @@ class Page:
         if cached is None:
             from .kernel.laparams import analyze
 
-            cached = self._la_cache = analyze(
-                CharArrays(self._chars, ("y0", "y1")), lap
-            )
+            cached = self._la_cache = analyze(self._ca, lap)
         return cached
 
     def _la_kind(self, kind: str) -> List[dict]:
@@ -475,16 +501,18 @@ class Page:
     # --- text ---------------------------------------------------------------
     def extract_text(self, **kwargs) -> str:
         settings, rest = split_word_settings(kwargs)
-        return page_text(
-            self._chars, settings, **resolve_layout_kwargs(rest, self.bbox)
+        return page_text_ca(
+            self._ca.select(settings.extra_attrs), settings,
+            **resolve_layout_kwargs(rest, self.bbox)
         )
 
     def extract_text_simple(self, **kwargs) -> str:
-        return simple_text(self._chars, **kwargs)
+        return simple_text(self._ca, **kwargs)
 
     def extract_words(self, **kwargs) -> List[dict]:
         settings, _ = split_word_settings(kwargs)
-        words, _, _ = extract_words_frame(self._chars, settings)
+        words, _, _ = extract_words_ca(
+            self._ca.select(settings.extra_attrs), settings)
         return words.to_dict("records")
 
     def search(self, pattern, regex: bool = True, case: bool = True,
@@ -508,15 +536,15 @@ class Page:
         char records."""
         layout = bool(kwargs.pop("layout", False))
         settings, _ = split_word_settings(kwargs)
-        if len(self._chars) == 0:
+        if self._ca.n == 0:
             return []
-        ca = CharArrays(self._chars, settings.extra_attrs)
-        recs = page_search(ca, pattern, settings, layout, self.bbox,
+        recs = page_search(self._ca.select(settings.extra_attrs), pattern,
+                           settings, layout, self.bbox,
                            **search_kwargs).to_dict("records")
         for r in recs:
             pos = r.pop("char_pos")
             if return_chars:
-                r["chars"] = self._chars.iloc[pos].to_dict("records")
+                r["chars"] = self._records(self._ca.take(pos))
         return recs
 
     # --- tables --------------------------------------------------------------
@@ -530,7 +558,8 @@ class Page:
         if "text" in (ts.get("vertical_strategy", "lines"),
                       ts.get("horizontal_strategy", "lines")):
             settings, _ = split_word_settings(text_settings)
-            words, _, _ = extract_words_frame(self._chars, settings)
+            words, _, _ = extract_words_ca(
+                self._ca.select(settings.extra_attrs), settings)
         return text_settings, find_tables_frame(
             self._edges_frame(), words=words, page_bbox=self.bbox,
             debug=debug, **ts
@@ -594,30 +623,25 @@ class Page:
     # --- derived pages --------------------------------------------------------
     def crop(self, bbox, relative: bool = False, strict: bool = True) -> "Page":
         bbox = self._resolve_bbox(bbox, relative, strict)
-        return self._derive(lambda df: crop_frame(df, bbox), bbox=bbox)
+        return self._derive(_crop_chars(self._ca, bbox),
+                            lambda df: crop_frame(df, bbox), bbox)
 
     def within_bbox(self, bbox, relative: bool = False, strict: bool = True) -> "Page":
         bbox = self._resolve_bbox(bbox, relative, strict)
-        return self._derive(
-            lambda df: df[within_bbox_mask(df, bbox)] if len(df) else df,
-            bbox=bbox,
-        )
+        return self._select(
+            lambda objs: within_bbox_mask(*coords(objs), bbox), bbox)
 
     def outside_bbox(self, bbox, relative: bool = False, strict: bool = True) -> "Page":
         # outside_bbox keeps the parent bbox (page.py:674-677)
         bbox = self._resolve_bbox(bbox, relative, strict)
-        return self._derive(
-            lambda df: df[~bbox_overlap_mask(df, bbox)] if len(df) else df
-        )
+        return self._select(
+            lambda objs: ~bbox_overlap_mask(*coords(objs), bbox))
 
     def filter(self, test_function) -> "Page":
-        def f(df):
-            if not len(df):
-                return df
-            mask = df.apply(lambda row: test_function(row.to_dict()), axis=1)
-            return df[mask]
-
-        return self._derive(f)
+        """The page's objects whose records pass ``test_function`` (the
+        reference FilteredPage filters ``parent.objects`` records)."""
+        return self._select(lambda objs: np.array(
+            [bool(test_function(r)) for r in self._records(objs)], dtype=bool))
 
     # --- serialization (reference container.py:106-179 single-doc form) ---
 
@@ -658,9 +682,13 @@ class Page:
                              include_attrs, exclude_attrs)
 
     def dedupe_chars(self, **kwargs) -> "Page":
-        out = Page(self.pdf, self._interp, dedupe_chars_frame(self._chars, **kwargs),
-                   self._lines, self._rects, self._curves)
-        return out
+        ca = self._ca
+        keep = dedupe_keep_mask(
+            (ca.extra["fontname"], ca.size, ca.upright, ca.text),
+            ca.doctop, ca.x0, **kwargs,
+        )
+        return Page(self.pdf, self._interp, ca.take(keep),
+                    self._lines, self._rects, self._curves)
 
     def _resolve_bbox(self, bbox, relative, strict):
         x0, top, x1, bottom = bbox
@@ -689,13 +717,20 @@ class Page:
                 )
         return (float(x0), float(top), float(x1), float(bottom))
 
-    def _derive(self, fn, bbox=None) -> "Page":
+    def _derive(self, chars: CharArrays, fn, bbox=None) -> "Page":
+        """A page of ``chars`` and ``fn`` of each object frame."""
         p = Page(
-            self.pdf, self._interp, fn(self._chars), fn(self._lines),
+            self.pdf, self._interp, chars, fn(self._lines),
             fn(self._rects), fn(self._curves),
         )
         p.bbox = bbox if bbox is not None else self.bbox
         return p
+
+    def _select(self, keep, bbox=None) -> "Page":
+        """A page of the objects ``keep`` masks, called with the chars and
+        with each object frame."""
+        return self._derive(self._ca.take(keep(self._ca)),
+                            lambda df: df[keep(df)], bbox)
 
 
 class Table:
@@ -719,7 +754,7 @@ class Table:
 
     def extract(self, **kwargs):
         ts = {**self._text_settings, **kwargs}
-        return extract_table_text(self.cells, self.page._chars, ts)
+        return extract_table_text(self.cells, self.page._ca, ts)
 
 
 class PDFParseError(Exception):
@@ -750,33 +785,19 @@ class PDF:
         for interp in interps:
             if pages is not None and interp.page_number not in pages:
                 continue
-            if interp.n_chars:
-                # mcid/tag are ALWAYS present (reference emits the keys as
-                # None on untagged pages — round-5 ADVICE: schema must not
-                # differ between tagged and untagged documents); the style
-                # columns add the reference LTChar extras (ncs colorspace
-                # name, pattern names — page.py:351-380)
-                tail = ("mcid", "tag", *STYLE_ATTRS)
-                ca = CharArrays.from_interp(interp, _CHAR_HEAD + tail)
-                cols = {k: ca.extra[k] for k in _CHAR_HEAD}
-                cols["object_type"] = "char"
-                cols.update((k, ca.extra[k]) for k in tail)
-                for k in STYLE_ATTRS[:3]:  # reference colors are tuples
-                    cols[k] = [None if v is None else tuple(v) for v in cols[k]]
-                chars = pd.DataFrame(cols)
-            else:
-                chars = pd.DataFrame(
-                    columns=[*_CHAR_HEAD, "object_type", "mcid", "tag"]
-                )
-            lines = pd.DataFrame(
-                [ln for ln in interp.lines], columns=LINE_COLUMNS
-            )
-            lines["object_type"] = "line"
-            rects = pd.DataFrame([r for r in interp.rects], columns=LINE_COLUMNS)
-            rects["object_type"] = "rect"
-            curves = pd.DataFrame([c for c in interp.curves], columns=LINE_COLUMNS)
-            curves["object_type"] = "curve"
-            self.pages.append(Page(self, interp, chars, lines, rects, curves))
+            chars = CharArrays.from_interp(interp, _CHAR_EXTRA)
+            chars.extra["object_type"] = np.full(chars.n, "char", dtype=object)
+            for k in STYLE_ATTRS[:3]:  # reference colors are tuples
+                chars.extra[k] = np.fromiter(
+                    (None if v is None else tuple(v) for v in chars.extra[k]),
+                    dtype=object, count=chars.n)
+            frames = []
+            for kind in ("line", "rect", "curve"):
+                f = pd.DataFrame(list(getattr(interp, kind + "s")),
+                                 columns=LINE_COLUMNS)
+                f["object_type"] = kind
+                frames.append(f)
+            self.pages.append(Page(self, interp, chars, *frames))
 
     def structure_tree(self, page_number: Optional[int] = None,
                        page: Optional["Page"] = None):

@@ -172,10 +172,10 @@ def _render_base(page, scale: float, bbox=None) -> Canvas:
     # contours scanline-filled at the char's pixel box; else
     # the approximate 5x7 bitmap glyph (kernel/font5x7.py); else a faint
     # structural box. Deterministic either way (hash-stable renders).
-    chars = getattr(page, "_chars", None)
+    ca = getattr(page, "_ca", None)
     ch_cids = getattr(interp, "ch_cid", None) if interp is not None else None
-    if chars is None:
-        # dict accessors pop char_index, so no CID join on this path
+    if ca is None:
+        # dict accessors carry no char_index, so no CID join on this path
         chars_rows = [
             (c["x0"], c["top"], c["x1"], c["bottom"], c.get("text"),
              c.get("fontname"), None, c.get("non_stroking_color"),
@@ -183,32 +183,21 @@ def _render_base(page, scale: float, bbox=None) -> Canvas:
             for c in page.chars
         ]
     else:
-        import numpy as _np
-
-        cb = chars[["x0", "top", "x1", "bottom"]].to_numpy(_np.float64)
-        texts = chars["text"].tolist() if "text" in chars.columns \
-            else [None] * len(cb)
-        fnames = chars["fontname"].tolist() if "fontname" in chars.columns \
-            else [None] * len(cb)
-        # char_index = per-page emit order -> interp.ch_cid join (frame
-        # may be a crop/filter subset; indices stay valid)
-        if ch_cids is not None and "char_index" in chars.columns:
-            idxs = chars["char_index"].tolist()
+        ex = ca.extra
+        # char_index = per-page emit order -> interp.ch_cid join (the
+        # chars may be a crop/filter subset; indices stay valid)
+        if ch_cids is not None:
             cids = [
-                ch_cids[int(ix)] if 0 <= int(ix) < len(ch_cids) else None
-                for ix in idxs
+                ch_cids[ix] if 0 <= ix < len(ch_cids) else None
+                for ix in ex["char_index"].tolist()
             ]
         else:
-            cids = [None] * len(cb)
-        ncols = chars["non_stroking_color"].tolist() \
-            if "non_stroking_color" in chars.columns else [None] * len(cb)
-        mats = chars["matrix"].tolist() \
-            if "matrix" in chars.columns else [None] * len(cb)
-        chars_rows = [
-            (cb[i, 0], cb[i, 1], cb[i, 2], cb[i, 3], texts[i], fnames[i],
-             cids[i], ncols[i], mats[i])
-            for i in range(len(cb))
-        ]
+            cids = [None] * ca.n
+        chars_rows = list(zip(
+            ca.x0, ca.top, ca.x1, ca.bottom, ca.text.tolist(),
+            ex["fontname"].tolist(), cids, ex["non_stroking_color"].tolist(),
+            ex["matrix"].tolist(),
+        ))
     from .kernel.font5x7 import glyph_mask
 
     tt_by_basefont = {}

@@ -1,8 +1,8 @@
-"""Vectorized bbox / edge geometry over pandas DataFrames.
+"""Vectorized bbox / edge geometry over coordinate arrays and object frames.
 
 Semantics mirror ``/root/reference/pdfplumber/utils/geometry.py`` (cited
 per-function) but are re-expressed as columnar numpy operations over whole
-object frames, never per-row dict manipulation.
+object columns, never per-row dict manipulation.
 
 Coordinate convention (the reference's, ``page.py:192-197``): origin at the
 page's **top-left**; ``top``/``bottom`` grow downward; ``y0``/``y1`` are the
@@ -18,65 +18,55 @@ import pandas as pd
 BBOX_COLS = ["x0", "top", "x1", "bottom"]
 
 
-def frame_bbox(df: pd.DataFrame):
-    """Enclosing bbox (x0, top, x1, bottom) of all rows.
-
-    Reference: ``utils/geometry.py:44-50`` (merge_bboxes).
-    """
-    return (
-        float(df["x0"].min()),
-        float(df["top"].min()),
-        float(df["x1"].max()),
-        float(df["bottom"].max()),
-    )
+def coords(objs):
+    """The (x0, top, x1, bottom) arrays of an object frame's rows or of a
+    ``CharArrays``' chars."""
+    if isinstance(objs, pd.DataFrame):
+        return tuple(objs[c].to_numpy() for c in BBOX_COLS)
+    return objs.x0, objs.top, objs.x1, objs.bottom
 
 
-def bbox_overlap_mask(df: pd.DataFrame, bbox) -> np.ndarray:
-    """Boolean mask: rows whose bbox overlaps ``bbox``.
+def bbox_overlap_mask(x0, top, x1, bottom, bbox) -> np.ndarray:
+    """Boolean mask: objects whose bbox overlaps ``bbox``.
 
     Matches ``get_bbox_overlap`` (``utils/geometry.py:53-65``): the overlap
     box must have non-negative width AND height and positive perimeter —
     touching along an edge counts, touching only at a corner does not.
     """
     bx0, btop, bx1, bbottom = bbox
-    o_left = np.maximum(df["x0"].to_numpy(), bx0)
-    o_right = np.minimum(df["x1"].to_numpy(), bx1)
-    o_top = np.maximum(df["top"].to_numpy(), btop)
-    o_bottom = np.minimum(df["bottom"].to_numpy(), bbottom)
-    o_w = o_right - o_left
-    o_h = o_bottom - o_top
+    o_w = np.minimum(x1, bx1) - np.maximum(x0, bx0)
+    o_h = np.minimum(bottom, bbottom) - np.maximum(top, btop)
     return (o_w >= 0) & (o_h >= 0) & ((o_w + o_h) > 0)
 
 
-def within_bbox_mask(df: pd.DataFrame, bbox) -> np.ndarray:
-    """Rows fully inside ``bbox`` (overlap == own bbox), ``geometry.py:102-110``."""
+def within_bbox_mask(x0, top, x1, bottom, bbox) -> np.ndarray:
+    """Objects fully inside ``bbox`` (overlap == own bbox), ``geometry.py:102-110``."""
     bx0, btop, bx1, bbottom = bbox
-    inside = (
-        (df["x0"].to_numpy() >= bx0)
-        & (df["x1"].to_numpy() <= bx1)
-        & (df["top"].to_numpy() >= btop)
-        & (df["bottom"].to_numpy() <= bbottom)
-    )
-    return inside & bbox_overlap_mask(df, bbox)
+    inside = (x0 >= bx0) & (x1 <= bx1) & (top >= btop) & (bottom <= bbottom)
+    return inside & bbox_overlap_mask(x0, top, x1, bottom, bbox)
+
+
+def clip_coords(x0, top, x1, bottom, doctop, bbox) -> dict:
+    """Coordinate columns clipped to the overlap box (``clip_obj``,
+    ``geometry.py:75-92``): the top shift propagates to ``doctop`` (left
+    out when None); width/height recomputed."""
+    bx0, btop, bx1, bbottom = bbox
+    out = {"x0": np.maximum(x0, bx0), "x1": np.minimum(x1, bx1),
+           "top": np.maximum(top, btop), "bottom": np.minimum(bottom, bbottom)}
+    if doctop is not None:
+        out["doctop"] = doctop + (out["top"] - top)
+    out["width"] = out["x1"] - out["x0"]
+    out["height"] = out["bottom"] - out["top"]
+    return out
 
 
 def crop_frame(df: pd.DataFrame, bbox) -> pd.DataFrame:
-    """Intersect-filter then clip coords to the overlap box.
-
-    Reference ``clip_obj``/``crop_to_bbox`` (``geometry.py:75-92,120-125``):
-    clipped top shift propagates to ``doctop``; width/height recomputed.
-    """
-    bx0, btop, bx1, bbottom = bbox
-    out = df[bbox_overlap_mask(df, bbox)].copy()
-    new_top = np.maximum(out["top"].to_numpy(), btop)
-    if "doctop" in out.columns:
-        out["doctop"] = out["doctop"].to_numpy() + (new_top - out["top"].to_numpy())
-    out["x0"] = np.maximum(out["x0"].to_numpy(), bx0)
-    out["x1"] = np.minimum(out["x1"].to_numpy(), bx1)
-    out["top"] = new_top
-    out["bottom"] = np.minimum(out["bottom"].to_numpy(), bbottom)
-    out["width"] = out["x1"] - out["x0"]
-    out["height"] = out["bottom"] - out["top"]
+    """Intersect-filter then clip coords to the overlap box
+    (``crop_to_bbox``, ``geometry.py:120-125``)."""
+    out = df[bbox_overlap_mask(*coords(df), bbox)].copy()
+    doctop = out["doctop"].to_numpy() if "doctop" in out.columns else None
+    for k, v in clip_coords(*coords(out), doctop, bbox).items():
+        out[k] = v
     return out
 
 

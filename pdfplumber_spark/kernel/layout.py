@@ -2,7 +2,7 @@
 
 ``page_text_ca`` is the one char -> text implementation: plain and layout
 mode plus render directions, straight from :class:`CharArrays` (parser
-buffers or a char frame). ``page_text`` adapts a char frame to it.
+buffers, a facade page's chars, or char records).
 ``page_search`` is the one search path: ``page_textmap`` builds the
 provenance-carrying textmap of a page's :class:`CharArrays` and
 ``search_text`` maps each regex match back to its chars' bbox.
@@ -22,8 +22,8 @@ Re-expresses the reference's WordMap/TextMap
 - ``assemble_text_plain_map`` — the non-layout textmap with provenance.
 - ``render_directions`` — btt/rtl render post-transforms: reverse lines /
   reverse chars / pad + transpose columns (``text.py:113-143``).
-- ``simple_text`` — extract_text_simple: doctop clusters + collate_line
-  (``text.py:761-781``).
+- ``simple_text`` — extract_text_simple: doctop clusters + ``collate_line``
+  over :class:`CharArrays` (``text.py:761-781``).
 - ``search_text`` — regex over the rendered string, spans mapped back to
   source chars through the provenance array, match bboxes computed over
   the ``CharArrays`` columns (``text.py:145-210``).
@@ -41,7 +41,6 @@ import numpy as np
 import pandas as pd
 
 from .cluster import assign_clusters, group_rows_by_cluster
-from .geom import frame_bbox
 from .words import (
     DEFAULT_X_TOLERANCE,
     DEFAULT_Y_TOLERANCE,
@@ -257,12 +256,12 @@ def assemble_text_layout(
     return render_directions(base, ldr, cdr), provenance
 
 
-def collate_line(line_chars: pd.DataFrame, tolerance: float = DEFAULT_X_TOLERANCE) -> str:
+def collate_line(ca: CharArrays, tolerance: float = DEFAULT_X_TOLERANCE) -> str:
     """Sort by x0; insert a space on gaps > tolerance (``text.py:761-772``)."""
-    order = np.argsort(line_chars["x0"].to_numpy(np.float64), kind="stable")
-    x0 = line_chars["x0"].to_numpy(np.float64)[order]
-    x1 = line_chars["x1"].to_numpy(np.float64)[order]
-    txt = line_chars["text"].to_numpy(dtype=object)[order]
+    order = np.argsort(ca.x0, kind="stable")
+    x0 = ca.x0[order]
+    x1 = ca.x1[order]
+    txt = ca.text[order]
     gaps = np.zeros(len(txt), dtype=bool)
     if len(txt) > 1:
         gaps[1:] = x0[1:] > (x1[:-1] + tolerance)
@@ -270,16 +269,16 @@ def collate_line(line_chars: pd.DataFrame, tolerance: float = DEFAULT_X_TOLERANC
 
 
 def simple_text(
-    chars: pd.DataFrame,
+    ca: CharArrays,
     x_tolerance: float = DEFAULT_X_TOLERANCE,
     y_tolerance: float = DEFAULT_Y_TOLERANCE,
 ) -> str:
     """extract_text_simple (``text.py:775-781``)."""
-    if len(chars) == 0:
+    if ca.n == 0:
         return ""
-    cids = assign_clusters(chars["doctop"].to_numpy(np.float64), y_tolerance)
+    cids = assign_clusters(ca.doctop, y_tolerance)
     groups = group_rows_by_cluster(cids, preserve_order=False)
-    return "\n".join(collate_line(chars.iloc[g], x_tolerance) for g in groups)
+    return "\n".join(collate_line(ca.take(g), x_tolerance) for g in groups)
 
 
 _LAYOUT_KEYS = (
@@ -290,7 +289,7 @@ _LAYOUT_KEYS = (
 
 def resolve_layout_kwargs(rest: dict, bbox) -> dict:
     """Pop ``extract_text``'s layout and render kwargs out of ``rest`` ->
-    keyword arguments for :func:`page_text`.
+    keyword arguments for :func:`page_text_ca`.
 
     ``bbox`` supplies the layout defaults: ``layout_bbox`` itself and the
     ``layout_width``/``layout_height`` extent. Only a default-derived
@@ -349,12 +348,16 @@ def page_text_ca(
     """extract_text (``text.py:713-758``) straight from CharArrays — the
     one char -> text implementation, no pandas for the char table.
 
-    Layout mode needs ``layout_bbox``; ``layout_kwargs`` are the rest of
-    :func:`assemble_text_layout`'s geometry (``layout_width``/``_height``
-    [``_chars``], ``x``/``y_density``, ``x``/``y_shift``)."""
+    ``ca`` carries ``settings.extra_attrs`` (:meth:`CharArrays.select`).
+    Layout mode spans ``layout_bbox``, by default the chars' extent;
+    ``layout_kwargs`` are the rest of :func:`assemble_text_layout`'s
+    geometry (``layout_width``/``_height`` [``_chars``], ``x``/``y_density``,
+    ``x``/``y_shift``)."""
     s = settings or WordSettings()
     if ca.n == 0:
         return ""
+    if layout and layout_bbox is None:
+        layout_bbox = ca.bbox()
     words, cwid, cwpos = extract_words_ca(ca, s, as_frame=False)
     if not layout:
         return assemble_text(
@@ -380,24 +383,6 @@ def page_text_ca(
         **layout_kwargs,
     )
     return text
-
-
-def page_text(
-    chars: pd.DataFrame,
-    settings: Optional[WordSettings] = None,
-    layout: bool = False,
-    layout_bbox: Optional[Tuple[float, float, float, float]] = None,
-    **kwargs,
-) -> str:
-    """extract_text over a char frame: :func:`page_text_ca` on the frame's
-    arrays; layout mode defaults ``layout_bbox`` to the chars' extent."""
-    s = settings or WordSettings()
-    if len(chars) == 0:
-        return ""
-    if layout and layout_bbox is None:
-        layout_bbox = frame_bbox(chars)
-    ca = CharArrays(chars.reset_index(drop=True), s.extra_attrs)
-    return page_text_ca(ca, s, layout=layout, layout_bbox=layout_bbox, **kwargs)
 
 
 def page_textmap(

@@ -19,6 +19,7 @@ import re
 from dataclasses import dataclass, field
 from typing import Callable, Iterator, List, Optional, Pattern, Union
 
+from .geom import bbox_overlap_mask, clip_coords
 from .laparams import LAParams, analyze
 from .pdfparse import Name, PDFDocument, Ref, parse_pdf
 from .words import CharArrays
@@ -447,10 +448,6 @@ class StructTree:
         ``page`` is an ``api.Page`` (possibly cropped). When omitted,
         the tree uses the page objects the API facade attached
         (``api.PDF.structure_tree``) keyed by the element's page."""
-        import pandas as pd
-
-        from .geom import crop_frame, frame_bbox
-
         pages = getattr(self, "_api_pages", None) or {}
         if page is None:
             page = getattr(self, "_api_page", None)
@@ -463,18 +460,14 @@ class StructTree:
             vals = [float(v) for v in bbox]
             x0, x1 = sorted((vals[0], vals[2]))
             yb, yt = sorted((vals[1], vals[3]))
-            rect = pd.DataFrame([{
-                "x0": x0, "top": mh - yt, "x1": x1, "bottom": mh - yb,
-                "width": x1 - x0, "height": yt - yb,
-            }])
+            rect = (x0, mh - yt, x1, mh - yb)
             full = (0.0, 0.0, float(mb[2]) - float(mb[0]), mh)
             if tuple(float(v) for v in page.bbox) != full:
-                rect = crop_frame(rect, tuple(page.bbox))
-                if not len(rect):
+                if not bbox_overlap_mask(*rect, page.bbox):
                     raise IndexError("Element no longer on page")
-            r = rect.iloc[0]
-            return (float(r["x0"]), float(r["top"]),
-                    float(r["x1"]), float(r["bottom"]))
+                clipped = clip_coords(*rect, None, page.bbox)
+                rect = [clipped[k] for k in ("x0", "top", "x1", "bottom")]
+            return tuple(float(v) for v in rect)
         # no BBox attribute: union of the element's mcid objects
         objs = []
         for page_number, mcid in el.all_mcids():
@@ -500,7 +493,10 @@ class StructTree:
                     "(api.PDF.structure_tree) or pass page= explicitly"
                 )
             raise IndexError("No objects found")
-        return frame_bbox(pd.DataFrame(objs))
+        return (float(min(o["x0"] for o in objs)),
+                float(min(o["top"] for o in objs)),
+                float(max(o["x1"] for o in objs)),
+                float(max(o["bottom"] for o in objs)))
 
 
 def tree_to_json(

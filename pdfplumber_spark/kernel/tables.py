@@ -26,8 +26,7 @@ Re-expresses the reference pdfplumber ``table.py`` over numpy arrays:
 - ``find_tables`` — the TableFinder pipeline over those pieces.
 
 ``find_tables_frame`` and ``merge_edges_frame`` adapt the kernel to edge
-frames (the facade, tests); ``extract_table_text`` and
-``find_intersections`` also take frames. The extraction plans call the
+frames (the facade, tests); ``find_intersections`` also takes frames. The extraction plans call the
 kernel per page inside their ``mapInPandas`` task, on the buffers of one
 parse.
 """
@@ -497,11 +496,10 @@ def table_rows(cells: List[Tuple[float, float, float, float]]):
 
 def extract_table_text(
     cells: List[Tuple[float, float, float, float]],
-    page_chars,
+    page_chars: CharArrays,
     text_settings: Optional[dict] = None,
 ) -> List[List[Optional[str]]]:
-    """Per-cell text (``table.py:399-435``) from the page's CharArrays (or
-    its char frame).
+    """Per-cell text (``table.py:399-435``) from the page's CharArrays.
 
     IMPORTANT: chars come from the whole *page*, not a table crop
     (``table.py:401``): a char belongs to a cell when its centre lies in the
@@ -511,9 +509,7 @@ def extract_table_text(
     ts = dict(text_settings or {})
     layout_mode = bool(ts.pop("layout", False))
     settings, _ = split_word_settings(ts)
-    ca = page_chars
-    if isinstance(ca, pd.DataFrame):
-        ca = CharArrays(ca.reset_index(drop=True), settings.extra_attrs)
+    ca = page_chars.select(settings.extra_attrs)
     hmid = (ca.x0 + ca.x1) / 2
     vmid = (ca.top + ca.bottom) / 2
 

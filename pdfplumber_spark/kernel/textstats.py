@@ -68,10 +68,11 @@ def _minhash_perms(num_perm: int) -> "tuple[np.ndarray, np.ndarray]":
 
 def fnv1a_64_batch(items: "list[bytes]") -> np.ndarray:
     """Vectorized FNV-1a over many byte strings: items are sorted by
-    length (descending) into one padded uint8 matrix, then one
+    length (descending) and concatenated into one flat buffer, then one
     xor-multiply vector op per BYTE POSITION over exactly the PREFIX of
-    items still active at that position (no masking waste — total work =
-    sum(len)). Identical uint64 wraparound arithmetic to the scalar
+    items still active at that position, gathering byte ``j`` of each at
+    its start offset + ``j`` (total work = sum(len), memory O(total
+    bytes)). Identical uint64 wraparound arithmetic to the scalar
     ``fnv1a_64``; results returned in input order."""
     n = len(items)
     if n == 0:
@@ -81,23 +82,15 @@ def fnv1a_64_batch(items: "list[bytes]") -> np.ndarray:
     if maxlen == 0:
         return np.full(n, _FNV_OFFSET, dtype=np.uint64)
     order = np.argsort(-lens, kind="stable")
-    buf = np.zeros((n, maxlen), dtype=np.uint8)
-    # single vectorized scatter instead of one frombuffer per item
     flat = np.frombuffer(b"".join(items[i] for i in order), dtype=np.uint8)
-    lens_sorted = lens[order]
-    starts_sorted = np.concatenate(([0], np.cumsum(lens_sorted)[:-1]))
-    rows = np.repeat(np.arange(n), lens_sorted)
-    cols = np.arange(len(flat)) - np.repeat(starts_sorted, lens_sorted)
-    buf[rows, cols] = flat
+    starts = np.concatenate(([0], np.cumsum(lens[order])[:-1]))
     # m[j] = how many (sorted) items are still active at byte position j
     hist = np.bincount(lens, minlength=maxlen + 1)
     m = n - np.cumsum(hist)[:maxlen]  # counts with len > j
     h = np.full(n, _FNV_OFFSET, dtype=np.uint64)
     for j in range(maxlen):
         mj = int(m[j])
-        if mj == 0:
-            break
-        h[:mj] = (h[:mj] ^ buf[:mj, j].astype(np.uint64)) * _FNV_PRIME
+        h[:mj] = (h[:mj] ^ flat[starts[:mj] + j].astype(np.uint64)) * _FNV_PRIME
     out = np.empty(n, dtype=np.uint64)
     out[order] = h
     return out

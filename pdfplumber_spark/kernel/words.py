@@ -22,6 +22,7 @@ after is fancy indexing — no pandas in the hot loop.
 
 from __future__ import annotations
 
+import copy
 import string as _string
 from dataclasses import dataclass, field
 from typing import Optional, Sequence, Tuple
@@ -156,6 +157,11 @@ def _interp_column(it, attr: str, nums: np.ndarray) -> np.ndarray:
     raise KeyError(attr)
 
 
+# the per-char columns CharArrays holds as attributes
+_CORE = ("text", "x0", "x1", "top", "bottom", "doctop", "height", "size",
+         "upright")
+
+
 class CharArrays:
     """Struct-of-arrays view of one page's chars."""
 
@@ -212,6 +218,24 @@ class CharArrays:
             for a in extra_attrs
         }
         return self
+
+    def select(self, attrs: Sequence[str]) -> "CharArrays":
+        """These chars carrying exactly the ``attrs`` columns in ``extra``,
+        the form the word kernels take (they group chars on every
+        ``extra`` column); a name missing from ``extra`` is read from the
+        core fields (``size``, ``x0``, ...)."""
+        out = copy.copy(self)
+        out.extra = {
+            a: self.extra[a] if a in self.extra or a not in _CORE
+            else getattr(self, a)
+            for a in attrs
+        }
+        return out
+
+    def bbox(self) -> Tuple[float, float, float, float]:
+        """Enclosing (x0, top, x1, bottom) of the chars."""
+        return (float(self.x0.min()), float(self.top.min()),
+                float(self.x1.max()), float(self.bottom.max()))
 
     def take(self, idx) -> "CharArrays":
         """The chars at ``idx`` (indices or a boolean mask), in that order."""
@@ -390,13 +414,7 @@ def extract_words_frame(
     (+extra_attrs).
     """
     s = settings or WordSettings()
-    if len(chars) == 0:
-        cols = ["text", "x0", "x1", "top", "doctop", "bottom", "upright",
-                "height", "width", "direction", *s.extra_attrs]
-        empty = np.full(0, -1, dtype=np.int64)
-        return pd.DataFrame(columns=cols), empty, empty
-    ca = CharArrays(chars.reset_index(drop=True), s.extra_attrs)
-    return extract_words_ca(ca, s)
+    return extract_words_ca(CharArrays(chars, s.extra_attrs), s)
 
 
 class WordArrays(dict):
@@ -579,18 +597,3 @@ def dedupe_keep_mask(
                 cell = sub[xcl == xc]
                 keep[cell[np.lexsort((x0[cell], doctop[cell]))[0]]] = True
     return keep
-
-
-def dedupe_chars_frame(chars: pd.DataFrame, tolerance: float = 1) -> pd.DataFrame:
-    """Drop near-duplicate chars (``text.py:784-804``) through
-    :func:`dedupe_keep_mask`; output in ingestion order."""
-    if len(chars) == 0:
-        return chars
-    df = chars.reset_index(drop=True)
-    keep = dedupe_keep_mask(
-        [df[c] for c in ("fontname", "size", "upright", "text")],
-        df["doctop"].to_numpy(np.float64),
-        df["x0"].to_numpy(np.float64),
-        tolerance,
-    )
-    return df[keep]

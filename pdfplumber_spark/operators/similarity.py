@@ -73,6 +73,21 @@ def cosine_topk(
     )
 
 
+def triu_pair_chunks(n: int, step: int = 1 << 18):
+    """The pairs ``(a, b)``, ``a < b < n``, of ``np.triu_indices(n, 1)``
+    in the same row-major order, yielded as ``(ai, bi)`` slices of
+    ``step`` pairs. Each slice is computed from its pair offsets, so the
+    n(n-1)/2 index pairs are never all in memory (a 50k-member bucket
+    would need ~20 GB)."""
+    # row_start[a]: how many pairs precede row a
+    row_start = np.concatenate(([0], np.cumsum(np.arange(n - 1, 0, -1))))
+    total = n * (n - 1) // 2
+    for s in range(0, total, step):
+        k = np.arange(s, min(s + step, total), dtype=np.int64)
+        ai = np.searchsorted(row_start, k, side="right") - 1
+        yield ai, k - row_start[ai] + ai + 1
+
+
 def random_hyperplanes(dim: int, n_planes: int, seed: int = 20260816) -> np.ndarray:
     rng = np.random.default_rng(seed)
     return rng.standard_normal((n_planes, dim))
@@ -568,15 +583,12 @@ def cosine_near_pairs(
             m = np.asarray(pdf["_v"].to_numpy()[order].tolist(),
                            dtype=np.float64)
             ns = pdf["_n"].to_numpy(np.float64)[order]
-            ai, bi = np.triu_indices(len(ids), k=1)
             outs_a, outs_b, outs_c = [], [], []
             # chunk the pair enumeration: a hot bucket's full gathered
             # pair matrix would be O(pairs x dim) bytes at once; 256k
             # pairs x dim keeps the working set ~128 MB at dim=64 with
             # per-pair arithmetic (and therefore results) unchanged
-            step = 1 << 18
-            for s in range(0, len(ai), step):
-                aj, bj = ai[s:s + step], bi[s:s + step]
+            for aj, bj in triu_pair_chunks(len(ids)):
                 # exact same arithmetic as the pre-round-8 per-pair
                 # re-rank: einsum row-dot over gathered contiguous rows,
                 # then / (na*nb) — bit-identical doubles, verified

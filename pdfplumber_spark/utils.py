@@ -1,9 +1,10 @@
 """Record-level utility surface mirroring the reference's public
 ``pdfplumber.utils`` package (``utils/__init__.py`` exports).
 
-The engine's hot paths are frame-native (``kernel/``); these helpers adapt
-list-of-dict records to those kernels so a reference user's
-``pdfplumber.utils`` call sites work unchanged against this package.
+The engine's char kernels (``kernel/``) run on ``CharArrays`` columns; the
+text helpers here build one ``CharArrays`` from list-of-dict records and
+call those kernels, so a reference user's ``pdfplumber.utils`` call sites
+work unchanged against this package.
 Reference anchors are cited per function; semantics re-derived from the
 documented behavior, not transcribed.
 """
@@ -17,20 +18,20 @@ import pandas as pd
 
 from .kernel.cluster import assign_clusters, group_rows_by_cluster
 from .kernel.cluster import cluster_list as _cluster_list_kernel
-from .kernel.geom import frame_bbox
+from .kernel import layout
 from .kernel.layout import (
     DEFAULT_X_DENSITY,
     DEFAULT_Y_DENSITY,
-    collate_line as _collate_line_frame,
-    page_text,
+    page_text_ca,
     resolve_layout_kwargs,
     simple_text,
 )
 from .kernel.words import (
     DEFAULT_X_TOLERANCE,
     DEFAULT_Y_TOLERANCE,
-    dedupe_chars_frame,
-    extract_words_frame,
+    CharArrays,
+    dedupe_keep_mask,
+    extract_words_ca,
     split_word_settings,
 )
 
@@ -59,10 +60,12 @@ def to_list(collection) -> List[Any]:
     return list(collection)
 
 
-def _frame(objs) -> pd.DataFrame:
-    if isinstance(objs, pd.DataFrame):
-        return objs
-    return pd.DataFrame(to_list(objs))
+def _char_arrays(objs) -> Optional[CharArrays]:
+    """One CharArrays over char records (or a char frame), every record
+    key in ``extra``; None when there are no records."""
+    if not isinstance(objs, pd.DataFrame):
+        objs = pd.DataFrame(to_list(objs))
+    return CharArrays(objs, objs.columns) if len(objs) else None
 
 
 # --- clustering (reference utils/clustering.py) -----------------------------
@@ -406,51 +409,56 @@ def extract_text(chars, **kwargs) -> str:
     issue-386 requires pure-iterator input).  Accepts the same layout and
     word-settings kwargs as ``Page.extract_text``; layout geometry defaults
     to the chars' own bounding box when not given."""
-    frame = _frame(chars)
-    if len(frame) == 0:
+    ca = _char_arrays(chars)
+    if ca is None:
         return ""
     settings, rest = split_word_settings(kwargs)
     bbox = rest.pop("layout_bbox", None)
     if bbox is None:
-        bbox = frame_bbox(frame)
-    return page_text(frame, settings, **resolve_layout_kwargs(rest, bbox))
+        bbox = ca.bbox()
+    return page_text_ca(ca.select(settings.extra_attrs), settings,
+                        **resolve_layout_kwargs(rest, bbox))
 
 
 def extract_text_simple(chars, x_tolerance=DEFAULT_X_TOLERANCE,
                         y_tolerance=DEFAULT_Y_TOLERANCE) -> str:
     """Cluster-by-doctop + collate_line assembly (``text.py`` simple
     path)."""
-    frame = _frame(chars)
-    if len(frame) == 0:
+    ca = _char_arrays(chars)
+    if ca is None:
         return ""
-    return simple_text(frame, x_tolerance=x_tolerance,
-                       y_tolerance=y_tolerance)
+    return simple_text(ca, x_tolerance=x_tolerance, y_tolerance=y_tolerance)
 
 
 def extract_words(chars, **kwargs) -> List[dict]:
     """Word records from char records (reference ``WordExtractor``
     surface)."""
-    frame = _frame(chars)
-    if len(frame) == 0:
+    ca = _char_arrays(chars)
+    if ca is None:
         return []
     settings, _ = split_word_settings(kwargs)
-    words, _, _ = extract_words_frame(frame, settings)
+    words, _, _ = extract_words_ca(ca.select(settings.extra_attrs), settings)
     return words.to_dict("records")
 
 
 def collate_line(line_chars, tolerance=DEFAULT_X_TOLERANCE) -> str:
     """One text line from its chars, space on gaps > tolerance
     (``text.py:761-772``)."""
-    frame = _frame(line_chars)
-    if len(frame) == 0:
+    ca = _char_arrays(line_chars)
+    if ca is None:
         return ""
-    return _collate_line_frame(frame, tolerance)
+    return layout.collate_line(ca, tolerance)
 
 
 def dedupe_chars(chars, tolerance=1) -> List[dict]:
     """Drop near-duplicate chars, original order restored
-    (``text.py:784-804``, kernel dedupe_chars_frame)."""
-    frame = _frame(chars)
-    if len(frame) == 0:
+    (``text.py:784-804``, kernel ``dedupe_keep_mask``)."""
+    objs = to_list(chars)
+    ca = _char_arrays(objs)
+    if ca is None:
         return []
-    return dedupe_chars_frame(frame, tolerance=tolerance).to_dict("records")
+    keep = dedupe_keep_mask(
+        (ca.extra["fontname"], ca.size, ca.upright, ca.text),
+        ca.doctop, ca.x0, tolerance,
+    )
+    return [o for o, k in zip(objs, keep) if k]

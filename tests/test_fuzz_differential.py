@@ -8,8 +8,8 @@ from hypothesis import example, given, settings, strategies as st
 
 from genchars import CHAR_COLS, chars_frame
 from pdfplumber_spark.kernel.cluster import cluster_list
-from pdfplumber_spark.kernel.layout import page_text, simple_text
-from pdfplumber_spark.kernel.words import WordSettings, extract_words_frame
+from pdfplumber_spark.kernel.layout import page_text_ca, simple_text
+from pdfplumber_spark.kernel.words import CharArrays, WordSettings, extract_words_frame
 from reforacle import ref_module
 
 TEXTS = st.sampled_from(
@@ -68,7 +68,7 @@ def test_fuzz_extract_words(rows, xt, yt):
 def test_fuzz_extract_text(rows):
     text = ref_module("utils.text")
     exp = text.extract_text([dict(r) for r in rows])
-    got = page_text(chars_frame(rows), WordSettings())
+    got = page_text_ca(CharArrays(chars_frame(rows)), WordSettings())
     assert got == exp
 
 
@@ -80,8 +80,8 @@ def test_fuzz_extract_text_layout(rows):
         [dict(r) for r in rows], layout=True, layout_bbox=(0, 0, 612, 792),
         layout_width=612, layout_height=792,
     )
-    got = page_text(
-        chars_frame(rows), WordSettings(), layout=True,
+    got = page_text_ca(
+        CharArrays(chars_frame(rows)), WordSettings(), layout=True,
         layout_bbox=(0, 0, 612, 792), layout_width=612, layout_height=792,
     )
     assert got == exp
@@ -92,7 +92,7 @@ def test_fuzz_extract_text_layout(rows):
 def test_fuzz_extract_text_simple(rows):
     text = ref_module("utils.text")
     exp = text.extract_text_simple([dict(r) for r in rows])
-    got = simple_text(chars_frame(rows))
+    got = simple_text(CharArrays(chars_frame(rows)))
     assert got == exp
 
 

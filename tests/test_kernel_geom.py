@@ -52,7 +52,7 @@ def test_bbox_overlap_corner_rule():
             {"x0": 50, "top": 50, "x1": 60, "bottom": 60}, # outside
         ]
     )
-    m = G.bbox_overlap_mask(df, (0, 0, 10, 10))
+    m = G.bbox_overlap_mask(*G.coords(df), (0, 0, 10, 10))
     assert m.tolist() == [True, True, False, False]
 
 

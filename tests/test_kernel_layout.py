@@ -3,12 +3,12 @@ import pytest
 
 from genchars import chars_frame, random_chars
 from pdfplumber_spark.kernel.layout import (
-    page_text,
+    page_text_ca,
     render_directions,
     search_text,
     simple_text,
 )
-from pdfplumber_spark.kernel.words import WordSettings
+from pdfplumber_spark.kernel.words import CharArrays, WordSettings
 from reforacle import REFERENCE, ref_module
 
 
@@ -18,7 +18,7 @@ def test_extract_text_differential(seed):
     rng = np.random.default_rng(seed)
     rows = random_chars(rng, n_lines=int(rng.integers(2, 10)))
     exp = text.extract_text([dict(r) for r in rows])
-    got = page_text(chars_frame(rows), WordSettings())
+    got = page_text_ca(CharArrays(chars_frame(rows)), WordSettings())
     assert got == exp
 
 
@@ -36,8 +36,8 @@ def test_extract_text_layout_differential(seed):
         layout_width=w,
         layout_height=h,
     )
-    got = page_text(
-        chars_frame(rows),
+    got = page_text_ca(
+        CharArrays(chars_frame(rows)),
         WordSettings(),
         layout=True,
         layout_bbox=(0, 0, w, h),
@@ -63,7 +63,7 @@ def test_extract_text_layout_shift_density(seed):
         y_density=10.0,
     )
     exp = text.extract_text([dict(r) for r in rows], **kwargs)
-    got = page_text(chars_frame(rows), WordSettings(), **kwargs)
+    got = page_text_ca(CharArrays(chars_frame(rows)), WordSettings(), **kwargs)
     assert got == exp
 
 
@@ -73,7 +73,7 @@ def test_extract_text_simple_differential(seed):
     rng = np.random.default_rng(1500 + seed)
     rows = random_chars(rng, n_lines=5)
     exp = text.extract_text_simple([dict(r) for r in rows])
-    got = simple_text(chars_frame(rows))
+    got = simple_text(CharArrays(chars_frame(rows)))
     assert got == exp
 
 
@@ -102,18 +102,17 @@ def test_search_differential(seed):
     exp = tm.search(r"[a-zA-Z]{3,}", return_chars=False, return_groups=False)
 
     df = chars_frame(rows)
-    from pdfplumber_spark.kernel.geom import frame_bbox
     from pdfplumber_spark.kernel.layout import (
         assemble_text_layout,
         build_word_char_arrays,
     )
-    from pdfplumber_spark.kernel.words import CharArrays, extract_words_ca
+    from pdfplumber_spark.kernel.words import extract_words_ca
 
     ca = CharArrays(df)
     words, cwid, cwpos = extract_words_ca(ca, WordSettings(), as_frame=False)
     wc = build_word_char_arrays(ca.text, cwid, cwpos, len(words))
     rendered, prov = assemble_text_layout(
-        words, wc, layout_bbox=frame_bbox(df), layout_width=612, layout_height=792,
+        words, wc, layout_bbox=ca.bbox(), layout_width=612, layout_height=792,
     )
     assert rendered == tm.as_string
     got = search_text(rendered, prov, CharArrays(df), r"[a-zA-Z]{3,}")
@@ -128,10 +127,10 @@ def test_search_differential(seed):
 
 def _frame_vs_buffer_texts(data: bytes, layout: bool, dedupe: bool):
     """Per-page text two ways: the frame route (pdf_to_frames ->
-    dedupe_chars_frame -> page_text) and the buffer route the extraction
-    plan runs (_payload_to_text_rows)."""
+    CharArrays of the char frame -> dedupe_keep_mask -> page_text_ca) and
+    the buffer route the extraction plan runs (_payload_to_text_rows)."""
     from pdfplumber_spark.kernel.pdfparse import pdf_to_frames
-    from pdfplumber_spark.kernel.words import dedupe_chars_frame
+    from pdfplumber_spark.kernel.words import dedupe_keep_mask
     from pdfplumber_spark.plans.extract import _payload_to_text_rows
 
     frames = pdf_to_frames(data, style=False)
@@ -140,16 +139,20 @@ def _frame_vs_buffer_texts(data: bytes, layout: bool, dedupe: bool):
     for pn, w, h in frames["pages"][["page_number", "width", "height"]].itertuples(
         index=False
     ):
-        sub = chars[chars["page_number"] == pn]
+        sub = CharArrays(chars[chars["page_number"] == pn], ("fontname",))
         if dedupe:
-            sub = dedupe_chars_frame(sub)
+            sub = sub.take(dedupe_keep_mask(
+                (sub.extra["fontname"], sub.size, sub.upright, sub.text),
+                sub.doctop, sub.x0,
+            ))
         kwargs = {}
         if layout:
             kwargs = dict(
                 layout=True, layout_bbox=(0, 0, float(w), float(h)),
                 layout_width=float(w), layout_height=float(h),
             )
-        slow.append((int(pn), page_text(sub, WordSettings(), **kwargs), len(sub)))
+        slow.append((int(pn), page_text_ca(sub.select(()), WordSettings(), **kwargs),
+                     sub.n))
     rows = _payload_to_text_rows("u", data, layout, dedupe)
     assert all(r[5] == "ok" for r in rows), rows
     fast = [(r[1], r[2], r[3]) for r in rows]
@@ -188,11 +191,9 @@ def test_layout_fast_path_byte_identical_pdfgen(layout, dedupe):
 
 def test_layout_fast_path_byte_identical():
     """page_text_ca on parser buffers must be byte-identical to
-    page_text(layout=True) on the char frame — including the scotus
-    reference golden."""
-    from pdfplumber_spark.kernel.layout import page_text_ca
+    page_text_ca(layout=True) on the char frame's arrays — including the
+    scotus reference golden."""
     from pdfplumber_spark.kernel.pdfparse import parse_pdf, pdf_to_frames
-    from pdfplumber_spark.kernel.words import CharArrays
 
     data = open(
         f"{REFERENCE}/tests/pdfs/scotus-transcript-p1.pdf", "rb"
@@ -200,8 +201,8 @@ def test_layout_fast_path_byte_identical():
     frames = pdf_to_frames(data, style=False)
     chars = frames["chars"]
     meta = frames["pages"].iloc[0]
-    slow = page_text(
-        chars[chars["page_number"] == 1], WordSettings(), layout=True,
+    slow = page_text_ca(
+        CharArrays(chars[chars["page_number"] == 1]), WordSettings(), layout=True,
         layout_bbox=(0, 0, float(meta.width), float(meta.height)),
         layout_width=float(meta.width), layout_height=float(meta.height),
     )

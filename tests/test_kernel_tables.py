@@ -4,7 +4,7 @@ import pytest
 
 from genchars import chars_frame, random_chars
 from pdfplumber_spark.kernel import tables as T
-from pdfplumber_spark.kernel.words import WordSettings, extract_words_frame
+from pdfplumber_spark.kernel.words import CharArrays, WordSettings, extract_words_frame
 from reforacle import ref_table, ref_utils
 
 
@@ -153,5 +153,5 @@ def test_extract_table_text_differential(seed):
 
     ref_tbl = rt.Table(_FakePage([dict(c) for c in chars]), tables[0])
     exp = ref_tbl.extract()
-    got = T.extract_table_text(tables[0], chars_frame(chars))
+    got = T.extract_table_text(tables[0], CharArrays(chars_frame(chars)))
     assert got == exp

@@ -3,8 +3,9 @@ import pytest
 
 from genchars import chars_frame, random_chars
 from pdfplumber_spark.kernel.words import (
+    CharArrays,
     WordSettings,
-    dedupe_chars_frame,
+    dedupe_keep_mask,
     extract_words_frame,
 )
 from reforacle import ref_module
@@ -97,6 +98,13 @@ def test_extract_words_rotated_mix(seed):
     assert_words_equal(got, exp)
 
 
+def _dedupe(frame) -> CharArrays:
+    """The chars of ``frame`` that dedupe_chars keeps, in input order."""
+    ca = CharArrays(frame, ("fontname",))
+    return ca.take(dedupe_keep_mask(
+        (ca.extra["fontname"], ca.size, ca.upright, ca.text), ca.doctop, ca.x0))
+
+
 @pytest.mark.parametrize("seed", range(6))
 def test_dedupe_chars_differential(seed):
     text = ref_module("utils.text")
@@ -111,12 +119,12 @@ def test_dedupe_chars_differential(seed):
             dup["x1"] += off
             rows.append(dup)
     exp = text.dedupe_chars([dict(r) for r in rows])
-    got = dedupe_chars_frame(chars_frame(rows))
-    assert len(got) == len(exp)
+    got = _dedupe(chars_frame(rows))
+    assert got.n == len(exp)
     for i, e in enumerate(exp):
-        assert got["text"].iloc[i] == e["text"]
-        assert got["x0"].iloc[i] == pytest.approx(e["x0"])
-        assert got["doctop"].iloc[i] == pytest.approx(e["doctop"])
+        assert got.text[i] == e["text"]
+        assert got.x0[i] == pytest.approx(e["x0"])
+        assert got.doctop[i] == pytest.approx(e["doctop"])
 
 
 def test_dedupe_chars_none_key_kept():
@@ -136,7 +144,7 @@ def test_dedupe_chars_none_key_kept():
 
     rows = [char("a", None, 0.0, 0.0), char("a", None, 0.2, 0.3),
             char("b", "F", 0.0, 10.0)]
-    got = dedupe_chars_frame(pd.DataFrame(rows))
-    assert got["text"].tolist() == ["a", "b"]
-    assert (got["doctop"].iloc[0], got["x0"].iloc[0]) == (0.0, 0.0)
+    got = _dedupe(pd.DataFrame(rows))
+    assert got.text.tolist() == ["a", "b"]
+    assert (got.doctop[0], got.x0[0]) == (0.0, 0.0)
     assert utils.dedupe_chars(rows) == [rows[0], rows[2]]

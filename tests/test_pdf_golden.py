@@ -6,10 +6,10 @@ import pandas as pd
 import pytest
 
 from pdfplumber_spark.kernel.geom import crop_frame
-from pdfplumber_spark.kernel.layout import page_text, simple_text
+from pdfplumber_spark.kernel.layout import page_text_ca, simple_text
 from pdfplumber_spark.kernel.pdfgen import make_pdf
 from pdfplumber_spark.kernel.pdfparse import pdf_to_frames
-from pdfplumber_spark.kernel.words import WordSettings
+from pdfplumber_spark.kernel.words import CharArrays, WordSettings
 from reforacle import REFERENCE
 
 SCOTUS_PDF = f"{REFERENCE}/tests/pdfs/scotus-transcript-p1.pdf"
@@ -26,8 +26,8 @@ def scotus_chars():
 
 def test_scotus_layout_golden(scotus_chars):
     golden = open(SCOTUS_TXT).read().strip("\n")
-    txt = page_text(
-        scotus_chars,
+    txt = page_text_ca(
+        CharArrays(scotus_chars),
         WordSettings(),
         layout=True,
         layout_bbox=(0, 0, 612, 792),
@@ -41,8 +41,8 @@ def test_scotus_layout_cropped_golden(scotus_chars):
     golden = open(SCOTUS_TXT_CROPPED).read().strip("\n")
     bbox = (90.0, 70.0, 612.0, 300.0)
     cropped = crop_frame(scotus_chars, bbox)
-    txt = page_text(
-        cropped,
+    txt = page_text_ca(
+        CharArrays(cropped),
         WordSettings(),
         layout=True,
         layout_bbox=bbox,
@@ -53,7 +53,7 @@ def test_scotus_layout_cropped_golden(scotus_chars):
 
 
 def test_scotus_simple_text_nonempty(scotus_chars):
-    txt = simple_text(scotus_chars)
+    txt = simple_text(CharArrays(scotus_chars))
     assert "Official" in txt and len(txt) > 500
 
 
@@ -75,10 +75,11 @@ def test_writer_parser_roundtrip():
     ]
     frames = pdf_to_frames(make_pdf(pages))
     ch = frames["chars"]
-    assert page_text(ch[ch.page_number == 1], WordSettings()) == (
+    assert page_text_ca(CharArrays(ch[ch.page_number == 1]), WordSettings()) == (
         "Hello Spark world\nSecond line of text."
     )
-    assert page_text(ch[ch.page_number == 2], WordSettings()) == "Page two here"
+    assert page_text_ca(
+        CharArrays(ch[ch.page_number == 2]), WordSettings()) == "Page two here"
     assert len(frames["rects"]) == 1
     assert len(frames["lines"]) == 1
     r = frames["rects"].iloc[0]

@@ -73,6 +73,28 @@ def test_minhash_batch_equals_scalar():
         assert (got[i] == minhash_signature(t or "")).all(), i
 
 
+def test_fnv1a_batch_memory_is_linear_in_bytes():
+    """One huge item must not pad every short item to its length: one
+    200 KB item plus 1000 short ones stays far under the 200 MB a padded
+    (items x max length) byte matrix takes, and every hash equals the
+    scalar one."""
+    import tracemalloc
+
+    from pdfplumber_spark.kernel.textstats import fnv1a_64, fnv1a_64_batch
+
+    rng = random.Random(7)
+    items = [rng.randbytes(200_000)] + [
+        rng.randbytes(rng.randrange(0, 40)) for _ in range(1000)]
+    tracemalloc.start()
+    try:
+        got = fnv1a_64_batch(items)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 32 * 2**20, peak
+    assert (got == np.array([fnv1a_64(b) for b in items], dtype=np.uint64)).all()
+
+
 def test_simhash_batch_equals_scalar():
     from pdfplumber_spark.kernel.textstats import simhash64, simhash64_batch
 
@@ -88,6 +110,38 @@ def test_simhash_batch_equals_scalar():
     got = simhash64_batch(texts)
     for i, t in enumerate(texts):
         assert got[i] == simhash64(t or ""), i
+
+
+@pytest.mark.parametrize("step", [1, 5, 1 << 18])
+def test_triu_pair_chunks_equal_triu_indices(step):
+    from pdfplumber_spark.operators.similarity import triu_pair_chunks
+
+    for n in (0, 1, 2, 3, 7, 100):
+        ai, bi = np.triu_indices(n, 1)
+        chunks = list(triu_pair_chunks(n, step))
+        assert all(0 < len(a) <= step for a, _ in chunks)
+        got_a = np.concatenate([a for a, _ in chunks] or [ai[:0]])
+        got_b = np.concatenate([b for _, b in chunks] or [bi[:0]])
+        assert got_a.tolist() == ai.tolist(), (n, step)
+        assert got_b.tolist() == bi.tolist(), (n, step)
+
+
+def test_triu_pair_chunks_hot_bucket_memory():
+    """A 50k-member LSH bucket has ~1.25e9 pairs (~20 GB as triu_indices);
+    its first chunk costs a few MB."""
+    import tracemalloc
+
+    from pdfplumber_spark.operators.similarity import triu_pair_chunks
+
+    tracemalloc.start()
+    try:
+        ai, bi = next(triu_pair_chunks(50_000))
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 32 * 2**20, peak
+    assert (ai[:3].tolist(), bi[:3].tolist()) == ([0, 0, 0], [1, 2, 3])
+    assert len(ai) == 1 << 18
 
 
 def test_cosine_lsh_bucket_kernel_matches_exact(spark):

@@ -9,6 +9,7 @@ import pytest
 from pdfplumber_spark.kernel.cluster import cluster_list
 from pdfplumber_spark.kernel.geom import lines_to_edges, rects_to_edges
 from pdfplumber_spark.kernel.pdfparse import pdf_to_frames
+from pdfplumber_spark.kernel.words import CharArrays
 from pdfplumber_spark.kernel.tables import (
     extract_table_text,
     find_intersections,
@@ -92,7 +93,7 @@ def test_warn_explicit_table_parse(warn_frames):
     assert tables
     # largest-table-first tie-break (page.py:449-453)
     best = max(tables, key=lambda t: len(t))
-    data = extract_table_text(best, chars1)
+    data = extract_table_text(best, CharArrays(chars1))
     parsed = [fix_row_spaces(r) for r in data]
     assert parsed[0] == [
         "NoticeDate", "Effective", "Received",
@@ -123,8 +124,8 @@ def test_nics_plain_invariant(nics_frames):
     # reference test_nics_report.py:59-90 (test_plain): crop to the table
     # area; horizontal text strategy + one explicit vertical line at the
     # min char x0; per-column sum == 2x the totals row
-    from pdfplumber_spark.kernel.geom import crop_frame, within_bbox_mask
-    from pdfplumber_spark.kernel.layout import page_text
+    from pdfplumber_spark.kernel.geom import coords, crop_frame, within_bbox_mask
+    from pdfplumber_spark.kernel.layout import page_text_ca
     from pdfplumber_spark.kernel.words import WordSettings, extract_words_frame
 
     chars = nics_frames["chars"]
@@ -146,7 +147,7 @@ def test_nics_plain_invariant(nics_frames):
     )
     assert tables
     best = max(tables, key=lambda t: len(t))
-    data = extract_table_text(best, cropped_chars)
+    data = extract_table_text(best, CharArrays(cropped_chars))
 
     def to_num(v):
         return int(v.replace(",", "")) if v else 0
@@ -158,19 +159,19 @@ def test_nics_plain_invariant(nics_frames):
         assert sum(col) == 2 * col[-1], ci
 
     # month header (test_nics_report.py:86-88)
-    month_chars = chars1[within_bbox_mask(chars1, (0, 35, w, 65))]
-    assert page_text(month_chars, WordSettings()) == "November - 2015"
+    month_chars = chars1[within_bbox_mask(*coords(chars1), (0, 35, w, 65))]
+    assert page_text_ca(CharArrays(month_chars), WordSettings()) == "November - 2015"
 
 
 def test_nics_filter_large_chars(nics_frames):
     # reference test_nics_report.py:92-102 (test_filter): size >= 15
-    from pdfplumber_spark.kernel.layout import page_text
+    from pdfplumber_spark.kernel.layout import page_text_ca
     from pdfplumber_spark.kernel.words import WordSettings
 
     chars = nics_frames["chars"]
     chars1 = chars[chars.page_number == 1]
     big = chars1[chars1["size"] >= 15]
-    assert page_text(big, WordSettings()) == (
+    assert page_text_ca(CharArrays(big), WordSettings()) == (
         "NICS Firearm Background Checks\nNovember - 2015"
     )
 
@@ -196,7 +197,7 @@ def test_nics_text_only_strategy(nics_frames):
     )
     assert tables
     best = max(tables, key=lambda t: len(t))
-    data = extract_table_text(best, cropped_chars)
+    data = extract_table_text(best, CharArrays(cropped_chars))
     assert data[0][0] == "Alabama"
     assert data[0][22] == "71,137"
     assert data[-1][0] == "Wyoming"

@@ -43,10 +43,10 @@ def test_chars_always_carry_mcid_tag_keys():
     ch = page.chars[0]
     assert "mcid" in ch and "tag" in ch
     assert ch["mcid"] is None and ch["tag"] is None
-    assert {"mcid", "tag"} <= set(page._chars.columns)
+    assert {"mcid", "tag"} <= set(page._ca.extra)
     # tagged fixture: real values survive unchanged
     tagged = api.open(f"{PDFS}/mcid_example.pdf").pages[0]
-    assert {"mcid", "tag"} <= set(tagged._chars.columns)
+    assert {"mcid", "tag"} <= set(tagged._ca.extra)
     assert any(c["mcid"] is not None for c in tagged.chars)
 
 

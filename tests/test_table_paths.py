@@ -17,7 +17,7 @@ from pdfplumber_spark import api
 from pdfplumber_spark.kernel import pdfparse
 from pdfplumber_spark.kernel import tables as T
 from pdfplumber_spark.kernel.pdfgen import FONT_ASCENT, FONT_DESCENT, glyph_width, make_pdf
-from pdfplumber_spark.kernel.words import WordSettings
+from pdfplumber_spark.kernel.words import CharArrays, WordSettings
 from pdfplumber_spark.plans import extract as X
 from pdfplumber_spark.schemas import TABLES_SCHEMA, WORDS_SCHEMA
 
@@ -322,7 +322,7 @@ def test_cell_text_half_open_boxes():
              (0.0, 10.0, 10.0, 20.0), (10.0, 10.0, 20.0, 20.0)]
     chars = pd.DataFrame([char("a", 5.0, 5.0), char("b", 10.0, 5.0),
                           char("c", 5.0, 10.0), char("d", 20.0, 15.0)])
-    assert T.extract_table_text(cells, chars) == [["a", "b"], ["c", ""]]
+    assert T.extract_table_text(cells, CharArrays(chars)) == [["a", "b"], ["c", ""]]
 
 
 def test_tables_schema_order():
