@@ -20,7 +20,13 @@ prints one sha256 prefix per (corpus, surface):
   ``extract_words`` and ``extract_tables``; ``dedupe_chars().chars``,
   ``extract_text_simple``, ``to_json(precision=3)`` and ``to_csv``; the
   char order and textline/textbox records under ``laparams={}``; and the
-  ``utils`` char helpers over ``page.chars``.
+  ``utils`` char helpers over ``page.chars``;
+- ``page.edges``, and for each derived page its ``lines``/``rects``/
+  ``curves``, ``images``, ``edges`` with ``debug_tablefinder()``, ``bbox``
+  and ``dedupe_chars().bbox``, one key per surface;
+- the per-payload objects rows (``_payload_to_objects``, with
+  ``laparams=None`` and ``{}``), as the ``OBJECTS_SCHEMA`` values Spark
+  stores for them.
 
 Word and match rows are hashed flattened across the frames a payload
 returns, so a per-page or per-payload frame split hashes the same. The
@@ -61,6 +67,7 @@ from pdfplumber_spark.kernel.pdfgen import make_pdf  # noqa: E402
 from pdfplumber_spark.kernel.words import WordSettings  # noqa: E402
 from pdfplumber_spark.plans import extract as X  # noqa: E402
 from pdfplumber_spark.plans import search as S  # noqa: E402
+from pdfplumber_spark.schemas import OBJECTS_SCHEMA  # noqa: E402
 from pdfplumber_spark.sources.corpus import generate_rows  # noqa: E402
 
 # the lattice family's column rulings (corpus._pdf_table_lattice), as ints
@@ -163,6 +170,34 @@ def frames_repr(frames) -> str:
     return repr([rec for f in frames for rec in f.to_dict("records")])
 
 
+def spark_value(v, dtype):
+    """``v`` as Spark stores it in a ``dtype`` field: NaN as null, numbers
+    as the field's type, struct fields in schema order."""
+    from pyspark.sql import types as T
+
+    if v is None or (isinstance(v, float) and v != v):
+        return None
+    if isinstance(dtype, T.ArrayType):
+        return [spark_value(x, dtype.elementType) for x in v]
+    if isinstance(dtype, T.StructType):
+        return tuple(spark_value(v[f.name], f.dataType) for f in dtype.fields)
+    if isinstance(dtype, T.IntegerType):
+        return int(v)
+    if isinstance(dtype, T.DoubleType):
+        return float(v)
+    if isinstance(dtype, T.BooleanType):
+        return bool(v)
+    return str(v)
+
+
+def objects_repr(frames) -> str:
+    """``_payload_to_objects`` rows as the ``OBJECTS_SCHEMA`` values Spark
+    stores for them, so the frames' dtypes do not count."""
+    fields = OBJECTS_SCHEMA.fields
+    return repr([tuple(spark_value(rec[f.name], f.dataType) for f in fields)
+                 for f in frames for rec in f.to_dict("records")])
+
+
 def outcome(fn):
     """The call's result, or its exception type and message."""
     try:
@@ -198,13 +233,15 @@ def facade_words_tables(payload) -> list:
                 out.append(outcome(lambda: [
                     (t.cells, t.bbox) for t in p.find_tables(ts)]))
                 out.append(outcome(lambda: p.extract_tables(ts)))
-
-                def debug():
-                    d = p.debug_tablefinder(ts)
-                    return (d.edges, d.intersections, d.cells,
-                            [t.cells for t in d.tables])
-                out.append(outcome(debug))
+                out.append(outcome(
+                    lambda: tablefinder_state(p.debug_tablefinder(ts))))
     return out
+
+
+def tablefinder_state(d) -> tuple:
+    """A ``debug_tablefinder()`` result's edges, intersections, cells and
+    table cells."""
+    return (d.edges, d.intersections, d.cells, [t.cells for t in d.tables])
 
 
 def derived_pages(p) -> dict:
@@ -242,6 +279,30 @@ def facade_objects(payload) -> list:
             out.append(outcome(lambda: utils.extract_words(chars)))
             out.append(outcome(lambda: utils.collate_line(chars)))
             out.append(outcome(lambda: utils.dedupe_chars(chars)))
+    return out
+
+
+# the surfaces hashed for each derived page, one key each
+DERIVED_SURFACES = {
+    "lines,rects,curves": lambda d: (d.lines, d.rects, d.curves),
+    "images": lambda d: d.images,
+    "edges,debug": lambda d: (d.edges, tablefinder_state(d.debug_tablefinder())),
+    "bbox": lambda d: d.bbox,
+    "dedupe_chars.bbox": lambda d: d.dedupe_chars().bbox,
+}
+
+
+def facade_derived(payload) -> dict:
+    """key -> per page: ``page.edges`` under "edges", and each
+    :data:`DERIVED_SURFACES` value of each derived page."""
+    out = {"edges": [], **{k: [] for k in DERIVED_SURFACES}}
+    with pdfplumber.open(bytes(payload)) as pdf:
+        for p in pdf.pages:
+            out["edges"].append(outcome(lambda: p.edges))
+            for name, derive in derived_pages(p).items():
+                d = outcome(derive)
+                for key, fn in DERIVED_SURFACES.items():
+                    out[key].append((name, outcome(lambda: fn(d))))
     return out
 
 
@@ -359,6 +420,9 @@ def main() -> None:
                 url, payload, r"[a-z]{6,}", True, True, False)))
             add("match_rows[lines]", frames_repr(S._payload_to_match_frames(
                 url, payload, "", True, True, True)))
+            for lap in (None, {}):
+                add(f"objects_rows[laparams={lap}]", outcome(lambda: objects_repr(
+                    X._payload_to_objects(url, payload, laparams=lap))))
             if payload is not None and bytes(payload)[:5] == b"%PDF-":
                 add("facade[text,layout,search,lines,dedupe]",
                     outcome(lambda: facade_text(payload)))
@@ -367,6 +431,11 @@ def main() -> None:
                 add("facade[objects,derived,serialize,utils]",
                     outcome(lambda: facade_objects(payload)))
                 add("facade[laparams]", outcome(lambda: facade_laparams(payload)))
+                derived = outcome(lambda: facade_derived(payload))
+                for key in ("edges", *DERIVED_SURFACES):
+                    add("facade[edges]" if key == "edges"
+                        else f"facade[derived:{key}]",
+                        derived if isinstance(derived, str) else derived[key])
         for key, h in hashes.items():
             print(f"{name:8s} {key:48s} {h.hexdigest()[:16]}", flush=True)
 
