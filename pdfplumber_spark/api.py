@@ -14,10 +14,12 @@ Lets a reference user switch with minimal changes:
 This facade is single-process (it drives the same kernels the Spark
 executors run — SURVEY §1.3: the corpus-scale path is the DataFrame API in
 ``plans/``). Objects are returned as list-of-dicts like the reference
-(``page.py:416-425``). A page holds its chars as the parser's
-``CharArrays`` and hands them straight to the char kernels; lines, rects
-and curves stay ``LINE_COLUMNS`` frames, the rows the edge path and the
-records read.
+(``page.py:416-425``). A page holds the parser's own objects: its chars
+as ``CharArrays``, handed straight to the char kernels, and its lines,
+rects, curves and images as the interpreter's row tuples, which the table
+kernel's edges are built from. Records are built only at the surface
+(:func:`object_records`), and every derived page masks or clips every
+kind the same way.
 """
 
 from __future__ import annotations
@@ -33,10 +35,9 @@ from .kernel.geom import (
     bbox_overlap_mask,
     clip_coords,
     coords,
-    crop_frame,
+    curves_to_edges,
     lines_to_edges,
     rects_to_edges,
-    curves_to_edges,
     within_bbox_mask,
 )
 from .kernel.layout import (
@@ -46,10 +47,11 @@ from .kernel.layout import (
     resolve_layout_kwargs,
     simple_text,
 )
-from .kernel.pdfparse import LINE_COLUMNS, parse_pdf
+from .kernel.pdfparse import IMAGE_COLUMNS, LINE_COLUMNS, parse_pdf
 from .kernel.tables import (
+    EdgeArrays,
     extract_table_text,
-    find_tables_frame,
+    find_tables,
     table_rows,
 )
 from .kernel.words import (
@@ -269,31 +271,107 @@ _CHAR_KEYS = ("text", "fontname", *NUM_FIELDS, "object_type", "mcid", "tag",
 # char_index, the parser's emit order (display joins it to the char CIDs)
 _CHAR_EXTRA = ("char_index", "fontname", "adv", "y0", "y1", "width", "mcid",
                "tag", *STYLE_ATTRS)
+# the fields of the parser's row tuples, per non-char object kind
+_ROW_COLUMNS = {"line": LINE_COLUMNS, "rect": LINE_COLUMNS,
+                "curve": LINE_COLUMNS, "image": IMAGE_COLUMNS}
+_BOX = ("x0", "top", "x1", "bottom", "doctop")
 
 
-def _crop_chars(ca: CharArrays, bbox) -> CharArrays:
-    """The chars overlapping ``bbox``, clipped to it (``crop_frame``'s
-    arithmetic over the char columns)."""
-    out = ca.take(bbox_overlap_mask(*coords(ca), bbox))
-    cols = clip_coords(*coords(out), out.doctop, bbox)
-    out.extra["width"] = cols.pop("width")
-    for k, v in cols.items():
-        setattr(out, k, v)
+def page_chars(interp) -> CharArrays:
+    """A parsed page's chars as the facade holds them: the record columns,
+    ``object_type`` and tuple colours (reference colours are tuples)."""
+    chars = CharArrays.from_interp(interp, _CHAR_EXTRA)
+    chars.extra["object_type"] = np.full(chars.n, "char", dtype=object)
+    for k in STYLE_ATTRS[:3]:
+        chars.extra[k] = np.fromiter(
+            (None if v is None else tuple(v) for v in chars.extra[k]),
+            dtype=object, count=chars.n)
+    return chars
+
+
+def object_records(kind: str, objs, page_number: int) -> List[dict]:
+    """The reference records of a page's ``kind`` objects, from its
+    ``CharArrays`` (chars) or the parser's rows (other kinds); the
+    reference's process_object adds page_number."""
+    if kind == "char":
+        cols = [v.tolist() for v in objs.select(_CHAR_KEYS).extra.values()]
+        return [{**dict(zip(_CHAR_KEYS, vals)), "page_number": page_number}
+                for vals in zip(*cols)]
+    if kind == "image":
+        return [_image_record(row, page_number) for row in objs]
+    recs = []
+    for row in objs:
+        r = dict(zip(LINE_COLUMNS, row))
+        r["object_type"] = kind
+        r["page_number"] = page_number
+        for k in ("stroking_color", "non_stroking_color"):
+            if r[k] is not None:  # reference colours are tuples
+                r[k] = tuple(r[k])
+        recs.append(r)
+    return recs
+
+
+def _image_record(row, page_number: int) -> dict:
+    """Reference image record (LTImage attrs in ALL_ATTRS + geometry):
+    srcsize tuple, colorspace list, stream wrapper; the XObject NAME is
+    intentionally absent (not in ALL_ATTRS)."""
+    (name, x0, x1, y0, y1, top, bottom, doctop, w, h,
+     srcw, srch, bits, imagemask, colorspace, xo) = row
+    return {
+        "x0": x0, "y0": y0, "x1": x1, "y1": y1,
+        "width": w, "height": h,
+        "stream": _StreamWrapper(xo, name) if xo is not None else None,
+        "srcsize": (srcw, srch),
+        "imagemask": imagemask or None,
+        "bits": bits,
+        "colorspace": colorspace,
+        "mcid": None,
+        "tag": None,
+        "object_type": "image",
+        "page_number": page_number,
+        "top": top, "bottom": bottom, "doctop": doctop,
+    }
+
+
+def _box(kind: str, objs) -> tuple:
+    """The (x0, top, x1, bottom, doctop) arrays of ``kind`` objects."""
+    if kind == "char":
+        return (*coords(objs), objs.doctop)
+    pos = [_ROW_COLUMNS[kind].index(c) for c in _BOX]
+    return tuple(np.array([[r[i] for i in pos] for r in objs],
+                          dtype=np.float64).reshape(-1, len(_BOX)).T)
+
+
+def _clip(kind: str, objs, bbox):
+    """``kind`` objects with their boxes clipped to ``bbox``
+    (``clip_coords``)."""
+    cols = clip_coords(*_box(kind, objs), bbox)
+    if kind == "char":
+        out = objs.take(slice(None))
+        out.extra["width"] = cols.pop("width")
+        for k, v in cols.items():
+            setattr(out, k, v)
+        return out
+    pos = [_ROW_COLUMNS[kind].index(c) for c in cols]
+    out = []
+    for row, *vals in zip(objs, *(v.tolist() for v in cols.values())):
+        row = list(row)
+        for i, v in zip(pos, vals):
+            row[i] = v
+        out.append(tuple(row))
     return out
 
 
 class Page:
-    def __init__(self, pdf: "PDF", interp, chars: CharArrays,
-                 lines: pd.DataFrame, rects: pd.DataFrame,
-                 curves: pd.DataFrame):
+    def __init__(self, pdf: "PDF", interp, chars: CharArrays, rows: dict):
+        """``rows``: kind -> the parser's row tuples of the page's lines,
+        rects, curves and images (or a derived subset of them)."""
         self.pdf = pdf
         self.page_number = interp.page_number
         self.rotation = interp.rotation
         self.initial_doctop = interp.initial_doctop
         self._ca = chars
-        self._lines = lines
-        self._rects = rects
-        self._curves = curves
+        self._rows = rows
         self._interp = interp
 
         self.bbox = (0.0, 0.0, interp.width, interp.height)
@@ -329,30 +407,9 @@ class Page:
 
     # --- object accessors (reference: container.py:32-66) -------------------
 
-    def _records(self, objs) -> List[dict]:
-        """Object records of a page's chars or of an object frame; the
-        reference's process_object adds page_number."""
-        if isinstance(objs, CharArrays):
-            cols = [v.tolist() for v in objs.select(_CHAR_KEYS).extra.values()]
-            return [
-                {**dict(zip(_CHAR_KEYS, vals)), "page_number": self.page_number}
-                for vals in zip(*cols)
-            ]
-        recs = objs.to_dict("records")
-        for r in recs:
-            r["page_number"] = self.page_number
-            for ck in ("stroking_color", "non_stroking_color"):
-                v = r.get(ck)
-                if isinstance(v, list):  # reference colors are tuples
-                    r[ck] = tuple(v)
-            dv = r.get("dash")
-            if isinstance(dv, list):  # stored per-row as list in frames
-                r["dash"] = tuple(dv)
-        return recs
-
     @property
     def chars(self) -> List[dict]:
-        recs = self._records(self._ca)
+        recs = object_records("char", self._ca, self.page_number)
         la = self._layout_objects()
         if la is not None:
             # laparams: page objects rebuild in reading order (pdfminer
@@ -362,15 +419,19 @@ class Page:
 
     @property
     def lines(self) -> List[dict]:
-        return self._records(self._lines)
+        return object_records("line", self._rows["line"], self.page_number)
 
     @property
     def rects(self) -> List[dict]:
-        return self._records(self._rects)
+        return object_records("rect", self._rows["rect"], self.page_number)
 
     @property
     def curves(self) -> List[dict]:
-        return self._records(self._curves)
+        return object_records("curve", self._rows["curve"], self.page_number)
+
+    @property
+    def images(self) -> List[dict]:
+        return object_records("image", self._rows["image"], self.page_number)
 
     # --- LAParams layout analysis (reference page.py:269-277,
     # tests/test_laparams.py; kernel/laparams.py reimplements pdfminer's
@@ -422,17 +483,12 @@ class Page:
         # kind order = FIRST-paint order on the page (reference
         # Page.objects dict insertion order — to_csv row ordering
         # depends on it: pdffill-demo emits its lines before its chars)
-        accessors = {
-            "char": lambda: self.chars, "line": lambda: self.lines,
-            "rect": lambda: self.rects, "curve": lambda: self.curves,
-            "image": lambda: self.images,
-        }
-        order = [k for k in getattr(self._interp, "kind_order", [])
-                 if k in accessors]
-        order += [k for k in accessors if k not in order]
+        kinds = ("char", *_ROW_COLUMNS)
+        order = [k for k in self._interp.kind_order if k in kinds]
+        order += [k for k in kinds if k not in order]
         out = {}
         for kind in order:
-            rows = accessors[kind]()
+            rows = getattr(self, kind + "s")
             if rows:
                 out[kind] = rows
         if getattr(self.pdf, "laparams", None) is not None:
@@ -444,34 +500,6 @@ class Page:
         return out
 
     @property
-    def images(self) -> List[dict]:
-        """Reference image records (LTImage attrs in ALL_ATTRS +
-        geometry): srcsize tuple, colorspace list, stream wrapper; the
-        XObject NAME is intentionally absent (not in ALL_ATTRS)."""
-        out = []
-        for im in self._interp.images:
-            (name, x0, x1, y0, y1, top, bottom, doctop, w, h,
-             srcw, srch, bits, imagemask) = im[:14]
-            colorspace = im[14] if len(im) > 14 else None
-            xo = im[15] if len(im) > 15 else None
-            out.append({
-                "x0": x0, "y0": y0, "x1": x1, "y1": y1,
-                "width": w, "height": h,
-                "stream": _StreamWrapper(xo, name) if xo is not None
-                else None,
-                "srcsize": (srcw, srch),
-                "imagemask": imagemask or None,
-                "bits": bits,
-                "colorspace": colorspace,
-                "mcid": None,
-                "tag": None,
-                "object_type": "image",
-                "page_number": self.page_number,
-                "top": top, "bottom": bottom, "doctop": doctop,
-            })
-        return out
-
-    @property
     def annots(self) -> List[dict]:
         return list(getattr(self._interp, "annot_rows", []))
 
@@ -480,13 +508,17 @@ class Page:
         return [a for a in self.annots if a.get("uri") is not None]
 
     def _edges_frame(self) -> pd.DataFrame:
+        """The page's edge records as a frame: the frame converters over
+        its line, rect and curve rows, in ``EdgeArrays.from_objects``'
+        order."""
         parts = []
-        if len(self._lines):
-            parts.append(lines_to_edges(self._lines))
-        if len(self._rects):
-            parts.append(rects_to_edges(self._rects))
-        if len(self._curves) and "pts" in self._curves.columns:
-            parts.append(curves_to_edges(self._curves))
+        for kind, to_edges in (("line", lines_to_edges),
+                               ("rect", rects_to_edges),
+                               ("curve", curves_to_edges)):
+            if self._rows[kind]:
+                f = pd.DataFrame(self._rows[kind], columns=LINE_COLUMNS)
+                f["object_type"] = kind
+                parts.append(to_edges(f))
         if not parts:
             return pd.DataFrame(
                 columns=["x0", "x1", "top", "bottom", "width", "height",
@@ -544,12 +576,14 @@ class Page:
         for r in recs:
             pos = r.pop("char_pos")
             if return_chars:
-                r["chars"] = self._records(self._ca.take(pos))
+                r["chars"] = object_records("char", self._ca.take(pos),
+                                            self.page_number)
         return recs
 
     # --- tables --------------------------------------------------------------
     def _find_tables(self, table_settings: Optional[dict], debug: bool):
-        """(text settings, find_tables_frame result) for this page."""
+        """(text settings, ``tables.find_tables`` result) for this page,
+        on the edges of its line, rect and curve rows."""
         ts = _resolve_table_settings(table_settings)
         text_settings = {
             k[5:]: ts.pop(k) for k in list(ts) if k.startswith("text_")
@@ -560,9 +594,11 @@ class Page:
             settings, _ = split_word_settings(text_settings)
             words, _, _ = extract_words_ca(
                 self._ca.select(settings.extra_attrs), settings)
-        return text_settings, find_tables_frame(
-            self._edges_frame(), words=words, page_bbox=self.bbox,
-            debug=debug, **ts
+        edges = EdgeArrays.from_objects(
+            *(self._rows[k] for k in ("line", "rect", "curve")))
+        return text_settings, find_tables(
+            edges, words=words, page_bbox=self.bbox, debug=debug,
+            edge_frame=self._edges_frame() if debug else None, **ts
         )
 
     def find_tables(self, table_settings: Optional[dict] = None):
@@ -623,25 +659,29 @@ class Page:
     # --- derived pages --------------------------------------------------------
     def crop(self, bbox, relative: bool = False, strict: bool = True) -> "Page":
         bbox = self._resolve_bbox(bbox, relative, strict)
-        return self._derive(_crop_chars(self._ca, bbox),
-                            lambda df: crop_frame(df, bbox), bbox)
+        return self._derive(
+            lambda kind, objs: bbox_overlap_mask(*_box(kind, objs)[:4], bbox),
+            bbox, clip=True)
 
     def within_bbox(self, bbox, relative: bool = False, strict: bool = True) -> "Page":
         bbox = self._resolve_bbox(bbox, relative, strict)
-        return self._select(
-            lambda objs: within_bbox_mask(*coords(objs), bbox), bbox)
+        return self._derive(
+            lambda kind, objs: within_bbox_mask(*_box(kind, objs)[:4], bbox),
+            bbox)
 
     def outside_bbox(self, bbox, relative: bool = False, strict: bool = True) -> "Page":
         # outside_bbox keeps the parent bbox (page.py:674-677)
         bbox = self._resolve_bbox(bbox, relative, strict)
-        return self._select(
-            lambda objs: ~bbox_overlap_mask(*coords(objs), bbox))
+        return self._derive(
+            lambda kind, objs: ~bbox_overlap_mask(*_box(kind, objs)[:4], bbox))
 
     def filter(self, test_function) -> "Page":
         """The page's objects whose records pass ``test_function`` (the
         reference FilteredPage filters ``parent.objects`` records)."""
-        return self._select(lambda objs: np.array(
-            [bool(test_function(r)) for r in self._records(objs)], dtype=bool))
+        return self._derive(lambda kind, objs: np.array(
+            [bool(test_function(r))
+             for r in object_records(kind, objs, self.page_number)],
+            dtype=bool))
 
     # --- serialization (reference container.py:106-179 single-doc form) ---
 
@@ -682,13 +722,14 @@ class Page:
                              include_attrs, exclude_attrs)
 
     def dedupe_chars(self, **kwargs) -> "Page":
-        ca = self._ca
-        keep = dedupe_keep_mask(
-            (ca.extra["fontname"], ca.size, ca.upright, ca.text),
-            ca.doctop, ca.x0, **kwargs,
-        )
-        return Page(self.pdf, self._interp, ca.take(keep),
-                    self._lines, self._rects, self._curves)
+        def keep(kind, objs):
+            if kind != "char":
+                return np.ones(len(objs), dtype=bool)
+            return dedupe_keep_mask(
+                (objs.extra["fontname"], objs.size, objs.upright, objs.text),
+                objs.doctop, objs.x0, **kwargs,
+            )
+        return self._derive(keep)
 
     def _resolve_bbox(self, bbox, relative, strict):
         x0, top, x1, bottom = bbox
@@ -717,20 +758,20 @@ class Page:
                 )
         return (float(x0), float(top), float(x1), float(bottom))
 
-    def _derive(self, chars: CharArrays, fn, bbox=None) -> "Page":
-        """A page of ``chars`` and ``fn`` of each object frame."""
-        p = Page(
-            self.pdf, self._interp, chars, fn(self._lines),
-            fn(self._rects), fn(self._curves),
-        )
-        p.bbox = bbox if bbox is not None else self.bbox
+    def _derive(self, keep, bbox=None, clip: bool = False) -> "Page":
+        """The derived page of the objects ``keep(kind, objs)`` masks, of
+        every kind (its ``CharArrays`` for "char", its rows otherwise),
+        clipped to ``bbox`` when ``clip``; it has ``bbox`` (default: this
+        page's)."""
+        ca = self._ca.take(keep("char", self._ca))
+        rows = {kind: [r for r, k in zip(objs, keep(kind, objs)) if k]
+                for kind, objs in self._rows.items()}
+        if clip:
+            ca = _clip("char", ca, bbox)
+            rows = {kind: _clip(kind, objs, bbox) for kind, objs in rows.items()}
+        p = Page(self.pdf, self._interp, ca, rows)
+        p.bbox = self.bbox if bbox is None else bbox
         return p
-
-    def _select(self, keep, bbox=None) -> "Page":
-        """A page of the objects ``keep`` masks, called with the chars and
-        with each object frame."""
-        return self._derive(self._ca.take(keep(self._ca)),
-                            lambda df: df[keep(df)], bbox)
 
 
 class Table:
@@ -785,19 +826,8 @@ class PDF:
         for interp in interps:
             if pages is not None and interp.page_number not in pages:
                 continue
-            chars = CharArrays.from_interp(interp, _CHAR_EXTRA)
-            chars.extra["object_type"] = np.full(chars.n, "char", dtype=object)
-            for k in STYLE_ATTRS[:3]:  # reference colors are tuples
-                chars.extra[k] = np.fromiter(
-                    (None if v is None else tuple(v) for v in chars.extra[k]),
-                    dtype=object, count=chars.n)
-            frames = []
-            for kind in ("line", "rect", "curve"):
-                f = pd.DataFrame(list(getattr(interp, kind + "s")),
-                                 columns=LINE_COLUMNS)
-                f["object_type"] = kind
-                frames.append(f)
-            self.pages.append(Page(self, interp, chars, *frames))
+            self.pages.append(Page(self, interp, page_chars(interp), {
+                kind: getattr(interp, kind + "s") for kind in _ROW_COLUMNS}))
 
     def structure_tree(self, page_number: Optional[int] = None,
                        page: Optional["Page"] = None):

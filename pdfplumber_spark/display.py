@@ -95,55 +95,46 @@ def _render_base(page, scale: float, bbox=None) -> Canvas:
         return (y - by0) * scale
 
     # 1. rasters with real pixels where decodable
-    interp = getattr(page, "_interp", None)
-    if interp is not None:
-        from .kernel.images import _decode_one
+    from .kernel.images import _decode_one
 
-        for rec, xo in zip(interp.images, getattr(interp, "image_objs", [])):
-            # rec layout: (name, x0, x1, y0, y1, top, bottom, doctop, ...)
-            _, x0, x1, _y0, _y1, top, bottom = rec[:7]
-            box = (X(x0), Y(top), X(x1), Y(bottom))
-            try:
-                d = _decode_one(interp.doc, xo)
-            except Exception:  # noqa: BLE001
-                d = {"status": "error"}
-            if d.get("status") == "ok" and d.get("samples") is not None:
-                iw, ih = d["width"], d["height"]
-                ch = 1 if d["colorspace"] in ("ImageMask",) else (
-                    d["channels"] or 1
-                )
-                arr = np.frombuffer(bytes(d["samples"]), dtype=np.uint8)
-                if ch == 1:
-                    arr = arr.reshape(ih, iw)
-                    bits = d.get("bits") or 8
-                    if bits < 8:  # scale sample codes to full range
-                        arr = (arr.astype(np.uint16) * 255
-                               // ((1 << bits) - 1)).astype(np.uint8)
-                elif ch == 4:
-                    # DeviceCMYK -> RGB: r = (255-c)(255-k)/255 etc.
-                    cmyk = arr.reshape(ih, iw, 4).astype(np.uint16)
-                    inv_k = 255 - cmyk[:, :, 3]
-                    arr = np.stack(
-                        [((255 - cmyk[:, :, i]) * inv_k // 255)
-                         for i in range(3)], axis=2
-                    ).astype(np.uint8)
-                else:
-                    arr = arr.reshape(ih, iw, ch)[:, :, :3]
-                canvas.blit(arr, *box)
+    interp = page._interp
+    for rec, xo in zip(interp.images, interp.image_objs):
+        # rec layout: (name, x0, x1, y0, y1, top, bottom, doctop, ...)
+        _, x0, x1, _y0, _y1, top, bottom = rec[:7]
+        box = (X(x0), Y(top), X(x1), Y(bottom))
+        try:
+            d = _decode_one(interp.doc, xo)
+        except Exception:  # noqa: BLE001
+            d = {"status": "error"}
+        if d.get("status") == "ok" and d.get("samples") is not None:
+            iw, ih = d["width"], d["height"]
+            ch = 1 if d["colorspace"] in ("ImageMask",) else (
+                d["channels"] or 1
+            )
+            arr = np.frombuffer(bytes(d["samples"]), dtype=np.uint8)
+            if ch == 1:
+                arr = arr.reshape(ih, iw)
+                bits = d.get("bits") or 8
+                if bits < 8:  # scale sample codes to full range
+                    arr = (arr.astype(np.uint16) * 255
+                           // ((1 << bits) - 1)).astype(np.uint8)
+            elif ch == 4:
+                # DeviceCMYK -> RGB: r = (255-c)(255-k)/255 etc.
+                cmyk = arr.reshape(ih, iw, 4).astype(np.uint16)
+                inv_k = 255 - cmyk[:, :, 3]
+                arr = np.stack(
+                    [((255 - cmyk[:, :, i]) * inv_k // 255)
+                     for i in range(3)], axis=2
+                ).astype(np.uint8)
             else:
-                canvas.fill_rect(*box, _UNSUPPORTED_IMG_FILL + (255,))
-                canvas.stroke_rect(*box, (130, 130, 140, 255), 1)
+                arr = arr.reshape(ih, iw, ch)[:, :, :3]
+            canvas.blit(arr, *box)
+        else:
+            canvas.fill_rect(*box, _UNSUPPORTED_IMG_FILL + (255,))
+            canvas.stroke_rect(*box, (130, 130, 140, 255), 1)
 
-    # 2. vector objects with their recorded colors — read the underlying
-    # frames directly (the list-of-dicts accessors pay a pandas to_dict
-    # per page: 1.6 s of a 4.8 s corpus render before this)
-    def _recs(frame_attr, accessor_name):
-        f = getattr(page, frame_attr, None)
-        if f is not None:
-            return f.to_dict("records") if len(f) else []
-        return getattr(page, accessor_name)  # duck-typed page objects
-
-    for r in _recs("_rects", "rects"):
+    # 2. vector objects with their recorded colors
+    for r in page.rects:
         box = (X(r["x0"]), Y(r["top"]), X(r["x1"]), Y(r["bottom"]))
         if r.get("fill"):
             canvas.fill_rect(
@@ -153,13 +144,13 @@ def _render_base(page, scale: float, bbox=None) -> Canvas:
             canvas.stroke_rect(
                 *box, _obj_color(r.get("stroking_color"), (0, 0, 0)) + (255,),
                 max(1, int(round((r.get("linewidth") or 1) * scale))))
-    for ln in _recs("_lines", "lines"):
+    for ln in page.lines:
         canvas.line(
             (X(ln["x0"]), Y(ln["top"])),
             (X(ln["x1"]), Y(ln["bottom"])),
             _obj_color(ln.get("stroking_color"), (0, 0, 0)) + (255,),
             max(1, int(round((ln.get("linewidth") or 1) * scale))))
-    for cv in _recs("_curves", "curves"):
+    for cv in page.curves:
         # stored pts are (x, top) already (pdfparse _emit_path pts_top)
         pts = [(X(x), Y(y)) for (x, y) in cv.get("pts") or []]
         if len(pts) >= 2:
@@ -172,45 +163,30 @@ def _render_base(page, scale: float, bbox=None) -> Canvas:
     # contours scanline-filled at the char's pixel box; else
     # the approximate 5x7 bitmap glyph (kernel/font5x7.py); else a faint
     # structural box. Deterministic either way (hash-stable renders).
-    ca = getattr(page, "_ca", None)
-    ch_cids = getattr(interp, "ch_cid", None) if interp is not None else None
-    if ca is None:
-        # dict accessors carry no char_index, so no CID join on this path
-        chars_rows = [
-            (c["x0"], c["top"], c["x1"], c["bottom"], c.get("text"),
-             c.get("fontname"), None, c.get("non_stroking_color"),
-             c.get("matrix"))
-            for c in page.chars
-        ]
-    else:
-        ex = ca.extra
-        # char_index = per-page emit order -> interp.ch_cid join (the
-        # chars may be a crop/filter subset; indices stay valid)
-        if ch_cids is not None:
-            cids = [
-                ch_cids[ix] if 0 <= ix < len(ch_cids) else None
-                for ix in ex["char_index"].tolist()
-            ]
-        else:
-            cids = [None] * ca.n
-        chars_rows = list(zip(
-            ca.x0, ca.top, ca.x1, ca.bottom, ca.text.tolist(),
-            ex["fontname"].tolist(), cids, ex["non_stroking_color"].tolist(),
-            ex["matrix"].tolist(),
-        ))
+    ca = page._ca
+    ex = ca.extra
+    # char_index = per-page emit order -> interp.ch_cid join (the chars may
+    # be a crop/filter subset; indices stay valid)
+    ch_cids = interp.ch_cid
+    cids = [ch_cids[ix] if 0 <= ix < len(ch_cids) else None
+            for ix in ex["char_index"].tolist()]
+    chars_rows = list(zip(
+        ca.x0, ca.top, ca.x1, ca.bottom, ca.text.tolist(),
+        ex["fontname"].tolist(), cids, ex["non_stroking_color"].tolist(),
+        ex["matrix"].tolist(),
+    ))
     from .kernel.font5x7 import glyph_mask
 
     tt_by_basefont = {}
     pf_by_basefont = {}
-    if interp is not None:
-        for font in getattr(interp, "fonts", {}).values():
-            if getattr(font, "basefont", None) not in tt_by_basefont:
-                pf_by_basefont[font.basefont] = font
-                try:
-                    loader = getattr(font, "glyph_font", font.truetype)
-                    tt_by_basefont[font.basefont] = loader(interp.doc)
-                except Exception:  # noqa: BLE001
-                    tt_by_basefont[font.basefont] = None
+    for font in interp.fonts.values():
+        if getattr(font, "basefont", None) not in tt_by_basefont:
+            pf_by_basefont[font.basefont] = font
+            try:
+                loader = getattr(font, "glyph_font", font.truetype)
+                tt_by_basefont[font.basefont] = loader(interp.doc)
+            except Exception:  # noqa: BLE001
+                tt_by_basefont[font.basefont] = None
     tt_cache = {}
 
     def tt_mask(fontname, ch, w_px, h_px, cid=None):

@@ -1727,6 +1727,14 @@ LINE_COLUMNS = [
     "pts", "mcid", "tag", "evenodd", "dash", "path",
     "stroking_pattern", "non_stroking_pattern",
 ]
+# the fields of an image row (PageInterpreter._emit_image): the XObject's
+# resource name, its placement box, source size, bits, mask flag, resolved
+# colour space and the XObject itself
+IMAGE_COLUMNS = [
+    "name", "x0", "x1", "y0", "y1", "top", "bottom", "doctop", "width",
+    "height", "srcwidth", "srcheight", "bits", "imagemask", "colorspace",
+    "stream",
+]
 
 
 class PageInterpreter:
@@ -2626,11 +2634,7 @@ def pdf_to_frames(data: bytes, style: bool = True, password: str = "") -> Dict[s
     ]
     images = pd.DataFrame(
         image_rows,
-        columns=[
-            "page_number", "image_index", "name",
-            "x0", "x1", "y0", "y1", "top", "bottom", "doctop",
-            "width", "height", "srcwidth", "srcheight", "bits", "imagemask",
-        ],
+        columns=["page_number", "image_index", *IMAGE_COLUMNS[:14]],
     )
     annot_rows = [r for p in pages for r in getattr(p, "annot_rows", [])]
     annots = pd.DataFrame(

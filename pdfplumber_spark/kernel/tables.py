@@ -3,8 +3,9 @@
 Re-expresses the reference pdfplumber ``table.py`` over numpy arrays:
 
 - :class:`EdgeArrays` — a page's edges as a struct of arrays, built
-  straight from the parser's line/rect/curve rows (``from_interp``) or from
-  an edge frame (``from_frame``);
+  straight from the parser's line/rect/curve rows (``from_interp`` for a
+  parsed page, ``from_objects`` for the facade's possibly derived rows) or
+  from an edge frame (``from_frame``: explicit lines, tests);
 - ``merge_edges`` — snap to cluster means (``assign_clusters`` plus a
   bincount mean) and interval union per infinite line (one lexsort over
   (orientation, position, start), run ids from a segmented
@@ -25,10 +26,12 @@ Re-expresses the reference pdfplumber ``table.py`` over numpy arrays:
   (``table.py:389-435``);
 - ``find_tables`` — the TableFinder pipeline over those pieces.
 
-``find_tables_frame`` and ``merge_edges_frame`` adapt the kernel to edge
-frames (the facade, tests); ``find_intersections`` also takes frames. The extraction plans call the
-kernel per page inside their ``mapInPandas`` task, on the buffers of one
-parse.
+The extraction plans and the facade both call ``find_tables`` on
+``EdgeArrays`` of the parser's rows (the plans per page inside their
+``mapInPandas`` task, on the buffers of one parse). ``merge_edges_frame``
+and ``find_intersections`` also take edge frames (tests);
+``find_tables_frame`` is kept only as the benchmark's traced hook name and
+for tests.
 """
 
 from __future__ import annotations
@@ -109,19 +112,24 @@ class EdgeArrays:
 
     @classmethod
     def from_interp(cls, it) -> "EdgeArrays":
-        """A parsed page's edges, in the order and with the arithmetic of
-        ``geom.lines_to_edges`` / ``rects_to_edges`` / ``curves_to_edges``
-        (``geometry.py:189-250``): one edge per line (h iff top == bottom),
-        top/bottom/left/right per rect, one per consecutive curve point
-        pair (h, v or oblique)."""
+        """A parsed page's edges: :meth:`from_objects` of its rows."""
+        return cls.from_objects(it.lines, it.rects, it.curves)
+
+    @classmethod
+    def from_objects(cls, lines, rects, curves) -> "EdgeArrays":
+        """The edges of a page's parser line, rect and curve rows, in the
+        order and with the arithmetic of ``geom.lines_to_edges`` /
+        ``rects_to_edges`` / ``curves_to_edges`` (``geometry.py:189-250``):
+        one edge per line (h iff top == bottom), top/bottom/left/right per
+        rect, one per consecutive curve point pair (h, v or oblique)."""
         def coords(rows):
             return np.array([[r[i] for i in _ROW_COORDS] for r in rows],
                             dtype=np.float64).reshape(-1, 6)
 
-        ln = coords(it.lines)
+        ln = coords(lines)
         lines = cls.from_rows(
             ln, np.where(ln[:, 2] == ln[:, 3], "h", "v").astype(object), "line")
-        x0, x1, top, bottom, w, h = coords(it.rects).T
+        x0, x1, top, bottom, w, h = coords(rects).T
         zero = np.zeros(len(x0))
         rects = cls.from_rows(
             np.stack([
@@ -134,7 +142,7 @@ class EdgeArrays:
             np.tile(np.array(["h", "h", "v", "v"], dtype=object), len(x0)),
             "rect_edge",
         )
-        _, a, b = curve_segments([r[_ROW_PTS] for r in it.curves])
+        _, a, b = curve_segments([r[_ROW_PTS] for r in curves])
         ax, ay, bx, by = a[:, 0], a[:, 1], b[:, 0], b[:, 1]
         curves = cls.from_rows(
             np.stack([np.minimum(ax, bx), np.maximum(ax, bx),
@@ -576,8 +584,8 @@ def find_tables(
     WordArrays) feeds the "text" strategy. Returns a list of tables, each a
     list of cell bboxes; ``debug=True`` returns the intermediate state
     instead (reference page.py:427-431), its edge records rebuilt from the
-    rows of ``edge_frame`` (the frame ``edges`` came from) and of the
-    generated edges."""
+    rows of ``edge_frame`` (an edge frame whose rows ``edges.src``
+    indexes) and of the generated edges."""
     snap_x = snap_tolerance if snap_x_tolerance is None else snap_x_tolerance
     snap_y = snap_tolerance if snap_y_tolerance is None else snap_y_tolerance
     join_x = join_tolerance if join_x_tolerance is None else join_x_tolerance
@@ -678,7 +686,8 @@ def find_tables(
 
 def find_tables_frame(edges: pd.DataFrame, words=None, page_bbox=None,
                       debug: bool = False, **settings):
-    """:func:`find_tables` over an edge frame (the facade's page edges)."""
+    """:func:`find_tables` over an edge frame (the benchmark's traced hook
+    name; tests)."""
     return find_tables(EdgeArrays.from_frame(edges), words, page_bbox,
                        debug=debug, edge_frame=edges if debug else None,
                        **settings)

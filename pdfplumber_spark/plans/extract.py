@@ -17,8 +17,9 @@ Physical design (SURVEY.md §3.1, §4):
   (``parse_pdf``, no per-char style unless a word setting names a style
   column) and run their kernels on the parser's buffers
   (``CharArrays.from_interp``, ``tables.EdgeArrays.from_interp``, the
-  interpreters' ``annot_rows``): no per-page pandas frames. Only the
-  objects plan builds ``pdf_to_frames`` frames, which are its output.
+  interpreters' ``annot_rows``): no per-page pandas frames. The objects
+  plan writes its rows from the facade's records of the same buffers
+  (``api.object_records``), one frame per payload.
 - Binary payloads are sniffed (%PDF- magic) and routed to the PDF or HTML
   kernel; malformed payloads yield ``status='error'`` rows with a reason
   instead of failing the job (reference analogue: the repair path,
@@ -39,7 +40,7 @@ from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..kernel import pdfparse
 from ..kernel.htmlstrip import extract_main_text_bytes
-from ..kernel.pdfparse import pdf_to_frames
+from ..kernel.pdfparse import pdf_to_frames  # noqa: F401 - perfbench.tracing hook name
 from ..kernel.words import (
     CharArrays,
     WordSettings,
@@ -239,103 +240,64 @@ def document_text(extracted: DataFrame) -> DataFrame:
 # --- object extraction ------------------------------------------------------
 
 _OBJ_COLS = [f.name for f in OBJECTS_SCHEMA.fields]
+_PTS = _OBJ_COLS.index("pts")
 
 
-def _frames_to_objects(url: str, frames) -> pd.DataFrame:
-    parts = []
-    for kind, idx_col in (
-        ("chars", "char_index"), ("lines", "line_index"),
-        ("rects", "rect_index"), ("curves", "curve_index"),
-        ("images", "image_index"),
-    ):
-        df = frames[kind]
-        if len(df) == 0:
-            continue
-        p = df.copy()
-        p["object_type"] = kind[:-1]
-        p["obj_index"] = p[idx_col]
-        p["url"] = url
-        if "pts" in p.columns:
-            p["pts"] = p["pts"].map(
-                lambda pts: [{"x": float(x), "y": float(y)} for (x, y) in pts]
-            )
-        parts.append(p)
-    if not parts:
-        return pd.DataFrame(columns=_OBJ_COLS)
-    out = pd.concat(parts, ignore_index=True)
-    for c in _OBJ_COLS:
-        if c not in out.columns:
-            out[c] = None
-    # concat fills missing columns with float NaN — Arrow needs real None
-    # for array/string/bool columns (NaN is not iterable)
-    for c in ("text", "fontname", "matrix", "stroking_color",
-              "non_stroking_color", "pts", "tag", "stroke", "fill"):
-        col = out[c]
-        if col.dtype != object:
-            col = col.astype(object)
-        out[c] = col.where(col.notna(), None)
-    return out[_OBJ_COLS]
-
-
-def _laparams_objects(url: str, frames, laparams) -> pd.DataFrame:
-    """LAParams layout analysis over the objects output (reference
-    cli.py:56 ``--laparams`` + page.py:269-277): adds textline*/textbox*
-    rows and renumbers char ``obj_index`` to pdfminer reading order so
-    ``ORDER BY url, page_number, object_type, obj_index`` reproduces the
-    reference CSV row order."""
-    from ..kernel.laparams import LAParams, analyze
-
-    lap = LAParams.resolve(laparams)
-    out = _frames_to_objects(url, frames)
-    chars = frames["chars"]
-    extra_rows: list = []
-    for pn, sub in chars.groupby("page_number", sort=True):
-        lines, boxes, char_order = analyze(CharArrays(sub, ("y0", "y1")), lap)
-        mask = (out["object_type"] == "char") & (out["page_number"] == pn)
-        idx = out.index[mask]
-        if len(idx) == len(sub):
-            # reading rank per rendering-order position
-            rank = np.empty_like(char_order)
-            rank[char_order] = np.arange(len(char_order))
-            out.loc[idx, "obj_index"] = rank
-        counters: dict = {}
-        for o in lines + boxes:
-            d = dict(o)
-            d["url"] = url
-            d["page_number"] = int(pn)
-            k = d["object_type"]
-            d["obj_index"] = counters[k] = counters.get(k, -1) + 1
-            extra_rows.append(d)
-    if not extra_rows:
-        return out
-    extra = pd.DataFrame(extra_rows)
-    for c in _OBJ_COLS:
-        if c not in extra.columns:
-            extra[c] = None
-    extra = extra[_OBJ_COLS]
-    # match numeric dtypes so concat doesn't warn on all-NA object columns
-    for c in _OBJ_COLS:
-        if extra[c].isna().all() and out[c].dtype.kind == "f":
-            extra[c] = extra[c].astype(out[c].dtype)
-    return pd.concat([out, extra], ignore_index=True)
+def _object_row(url: str, rec: dict, obj_index) -> tuple:
+    """An object record as an ``OBJECTS_SCHEMA`` row (pts as {x, y})."""
+    row = [rec.get(c) for c in _OBJ_COLS]
+    row[0], row[3] = url, obj_index
+    if row[_PTS] is not None:
+        row[_PTS] = [{"x": float(x), "y": float(y)} for (x, y) in row[_PTS]]
+    return tuple(row)
 
 
 def _payload_to_objects(url: str, payload, laparams=None) -> list:
-    """Per-payload unified objects frame, as ``[frame]`` (``[]`` for a
-    non-PDF or unparseable payload) — shared by the Spark plan and the
-    materialized single-process oracle."""
+    """Per-payload objects rows, as ``[frame]`` in ``OBJECTS_SCHEMA``
+    (``[]`` for a non-PDF or unparseable payload): the facade's object
+    records (``api.object_records``) of every page's chars and parser
+    rows, kind by kind, ``obj_index`` the object's emit position. With
+    ``laparams`` (reference cli.py:56 ``--laparams`` + page.py:269-277), the
+    facade's layout analysis adds each page's textline*/textbox* rows and
+    renumbers char ``obj_index`` to pdfminer reading order, so ``ORDER BY
+    url, page_number, object_type, obj_index`` reproduces the reference
+    CSV row order. Shared by the Spark plan and the materialized
+    single-process oracle."""
+    from ..api import object_records, page_chars
+    from ..kernel.laparams import LAParams, analyze
+
     if payload is None:
         return []
     data = bytes(payload)
     if data[:5] != b"%PDF-":
         return []
     try:
-        frames = pdf_to_frames(data)
+        interps = pdfparse.parse_pdf(data)
     except Exception:  # noqa: BLE001
         return []
-    if laparams is not None:
-        return [_laparams_objects(url, frames, laparams)]
-    return [_frames_to_objects(url, frames)]
+    lap = None if laparams is None else LAParams.resolve(laparams)
+    by_kind = {k: [] for k in ("char", "line", "rect", "curve", "image")}
+    layout = []
+    for it in interps:
+        pn = it.page_number
+        ca = page_chars(it)
+        index = np.arange(ca.n)
+        if lap is not None:
+            lines, boxes, char_order = analyze(ca, lap)
+            index[char_order] = np.arange(ca.n)  # reading rank
+            counters: dict = {}
+            for o in lines + boxes:
+                k = o["object_type"]
+                counters[k] = counters.get(k, -1) + 1
+                layout.append(_object_row(
+                    url, {**o, "page_number": pn}, counters[k]))
+        for kind, rows in by_kind.items():
+            recs = object_records(
+                kind, ca if kind == "char" else getattr(it, kind + "s"), pn)
+            idx = index if kind == "char" else range(len(recs))
+            rows.extend(_object_row(url, r, i) for r, i in zip(recs, idx))
+    rows = [r for k in by_kind.values() for r in k] + layout
+    return [pd.DataFrame(rows, columns=_OBJ_COLS)]
 
 
 def extract_objects(

@@ -1,24 +1,32 @@
-"""The single-document facade (``api.Page``) over its char columns, checked
-from in-repo inputs.
+"""The single-document facade (``api.Page``) over the parser's objects,
+checked from in-repo inputs.
 
 Every page comes from ``kernel.pdfgen.make_pdf``, and every expected char
-box, clip, text and table cell is derived from the geometry the test wrote
-(the writer's glyph widths and font box), never from engine output: derived
-pages (``crop``, ``within_bbox``, ``outside_bbox``), ``dedupe_chars`` on a
-run written twice at the same position, ``Table.extract`` on a cropped
-page, the char record keys, the records ``filter`` passes its predicate,
-and the ``utils`` text helpers against the page's own.
+box, clip, edge, text and table cell is derived from the geometry the test
+wrote (the writer's glyph widths and font box), never from engine output:
+derived pages (``crop``, ``within_bbox``, ``outside_bbox``, ``filter``,
+``dedupe_chars``) over chars, lines, rects, curves and images, ``dedupe_chars``
+on a run written twice at the same position, ``page.edges``,
+``Table.extract`` and ``debug_tablefinder`` on cropped pages, the char
+record keys, line records that keep the parser's values, the records
+``filter`` passes its predicate, the objects plan's rows against the
+page's records, and the ``utils`` text helpers against the page's own.
 """
+
+import math
 
 import pytest
 
 from pdfplumber_spark import api, utils
+from pdfplumber_spark.kernel import pdfgen
 from pdfplumber_spark.kernel.pdfgen import (
     FONT_ASCENT,
     FONT_DESCENT,
     glyph_width,
     make_pdf,
 )
+from pdfplumber_spark.plans import extract as X
+from pdfplumber_spark.schemas import OBJECTS_SCHEMA
 
 SIZE = 10
 HEIGHTS = [792, 700]
@@ -208,3 +216,203 @@ def test_filter_sees_the_accessor_records(pdf):
     assert [c["text"] for c in left.chars] == [
         c["text"] for c in page.chars if c["x0"] < 100]
     assert left.rects == page.rects and left.curves == []
+
+
+# a 200x200 page with a text run and one image at (120, 120)-(160, 160)
+IMAGE = {"x": 120, "top": 120, "w": 40, "h": 40, "pw": 4, "ph": 4,
+         "channels": 3, "seed": 1, "format": "flate"}
+SMALL = {"width": 200, "height": 200, "images": [IMAGE],
+         "texts": [{"x": 10, "top": 10, "size": SIZE, "text": "Hi there"}]}
+IMAGE_BOX = (120.0, 120.0, 160.0, 160.0)
+
+
+@pytest.fixture(scope="module")
+def small():
+    with api.open(make_pdf([SMALL])) as doc:
+        yield doc.pages[0]
+
+
+def box(o) -> tuple:
+    return (o["x0"], o["top"], o["x1"], o["bottom"])
+
+
+def clip_box(b, bbox) -> tuple:
+    return (max(b[0], bbox[0]), max(b[1], bbox[1]),
+            min(b[2], bbox[2]), min(b[3], bbox[3]))
+
+
+def test_derived_pages_mask_and_clip_images(small):
+    (image,) = small.images
+    assert box(image) == IMAGE_BOX
+    assert (image["y0"], image["y1"]) == (200 - 160, 200 - 120)
+    away = (0.0, 0.0, 100.0, 100.0)
+    assert small.crop(away).images == []
+    assert small.within_bbox(away).images == []
+    # image records hold a fresh stream wrapper each: compare reprs
+    assert repr(small.outside_bbox(away).images) == repr(small.images)
+    across = (100.0, 100.0, 200.0, 140.0)
+    (cut,) = small.crop(across).images
+    exp = clip_box(IMAGE_BOX, across)
+    assert box(cut) == exp == (120.0, 120.0, 160.0, 140.0)
+    assert (cut["width"], cut["height"]) == (exp[2] - exp[0], exp[3] - exp[1])
+    assert cut["doctop"] == exp[1]
+    assert (cut["y0"], cut["y1"]) == (image["y0"], image["y1"])
+    assert small.within_bbox(across).images == []
+
+
+def test_filter_sees_image_records(small):
+    only = small.filter(lambda o: o["object_type"] == "image")
+    assert repr(only.images) == repr(small.images) and only.chars == []
+    rest = small.filter(lambda o: o["object_type"] != "image")
+    assert rest.images == [] and rest.chars == small.chars
+
+
+def test_dedupe_chars_keeps_the_derived_bbox(small):
+    bbox = (0.0, 0.0, 100.0, 100.0)
+    cropped = small.crop(bbox)
+    deduped = cropped.dedupe_chars()
+    assert deduped.bbox == bbox and deduped.width == 100.0
+    text = deduped.extract_text(layout=True)
+    assert text == cropped.extract_text(layout=True)
+    # layout rows are the crop's width over the default x_density 7.25
+    assert {len(row) for row in text.split("\n")} == {round(100 / 7.25)}
+    assert "Hi there" in text
+
+
+def test_line_records_keep_the_parser_values(monkeypatch):
+    """A tagged 0.5-wide line next to an untagged 2-wide one: the records
+    carry mcid 3 / None and linewidth 0.5 / 2 as written, not a frame's
+    float column."""
+    monkeypatch.setattr(pdfgen, "_content_stream", lambda page: (
+        b"/P <</MCID 3>> BDC 0.5 w 10 180 m 100 180 l S EMC\n"
+        b"2 w 10 150 m 100 150 l S"))
+    data = make_pdf([{"width": 200, "height": 200}])
+    monkeypatch.undo()
+    with api.open(data) as pdf:
+        page = pdf.pages[0]
+        tagged, plain = page.lines
+        assert box(tagged) == (10.0, 20.0, 100.0, 20.0)
+        assert box(plain) == (10.0, 50.0, 100.0, 50.0)
+        assert (tagged["mcid"], tagged["tag"], tagged["linewidth"]) == (
+            3, "P", 0.5)
+        assert plain["mcid"] is None and plain["tag"] is None
+        assert type(tagged["mcid"]) is int and type(plain["linewidth"]) is int
+        assert plain["linewidth"] == 2
+        assert '"mcid": 3,' in page.to_json()
+
+
+def test_page_edges_per_kind(pdf):
+    """4 edges per rect (top, bottom, left, right), 1 per line, one per
+    consecutive point pair of a curve."""
+    edges = pdf.pages[0].edges
+    by_type = {}
+    for e in edges:
+        by_type.setdefault(e["object_type"], []).append(e)
+    lines = PAGE1["lines"]
+    assert [(e["orientation"], box(e)) for e in by_type["line"]] == [
+        ("h" if ln["top"] == ln["bottom"] else "v",
+         (ln["x0"], ln["top"], ln["x1"], ln["bottom"])) for ln in lines]
+    r = PAGE1["rects"][0]
+    assert [(e["orientation"], box(e)) for e in by_type["rect_edge"]] == [
+        ("h", (r["x0"], r["top"], r["x1"], r["top"])),
+        ("h", (r["x0"], r["bottom"], r["x1"], r["bottom"])),
+        ("v", (r["x0"], r["top"], r["x0"], r["bottom"])),
+        ("v", (r["x1"], r["top"], r["x1"], r["bottom"])),
+    ]
+    pts = PAGE1["curves"][0]["pts"]
+    # both segments are oblique
+    assert [(e["orientation"], box(e)) for e in by_type["curve_edge"]] == [
+        (None, (min(a[0], b[0]), min(a[1], b[1]), max(a[0], b[0]),
+                max(a[1], b[1]))) for a, b in zip(pts, pts[1:])]
+    assert len(edges) == len(lines) + 4 + len(pts) - 1
+
+
+def test_crop_clips_lines_rects_and_curves(pdf):
+    page = pdf.pages[0]
+    bbox = (150.0, 140.0, 450.0, 640.0)
+    cropped = page.crop(bbox)
+    written = [(ln["x0"], ln["top"], ln["x1"], ln["bottom"])
+               for ln in PAGE1["lines"]]
+    assert [box(o) for o in cropped.lines] == [
+        clip_box(b, bbox) for b in written if b[2] >= bbox[0]]
+    r = PAGE1["rects"][0]
+    (rect,) = cropped.rects
+    assert box(rect) == clip_box(
+        (r["x0"], r["top"], r["x1"], r["bottom"]), bbox) == (
+        150.0, 150.0, 200.0, 180.0)
+    pts = PAGE1["curves"][0]["pts"]
+    (curve,) = cropped.curves
+    cbox = (min(x for x, _ in pts), min(y for _, y in pts),
+            max(x for x, _ in pts), max(y for _, y in pts))
+    assert box(curve) == clip_box(cbox, bbox) == (300.0, 600.0, 450.0, 640.0)
+    assert curve["pts"] == [pytest.approx(p) for p in pts]  # pts stay
+    for o in cropped.lines + [rect, curve]:
+        assert o["width"] == o["x1"] - o["x0"]
+        assert o["height"] == o["bottom"] - o["top"]
+        assert o["doctop"] == o["top"]  # page 1, no top clipped
+
+
+def test_debug_tablefinder_on_a_cropped_grid(pdf):
+    """A crop through the grid's middle column: the h rulings end at the
+    crop, the right v ruling is gone, so one column of cells is left."""
+    bbox = (60.0, 390.0, 222.0, 470.0)
+    cropped = pdf.pages[0].crop(bbox)
+    dbg = cropped.debug_tablefinder()
+    assert sorted((e["orientation"], box(e)) for e in dbg.edges) == sorted(
+        [("h", (XS[0], y, bbox[2], y)) for y in YS]
+        + [("v", (x, YS[0], x, YS[-1])) for x in XS[:2]])
+    (table,) = dbg.tables
+    assert table.bbox == (XS[0], YS[0], XS[1], YS[-1])
+    assert table.extract() == [[row[0]] for row in GRID]
+    assert cropped.extract_tables() == [[[row[0]] for row in GRID]]
+
+
+def _stored(v):
+    """A value as an ``OBJECTS_SCHEMA`` column stores it: NaN as null,
+    sequences as lists."""
+    if isinstance(v, float) and math.isnan(v):
+        return None
+    if isinstance(v, (list, tuple)):
+        return [_stored(x) for x in v]
+    return v
+
+
+@pytest.mark.parametrize("laparams", [None, {}])
+def test_objects_rows_are_the_page_records(laparams):
+    """``_payload_to_objects`` writes, per page and kind in ``obj_index``
+    order, the ``page.objects`` records projected to ``OBJECTS_SCHEMA``
+    (pts as {x, y}); under laparams chars come in reading order, which on
+    the second page is not the order the runs were written in."""
+    spec = dict(PAGE1, images=[IMAGE])
+    upward = {"width": 612, "height": 792, "texts": [
+        {"x": 72, "top": 300, "size": SIZE, "text": "Written first"},
+        {"x": 72, "top": 100, "size": SIZE, "text": "Read first"}]}
+    data = make_pdf([spec, upward])
+    cols = [f.name for f in OBJECTS_SCHEMA.fields]
+    (frame,) = X._payload_to_objects("u", data, laparams=laparams)
+    rows = [{c: _stored(v) for c, v in r.items()}
+            for r in frame.to_dict("records")]
+    assert list(frame.columns) == cols
+    got, want = {}, {}
+    for r in sorted(rows, key=lambda r: r["obj_index"]):
+        assert r["url"] == "u"
+        got.setdefault((r["page_number"], r["object_type"]), []).append(
+            {c: r[c] for c in cols[4:]})
+    with api.open(data, laparams=laparams) as pdf:
+        for page in pdf.pages:
+            for kind, recs in page.objects.items():
+                want[(page.page_number, kind)] = [
+                    {c: ([{"x": x, "y": y} for x, y in o["pts"]]
+                         if c == "pts" and o.get(c) is not None
+                         else _stored(o.get(c))) for c in cols[4:]}
+                    for o in recs]
+    assert got == want
+    kinds = {k for _, k in got}
+    assert {"char", "line", "rect", "curve", "image"} <= kinds
+    assert ("textboxhorizontal" in kinds) == (laparams is not None)
+    text = "".join(c["text"] for c in got[(2, "char")])
+    assert text == ("Read firstWritten first" if laparams is not None
+                    else "Written firstRead first")
+    (image,) = got[(1, "image")]
+    assert box(image) == (IMAGE["x"], IMAGE["top"], IMAGE["x"] + IMAGE["w"],
+                          IMAGE["top"] + IMAGE["h"])
