@@ -18,8 +18,8 @@ executors run — SURVEY §1.3: the corpus-scale path is the DataFrame API in
 as ``CharArrays``, handed straight to the char kernels, and its lines,
 rects, curves and images as the interpreter's row tuples, which the table
 kernel's edges are built from. Records are built only at the surface
-(:func:`object_records`), and every derived page masks or clips every
-kind the same way.
+(``kernel.pdfparse.object_records``), and every derived page masks or
+clips every kind the same way.
 """
 
 from __future__ import annotations
@@ -47,7 +47,14 @@ from .kernel.layout import (
     resolve_layout_kwargs,
     simple_text,
 )
-from .kernel.pdfparse import IMAGE_COLUMNS, LINE_COLUMNS, parse_pdf
+from .kernel.pdfparse import (
+    LINE_COLUMNS,
+    ROW_COLUMNS,
+    StreamWrapper,
+    object_records,
+    page_chars,
+    parse_pdf,
+)
 from .kernel.tables import (
     EdgeArrays,
     extract_table_text,
@@ -55,8 +62,6 @@ from .kernel.tables import (
     table_rows,
 )
 from .kernel.words import (
-    NUM_FIELDS,
-    STYLE_ATTRS,
     CharArrays,
     dedupe_keep_mask,
     extract_words_ca,
@@ -100,7 +105,7 @@ class _Serializer:
             return obj if self.precision is None else round(obj, self.precision)
         if isinstance(obj, (int, str)):
             return obj
-        if isinstance(obj, _StreamWrapper):
+        if isinstance(obj, StreamWrapper):
             # convert.py do_PDFStream: {"rawdata": base64 of raw bytes}
             import base64 as _b64
 
@@ -136,22 +141,6 @@ class _Serializer:
         if isinstance(obj, np.integer):
             return int(obj)
         return str(obj)
-
-
-class _StreamWrapper:
-    """PDFStream stand-in for image records: serializes like the
-    reference's do_PDFStream ({'rawdata': base64}); carries the XObject
-    + resource name for engine users (reference keeps the pdfminer
-    PDFStream here)."""
-
-    __slots__ = ("xo", "name")
-
-    def __init__(self, xo, name=None):
-        self.xo = xo
-        self.name = name
-
-    def __repr__(self):
-        return f"<PDFStream {self.name or ''}>"
 
 
 _CSV_COLS_REQUIRED = ["object_type"]
@@ -259,85 +248,14 @@ def _resolve_table_settings(table_settings) -> dict:
     return dict(table_settings)
 
 
-# a char record's keys, in order; the record appends page_number. mcid/tag
-# are ALWAYS present (reference emits the keys as None on untagged pages —
-# round-5 ADVICE: schema must not differ between tagged and untagged
-# documents); the style columns add the reference LTChar extras (ncs
-# colorspace name, pattern names — page.py:351-380)
-_CHAR_KEYS = ("text", "fontname", *NUM_FIELDS, "object_type", "mcid", "tag",
-              *STYLE_ATTRS)
-# the parser columns a facade page's CharArrays carries in ``extra`` (with
-# object_type): the record keys it holds no core field for, plus
-# char_index, the parser's emit order (display joins it to the char CIDs)
-_CHAR_EXTRA = ("char_index", "fontname", "adv", "y0", "y1", "width", "mcid",
-               "tag", *STYLE_ATTRS)
-# the fields of the parser's row tuples, per non-char object kind
-_ROW_COLUMNS = {"line": LINE_COLUMNS, "rect": LINE_COLUMNS,
-                "curve": LINE_COLUMNS, "image": IMAGE_COLUMNS}
 _BOX = ("x0", "top", "x1", "bottom", "doctop")
-
-
-def page_chars(interp) -> CharArrays:
-    """A parsed page's chars as the facade holds them: the record columns,
-    ``object_type`` and tuple colours (reference colours are tuples)."""
-    chars = CharArrays.from_interp(interp, _CHAR_EXTRA)
-    chars.extra["object_type"] = np.full(chars.n, "char", dtype=object)
-    for k in STYLE_ATTRS[:3]:
-        chars.extra[k] = np.fromiter(
-            (None if v is None else tuple(v) for v in chars.extra[k]),
-            dtype=object, count=chars.n)
-    return chars
-
-
-def object_records(kind: str, objs, page_number: int) -> List[dict]:
-    """The reference records of a page's ``kind`` objects, from its
-    ``CharArrays`` (chars) or the parser's rows (other kinds); the
-    reference's process_object adds page_number."""
-    if kind == "char":
-        cols = [v.tolist() for v in objs.select(_CHAR_KEYS).extra.values()]
-        return [{**dict(zip(_CHAR_KEYS, vals)), "page_number": page_number}
-                for vals in zip(*cols)]
-    if kind == "image":
-        return [_image_record(row, page_number) for row in objs]
-    recs = []
-    for row in objs:
-        r = dict(zip(LINE_COLUMNS, row))
-        r["object_type"] = kind
-        r["page_number"] = page_number
-        for k in ("stroking_color", "non_stroking_color"):
-            if r[k] is not None:  # reference colours are tuples
-                r[k] = tuple(r[k])
-        recs.append(r)
-    return recs
-
-
-def _image_record(row, page_number: int) -> dict:
-    """Reference image record (LTImage attrs in ALL_ATTRS + geometry):
-    srcsize tuple, colorspace list, stream wrapper; the XObject NAME is
-    intentionally absent (not in ALL_ATTRS)."""
-    (name, x0, x1, y0, y1, top, bottom, doctop, w, h,
-     srcw, srch, bits, imagemask, colorspace, xo) = row
-    return {
-        "x0": x0, "y0": y0, "x1": x1, "y1": y1,
-        "width": w, "height": h,
-        "stream": _StreamWrapper(xo, name) if xo is not None else None,
-        "srcsize": (srcw, srch),
-        "imagemask": imagemask or None,
-        "bits": bits,
-        "colorspace": colorspace,
-        "mcid": None,
-        "tag": None,
-        "object_type": "image",
-        "page_number": page_number,
-        "top": top, "bottom": bottom, "doctop": doctop,
-    }
 
 
 def _box(kind: str, objs) -> tuple:
     """The (x0, top, x1, bottom, doctop) arrays of ``kind`` objects."""
     if kind == "char":
         return (*coords(objs), objs.doctop)
-    pos = [_ROW_COLUMNS[kind].index(c) for c in _BOX]
+    pos = [ROW_COLUMNS[kind].index(c) for c in _BOX]
     return tuple(np.array([[r[i] for i in pos] for r in objs],
                           dtype=np.float64).reshape(-1, len(_BOX)).T)
 
@@ -352,7 +270,7 @@ def _clip(kind: str, objs, bbox):
         for k, v in cols.items():
             setattr(out, k, v)
         return out
-    pos = [_ROW_COLUMNS[kind].index(c) for c in cols]
+    pos = [ROW_COLUMNS[kind].index(c) for c in cols]
     out = []
     for row, *vals in zip(objs, *(v.tolist() for v in cols.values())):
         row = list(row)
@@ -483,7 +401,7 @@ class Page:
         # kind order = FIRST-paint order on the page (reference
         # Page.objects dict insertion order — to_csv row ordering
         # depends on it: pdffill-demo emits its lines before its chars)
-        kinds = ("char", *_ROW_COLUMNS)
+        kinds = ("char", *ROW_COLUMNS)
         order = [k for k in self._interp.kind_order if k in kinds]
         order += [k for k in kinds if k not in order]
         out = {}
@@ -827,7 +745,7 @@ class PDF:
             if pages is not None and interp.page_number not in pages:
                 continue
             self.pages.append(Page(self, interp, page_chars(interp), {
-                kind: getattr(interp, kind + "s") for kind in _ROW_COLUMNS}))
+                kind: getattr(interp, kind + "s") for kind in ROW_COLUMNS}))
 
     def structure_tree(self, page_number: Optional[int] = None,
                        page: Optional["Page"] = None):

@@ -22,6 +22,7 @@ from typing import Optional
 
 import numpy as np
 
+from .kernel.pdfparse import IMAGE_COLUMNS
 from .kernel.raster import Canvas, png_encode
 
 
@@ -40,6 +41,7 @@ DEFAULT_RESOLUTION = 72
 _CHAR_FILL = (120, 120, 120, 110)
 _GLYPH_INK = (40, 40, 45, 235)
 _UNSUPPORTED_IMG_FILL = (210, 210, 215)
+_STREAM = IMAGE_COLUMNS.index("stream")
 
 
 def _to_list(objs):
@@ -98,12 +100,12 @@ def _render_base(page, scale: float, bbox=None) -> Canvas:
     from .kernel.images import _decode_one
 
     interp = page._interp
-    for rec, xo in zip(interp.images, interp.image_objs):
-        # rec layout: (name, x0, x1, y0, y1, top, bottom, doctop, ...)
+    for rec in interp.images:
+        # rec layout: IMAGE_COLUMNS (name, x0, x1, y0, y1, top, bottom, ...)
         _, x0, x1, _y0, _y1, top, bottom = rec[:7]
         box = (X(x0), Y(top), X(x1), Y(bottom))
         try:
-            d = _decode_one(interp.doc, xo)
+            d = _decode_one(interp.doc, rec[_STREAM])
         except Exception:  # noqa: BLE001
             d = {"status": "error"}
         if d.get("status") == "ok" and d.get("samples") is not None:

@@ -26,7 +26,9 @@ from __future__ import annotations
 
 from typing import List, Optional
 
-from .pdfparse import PDFDocument, StreamObj
+from .pdfparse import IMAGE_COLUMNS, PDFDocument, StreamObj
+
+_NAME, _STREAM = IMAGE_COLUMNS.index("name"), IMAGE_COLUMNS.index("stream")
 
 # filters whose output is still entropy-coded raster data, not raw
 # samples. The set emptied over rounds 5-6 as kernels landed: CCITT
@@ -62,11 +64,11 @@ def image_xobjects(data: bytes, password: str = "") -> List[dict]:
     if interps:
         for it in interps:
             idx = 0
-            for rec, xo in zip(it.images, it.image_objs):
-                row = _decode_one(it.doc, xo)
+            for rec in it.images:
+                row = _decode_one(it.doc, rec[_STREAM])
                 row.update(
                     page_number=it.page_number, image_index=idx,
-                    name=str(rec[0]),
+                    name=str(rec[_NAME]),
                 )
                 out.append(row)
                 idx += 1

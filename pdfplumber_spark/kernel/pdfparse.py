@@ -26,6 +26,7 @@ import numpy as np
 import pandas as pd
 
 from .pdfgen import FONT_ASCENT, FONT_DESCENT, WIDTHS
+from .words import NUM_FIELDS, STYLE_ATTRS, CharArrays
 
 MATRIX_ID = (1, 0, 0, 1, 0, 0)  # ints, pdfminer MATRIX_IDENTITY parity
 
@@ -1729,7 +1730,10 @@ LINE_COLUMNS = [
 ]
 # the fields of an image row (PageInterpreter._emit_image): the XObject's
 # resource name, its placement box, source size, bits, mask flag, resolved
-# colour space and the XObject itself
+# colour space and the XObject itself, so the pixel-decode path
+# (kernel/images.py) enumerates in PAINT order (one row per Do,
+# Form-nested included), the reference's page.images semantics, without
+# re-resolving names against the wrong resources dict
 IMAGE_COLUMNS = [
     "name", "x0", "x1", "y0", "y1", "top", "bottom", "doctop", "width",
     "height", "srcwidth", "srcheight", "bits", "imagemask", "colorspace",
@@ -1824,12 +1828,6 @@ class PageInterpreter:
         self.rects: List[tuple] = []
         self.curves: List[tuple] = []
         self.images: List[tuple] = []
-        # StreamObj per painted image, parallel to ``images`` — lets the
-        # pixel-decode path (kernel/images.py) enumerate in PAINT order
-        # (one entry per Do, Form-nested included), the reference's
-        # page.images semantics, without re-resolving names against the
-        # wrong resources dict
-        self.image_objs: List[StreamObj] = []
 
     def _load_fonts(self, res: dict) -> Dict[str, Font]:
         """Resource name -> Font. Font objects are cached per document by
@@ -2453,7 +2451,6 @@ class PageInterpreter:
         y0, y1 = min(ys), max(ys)
         top, bottom = self._flip(y1), self._flip(y0)
         self._note_kind("image")
-        self.image_objs.append(xo)
         self.images.append(
             (
                 name,
@@ -2585,14 +2582,97 @@ def parse_pdf(data: bytes, style: bool = True, password: str = "") -> List[PageI
     return out
 
 
+# --- a parsed page's objects as the reference's records ----------------------
+
+# a char record's keys, in order (the record appends page_number): mcid/tag
+# always, None on untagged pages like the reference's; the style columns
+# add its LTChar extras (ncs colorspace name, patterns — page.py:351-380)
+_CHAR_KEYS = ("text", "fontname", *NUM_FIELDS, "object_type", "mcid", "tag",
+              *STYLE_ATTRS)
+# the parser columns a facade page's CharArrays carries in ``extra`` (with
+# object_type): the record keys it holds no core field for, plus
+# char_index, the parser's emit order (display joins it to the char CIDs)
+_CHAR_EXTRA = ("char_index", "fontname", "adv", "y0", "y1", "width", "mcid",
+               "tag", *STYLE_ATTRS)
+# the fields of the parser's row tuples, per non-char object kind
+ROW_COLUMNS = {"line": LINE_COLUMNS, "rect": LINE_COLUMNS,
+               "curve": LINE_COLUMNS, "image": IMAGE_COLUMNS}
+
+
+class StreamWrapper:
+    """PDFStream stand-in for image records: serializes like the
+    reference's do_PDFStream ({'rawdata': base64}) and carries the XObject
+    and its resource name (the reference keeps pdfminer's PDFStream)."""
+
+    __slots__ = ("xo", "name")
+
+    def __init__(self, xo, name=None):
+        self.xo = xo
+        self.name = name
+
+    def __repr__(self):
+        return f"<PDFStream {self.name or ''}>"
+
+
+def page_chars(interp) -> CharArrays:
+    """A parsed page's chars as the facade holds them: the record columns,
+    ``object_type`` and tuple colours (reference colours are tuples)."""
+    chars = CharArrays.from_interp(interp, _CHAR_EXTRA)
+    chars.extra["object_type"] = np.full(chars.n, "char", dtype=object)
+    for k in STYLE_ATTRS[:3]:
+        chars.extra[k] = np.fromiter(
+            (None if v is None else tuple(v) for v in chars.extra[k]),
+            dtype=object, count=chars.n)
+    return chars
+
+
+def object_records(kind: str, objs, page_number: int) -> List[dict]:
+    """The reference records of a page's ``kind`` objects, from its
+    :func:`page_chars` (chars) or the parser's rows (other kinds); the
+    reference's process_object adds page_number."""
+    if kind == "char":
+        cols = [v.tolist() for v in objs.select(_CHAR_KEYS).extra.values()]
+        return [{**dict(zip(_CHAR_KEYS, vals)), "page_number": page_number}
+                for vals in zip(*cols)]
+    if kind == "image":
+        return [_image_record(row, page_number) for row in objs]
+    recs = [dict(zip(LINE_COLUMNS, row), object_type=kind,
+                 page_number=page_number) for row in objs]
+    for r in recs:
+        for k in ("stroking_color", "non_stroking_color"):
+            if r[k] is not None:  # reference colours are tuples
+                r[k] = tuple(r[k])
+    return recs
+
+
+def _image_record(row, page_number: int) -> dict:
+    """Reference image record (LTImage attrs in ALL_ATTRS + geometry):
+    srcsize tuple, colorspace list, stream wrapper; the XObject NAME is
+    intentionally absent (not in ALL_ATTRS)."""
+    (name, x0, x1, y0, y1, top, bottom, doctop, w, h,
+     srcw, srch, bits, imagemask, colorspace, xo) = row
+    return {
+        "x0": x0, "y0": y0, "x1": x1, "y1": y1,
+        "width": w, "height": h,
+        "stream": StreamWrapper(xo, name) if xo is not None else None,
+        "srcsize": (srcw, srch),
+        "imagemask": imagemask or None,
+        "bits": bits,
+        "colorspace": colorspace,
+        "mcid": None,
+        "tag": None,
+        "object_type": "image",
+        "page_number": page_number,
+        "top": top, "bottom": bottom, "doctop": doctop,
+    }
+
+
 def pdf_to_frames(data: bytes, style: bool = True, password: str = "") -> Dict[str, pd.DataFrame]:
     """Parse PDF bytes -> dict of object DataFrames (chars/lines/rects/
     curves/pages) with page_number and ingestion-order index columns.
 
     ``style=False`` skips per-char matrix/color capture (text-extraction
     fast path; the columns are present but null)."""
-    from .words import CharArrays
-
     pages = parse_pdf(data, style=style, password=password)
     lines_rows, rects_rows, curves_rows, pages_rows = [], [], [], []
     char_cols = ["page_number", "char_index"] + CHAR_COLUMNS

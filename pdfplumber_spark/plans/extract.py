@@ -18,8 +18,8 @@ Physical design (SURVEY.md §3.1, §4):
   column) and run their kernels on the parser's buffers
   (``CharArrays.from_interp``, ``tables.EdgeArrays.from_interp``, the
   interpreters' ``annot_rows``): no per-page pandas frames. The objects
-  plan writes its rows from the facade's records of the same buffers
-  (``api.object_records``), one frame per payload.
+  plan builds one frame per payload, column-wise from the same buffers:
+  the char columns and one frame per row kind.
 - Binary payloads are sniffed (%PDF- magic) and routed to the PDF or HTML
   kernel; malformed payloads yield ``status='error'`` rows with a reason
   instead of failing the job (reference analogue: the repair path,
@@ -31,7 +31,9 @@ Physical design (SURVEY.md §3.1, §4):
 
 from __future__ import annotations
 
+from collections import defaultdict
 from functools import partial
+from itertools import chain, count
 from typing import Callable, Iterator, Optional
 
 import numpy as np
@@ -40,6 +42,7 @@ from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..kernel import pdfparse
 from ..kernel.htmlstrip import extract_main_text_bytes
+from ..kernel.laparams import LAParams, analyze
 from ..kernel.pdfparse import pdf_to_frames  # noqa: F401 - perfbench.tracing hook name
 from ..kernel.words import (
     CharArrays,
@@ -240,64 +243,77 @@ def document_text(extracted: DataFrame) -> DataFrame:
 # --- object extraction ------------------------------------------------------
 
 _OBJ_COLS = [f.name for f in OBJECTS_SCHEMA.fields]
-_PTS = _OBJ_COLS.index("pts")
+_OBJ_NUM = {f.name for f in OBJECTS_SCHEMA.fields
+            if isinstance(f.dataType, (T.DoubleType, T.IntegerType))}
 
 
-def _object_row(url: str, rec: dict, obj_index) -> tuple:
-    """An object record as an ``OBJECTS_SCHEMA`` row (pts as {x, y})."""
-    row = [rec.get(c) for c in _OBJ_COLS]
-    row[0], row[3] = url, obj_index
-    if row[_PTS] is not None:
-        row[_PTS] = [{"x": float(x), "y": float(y)} for (x, y) in row[_PTS]]
-    return tuple(row)
+def _objects_frame(url: str, parts: list) -> pd.DataFrame:
+    """One ``OBJECTS_SCHEMA`` frame of ``parts`` (dicts of equal-length
+    columns, consumed): a numeric column as one array, NaN where a part
+    has none; any other as one list, None (as Arrow needs) where a part
+    has none. The frame keeps the arrays as they are (``copy=False``)."""
+    sizes = [len(p["obj_index"]) for p in parts]
+    data = {"url": url}
+    for c in _OBJ_COLS[1:]:
+        cols = [p.pop(c, None) for p in parts]  # freed once copied
+        if c in _OBJ_NUM:
+            data[c] = np.concatenate([
+                np.full(k, np.nan) if v is None else np.asarray(v)
+                for v, k in zip(cols, sizes)])
+        else:
+            data[c] = list(chain.from_iterable(
+                [None] * k if v is None else v for v, k in zip(cols, sizes)))
+    return pd.DataFrame(data, columns=_OBJ_COLS, copy=False)
 
 
 def _payload_to_objects(url: str, payload, laparams=None) -> list:
     """Per-payload objects rows, as ``[frame]`` in ``OBJECTS_SCHEMA``
-    (``[]`` for a non-PDF or unparseable payload): the facade's object
-    records (``api.object_records``) of every page's chars and parser
-    rows, kind by kind, ``obj_index`` the object's emit position. With
-    ``laparams`` (reference cli.py:56 ``--laparams`` + page.py:269-277), the
-    facade's layout analysis adds each page's textline*/textbox* rows and
-    renumbers char ``obj_index`` to pdfminer reading order, so ``ORDER BY
-    url, page_number, object_type, obj_index`` reproduces the reference
-    CSV row order. Shared by the Spark plan and the materialized
-    single-process oracle."""
-    from ..api import object_records, page_chars
-    from ..kernel.laparams import LAParams, analyze
-
-    if payload is None:
-        return []
-    data = bytes(payload)
-    if data[:5] != b"%PDF-":
+    (``[]`` for a non-PDF, unparseable or page-less payload): the char
+    columns and the parser's line, rect, curve and image rows, kind by
+    kind, ``obj_index`` the emit position. With ``laparams`` (reference
+    cli.py:56 + page.py:269-277), ``laparams.analyze`` adds each page's
+    textline*/textbox* rows and ranks char ``obj_index`` in reading order,
+    so ``ORDER BY url, page_number, object_type, obj_index`` is the
+    reference CSV row order. Shared by the Spark plan and the oracle."""
+    if payload is None or bytes(payload)[:5] != b"%PDF-":
         return []
     try:
-        interps = pdfparse.parse_pdf(data)
+        interps = pdfparse.parse_pdf(bytes(payload))
     except Exception:  # noqa: BLE001
         return []
+    if not interps:
+        return []
     lap = None if laparams is None else LAParams.resolve(laparams)
-    by_kind = {k: [] for k in ("char", "line", "rect", "curve", "image")}
-    layout = []
+    parts, layout = [], []  # parts: each page's chars, then each row kind
+    rows = {k: [] for k in pdfparse.ROW_COLUMNS}
     for it in interps:
         pn = it.page_number
-        ca = page_chars(it)
+        ca = CharArrays.from_interp(it, pdfparse.CHAR_COLUMNS)
         index = np.arange(ca.n)
         if lap is not None:
             lines, boxes, char_order = analyze(ca, lap)
             index[char_order] = np.arange(ca.n)  # reading rank
-            counters: dict = {}
-            for o in lines + boxes:
-                k = o["object_type"]
-                counters[k] = counters.get(k, -1) + 1
-                layout.append(_object_row(
-                    url, {**o, "page_number": pn}, counters[k]))
-        for kind, rows in by_kind.items():
-            recs = object_records(
-                kind, ca if kind == "char" else getattr(it, kind + "s"), pn)
-            idx = index if kind == "char" else range(len(recs))
-            rows.extend(_object_row(url, r, i) for r, i in zip(recs, idx))
-    rows = [r for k in by_kind.values() for r in k] + layout
-    return [pd.DataFrame(rows, columns=_OBJ_COLS)]
+            counters = defaultdict(count)  # obj_index per layout type
+            layout.extend({**o, "page_number": pn,
+                           "obj_index": next(counters[o["object_type"]])}
+                          for o in lines + boxes)
+        parts.append({"page_number": np.full(ca.n, pn), "obj_index": index,
+                      "object_type": np.array(["char"] * ca.n, dtype=object),
+                      **ca.extra})
+        for kind, kind_rows in rows.items():
+            kind_rows.extend((pn, i, kind) + row
+                             for i, row in enumerate(getattr(it, kind + "s")))
+    for kind, kind_rows in rows.items():
+        if kind_rows:
+            cols = dict(zip(["page_number", "obj_index", "object_type",
+                             *pdfparse.ROW_COLUMNS[kind]], zip(*kind_rows)))
+            if kind != "image":
+                cols["pts"] = [[{"x": float(x), "y": float(y)} for x, y in pts]
+                               for pts in cols["pts"]]
+            parts.append(cols)
+    if layout:
+        parts.append({c: [o[c] for o in layout] for c in layout[0]})
+    return [_objects_frame(url, parts)]
 
 
 def extract_objects(

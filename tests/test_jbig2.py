@@ -123,9 +123,8 @@ def test_pdf_end_to_end_pixels():
                     "seed": 77, "format": "jbig2"}],
     }])
     pg = api.open(io.BytesIO(pdf)).pages[0]
-    interp = pg._interp
-    (xo,) = interp.image_objs
-    d = _decode_one(interp.doc, xo)
+    (image,) = pg.images
+    d = _decode_one(pg._interp.doc, image["stream"].xo)
     assert d["status"] == "ok" and (d["width"], d["height"]) == (13, 11)
     got = list(d["samples"])
     assert got == image_codes(77, 13, 11, 1, 2)  # shared ground truth

@@ -311,8 +311,8 @@ def test_text_page_through_pdf_filter_path():
     out += (b"trailer\n<</Size %d/Root 1 0 R>>\nstartxref\n%d\n%%%%EOF\n"
             % (len(objs) + 1, xa))
     pg = api.open(io.BytesIO(bytes(out))).pages[0]
-    (xo,) = pg._interp.image_objs
-    d = _decode_one(pg._interp.doc, xo)
+    (image,) = pg.images
+    d = _decode_one(pg._interp.doc, image["stream"].xo)
     assert d["status"] == "ok"
     assert (d["width"], d["height"]) == (18, 9)
     oracle = _compose_oracle(syms, placements, 18, 9)
