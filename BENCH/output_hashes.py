@@ -35,6 +35,11 @@ and sf0.1 pages corpora use, 80 and 400 docs at seed 42, and two more
 seeds) plus ``ruled``: ``kernel.pdfgen`` pages whose tables are ruled by
 lines, rects or curves, with split and jittered rulings.
 
+The ``parser`` surface hashes, per corpus and for ``style`` False and True,
+every page's parser buffers below any rounding: ``ch_text``, ``ch_font``,
+``ch_cid``, ``mc_spans``, the bytes of ``ch_num``, ``ch_style`` and the
+line, rect and curve rows, so a parser refactor can show bit identity.
+
 The ``spark`` surface starts a local Spark session (4 cores) and hashes,
 per Spark plan (the payload plans of ``plans.extract``, ``plans.search`` and
 ``operators.multimodal``) over the ``ruled`` and ``seed7`` corpora, the
@@ -44,7 +49,7 @@ plans and of every ``__spark_entry__.queries()`` entry (over
 are normalised: ``#<id>`` expression ids, ``plan_id=<n>`` and the Python
 function name of ``MapInPandas`` are stripped.
 
-Name corpora (or ``spark``) after the checkout to hash only those. Run it
+Name corpora (or ``parser``, ``spark``) after the checkout to hash only those. Run it
 on two checkouts and diff the output.
 """
 
@@ -317,6 +322,30 @@ def facade_laparams(payload) -> list:
     return out
 
 
+def parser_buffers(payload, style: bool) -> list:
+    """Each page's parser buffers, the ``parser`` surface."""
+    from pdfplumber_spark.kernel.pdfparse import parse_pdf
+
+    return [(it.ch_text, it.ch_font, it.ch_cid, it.mc_spans,
+             it.ch_num.tobytes(), it.ch_style, it.lines, it.rects, it.curves)
+            for it in parse_pdf(bytes(payload), style=style)]
+
+
+def parser_hashes() -> None:
+    for name, rows in CORPORA.items():
+        hashes = {style: hashlib.sha256() for style in (False, True)}
+        for r in rows():
+            payload = r["html"]
+            if payload is None or bytes(payload)[:5] != b"%PDF-":
+                continue
+            for style, h in hashes.items():
+                h.update(repr(outcome(
+                    lambda: parser_buffers(payload, style))).encode())
+        for style, h in hashes.items():
+            print(f"{'parser':8s} {f'{name}[style={style}]':48s} "
+                  f"{h.hexdigest()[:16]}", flush=True)
+
+
 def spark_plans(pages) -> dict:
     """name -> DataFrame of every payload plan over ``pages``."""
     from pdfplumber_spark.operators import multimodal as M
@@ -394,10 +423,13 @@ def spark_hashes() -> None:
 
 
 def main() -> None:
-    names = sys.argv[2:] or list(CORPORA) + ["spark"]
+    names = sys.argv[2:] or list(CORPORA) + ["parser", "spark"]
     for name in names:
         if name == "spark":
             spark_hashes()
+            continue
+        if name == "parser":
+            parser_hashes()
             continue
         hashes: dict = {}
 

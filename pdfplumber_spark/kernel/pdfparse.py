@@ -151,6 +151,16 @@ _LEX_RE = re.compile(
 )
 
 
+# an array of plain numbers (font /Widths, /MediaBox, /W ranges, ...) from
+# after its '[' through its ']', each number ending at whitespace or the
+# ']'; refs, names, strings, nesting, comments and exponents do not match
+# and take the general path, which gives these arrays the same values
+_FLAT_NUMS_RE = re.compile(
+    rb"[\t\n\x0c\r ]*+"
+    rb"((?:[+\-]?+(?:\d++\.?+\d*+|\.\d++)(?:[\t\n\x0c\r ]++|(?=\])))*+)\]"
+)
+
+
 class Lexer:
     """Tokenizer for PDF object syntax."""
 
@@ -331,14 +341,16 @@ def _parse_from(lex: Lexer, tok):
                 d[str(k)] = v
         return d
     if tok == "[":
+        m = _FLAT_NUMS_RE.match(lex.data, lex.pos)
+        if m is not None:
+            lex.pos = m.end()
+            return [float(t) if b"." in t else int(t) for t in m[1].split()]
         arr = []
         while True:
-            save = lex.pos
             t = lex.next_token()
             if t == "]" or t is None:
                 break
-            lex.pos = save
-            arr.append(parse_object(lex))
+            arr.append(_parse_from(lex, t))
         return arr
     if isinstance(tok, int):
         # possible "num gen R" reference
@@ -483,6 +495,20 @@ def normalize_fontname(name: str) -> str:
     return str(prefix)[2:-1] + suffix_new
 
 
+class _Memo(dict):
+    """``fn(key)``, computed on a key's first lookup."""
+
+    __slots__ = ("fn",)
+
+    def __init__(self, fn):
+        super().__init__()
+        self.fn = fn
+
+    def __missing__(self, key):
+        v = self[key] = self.fn(key)
+        return v
+
+
 class Font:
     """Simple (1-byte) font: widths, encoding, ToUnicode."""
 
@@ -572,6 +598,9 @@ class Font:
         self.cid_default = 1000.0
         if self.multibyte:
             self._load_cid(doc, spec)
+        # cid -> char_width / to_unichr, each computed once per font
+        self.glyph_width = _Memo(self.char_width)
+        self.glyph_text = _Memo(self.to_unichr)
 
     def _load_cid(self, doc, spec):
         dfonts = doc.resolve(spec.get("DescendantFonts")) or []
@@ -741,19 +770,6 @@ class Font:
                 for i in range(0, len(raw), 2)
             ]
         return list(raw)
-
-    def byte_tables(self):
-        """(widths[256] ndarray, unichr[256] list) for single-byte fast
-        path; built lazily once per font."""
-        tbl = getattr(self, "_byte_tables", None)
-        if tbl is None:
-            w = np.array(
-                [self.widths.get(c, self.default_width) for c in range(256)],
-                dtype=np.float64,
-            ) * self.hscale
-            u = [self.to_unichr(c) for c in range(256)]
-            tbl = self._byte_tables = (w, u)
-        return tbl
 
     def char_width(self, cid: int) -> float:
         if self.multibyte:
@@ -1521,15 +1537,17 @@ class PDFDocument:
 
 # --- content stream interpretation -----------------------------------------
 
-# fast content-stream scanner: one regex pass for the overwhelmingly common
-# token kinds; strings/hex/dicts/arrays delegate to the full Lexer
+# fast content-stream scanner: one regex match per token, its leading
+# whitespace and comments included (possessively, as in _LEX_RE), for the
+# overwhelmingly common token kinds; strings/hex/dicts/arrays delegate to
+# the full Lexer. Only trailing whitespace and comments match nothing.
 _CONTENT_TOKEN_RE = re.compile(
-    rb"(?:[\s\x00]+|%[^\r\n]*)"
-    rb"|(?P<num>[+-]?(?:\d+\.\d*|\.\d+|\d+))"
+    rb"(?:[\s\x00]++|%[^\r\n]*+)*+"
+    rb"(?:(?P<num>[+-]?(?:\d+\.\d*|\.\d+|\d+))"
     rb"|/(?P<name>[^\s\x00/()<>\[\]{}%]*)"
     rb"|(?P<delim><<|\[|\(|<)"
     rb"|(?P<op>[^\s\x00/()<>\[\]{}%]+)"
-    rb"|(?P<skip>[\]>}{)])"
+    rb"|(?P<skip>[\]>}{)]))"
 )
 
 
@@ -1632,14 +1650,13 @@ def tokenize_content(data: bytes):
         lex.pos = start_inner - 1
         return lex.next_token(), lex.pos
 
-    while pos < n:
+    while True:
         m = match(data, pos)
         if m is None:
-            pos += 1
-            continue
+            return
         pos = m.end()
         g = m.lastgroup
-        if g is None or g == "skip":
+        if g == "skip":
             continue
         if g == "num":
             tok = m.group("num")
@@ -1667,53 +1684,45 @@ def tokenize_content(data: bytes):
             elif d == b"[":
                 # inline flat-array parse (TJ arrays: numbers + strings)
                 arr = []
-                while pos < n:
+                while True:
                     m2 = match(data, pos)
                     if m2 is None:
-                        pos += 1
-                        continue
+                        pos = n
+                        break
                     g2 = m2.lastgroup
-                    end2 = m2.end()
-                    if g2 is None:
-                        pos = end2
-                        continue
+                    pos = m2.end()
                     if g2 == "skip":
-                        pos = end2
-                        if m2.group() == b"]":
+                        if m2.group("skip") == b"]":
                             break
-                        continue
-                    if g2 == "num":
+                    elif g2 == "num":
                         t = m2.group("num")
                         arr.append(float(t) if b"." in t else int(t))
-                        pos = end2
                     elif g2 == "name":
-                        arr.append(Name(m2.group("name").decode("latin-1")))
-                        pos = end2
+                        arr.append(_intern_name(m2.group("name")))
                     elif g2 == "delim":
                         d2 = m2.group("delim")
                         if d2 == b"(":
-                            val, pos = read_string(end2)
+                            val, pos = read_string(pos)
                             arr.append(val)
                         elif d2 == b"<":
-                            lex.pos = m2.start()
+                            lex.pos = m2.start("delim")
                             arr.append(lex.next_token())
                             pos = lex.pos
                         else:  # << or nested [
-                            lex.pos = end2
+                            lex.pos = pos
                             arr.append(
                                 _parse_from(lex, "<<" if d2 == b"<<" else "[")
                             )
                             pos = lex.pos
                     else:  # op keyword inside array (rare; e.g. R)
                         arr.append(("kw", m2.group("op").decode("latin-1")))
-                        pos = end2
                 yield arr
             elif d == b"<<":
                 lex.pos = pos
                 yield _parse_from(lex, "<<")
                 pos = lex.pos
             else:  # < hex string
-                lex.pos = m.start()
+                lex.pos = m.start("delim")
                 yield lex.next_token()
                 pos = lex.pos
 
@@ -1739,6 +1748,35 @@ IMAGE_COLUMNS = [
     "height", "srcwidth", "srcheight", "bits", "imagemask", "colorspace",
     "stream",
 ]
+
+
+def _chain_sums(terms, chain, pos, chain_len, at):
+    """Each glyph's running x: the sum of its text chain's terms before
+    its own slot ``at``. ``terms`` holds one row of slots per glyph, and
+    ``chain``/``pos`` place each glyph in its chain. A chain's row is 0.0
+    followed by its glyphs' slots, zero-padded at the end, and one cumsum
+    over the rows adds each chain's terms one at a time, in order. Chains
+    of very different lengths go to separate blocks (by power-of-two row
+    width), so padding stays under half of a block."""
+    n_slots = terms.shape[1]
+    width = 1 + chain_len * n_slots
+
+    def block_sums(sel, row, n_rows):
+        p = pos[sel]
+        block = np.zeros((n_rows, width[chain[sel]].max()), dtype=np.float64)
+        block[row[:, None], 1 + p[:, None] * n_slots + np.arange(n_slots)] = (
+            terms[sel])
+        return np.cumsum(block, axis=1)[row, p * n_slots + at]
+
+    if len(width) * width.max() <= 2 * width.sum() + 4096:
+        return block_sums(slice(None), chain, len(width))
+    key = np.frexp(width)[1][chain]
+    x = np.empty(len(chain), dtype=np.float64)
+    for k in np.unique(key):
+        sel = np.flatnonzero(key == k)
+        rows, row = np.unique(chain[sel], return_inverse=True)
+        x[sel] = block_sums(sel, row, len(rows))
+    return x
 
 
 class PageInterpreter:
@@ -1797,31 +1835,32 @@ class PageInterpreter:
         self.resources = res
         self.fonts = self._load_fonts(res)
         self.contents = self._load_content(page_spec)
-        # output accumulators — chars go into flat typed columns (one
-        # array('d') extend per char; no per-char tuple boxing)
-        from array import array
-
+        # output accumulators: text, font and cid append per string run;
+        # the geometry is deferred to one vectorized pass per page
+        # (_emit_chars), which `ch_num` and `ch_style` run on first read
         self.ch_text: List[str] = []
         self.ch_font: List[str] = []
         # per-char raw CID (emit order == char_index), interpreter-private:
         # display joins through it to render CID-keyed embedded fonts;
         # NOT a chars-frame column (reference parity: no 'cid' attr)
         self.ch_cid: List[int] = []
-        # 12 doubles per char (_CH_NUM_FIELDS): fast-path string runs land
-        # as whole (n,12) blocks with NO intermediate copy; slow-path chars
-        # buffer as tuples and flush to a block on demand. `ch_num` exposes
-        # the concatenated C-contiguous buffer (np.frombuffer-compatible).
-        self._num_blocks: List[np.ndarray] = []
-        self._num_slow: List[tuple] = []
-        self._ch_num_cache = None
-        self.ch_style: List[tuple] = []  # (matrix, stroke, fill) if style
+        self._ch_width: List[float] = []  # per char: font.char_width(cid)
+        # per string run: its chars, chain, position in the chain,
+        # needcharspace and numeric state (_render_string) and, if style,
+        # its (a, b, c, d, stroke, fill, ncs, stroke pattern, fill pattern)
+        self._runs: List[tuple] = []
+        self._run_style: List[tuple] = []
+        # text chains, the runs sharing one x accumulation: [chars, pending
+        # TJ kern terms]; kerns as (char index, slots before it, term)
+        self._chains: List[list] = []
+        self._kerns: List[tuple] = []
+        self._emitted = None  # (ch_num, ch_style) once built
         # marked-content runs: (chars_emitted_before_change, mcid, tag)
         # (page.py:128-176 semantics, recorded as spans not per-char)
         self.mc_spans: List[tuple] = []
         # object kinds in FIRST-paint order (reference Page.objects dict
         # insertion order; drives to_csv/to_json type ordering)
         self.kind_order: List[str] = []
-        self._style_extra = ("DeviceGray", None, None)
         # current marked-content (mcid, tag) for path/image rows
         self._cur_mc: tuple = (None, None)
         self.lines: List[tuple] = []
@@ -1857,25 +1896,20 @@ class PageInterpreter:
     def n_chars(self) -> int:
         return len(self.ch_text)
 
-    def _flush_slow_nums(self) -> None:
-        if self._num_slow:
-            self._num_blocks.append(
-                np.array(self._num_slow, dtype=np.float64).reshape(-1, 12)
-            )
-            self._num_slow = []
-
     @property
     def ch_num(self) -> np.ndarray:
-        if self._ch_num_cache is None:
-            self._flush_slow_nums()
-            blocks = self._num_blocks
-            if not blocks:
-                self._ch_num_cache = np.empty((0, 12), dtype=np.float64)
-            elif len(blocks) == 1:
-                self._ch_num_cache = np.ascontiguousarray(blocks[0])
-            else:
-                self._ch_num_cache = np.concatenate(blocks)
-        return self._ch_num_cache
+        """(n_chars, 12) C-contiguous doubles, :data:`NUM_FIELDS` order."""
+        if self._emitted is None:
+            self._emitted = self._emit_chars()
+        return self._emitted[0]
+
+    @property
+    def ch_style(self) -> List[tuple]:
+        """Per char (matrix, stroke, fill, ncs, stroke pattern, fill
+        pattern) as :data:`STYLE_ATTRS`; empty unless ``style``."""
+        if self._emitted is None:
+            self._emitted = self._emit_chars()
+        return self._emitted[1]
 
     def _load_content(self, page_spec) -> bytes:
         c = self.doc.resolve(page_spec.get("Contents"))
@@ -2002,29 +2036,20 @@ class PageInterpreter:
         leading = 0.0
         rise = 0.0
         tm = MATRIX_ID
-        lm = (0.0, 0.0)
+        # the text chain the next glyph run continues (pdfminer's
+        # linematrix x); None: a new chain starts at x = 0
+        chain = None
         path: List[List[Tuple[str, float, float]]] = []
         cur: List[Tuple[str, float, float]] = []
 
-        def show(raw: bytes):
-            nonlocal lm
-            if font is None or not isinstance(raw, (bytes, bytearray)):
-                return
-            self._style_extra = (ncs_name, stroke_pattern, fill_pattern)
-            lm = self._render_string(
-                [raw], tm, ctm, lm, font, fontsize, scaling, charspace,
-                wordspace, rise, stroke_color, fill_color,
-            )
-
-        def show_seq(seq):
-            nonlocal lm
-            if font is None:
-                return
-            self._style_extra = (ncs_name, stroke_pattern, fill_pattern)
-            lm = self._render_string(
-                seq, tm, ctm, lm, font, fontsize, scaling, charspace,
-                wordspace, rise, stroke_color, fill_color,
-            )
+        def show(seq):
+            nonlocal chain
+            if font is not None:
+                chain = self._render_string(
+                    seq, tm, ctm, chain, font, fontsize, scaling, charspace,
+                    wordspace, rise, (stroke_color, fill_color, ncs_name,
+                                      stroke_pattern, fill_pattern),
+                )
 
         def paint(stroke: bool, fill: bool, evenodd: bool = False):
             nonlocal path, cur
@@ -2071,7 +2096,7 @@ class PageInterpreter:
                             else [], ph)
                 elif op == "BT":
                     tm = MATRIX_ID
-                    lm = (0.0, 0.0)
+                    chain = None
                 elif op == "ET":
                     pass
                 elif op == "Tf":
@@ -2081,19 +2106,19 @@ class PageInterpreter:
                 elif op == "Td":
                     ty = npop(); tx = npop()
                     tm = mat_translate(tm, tx, ty)
-                    lm = (0.0, 0.0)
+                    chain = None
                 elif op == "TD":
                     ty = npop(); tx = npop()
                     leading = -ty
                     tm = mat_translate(tm, tx, ty)
-                    lm = (0.0, 0.0)
+                    chain = None
                 elif op == "Tm":
                     f_, e_, d_, c_, b_, a_ = (npop() for _ in range(6))
                     tm = (a_, b_, c_, d_, e_, f_)
-                    lm = (0.0, 0.0)
+                    chain = None
                 elif op == "T*":
                     tm = mat_translate(tm, 0, -leading)
-                    lm = (0.0, 0.0)
+                    chain = None
                 elif op == "TL":
                     leading = npop()
                 elif op == "Tc":
@@ -2105,20 +2130,25 @@ class PageInterpreter:
                 elif op == "Ts":
                     rise = float(stack.pop())
                 elif op == "Tj":
-                    show(stack.pop())
+                    raw = stack.pop()
+                    if isinstance(raw, (bytes, bytearray)):
+                        show((raw,))
                 elif op == "'":
                     tm = mat_translate(tm, 0, -leading)
-                    lm = (0.0, 0.0)
-                    show(stack.pop())
+                    chain = None
+                    raw = stack.pop()
+                    if isinstance(raw, (bytes, bytearray)):
+                        show((raw,))
                 elif op == '"':
                     s = stack.pop()
                     charspace = float(stack.pop())
                     wordspace = float(stack.pop())
                     tm = mat_translate(tm, 0, -leading)
-                    lm = (0.0, 0.0)
-                    show(s)
+                    chain = None
+                    if isinstance(s, (bytes, bytearray)):
+                        show((s,))
                 elif op == "TJ":
-                    show_seq(stack.pop())
+                    show(stack.pop())
                 elif op == "m":
                     y = float(stack.pop()); x = float(stack.pop())
                     if cur:
@@ -2300,144 +2330,150 @@ class PageInterpreter:
             except (IndexError, ValueError, TypeError):
                 stack.clear()
 
-    def _render_string(self, seq, tm, ctm, lm, font, fontsize, scaling_pct,
-                       charspace_raw, wordspace_raw, rise, stroke_color,
-                       fill_color):
-        """pdfminer-equivalent horizontal text rendering."""
-        matrix = mat_mult(tm, ctm)
+    def _render_string(self, seq, tm, ctm, chain, font, fontsize,
+                       scaling_pct, charspace_raw, wordspace_raw, rise, style):
+        """Record one text-showing operator (pdfminer's render_string) for
+        the page's emission pass, :meth:`_emit_chars`: text, font and cid
+        append now (``mc_spans`` count chars), and each string run records
+        its state, its place in its text ``chain`` and the TJ kerning before
+        it. Returns the chain, which later runs continue until the next
+        line-matrix reset. ``style``: (stroke, fill, ncs, stroke pattern,
+        fill pattern)."""
         scaling = scaling_pct * 0.01
         charspace = charspace_raw * scaling
         wordspace = 0.0 if font.multibyte else wordspace_raw * scaling
         dxscale = 0.001 * fontsize * scaling
-        x, y = lm
+        if chain is None:
+            chain = len(self._chains)
+            self._chains.append([0, []])
+        state = self._chains[chain]
+        num = None
         needcharspace = False
-        a, b, c, d, e, f = matrix
-        # fast path: axis-aligned positively-scaled matrix + 1-byte font +
-        # no style capture — whole string run becomes numpy prefix sums
-        fast = (
-            not self.style
-            and not font.multibyte
-            and b == 0.0
-            and c == 0.0
-            and a > 0.0
-            and d > 0.0
-        )
         for item in seq:
             if isinstance(item, (int, float)):
-                x -= item * dxscale
+                state[1].append(-(item * dxscale))
                 needcharspace = True
                 continue
-            if not isinstance(item, (bytes, bytearray)):
+            if not isinstance(item, (bytes, bytearray)) or not item:
                 continue
-            raw = bytes(item)
-            if fast and len(raw) >= 4:
-                x = self._emit_string_fast(
-                    raw, font, fontsize, scaling, rise, x, y,
-                    a, d, e, f, charspace, wordspace, needcharspace,
+            if num is None:
+                a, b, c, d, e, f = mat_mult(tm, ctm)
+                descent = font.get_descent() * fontsize
+                y = 0.0  # render_string moves a chain along x only
+                num = (
+                    fontsize, scaling, charspace, wordspace, a, b, e, f,
+                    y * c, y * d,
+                    a * 0 + c * (descent + rise), b * 0 + d * (descent + rise),
+                    c * (descent + rise + fontsize),
+                    d * (descent + rise + fontsize),
+                    1.0 if (0 < a * d * scaling and b * c <= 0) else 0.0,
                 )
-                needcharspace = True
-                continue
-            for cid in font.decode(raw):
-                if needcharspace:
-                    x += charspace
-                x += self._emit_char(
-                    mat_translate(matrix, x, y), font, fontsize, scaling,
-                    rise, cid, stroke_color, fill_color,
-                )
-                if cid == 32 and wordspace:
-                    x += wordspace
-                needcharspace = True
-        return (x, y)
+                stroke, fill, *names = style
+                run_style = (
+                    a, b, c, d, None if stroke is None else list(stroke),
+                    None if fill is None else list(fill), *names)
+            n0 = len(self.ch_text)
+            cids = font.decode(item) if font.multibyte else item
+            self.ch_text.extend(map(font.glyph_text.__getitem__, cids))
+            self._ch_width.extend(map(font.glyph_width.__getitem__, cids))
+            n = len(self.ch_text) - n0
+            self.ch_cid.extend(cids)
+            self.ch_font.extend([font.basefont] * n)
+            kerns = state[1]
+            if kerns:
+                self._kerns.extend(
+                    (n0, len(kerns) - i, t) for i, t in enumerate(kerns))
+                state[1] = []
+            self._runs.append((n, chain, state[0], needcharspace, *num))
+            if self.style:
+                self._run_style.append(run_style)
+            state[0] += n
+            needcharspace = True
+        if num is not None:
+            self._note_kind("char")
+            self._emitted = None
+        return chain
 
-    def _emit_string_fast(self, raw, font, fontsize, scaling, rise, x, y,
-                          a, d, e, f, charspace, wordspace, needcharspace):
-        """Vectorized char emission for one string run (see _render_string
-        fast-path conditions). Bit-identical to the per-char path: same
-        operations in the same order per char (prefix sums of the identical
-        additive terms)."""
-        wvec, uvec = font.byte_tables()
-        cids = np.frombuffer(raw, dtype=np.uint8)
-        n = len(cids)
-        adv = wvec[cids] * (fontsize * scaling)
-        pre = np.full(n, charspace)
-        if not needcharspace:
-            pre[0] = 0.0
-        ws = (
-            np.where(cids == 32, wordspace, 0.0)
-            if wordspace
-            else np.zeros(n)
-        )
-        # per-char emit position: x + cumsum(pre) + cumsum(adv+ws) shifted
-        emit_x = x + np.cumsum(pre)
-        emit_x[1:] += np.cumsum(adv + ws)[:-1]
-        x_end = float(emit_x[-1] + adv[-1] + ws[-1])
+    def _emit_chars(self):
+        """(ch_num, ch_style) of every recorded run, in one vectorized pass.
 
-        # float op order matches the per-char path exactly (bit identity):
-        # e_i = x*a + e;  f_i = y*d + f;  corner = a*px + e_i / d*py + f_i
-        descent = font.get_descent() * fontsize
-        f_i = y * d + f
-        y0d = d * (descent + rise) + f_i
-        y1d = d * (descent + rise + fontsize) + f_i
-        x0d = emit_x * a + e
-        x1d = a * adv + x0d
-        top = self._flip_h - y1d
-        bottom = self._flip_h - y0d
-        size = y1d - y0d  # upright by construction (a>0, d>0)
-
-        self.ch_text.extend(uvec[cid] for cid in cids)
-        self.ch_font.extend([font.basefont] * n)
-        self.ch_cid.extend(int(c) for c in cids)
+        A glyph's x follows pdfminer's render_string, term by term: a text
+        chain starts at x = 0; before each glyph it adds the TJ kerning
+        terms that precede it (-kern * 0.001 * fontsize * scaling, in array
+        order), then the charspace (except on the first glyph of an
+        operator's strings when no kern came first); the glyph sits at that
+        x; then x adds its advance (width * fontsize * scaling) and, after
+        a 32 byte, the wordspace. Each chain's terms fill one row, in that
+        order and zero-padded only at its end, and a row-wise cumsum adds
+        them one at a time as the per-glyph loop did (a zero term changes
+        no sum: a chain's x starts at +0.0, so it is never -0.0). The glyph
+        box is then the run's text matrix applied elementwise, in
+        mat_translate / mat_apply operation order, so every column equals
+        a per-glyph evaluation bit for bit."""
+        n = len(self.ch_text)
+        if not n:
+            return np.empty((0, 12), dtype=np.float64), []
+        runs = np.array(self._runs, dtype=np.float64)
+        lens = runs[:, 0].astype(np.int64)
+        first = np.cumsum(lens) - lens
+        (fontsize, scaling, charspace, wordspace, a, b, e, f, yc, yd,
+         k0x, k0y, cdr1, ddr1, upright) = np.repeat(runs[:, 4:], lens, axis=0).T
+        adv = np.array(self._ch_width, dtype=np.float64) * fontsize * scaling
+        # per glyph: its kern slots (as many as the page's longest kern
+        # run, leading ones 0.0), charspace, advance, wordspace; a slot no
+        # run on the page uses is left out
+        has_pre = bool(runs[:, 6].any())
+        cols = [adv]
+        if has_pre:
+            pre = charspace.copy()
+            pre[first[runs[:, 3] == 0]] = 0.0
+            cols.insert(0, pre)
+        if runs[:, 7].any():
+            cols.append(np.where(np.array(self.ch_cid) == 32, wordspace, 0.0))
+        kerns = np.array(self._kerns, dtype=np.float64).reshape(-1, 3)
+        nk = int(kerns[:, 1].max()) if len(kerns) else 0
+        terms = np.zeros((n, nk + len(cols)), dtype=np.float64)
+        terms[:, nk:] = np.column_stack(cols)
+        if nk:
+            terms[kerns[:, 0].astype(np.int64),
+                  nk - kerns[:, 1].astype(np.int64)] = kerns[:, 2]
+        x = _chain_sums(
+            terms, np.repeat(runs[:, 1].astype(np.int64), lens),
+            np.repeat(runs[:, 2].astype(np.int64) - first, lens) + np.arange(n),
+            np.array([ch[0] for ch in self._chains], dtype=np.int64),
+            nk + has_pre)
+        # mat_translate(matrix, x, y), then mat_apply at the box corners
+        ex = x * a + yc + e
+        fy = x * b + yd + f
+        p0x, p0y = k0x + ex, k0y + fy
+        p1x, p1y = a * adv + cdr1 + ex, b * adv + ddr1 + fy
+        xo, yo = p0x <= p1x, p0y <= p1y
+        x0, x1 = np.where(xo, p0x, p1x), np.where(xo, p1x, p0x)
+        y0, y1 = np.where(yo, p0y, p1y), np.where(yo, p1y, p0y)
+        top = self._flip_h - y1
         block = np.empty((n, 12), dtype=np.float64)
-        block[:, 0] = size
+        block[:, 0] = np.where(upright != 0, y1 - y0, x1 - x0)
         block[:, 1] = adv
-        block[:, 2] = 1.0  # upright
-        block[:, 3] = x0d
-        block[:, 4] = x1d
-        block[:, 5] = y0d
-        block[:, 6] = y1d
+        block[:, 2] = upright
+        block[:, 3] = x0
+        block[:, 4] = x1
+        block[:, 5] = y0
+        block[:, 6] = y1
         block[:, 7] = top
-        block[:, 8] = bottom
+        block[:, 8] = self._flip_h - y0
         block[:, 9] = self.initial_doctop + top
-        block[:, 10] = x1d - x0d
-        block[:, 11] = y1d - y0d
-        self._flush_slow_nums()
-        self._num_blocks.append(block)
-        self._ch_num_cache = None
-        return x_end
-
-    def _emit_char(self, matrix, font, fontsize, scaling, rise, cid,
-                   stroke_color, fill_color) -> float:
-        textwidth = font.char_width(cid)
-        adv = textwidth * fontsize * scaling
-        descent = font.get_descent() * fontsize
-        (p0x, p0y) = mat_apply(matrix, 0, descent + rise)
-        (p1x, p1y) = mat_apply(matrix, adv, descent + rise + fontsize)
-        x0d, x1d = (p0x, p1x) if p0x <= p1x else (p1x, p0x)
-        y0d, y1d = (p0y, p1y) if p0y <= p1y else (p1y, p0y)
-        a, b, c, d, e, f = matrix
-        upright = 1 if (0 < a * d * scaling and b * c <= 0) else 0
-        size = (y1d - y0d) if upright else (x1d - x0d)
-        text = font.to_unichr(cid)
-        top = self._flip(y1d)
-        bottom = self._flip(y0d)
-        self._note_kind("char")
-        self.ch_text.append(text)
-        self.ch_font.append(font.basefont)
-        self.ch_cid.append(int(cid))
-        self._num_slow.append(
-            (size, adv, float(upright), x0d, x1d, y0d, y1d, top, bottom,
-             self.initial_doctop + top, x1d - x0d, y1d - y0d)
-        )
-        self._ch_num_cache = None
+        block[:, 10] = x1 - x0
+        block[:, 11] = y1 - y0
+        style = []
         if self.style:
-            ncs_name, stroke_pattern, fill_pattern = self._style_extra
-            self.ch_style.append(
-                (list(matrix),
-                 list(stroke_color) if stroke_color is not None else None,
-                 list(fill_color) if fill_color is not None else None,
-                 ncs_name, stroke_pattern, fill_pattern)
-            )
-        return adv
+            ex, fy = ex.tolist(), fy.tolist()
+            i = 0
+            for (cnt, *_), (a_, b_, c_, d_, *rest) in zip(self._runs,
+                                                          self._run_style):
+                style.extend(([a_, b_, c_, d_, ex[j], fy[j]], *rest)
+                             for j in range(i, i + cnt))
+                i += cnt
+        return block, style
 
     def _emit_image(self, name, xo, ctm):
         """Image placement row (``page.py`` image semantics): the CTM maps
