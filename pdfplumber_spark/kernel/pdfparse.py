@@ -208,7 +208,8 @@ class Lexer:
         return self._next_token_slow()
 
     def _next_token_slow(self):
-        """Strings, hex strings, bare '>' and EOF (the uncommon tokens)."""
+        """What _LEX_RE leaves: EOF, strings, hex strings, a bare '>' and
+        a keyword opening with ')'."""
         self._skip_ws()
         d = self.data
         n = len(d)
@@ -216,16 +217,6 @@ class Lexer:
             return None
         c = d[self.pos]
         start = self.pos
-        if c == 0x2F:  # /Name
-            self.pos += 1
-            while self.pos < n and d[self.pos] not in _WS and d[self.pos] not in _DELIM:
-                self.pos += 1
-            raw = d[start + 1 : self.pos]
-            # #xx escapes
-            name = re.sub(
-                rb"#([0-9A-Fa-f]{2})", lambda m: bytes([int(m.group(1), 16)]), raw
-            )
-            return Name(name.decode("latin-1"))
         if c == 0x28:  # ( string
             self.pos += 1
             depth = 1
@@ -273,50 +264,20 @@ class Lexer:
                     out.append(ch)
                     self.pos += 1
             return bytes(out)
-        if c == 0x3C:  # << or <hex>
-            if self.pos + 1 < n and d[self.pos + 1] == 0x3C:
-                self.pos += 2
-                return "<<"
+        if c == 0x3C:  # <hex>, unterminated: to the end of the data
             self.pos += 1
             end = d.find(b">", self.pos)
+            if end < 0:
+                end = n
             hexs = re.sub(rb"[^0-9A-Fa-f]", b"", d[self.pos : end])
             if len(hexs) % 2:
                 hexs += b"0"
             self.pos = end + 1
             return bytes.fromhex(hexs.decode())
-        if c == 0x3E:  # >>
-            if self.pos + 1 < n and d[self.pos + 1] == 0x3E:
-                self.pos += 2
-                return ">>"
-            self.pos += 1
-            return ">"
-        if c == 0x5B:
-            self.pos += 1
-            return "["
-        if c == 0x5D:
-            self.pos += 1
-            return "]"
-        if c == 0x7B:
-            self.pos += 1
-            return "{"
-        if c == 0x7D:
-            self.pos += 1
-            return "}"
-        if (0x30 <= c <= 0x39) or c in (0x2B, 0x2D, 0x2E):
-            self.pos += 1
-            while self.pos < n and (
-                0x30 <= d[self.pos] <= 0x39 or d[self.pos] in (0x2E, 0x2D, 0x2B, 0x45, 0x65)
-            ):
-                self.pos += 1
-            tok = d[start : self.pos]
-            try:
-                if b"." in tok or b"e" in tok or b"E" in tok:
-                    return float(tok)
-                return int(tok)
-            except ValueError:
-                return 0
-        # keyword
         self.pos += 1
+        if c == 0x3E:
+            return ">"
+        # keyword
         while self.pos < n and d[self.pos] not in _WS and d[self.pos] not in _DELIM:
             self.pos += 1
         kw = d[start : self.pos].decode("latin-1")
@@ -1640,32 +1601,24 @@ def tokenize_content(data: bytes):
     lex = Lexer(data, 0)
     match = _CONTENT_TOKEN_RE.match
     str_match = _PLAIN_STR_RE.match
-
-    def read_string(start_inner):
-        """Bytes of a ( string starting after the paren; returns (val, pos)."""
-        m3 = str_match(data, start_inner)
-        e = m3.end()
-        if e < n and data[e] == 0x29:  # ')' with no escapes/nesting
-            return data[start_inner:e], e + 1
-        lex.pos = start_inner - 1
-        return lex.next_token(), lex.pos
+    arr = None  # the open top-level array (TJ operands), if any
 
     while True:
         m = match(data, pos)
         if m is None:
+            if arr is not None:
+                yield arr
             return
         pos = m.end()
         g = m.lastgroup
-        if g == "skip":
-            continue
         if g == "num":
-            tok = m.group("num")
-            yield float(tok) if b"." in tok else int(tok)
+            t = m.group("num")
+            tok = float(t) if b"." in t else int(t)
         elif g == "name":
-            yield _intern_name(m.group("name"))
+            tok = _intern_name(m.group("name"))
         elif g == "op":
             op = m.group("op").decode("latin-1")
-            if op == "BI":
+            if op == "BI" and arr is None:
                 # inline image (ISO 32000 §8.9.7): parse the abbreviated
                 # dict up to ID, slice the sample data, yield one token
                 try:
@@ -1675,56 +1628,34 @@ def tokenize_content(data: bytes):
                     end = data.find(b"EI", pos)
                     pos = n if end == -1 else end + 2
                 continue
-            yield _intern_kw(op)
+            tok = _intern_kw(op)
+        elif g == "skip":
+            if arr is None or m.group("skip") != b"]":
+                continue
+            tok, arr = arr, None
         else:  # delim: ( < << [
             d = m.group("delim")
             if d == b"(":
-                val, pos = read_string(pos)
-                yield val
-            elif d == b"[":
-                # inline flat-array parse (TJ arrays: numbers + strings)
+                e = str_match(data, pos).end()
+                if e < n and data[e] == 0x29:  # ')': no escapes or nesting
+                    tok, pos = data[pos:e], e + 1
+                else:
+                    lex.pos = pos - 1
+                    tok, pos = lex.next_token(), lex.pos
+            elif d == b"[" and arr is None:
                 arr = []
-                while True:
-                    m2 = match(data, pos)
-                    if m2 is None:
-                        pos = n
-                        break
-                    g2 = m2.lastgroup
-                    pos = m2.end()
-                    if g2 == "skip":
-                        if m2.group("skip") == b"]":
-                            break
-                    elif g2 == "num":
-                        t = m2.group("num")
-                        arr.append(float(t) if b"." in t else int(t))
-                    elif g2 == "name":
-                        arr.append(_intern_name(m2.group("name")))
-                    elif g2 == "delim":
-                        d2 = m2.group("delim")
-                        if d2 == b"(":
-                            val, pos = read_string(pos)
-                            arr.append(val)
-                        elif d2 == b"<":
-                            lex.pos = m2.start("delim")
-                            arr.append(lex.next_token())
-                            pos = lex.pos
-                        else:  # << or nested [
-                            lex.pos = pos
-                            arr.append(
-                                _parse_from(lex, "<<" if d2 == b"<<" else "[")
-                            )
-                            pos = lex.pos
-                    else:  # op keyword inside array (rare; e.g. R)
-                        arr.append(("kw", m2.group("op").decode("latin-1")))
-                yield arr
-            elif d == b"<<":
-                lex.pos = pos
-                yield _parse_from(lex, "<<")
-                pos = lex.pos
-            else:  # < hex string
+                continue
+            elif d == b"<":  # hex string
                 lex.pos = m.start("delim")
-                yield lex.next_token()
-                pos = lex.pos
+                tok, pos = lex.next_token(), lex.pos
+            else:  # << or a nested [: the object parser
+                lex.pos = pos
+                tok, pos = _parse_from(lex, "<<" if d == b"<<" else "["), lex.pos
+        if arr is None:
+            yield tok
+        else:
+            arr.append(tok)
+
 
 CHAR_COLUMNS = [
     "text", "fontname", "size", "adv", "upright",
@@ -2051,6 +1982,10 @@ class PageInterpreter:
                                       stroke_pattern, fill_pattern),
                 )
 
+        def show_string(raw):
+            if isinstance(raw, (bytes, bytearray)):
+                show((raw,))
+
         def paint(stroke: bool, fill: bool, evenodd: bool = False):
             nonlocal path, cur
             if cur:
@@ -2130,23 +2065,18 @@ class PageInterpreter:
                 elif op == "Ts":
                     rise = float(stack.pop())
                 elif op == "Tj":
-                    raw = stack.pop()
-                    if isinstance(raw, (bytes, bytearray)):
-                        show((raw,))
+                    show_string(stack.pop())
                 elif op == "'":
                     tm = mat_translate(tm, 0, -leading)
                     chain = None
-                    raw = stack.pop()
-                    if isinstance(raw, (bytes, bytearray)):
-                        show((raw,))
+                    show_string(stack.pop())
                 elif op == '"':
                     s = stack.pop()
                     charspace = float(stack.pop())
                     wordspace = float(stack.pop())
                     tm = mat_translate(tm, 0, -leading)
                     chain = None
-                    if isinstance(s, (bytes, bytearray)):
-                        show((s,))
+                    show_string(s)
                 elif op == "TJ":
                     show(stack.pop())
                 elif op == "m":
@@ -2373,7 +2303,7 @@ class PageInterpreter:
                     a, b, c, d, None if stroke is None else list(stroke),
                     None if fill is None else list(fill), *names)
             n0 = len(self.ch_text)
-            cids = font.decode(item) if font.multibyte else item
+            cids = font.decode(item)
             self.ch_text.extend(map(font.glyph_text.__getitem__, cids))
             self._ch_width.extend(map(font.glyph_width.__getitem__, cids))
             n = len(self.ch_text) - n0
@@ -2414,21 +2344,21 @@ class PageInterpreter:
         if not n:
             return np.empty((0, 12), dtype=np.float64), []
         runs = np.array(self._runs, dtype=np.float64)
-        lens = runs[:, 0].astype(np.int64)
+        lens, chain, start, needcharspace = runs[:, :4].T.astype(np.int64)
         first = np.cumsum(lens) - lens
         (fontsize, scaling, charspace, wordspace, a, b, e, f, yc, yd,
          k0x, k0y, cdr1, ddr1, upright) = np.repeat(runs[:, 4:], lens, axis=0).T
         adv = np.array(self._ch_width, dtype=np.float64) * fontsize * scaling
         # per glyph: its kern slots (as many as the page's longest kern
         # run, leading ones 0.0), charspace, advance, wordspace; a slot no
-        # run on the page uses is left out
-        has_pre = bool(runs[:, 6].any())
+        # glyph on the page uses is left out
+        has_pre = bool(charspace.any())
         cols = [adv]
         if has_pre:
             pre = charspace.copy()
-            pre[first[runs[:, 3] == 0]] = 0.0
+            pre[first[needcharspace == 0]] = 0.0
             cols.insert(0, pre)
-        if runs[:, 7].any():
+        if wordspace.any():
             cols.append(np.where(np.array(self.ch_cid) == 32, wordspace, 0.0))
         kerns = np.array(self._kerns, dtype=np.float64).reshape(-1, 3)
         nk = int(kerns[:, 1].max()) if len(kerns) else 0
@@ -2438,8 +2368,8 @@ class PageInterpreter:
             terms[kerns[:, 0].astype(np.int64),
                   nk - kerns[:, 1].astype(np.int64)] = kerns[:, 2]
         x = _chain_sums(
-            terms, np.repeat(runs[:, 1].astype(np.int64), lens),
-            np.repeat(runs[:, 2].astype(np.int64) - first, lens) + np.arange(n),
+            terms, np.repeat(chain, lens),
+            np.repeat(start - first, lens) + np.arange(n),
             np.array([ch[0] for ch in self._chains], dtype=np.int64),
             nk + has_pre)
         # mat_translate(matrix, x, y), then mat_apply at the box corners
@@ -2451,19 +2381,10 @@ class PageInterpreter:
         x0, x1 = np.where(xo, p0x, p1x), np.where(xo, p1x, p0x)
         y0, y1 = np.where(yo, p0y, p1y), np.where(yo, p1y, p0y)
         top = self._flip_h - y1
-        block = np.empty((n, 12), dtype=np.float64)
-        block[:, 0] = np.where(upright != 0, y1 - y0, x1 - x0)
-        block[:, 1] = adv
-        block[:, 2] = upright
-        block[:, 3] = x0
-        block[:, 4] = x1
-        block[:, 5] = y0
-        block[:, 6] = y1
-        block[:, 7] = top
-        block[:, 8] = self._flip_h - y0
-        block[:, 9] = self.initial_doctop + top
-        block[:, 10] = x1 - x0
-        block[:, 11] = y1 - y0
+        block = np.column_stack((
+            np.where(upright != 0, y1 - y0, x1 - x0), adv, upright, x0, x1,
+            y0, y1, top, self._flip_h - y0, self.initial_doctop + top,
+            x1 - x0, y1 - y0))
         style = []
         if self.style:
             ex, fy = ex.tolist(), fy.tolist()

@@ -6,6 +6,8 @@ or int() rejects is 0; ``num gen R`` is a reference; names decode ``#xx``
 escapes; comments run to the end of the line.
 """
 
+from itertools import islice
+
 import pytest
 
 from pdfplumber_spark.kernel.pdfparse import (
@@ -90,3 +92,13 @@ def test_inline_image_between_operators():
                      "ColorSpace": "DeviceGray"}
     assert data == b"\x01\x02"
     assert toks[2:] == [("kw", "Q")]
+
+
+def test_unterminated_hex_string_ends_the_data():
+    """A '<' with no '>' after it reads the rest of the data as hex digits
+    and ends the tokens; the lexer must not start over at offset 0, which
+    would repeat the stream's tokens forever."""
+    assert list(islice(tokenize_content(b"1 <41 Tj"), 10)) == [1, b"A"]
+    assert parse(b"[<41") == [b"A"]
+    lex = Lexer(b"<414")
+    assert (lex.next_token(), lex.next_token()) == (b"A@", None)

@@ -57,20 +57,38 @@ def pdf_string(s: str) -> str:
     return "(" + s.replace("\\", "\\\\").replace("(", "\\(").replace(")", "\\)") + ")"
 
 
+def glyph_row(m, x, code, fontsize, scaling, rise, page_h=792):
+    """One glyph's 12 block columns (NUM_FIELDS), evaluated one glyph at a
+    time as pdfminer's LTChar does: the text matrix ``m`` translated to
+    (x, 0), applied to the glyph box's corners (0, descent + rise) and
+    (advance, descent + rise + fontsize)."""
+    a, b, c, d, e, f = m
+    e, f = x * a + 0.0 * c + e, x * b + 0.0 * d + f
+    adv = width(code) * 0.001 * fontsize * scaling
+    lo = -200 * 0.001 * fontsize + rise
+    p0x, p0y = a * 0 + c * lo + e, b * 0 + d * lo + f
+    p1x, p1y = a * adv + c * (lo + fontsize) + e, b * adv + d * (lo + fontsize) + f
+    x0, x1 = (p0x, p1x) if p0x <= p1x else (p1x, p0x)
+    y0, y1 = (p0y, p1y) if p0y <= p1y else (p1y, p0y)
+    upright = 0 < a * d * scaling and b * c <= 0
+    return [y1 - y0 if upright else x1 - x0, adv, float(upright), x0, x1,
+            y0, y1, page_h - y1, page_h - y0, 0.0 + (page_h - y1), x1 - x0,
+            y1 - y0]
+
+
 def render(lines, fontsize):
-    """(content stream, expected x0 of every glyph) for ``lines``: each line
-    is (x, y, Tc, Tw, Tz, Ts, calls), a new text line at (x, y) in the text
+    """(content stream, expected block rows) for ``lines``: each line is
+    (x, y, Tc, Tw, Tz, Ts, calls), a new text line at (x, y) in the text
     matrix, and each call a list of TJ items (str or number) shown by one
     text-showing operator, so each line is one text chain.
 
-    Expected x0 follows pdfminer's render_string: x starts at 0 on a line;
-    per call needcharspace starts False; a number subtracts
+    Each glyph's x follows pdfminer's render_string: x starts at 0 on a
+    line; per call needcharspace starts False; a number subtracts
     number * 0.001 * fontsize * scaling; a glyph first adds the charspace
     if needcharspace, sits at x, then adds width * 0.001 * fontsize *
-    scaling and, for a space, the wordspace. x0 = x + the line's x (the
-    glyph box's left edge, for an upright, unskewed matrix)."""
-    ops = ["BT /F1 %g Tf" % fontsize]
-    xs = []
+    scaling and, for a space, the wordspace."""
+    ops = ["BT /F1 %r Tf" % fontsize]
+    rows = []
     for (lx, ly, tc, tw, tz, ts, calls) in lines:
         ops.append("1 0 0 1 %r %r Tm %r Tc %r Tw %r Tz %r Ts"
                    % (lx, ly, tc, tw, tz, ts))
@@ -90,31 +108,32 @@ def render(lines, fontsize):
                 for ch in it.encode("latin-1"):
                     if needcharspace:
                         x += charspace
-                    xs.append(x + lx)
+                    rows.append(glyph_row((1, 0, 0, 1, lx, ly), x, ch,
+                                          fontsize, scaling, ts))
                     x += width(ch) * 0.001 * fontsize * scaling
                     if ch == 32 and wordspace:
                         x += wordspace
                     needcharspace = True
     ops.append("ET")
-    return "\n".join(ops).encode("latin-1"), xs
+    return "\n".join(ops).encode("latin-1"), rows
 
 
 LINES = [
-    (72, 700, 0.37, 1.31, 100, 0,
+    (72, 700, 0.37, 1.31, 100.0, 0.0,
      [["Hello world, ", -120.5, "again", 33, -7, " x y"], ["tail text"]]),
-    (72, 680, -0.25, 2.5, 90, 2, [[5, "kerned first", 0.25], ["next call"]]),
-    (80.5, 660, 0.1, 0, 137.5, -1.5, [["a b  c", -1000, "d"]]),
-    (72, 640, 0, 0, 100, 0, [["plain text, no state"]]),
+    (72, 680, -0.25, 2.5, 90.0, 2.0, [[5, "kerned first", 0.25], ["next call"]]),
+    (80.5, 660, 0.1, 0.0, 137.5, -1.5, [["a b  c", -1000, "d"]]),
+    (72, 640, 0.0, 0.0, 100.0, 0.0, [["plain text, no state"]]),
 ]
 
 
 def test_text_state_x0_is_pdfminer_accumulation_in_both_style_modes():
-    content, xs = render(LINES, 11)
+    content, rows = render(LINES, 11.0)
     data = one_page_pdf(content)
     plain = parse_pdf(data, style=False)[0]
     styled = parse_pdf(data, style=True)[0]
     assert plain.ch_num.tobytes() == styled.ch_num.tobytes()
-    assert plain.ch_num[:, 3].tolist() == xs
+    assert plain.ch_num.tolist() == rows
     assert "".join(plain.ch_text) == "".join(
         it for line in LINES for call in line[6] for it in call
         if isinstance(it, str))
@@ -154,12 +173,13 @@ def test_long_and_short_chains_in_separate_blocks():
     """One 800-glyph line among 300 one-glyph lines: the chains' sums are
     built in several blocks and every glyph still gets its own chain's
     sequential x."""
-    lines = [(72, 700, 0.3, 0.9, 100, 0, [["ab cd efg " * 80]])]
-    lines += [(10 + i % 50, 10 + i, 0.3, 0, 100, 0, [["z"]]) for i in range(300)]
-    content, xs = render(lines, 7)
+    lines = [(72, 700, 0.3, 0.9, 100.0, 0.0, [["ab cd efg " * 80]])]
+    lines += [(10 + i % 50, 10 + i, 0.3, 0.0, 100.0, 0.0, [["z"]])
+              for i in range(300)]
+    content, rows = render(lines, 7.0)
     it = parse_pdf(one_page_pdf(content), style=False)[0]
     assert it.n_chars == 1100
-    assert it.ch_num[:, 3].tolist() == xs
+    assert it.ch_num.tolist() == rows
 
 
 @pytest.mark.parametrize("tm", ["0 1 -1 0 300 100", "-1 0 0 -1 500 700",
