@@ -124,10 +124,13 @@ LINES = [
     (72, 680, -0.25, 2.5, 90.0, 2.0, [[5, "kerned first", 0.25], ["next call"]]),
     (80.5, 660, 0.1, 0.0, 137.5, -1.5, [["a b  c", -1000, "d"]]),
     (72, 640, 0.0, 0.0, 100.0, 0.0, [["plain text, no state"]]),
+    # consecutive kerns whose sum depends on the order they are added in,
+    # on a line at x = 0 so no offset rounds that last bit away
+    (0, 620, 0.0, 0.0, 100.0, 0.0, [["xyz", 368.045, 241, -341, "w"]]),
 ]
 
 
-def test_text_state_x0_is_pdfminer_accumulation_in_both_style_modes():
+def test_text_state_block_matches_per_glyph_pdfminer_order():
     content, rows = render(LINES, 11.0)
     data = one_page_pdf(content)
     plain = parse_pdf(data, style=False)[0]
