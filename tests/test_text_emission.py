@@ -9,6 +9,8 @@ term by term, and a ``style=False`` parse must give the same block as a
 added up in pdfminer's order by a plain loop here.
 """
 
+import tracemalloc
+
 import numpy as np
 import pytest
 
@@ -183,6 +185,27 @@ def test_long_and_short_chains_in_separate_blocks():
     it = parse_pdf(one_page_pdf(content), style=False)[0]
     assert it.n_chars == 1100
     assert it.ch_num.tolist() == rows
+
+
+def test_long_kern_run_takes_memory_linear_in_the_stream():
+    """A TJ of thousands of numbers before thousands of glyphs: each kern
+    is one term of its chain, so the parse's peak memory grows with the
+    stream, not with glyphs x consecutive kerns (gigabytes at 20,000 of
+    each). The smaller size runs first, so a quadratic layout fails there
+    at about 100 MB."""
+    for n in (2_000, 20_000):
+        line = (0, 700, 0.1, 0.0, 100.0, 0.0, [[*([1, -2] * (n // 2)), "a" * n]])
+        content, rows = render([line], 10.0)
+        data = one_page_pdf(content)
+        tracemalloc.start()
+        try:
+            it = parse_pdf(data, style=False)[0]
+            it.ch_num
+            peak = tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+        assert peak < 400 * len(content), (n, peak)
+        assert it.ch_num.tolist() == rows
 
 
 @pytest.mark.parametrize("tm", ["0 1 -1 0 300 100", "-1 0 0 -1 500 700",
