@@ -200,7 +200,7 @@ def test_long_kern_run_takes_memory_linear_in_the_stream():
         tracemalloc.start()
         try:
             it = parse_pdf(data, style=False)[0]
-            it.ch_num
+            it.ch_num  # read inside the trace, wherever the block is built
             peak = tracemalloc.get_traced_memory()[1]
         finally:
             tracemalloc.stop()
