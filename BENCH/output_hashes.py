@@ -40,6 +40,11 @@ every page's parser buffers below any rounding: ``ch_text``, ``ch_font``,
 ``ch_cid``, ``mc_spans``, the bytes of ``ch_num``, ``ch_style`` and the
 line, rect and curve rows, so a parser refactor can show bit identity.
 
+The ``fixtures`` surface hashes, per corpus, every ``(url, payload bytes)``
+pair the generators write (``kernel.pdfgen.make_pdf`` and
+``kernel.pdfcrypt.encrypt_pdf`` included), so a change to the PDF writer
+shows whether the inputs of every other surface stayed byte-identical.
+
 The ``spark`` surface starts a local Spark session (4 cores) and hashes,
 per Spark plan (the payload plans of ``plans.extract``, ``plans.search`` and
 ``operators.multimodal``) over the ``ruled`` and ``seed7`` corpora, the
@@ -49,8 +54,8 @@ plans and of every ``__spark_entry__.queries()`` entry (over
 are normalised: ``#<id>`` expression ids, ``plan_id=<n>`` and the Python
 function name of ``MapInPandas`` are stripped.
 
-Name corpora (or ``parser``, ``spark``) after the checkout to hash only those. Run it
-on two checkouts and diff the output.
+Name corpora (or ``fixtures``, ``parser``, ``spark``) after the checkout to
+hash only those. Run it on two checkouts and diff the output.
 """
 
 import hashlib
@@ -331,6 +336,16 @@ def parser_buffers(payload, style: bool) -> list:
             for it in parse_pdf(bytes(payload), style=style)]
 
 
+def fixture_hashes() -> None:
+    for name, rows in CORPORA.items():
+        h = hashlib.sha256()
+        for r in rows():
+            payload = r["html"]
+            h.update(repr((r["url"], None if payload is None
+                           else bytes(payload))).encode())
+        print(f"{'fixtures':8s} {name:48s} {h.hexdigest()[:16]}", flush=True)
+
+
 def parser_hashes() -> None:
     for name, rows in CORPORA.items():
         hashes = {style: hashlib.sha256() for style in (False, True)}
@@ -423,8 +438,11 @@ def spark_hashes() -> None:
 
 
 def main() -> None:
-    names = sys.argv[2:] or list(CORPORA) + ["parser", "spark"]
+    names = sys.argv[2:] or list(CORPORA) + ["fixtures", "parser", "spark"]
     for name in names:
+        if name == "fixtures":
+            fixture_hashes()
+            continue
         if name == "spark":
             spark_hashes()
             continue

@@ -12,7 +12,6 @@ seed so fixture corpora stay byte-identical across runs.
 from __future__ import annotations
 
 import hashlib
-import zlib
 from typing import Optional
 
 from .aes import cbc_encrypt, encrypt_block, _round_keys
@@ -27,50 +26,7 @@ from .pdfparse import (
     _std_key,
     _std_user_check,
 )
-
-
-# --- serializer ---------------------------------------------------------------
-
-def _ser_name(n: str) -> bytes:
-    out = []
-    for ch in n.encode("latin-1", "replace"):
-        if ch in b"()<>[]{}/%# \t\r\n\x00" or ch < 33 or ch > 126:
-            out.append(b"#%02X" % ch)
-        else:
-            out.append(bytes([ch]))
-    return b"/" + b"".join(out)
-
-
-def serialize(obj) -> bytes:
-    if isinstance(obj, StreamObj):
-        return (
-            serialize(obj.attrs) + b"\nstream\n" + obj.raw + b"\nendstream"
-        )
-    if isinstance(obj, Name):
-        return _ser_name(str(obj))
-    if isinstance(obj, bool):
-        return b"true" if obj else b"false"
-    if isinstance(obj, int):
-        return str(obj).encode()
-    if isinstance(obj, float):
-        return (b"%g" % obj)
-    if isinstance(obj, (bytes, bytearray)):
-        return b"<" + bytes(obj).hex().encode() + b">"
-    if isinstance(obj, str):  # non-Name str should not occur; hex it anyway
-        return b"<" + obj.encode("latin-1", "replace").hex().encode() + b">"
-    if isinstance(obj, Ref):
-        return b"%d %d R" % (obj.num, obj.gen)
-    if isinstance(obj, dict):
-        parts = [b"<<"]
-        for k, v in obj.items():
-            parts.append(_ser_name(str(k)) + b" " + serialize(v))
-        parts.append(b">>")
-        return b"".join(parts)
-    if isinstance(obj, list):
-        return b"[" + b" ".join(serialize(v) for v in obj) + b"]"
-    if obj is None:
-        return b"null"
-    raise TypeError(f"cannot serialize {type(obj)}")
+from .pdfwrite import live_objects, serialize, write_pdf
 
 
 # --- per-object encryption -----------------------------------------------------
@@ -100,9 +56,8 @@ def _encrypt_obj(obj, num: int, gen: int, method: str, file_key: bytes,
                  seed: bytes):
     if isinstance(obj, StreamObj):
         raw = _enc_bytes(obj.raw, num, gen, method, file_key, seed)
-        attrs = dict(_encrypt_obj(obj.attrs, num, gen, method, file_key, seed))
-        attrs[Name("Length")] = len(raw)
-        return StreamObj(attrs, raw)
+        return StreamObj(
+            _encrypt_obj(obj.attrs, num, gen, method, file_key, seed), raw)
     if isinstance(obj, Name):
         return obj
     if isinstance(obj, (bytes, bytearray)):
@@ -216,50 +171,15 @@ def encrypt_pdf(
             enc_dict[Name("StrF")] = Name("StdCF")
 
     # re-emit every object, encrypting strings + streams
-    nums = sorted(n for n in doc.xref if n > 0)
-    out = bytearray(b"%PDF-1.6\n")
-    offsets = {}
-    max_num = 0
-    for num in nums:
-        obj = doc.get_object(num)
-        if obj is None:
-            continue
-        if isinstance(obj, StreamObj) and str(obj.attrs.get("Type", "")) in (
-            "XRef", "ObjStm"
-        ):
-            continue  # stale containers: members re-emit standalone
-        eobj = _encrypt_obj(
-            obj, num, 0, "rc4" if method == "rc4" else method,
-            file_key, seed,
-        )
-        offsets[num] = len(out)
-        out += b"%d 0 obj\n" % num
-        out += serialize(eobj)
-        out += b"\nendobj\n"
-        max_num = max(max_num, num)
-    enc_num = max_num + 1
-    offsets[enc_num] = len(out)
-    out += b"%d 0 obj\n" % enc_num
-    out += serialize(enc_dict)
-    out += b"\nendobj\n"
-
-    root = doc.trailer.get("Root")
-    xref_pos = len(out)
-    size = enc_num + 1
-    out += b"xref\n0 %d\n" % size
-    out += b"0000000000 65535 f \n"
-    for num in range(1, size):
-        off = offsets.get(num)
-        if off is None:
-            out += b"0000000000 65535 f \n"
-        else:
-            out += b"%010d 00000 n \n" % off
-    trailer = {
-        Name("Size"): size,
-        Name("Root"): root,
-        Name("Encrypt"): Ref(enc_num, 0),
-        Name("ID"): [id0, id0],
+    bodies = {
+        num: serialize(_encrypt_obj(obj, num, 0, method, file_key, seed))
+        for num, obj in live_objects(doc).items()
     }
-    out += b"trailer\n" + serialize(trailer)
-    out += b"\nstartxref\n%d\n%%%%EOF\n" % xref_pos
-    return bytes(out)
+    enc_num = max(bodies, default=0) + 1
+    bodies[enc_num] = serialize(enc_dict)
+    trailer = {
+        "Root": doc.trailer.get("Root"),
+        "Encrypt": Ref(enc_num, 0),
+        "ID": [id0, id0],
+    }
+    return write_pdf(b"%PDF-1.6\n", bodies, trailer)

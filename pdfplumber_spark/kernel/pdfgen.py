@@ -731,22 +731,12 @@ def make_pdf(pages: List[Dict], info: dict = None) -> bytes:
                 body += b"(" + _esc(str(v)) + b")"
         info_num = add(body + b">>")
 
-    out = bytearray(b"%PDF-1.4\n")
-    offsets = [0]
-    for i, obj in enumerate(objects, start=1):
-        offsets.append(len(out))
-        out += b"%d 0 obj\n" % i
-        out += obj
-        out += b"\nendobj\n"
-    xref_pos = len(out)
-    n = len(objects) + 1
-    out += b"xref\n0 %d\n" % n
-    out += b"0000000000 65535 f \n"
-    for off in offsets[1:]:
-        out += b"%010d 00000 n \n" % off
-    info_part = b"/Info %d 0 R" % info_num if info_num else b""
-    out += (
-        b"trailer\n<</Size %d/Root %d 0 R%s>>\nstartxref\n%d\n%%%%EOF\n"
-        % (n, root, info_part, xref_pos)
-    )
-    return bytes(out)
+    # imported here: pdfparse, which the writer builds on, imports this
+    # module's font metrics
+    from .pdfparse import Ref
+    from .pdfwrite import write_pdf
+
+    trailer = {"Root": Ref(root, 0)}
+    if info_num:
+        trailer["Info"] = Ref(info_num, 0)
+    return write_pdf(b"%PDF-1.4\n", dict(enumerate(objects, start=1)), trailer)

@@ -1935,9 +1935,14 @@ class PageInterpreter:
         def npop():
             """Numeric operand with its ORIGINAL int/float type preserved
             (pdfminer parity: '1 0 0 1 45.83 660.69 Tm' serializes as
-            (1, 0, 0, 1, 45.83, 660.69) — ints stay ints)."""
+            (1, 0, 0, 1, 45.83, 660.69) — ints stay ints). An int no float
+            holds raises OverflowError here, inside its operator, not
+            later in float arithmetic on the state it would reach."""
             v = stack.pop()
-            if isinstance(v, (int, float)):
+            if isinstance(v, float):
+                return v
+            if isinstance(v, int):
+                float(v)
                 return v
             try:
                 return float(v)
@@ -2255,7 +2260,9 @@ class PageInterpreter:
                 else:
                     # unknown operator: drop its operands
                     stack.clear()
-            except (IndexError, ValueError, TypeError):
+            except (IndexError, ValueError, TypeError, OverflowError):
+                # a malformed operator (OverflowError: an integer operand
+                # too large for a float) drops its operands, not the page
                 stack.clear()
 
     def _render_string(self, seq, tm, ctm, chain, font, fontsize,

@@ -7,8 +7,9 @@ parse instead: brute-scan every ``N g obj`` marker (recovers broken or
 missing xref tables, junk between objects, truncated trailers, bad
 ``startxref``), re-serialize each recoverable object with a corrected
 direct ``/Length``, inline objects out of object streams, decrypt (with
-the supplied password) and drop ``/Encrypt``, then emit a fresh classic
-xref + trailer. The output parses with a strict offset-driven reader.
+the supplied password) and drop ``/Encrypt``, then write a fresh classic
+xref + trailer (``kernel/pdfwrite.py``). The output parses with a strict
+offset-driven reader.
 
 The extraction pipeline itself never needs this — ``PDFDocument`` applies
 the same tolerant scan internally — but ``repair()`` provides the
@@ -20,97 +21,8 @@ from __future__ import annotations
 import re
 from typing import Dict, Optional
 
-from .pdfparse import Lexer, Name, PDFDocument, Ref, StreamObj, parse_object
-
-# bytes that must be #-escaped inside a serialized name (ws + delimiters)
-_NAME_ESCAPE = set(b"\x00\t\n\x0c\r ()<>[]{}/%#")
-
-
-def _ser_name(n: str) -> bytes:
-    out = bytearray(b"/")
-    for b in n.encode("latin-1", "replace"):
-        if b in _NAME_ESCAPE or b < 0x21 or b > 0x7E:
-            out += b"#%02X" % b
-        else:
-            out.append(b)
-    return bytes(out)
-
-
-def _ser_string(s: bytes) -> bytes:
-    out = bytearray(b"(")
-    for b in s:
-        if b in b"()\\":
-            out += b"\\" + bytes([b])
-        elif b in (10, 13) or b < 0x20 or b > 0x7E:
-            out += b"\\%03o" % b
-        else:
-            out.append(b)
-    out += b")"
-    return bytes(out)
-
-
-def _ser(obj, out: bytearray) -> None:
-    if isinstance(obj, StreamObj):  # handled by caller (needs obj number)
-        raise TypeError("nested streams are not valid PDF")
-    if obj is None:
-        out += b"null"
-    elif obj is True:
-        out += b"true"
-    elif obj is False:
-        out += b"false"
-    elif isinstance(obj, Ref):
-        out += b"%d 0 R" % obj.num  # generations normalized to 0
-    elif isinstance(obj, Name):
-        out += _ser_name(str(obj))
-    elif isinstance(obj, int):
-        out += b"%d" % obj
-    elif isinstance(obj, float):
-        out += ("%g" % obj).encode()
-    elif isinstance(obj, (bytes, bytearray)):
-        out += _ser_string(bytes(obj))
-    elif isinstance(obj, str):  # decoded text string — re-encode
-        out += _ser_string(obj.encode("latin-1", "replace"))
-    elif isinstance(obj, dict):
-        out += b"<<"
-        for k, v in obj.items():
-            if k == "_ref":  # parser-internal annotation
-                continue
-            out += _ser_name(str(k)) + b" "
-            _ser(v, out)
-            out += b"\n"
-        out += b">>"
-    elif isinstance(obj, (list, tuple)):
-        out += b"["
-        for i, v in enumerate(obj):
-            if i:
-                out += b" "
-            _ser(v, out)
-        out += b"]"
-    else:  # unknown parser artifact — safest representation
-        out += b"null"
-
-
-def _ser_indirect(num: int, obj) -> bytes:
-    body = bytearray(b"%d 0 obj\n" % num)
-    if isinstance(obj, StreamObj):
-        attrs = {
-            k: v for k, v in obj.attrs.items()
-            if k not in ("Length", "_ref")
-        }
-        attrs_out = bytearray(b"<<")
-        attrs_out += b"/Length %d\n" % len(obj.raw)
-        for k, v in attrs.items():
-            attrs_out += _ser_name(str(k)) + b" "
-            _ser(v, attrs_out)
-            attrs_out += b"\n"
-        attrs_out += b">>"
-        body += attrs_out
-        body += b"\nstream\n" + obj.raw + b"\nendstream"
-    else:
-        _ser(obj, body)
-    body += b"\nendobj\n"
-    return bytes(body)
-
+from .pdfparse import Lexer, PDFDocument, Ref, parse_object
+from .pdfwrite import live_objects, serialize, write_pdf
 
 _OBJ_HEADER = re.compile(rb"(\d+)\s+(\d+)\s+obj\b")
 
@@ -211,65 +123,28 @@ def repair_bytes(data: bytes, password: str = "") -> bytes:
     # always ALSO brute-scan: a valid-but-incomplete xref hides orphans
     doc._scan_all_objects()
     _correct_xref(doc)
-    if not doc.xref:
-        raise ValueError("no recoverable objects")
-
-    recovered: Dict[int, object] = {}
-    for num in sorted(doc.xref):
-        try:
-            obj = doc.get_object(num)
-        except Exception:  # noqa: BLE001 - salvage what parses
-            continue
-        if obj is None:
-            continue
-        if isinstance(obj, StreamObj):
-            typ = str(obj.attrs.get("Type", ""))
-            # xref/objstm containers are rebuilt, not copied (their members
-            # are re-emitted as top-level objects; stale offsets poison)
-            if typ in ("XRef", "ObjStm"):
-                continue
-        recovered[num] = obj
-
+    recovered = live_objects(doc)
     if not recovered:
         raise ValueError("no recoverable objects")
 
-    root_ref: Optional[Ref] = None
-    tr_root = doc.trailer.get("Root")
-    if isinstance(tr_root, Ref) and tr_root.num in recovered:
-        root_ref = Ref(tr_root.num, 0)
-    if root_ref is None:
-        for num, obj in recovered.items():
-            if isinstance(obj, dict) and str(obj.get("Type", "")) == "Catalog":
-                root_ref = Ref(num, 0)
-                break
-    if root_ref is None:
+    root = doc.trailer.get("Root")
+    if not (isinstance(root, Ref) and root.num in recovered):
+        root = next((Ref(num, 0) for num, obj in recovered.items()
+                     if isinstance(obj, dict)
+                     and str(obj.get("Type", "")) == "Catalog"), None)
+    if root is None:
         raise ValueError("no document catalog recoverable")
+    trailer = {"Root": root}
+    info = doc.trailer.get("Info")
+    if isinstance(info, Ref) and info.num in recovered:
+        trailer["Info"] = info
 
-    info_ref = None
-    tr_info = doc.trailer.get("Info")
-    if isinstance(tr_info, Ref) and tr_info.num in recovered:
-        info_ref = Ref(tr_info.num, 0)
-
-    out = bytearray(b"%PDF-1.7\n%\xe2\xe3\xcf\xd3\n")
-    max_num = max(recovered)
-    offsets = {}
-    for num in sorted(recovered):
-        offsets[num] = len(out)
-        out += _ser_indirect(num, recovered[num])
-    xref_pos = len(out)
-    out += b"xref\n0 %d\n" % (max_num + 1)
-    out += b"0000000000 65535 f \n"
-    for num in range(1, max_num + 1):
-        if num in offsets:
-            out += b"%010d 00000 n \n" % offsets[num]
-        else:
-            out += b"0000000000 65535 f \n"
-    trailer = bytearray(b"trailer\n<</Size %d/Root %d 0 R" % (max_num + 1, root_ref.num))
-    if info_ref is not None:
-        trailer += b"/Info %d 0 R" % info_ref.num
-    trailer += b">>\nstartxref\n%d\n%%%%EOF\n" % xref_pos
-    out += trailer
-    return bytes(out)
+    # a reference to an unrecovered object is written as null
+    bodies = {
+        num: serialize(obj, lambda r: r.num if r.num in recovered else None)
+        for num, obj in recovered.items()
+    }
+    return write_pdf(b"%PDF-1.7\n%\xe2\xe3\xcf\xd3\n", bodies, trailer)
 
 
 def strict_check(data: bytes) -> bool:

@@ -13,98 +13,44 @@ stream bytes are copied raw (no re-compression).
 
 from __future__ import annotations
 
-from typing import Dict, List, Optional
+from typing import List, Optional
 
-from .pdfparse import Lexer, Name, PDFDocument, Ref, StreamObj
+from .pdfparse import Name, PDFDocument, Ref
+from .pdfwrite import serialize, write_pdf
 
-_DROP_PAGE_KEYS = {"Parent", "B", "StructParents", "Tabs", "Metadata", "_ref"}
+_DROP_PAGE_KEYS = {"Type", "Parent", "B", "StructParents", "Tabs", "Metadata",
+                   "_ref"}
 
 
-class _Serializer:
-    def __init__(self, doc: PDFDocument):
-        self.doc = doc
-        self.objects: List[bytes] = []  # 1-indexed bodies
-        self.ref_map: Dict[int, int] = {}
+def _one_page(doc: PDFDocument, spec: dict, page_nums: set) -> bytes:
+    """A standalone PDF of the page ``spec``: object 1 its page tree, 2 the
+    page, 3 the catalog, then every object the page reaches, copied once.
+    A reference to another page of the source (an annotation's /P, a /Dest)
+    is written as null: following it would pull in that page and, by its
+    /Parent, the whole source page tree."""
+    # object 0 is never in use, so Ref(0, 0) can stand for the page tree
+    new_num = {0: 1, spec["_ref"]: 2}
+    queue: List[int] = []
 
-    def add_placeholder(self) -> int:
-        self.objects.append(b"")
-        return len(self.objects)
+    def ref(r: Ref) -> Optional[int]:
+        if r.num not in new_num:
+            if r.num in page_nums:
+                return None
+            new_num[r.num] = 4 + len(queue)
+            queue.append(r.num)
+        return new_num[r.num]
 
-    def set_obj(self, num: int, body: bytes) -> None:
-        self.objects[num - 1] = body
-
-    def copy_ref(self, ref: Ref) -> int:
-        """Copy an indirect object (and its reachable graph) into the new
-        file; returns the new object number."""
-        if ref.num in self.ref_map:
-            return self.ref_map[ref.num]
-        new_num = self.add_placeholder()
-        self.ref_map[ref.num] = new_num
-        obj = self.doc.get_object(ref.num)
-        self.set_obj(new_num, self.serialize(obj))
-        return new_num
-
-    def serialize(self, obj, depth: int = 0) -> bytes:
-        if depth > 64:
-            return b"null"
-        if obj is None:
-            return b"null"
-        if obj is True:
-            return b"true"
-        if obj is False:
-            return b"false"
-        if isinstance(obj, Ref):
-            return b"%d 0 R" % self.copy_ref(obj)
-        if isinstance(obj, Name):
-            safe = "".join(
-                ch if 33 <= ord(ch) <= 126 and ch not in "()<>[]{}/%#"
-                else "#%02X" % ord(ch)
-                for ch in str(obj)
-            )
-            return b"/" + safe.encode("latin-1")
-        if isinstance(obj, bool):
-            return b"true" if obj else b"false"
-        if isinstance(obj, int):
-            return str(obj).encode()
-        if isinstance(obj, float):
-            return ("%g" % obj).encode()
-        if isinstance(obj, (bytes, bytearray)):
-            return b"<" + bytes(obj).hex().encode() + b">"
-        if isinstance(obj, list):
-            return b"[" + b" ".join(self.serialize(x, depth + 1) for x in obj) + b"]"
-        if isinstance(obj, StreamObj):
-            attrs = dict(obj.attrs)
-            attrs["Length"] = len(obj.raw)
-            body = self.serialize(attrs, depth + 1)
-            return body + b"\nstream\n" + obj.raw + b"\nendstream"
-        if isinstance(obj, dict):
-            parts = [b"<<"]
-            for k, v in obj.items():
-                parts.append(self.serialize(Name(k), depth + 1))
-                parts.append(self.serialize(v, depth + 1))
-            parts.append(b">>")
-            return b" ".join(parts)
-        return b"null"
-
-    def finish(self, root_num: int) -> bytes:
-        out = bytearray(b"%PDF-1.5\n")
-        offsets = []
-        for i, body in enumerate(self.objects, start=1):
-            offsets.append(len(out))
-            out += b"%d 0 obj\n" % i
-            out += body
-            out += b"\nendobj\n"
-        xref_pos = len(out)
-        n = len(self.objects) + 1
-        out += b"xref\n0 %d\n" % n
-        out += b"0000000000 65535 f \n"
-        for off in offsets:
-            out += b"%010d 00000 n \n" % off
-        out += (
-            b"trailer\n<</Size %d/Root %d 0 R>>\nstartxref\n%d\n%%%%EOF\n"
-            % (n, root_num, xref_pos)
-        )
-        return bytes(out)
+    page = {"Type": Name("Page"), "Parent": Ref(0, 0)}
+    page.update((k, v) for k, v in spec.items()
+                if k not in _DROP_PAGE_KEYS and v is not None)
+    bodies = {
+        1: serialize({"Type": Name("Pages"), "Kids": [Ref(2, 0)], "Count": 1}),
+        2: serialize(page, ref),
+        3: serialize({"Type": Name("Catalog"), "Pages": Ref(1, 0)}),
+    }
+    for num in queue:  # grows while it is walked: the copied graph
+        bodies[new_num[num]] = serialize(doc.get_object(num), ref)
+    return write_pdf(b"%PDF-1.5\n", bodies, {"Root": Ref(3, 0)})
 
 
 def count_pages(data: bytes) -> int:
@@ -125,32 +71,9 @@ def split_pdf_pages(
     """
     doc = PDFDocument(data)
     specs = doc.pages()
-    out = []
-    for i, spec in enumerate(specs):
-        pn = i + 1
-        if page_numbers is not None and pn not in page_numbers:
-            continue
-        s = _Serializer(doc)
-        pages_num = s.add_placeholder()
-        page_num = s.add_placeholder()
-        root_num = s.add_placeholder()
-        page_dict = {
-            k: v for k, v in spec.items() if k not in _DROP_PAGE_KEYS
-        }
-        page_body = (
-            b"<< /Type /Page /Parent %d 0 R " % pages_num
-            + b" ".join(
-                s.serialize(Name(k)) + b" " + s.serialize(v)
-                for k, v in page_dict.items()
-                if k != "Type"
-            )
-            + b" >>"
-        )
-        s.set_obj(page_num, page_body)
-        s.set_obj(
-            pages_num,
-            b"<</Type/Pages/Kids[%d 0 R]/Count 1>>" % page_num,
-        )
-        s.set_obj(root_num, b"<</Type/Catalog/Pages %d 0 R>>" % pages_num)
-        out.append(s.finish(root_num))
-    return out
+    page_nums = {spec["_ref"] for spec in specs}
+    return [
+        _one_page(doc, spec, page_nums)
+        for pn, spec in enumerate(specs, start=1)
+        if page_numbers is None or pn in page_numbers
+    ]

@@ -6,6 +6,7 @@ tests/test_issues.py:137-148)."""
 
 import pytest
 
+from pdfbuild import fine_reals_pdf, parser_buffers
 from pdfplumber_spark import api as pdfplumber
 from pdfplumber_spark.kernel.pdfcrypt import encrypt_pdf
 from pdfplumber_spark.kernel.pdfgen import make_pdf
@@ -37,6 +38,11 @@ def test_roundtrip_byte_identical(method, pw):
     assert f1["chars"]["x0"].tolist() == F0["chars"]["x0"].tolist()
     assert f1["chars"]["fontname"].tolist() == F0["chars"]["fontname"].tolist()
     assert f1["annots"]["uri"].tolist() == F0["annots"]["uri"].tolist()
+    # reals with more than six significant digits (MediaBox, /Widths, font
+    # descriptor) are written back whole: the parser buffers are equal
+    fine = fine_reals_pdf()
+    enc = encrypt_pdf(fine, user_pw=pw, method=method)
+    assert parser_buffers(enc, password=pw) == parser_buffers(fine)
 
 
 @pytest.mark.parametrize("method", ["rc4", "aes128", "aes256"])

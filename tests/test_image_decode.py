@@ -11,7 +11,14 @@ import pytest
 
 from pdfplumber_spark.kernel.images import image_xobjects
 from pdfplumber_spark.kernel.pdfgen import image_pixel, image_samples, make_pdf
+from pdfplumber_spark.kernel.pdfparse import Ref
+from pdfplumber_spark.kernel.pdfwrite import write_pdf
 from reforacle import REFERENCE
+
+
+def _objs_pdf(objs: list) -> bytes:
+    """Bodies numbered from 1, the catalog first."""
+    return write_pdf(b"%PDF-1.5\n", dict(enumerate(objs, 1)), {"Root": Ref(1, 0)})
 
 
 def _pdf(images, texts=()):
@@ -372,19 +379,7 @@ def _minimal_pdf_multi_paint():
     )
     objs.append(b"<</Length %d>>\nstream\n%s\nendstream"
                 % (len(content), content))
-    out = bytearray(b"%PDF-1.5\n")
-    offsets = []
-    for i, o in enumerate(objs, start=1):
-        offsets.append(len(out))
-        out += b"%d 0 obj\n" % i + o + b"\nendobj\n"
-    xref_at = len(out)
-    out += b"xref\n0 %d\n" % (len(objs) + 1)
-    out += b"0000000000 65535 f \n"
-    for off in offsets:
-        out += b"%010d 00000 n \n" % off
-    out += (b"trailer\n<</Size %d/Root 1 0 R>>\nstartxref\n%d\n%%%%EOF\n"
-            % (len(objs) + 1, xref_at))
-    return bytes(out)
+    return _objs_pdf(objs)
 
 
 def test_paint_order_multi_paint_and_form_nesting():
@@ -485,18 +480,7 @@ def _inline_image_pdf():
         b"<</Type/Page/Parent 2 0 R/MediaBox[0 0 200 200]/Contents 4 0 R>>",
         b"<</Length %d>>\nstream\n%s\nendstream" % (len(content), content),
     ]
-    out = bytearray(b"%PDF-1.5\n")
-    offs = []
-    for i, o in enumerate(objs, 1):
-        offs.append(len(out))
-        out += b"%d 0 obj\n" % i + o + b"\nendobj\n"
-    xa = len(out)
-    out += b"xref\n0 %d\n0000000000 65535 f \n" % (len(objs) + 1)
-    for off in offs:
-        out += b"%010d 00000 n \n" % off
-    out += (b"trailer\n<</Size %d/Root 1 0 R>>\nstartxref\n%d\n%%%%EOF\n"
-            % (len(objs) + 1, xa))
-    return bytes(out)
+    return _objs_pdf(objs)
 
 
 def test_inline_images_parse_and_decode():
@@ -650,18 +634,7 @@ def test_dct_image_xobjects_decode_end_to_end():
         b"/Length %d>>\nstream\n%s\nendstream" % (len(real), real),
         b"<</Length 33>>\nstream\nq 50 0 0 50 10 10 cm /Im0 Do Q\nendstream",
     ]
-    out = bytearray(b"%PDF-1.5\n")
-    offs = []
-    for i, o in enumerate(objs, 1):
-        offs.append(len(out))
-        out += b"%d 0 obj\n" % i + o + b"\nendobj\n"
-    xa = len(out)
-    out += b"xref\n0 %d\n0000000000 65535 f \n" % (len(objs) + 1)
-    for off in offs:
-        out += b"%010d 00000 n \n" % off
-    out += (b"trailer\n<</Size %d/Root 1 0 R>>\nstartxref\n%d\n%%%%EOF\n"
-            % (len(objs) + 1, xa))
-    (row,) = image_xobjects(bytes(out))
+    (row,) = image_xobjects(_objs_pdf(objs))
     assert row["status"] == "ok"
     assert (row["width"], row["height"], row["channels"]) == (6, 6, 1)
     assert set(row["samples"]) == {99}
@@ -683,18 +656,7 @@ def _dct_pdf(dims: bytes) -> bytes:
         b"/Length %d>>\nstream\n%s\nendstream" % (len(real), real),
         b"<</Length 33>>\nstream\nq 50 0 0 50 10 10 cm /Im0 Do Q\nendstream",
     ]
-    out = bytearray(b"%PDF-1.5\n")
-    offs = []
-    for i, o in enumerate(objs, 1):
-        offs.append(len(out))
-        out += b"%d 0 obj\n" % i + o + b"\nendobj\n"
-    xa = len(out)
-    out += b"xref\n0 %d\n0000000000 65535 f \n" % (len(objs) + 1)
-    for off in offs:
-        out += b"%010d 00000 n \n" % off
-    out += (b"trailer\n<</Size %d/Root 1 0 R>>\nstartxref\n%d\n%%%%EOF\n"
-            % (len(objs) + 1, xa))
-    return bytes(out)
+    return _objs_pdf(objs)
 
 
 @pytest.mark.parametrize(
@@ -912,18 +874,8 @@ def test_cmyk_dct_pdf_end_to_end():
         b"/Length %d>>\nstream\n%s\nendstream" % (len(real), real),
         b"<</Length 33>>\nstream\nq 50 0 0 50 10 10 cm /Im0 Do Q\nendstream",
     ]
-    out = bytearray(b"%PDF-1.5\n")
-    offs = []
-    for i, o in enumerate(objs, 1):
-        offs.append(len(out))
-        out += b"%d 0 obj\n" % i + o + b"\nendobj\n"
-    xa = len(out)
-    out += b"xref\n0 %d\n0000000000 65535 f \n" % (len(objs) + 1)
-    for off in offs:
-        out += b"%010d 00000 n \n" % off
-    out += (b"trailer\n<</Size %d/Root 1 0 R>>\nstartxref\n%d\n%%%%EOF\n"
-            % (len(objs) + 1, xa))
-    (row,) = image_xobjects(bytes(out))
+    pdf = _objs_pdf(objs)
+    (row,) = image_xobjects(pdf)
     assert row["status"] == "ok"
     assert (row["width"], row["height"], row["channels"]) == (6, 6, 4)
     got = np.frombuffer(row["samples"], np.uint8).reshape(6, 6, 4)
@@ -931,5 +883,5 @@ def test_cmyk_dct_pdf_end_to_end():
     # and the page renders through the display CMYK->RGB path
     from pdfplumber_spark import api
 
-    im = api.open(bytes(out)).pages[0].to_image(resolution=36)
+    im = api.open(pdf).pages[0].to_image(resolution=36)
     assert im._repr_png_()[:8] == b"\x89PNG\r\n\x1a\n"

@@ -284,6 +284,8 @@ def test_text_page_through_pdf_filter_path():
 
     from pdfplumber_spark import api
     from pdfplumber_spark.kernel.images import _decode_one
+    from pdfplumber_spark.kernel.pdfparse import Ref
+    from pdfplumber_spark.kernel.pdfwrite import write_pdf
 
     rng = random.Random(12)
     syms = [_mksym(rng, 5, 6), _mksym(rng, 3, 6)]
@@ -299,18 +301,8 @@ def test_text_page_through_pdf_filter_path():
         b"/Length %d>>\nstream\n%s\nendstream" % (len(stream), stream),
         b"<</Length 33>>\nstream\nq 50 0 0 50 10 10 cm /Im0 Do Q\nendstream",
     ]
-    out = bytearray(b"%PDF-1.5\n")
-    offs = []
-    for i, o in enumerate(objs, 1):
-        offs.append(len(out))
-        out += b"%d 0 obj\n" % i + o + b"\nendobj\n"
-    xa = len(out)
-    out += b"xref\n0 %d\n0000000000 65535 f \n" % (len(objs) + 1)
-    for off in offs:
-        out += b"%010d 00000 n \n" % off
-    out += (b"trailer\n<</Size %d/Root 1 0 R>>\nstartxref\n%d\n%%%%EOF\n"
-            % (len(objs) + 1, xa))
-    pg = api.open(io.BytesIO(bytes(out))).pages[0]
+    pdf = write_pdf(b"%PDF-1.5\n", dict(enumerate(objs, 1)), {"Root": Ref(1, 0)})
+    pg = api.open(io.BytesIO(pdf)).pages[0]
     (image,) = pg.images
     d = _decode_one(pg._interp.doc, image["stream"].xo)
     assert d["status"] == "ok"

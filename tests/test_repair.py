@@ -17,6 +17,7 @@ import pdfplumber_spark.api as pdfplumber
 from pdfplumber_spark.kernel.pdfgen import make_pdf
 from pdfplumber_spark.kernel.pdfrepair import repair_bytes, strict_check
 from pdfplumber_spark.repair import repair
+from pdfbuild import fine_reals_pdf, parser_buffers
 from reforacle import REFERENCE
 
 
@@ -49,6 +50,12 @@ def test_repaired_pristine_is_strict_and_identical():
     fixed = repair_bytes(data)
     assert strict_check(fixed)
     assert _texts(fixed) == _texts(data)
+    # reals with more than six significant digits (MediaBox, /Widths, font
+    # descriptor) are written back whole: the parser buffers are equal
+    fine = fine_reals_pdf()
+    fixed = repair_bytes(fine)
+    assert strict_check(fixed)
+    assert parser_buffers(fixed) == parser_buffers(fine)
 
 
 def test_repair_smashed_xref_offsets():
@@ -98,6 +105,10 @@ def test_repair_decrypts_with_password():
     assert b"/Encrypt" not in fixed
     # repaired doc opens with NO password (reference pdf.py:81-85 behavior)
     assert _texts(fixed) == _texts(data)
+    fine = fine_reals_pdf()
+    enc = encrypt_pdf(fine, user_pw="sekrit", method="rc4", seed=b"repair-test")
+    assert parser_buffers(repair_bytes(enc, password="sekrit")) == (
+        parser_buffers(fine))
 
 
 def test_repair_public_api_outfile_and_bytesio(tmp_path):

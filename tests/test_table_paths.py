@@ -17,6 +17,8 @@ from pdfplumber_spark import api
 from pdfplumber_spark.kernel import pdfparse
 from pdfplumber_spark.kernel import tables as T
 from pdfplumber_spark.kernel.pdfgen import FONT_ASCENT, FONT_DESCENT, glyph_width, make_pdf
+from pdfplumber_spark.kernel.pdfparse import Ref
+from pdfplumber_spark.kernel.pdfwrite import write_pdf
 from pdfplumber_spark.kernel.words import CharArrays, WordSettings
 from pdfplumber_spark.plans import extract as X
 from pdfplumber_spark.schemas import TABLES_SCHEMA, WORDS_SCHEMA
@@ -190,17 +192,8 @@ def colored_pdf() -> bytes:
         b"<</Type/Pages/Kids[3 0 R]/Count 1>>",
         b"<</Type/Catalog/Pages 4 0 R>>",
     ]
-    out = bytearray(b"%PDF-1.4\n")
-    offs = []
-    for i, o in enumerate(objs, 1):
-        offs.append(len(out))
-        out += b"%d 0 obj\n" % i + o + b"\nendobj\n"
-    xref = len(out)
-    out += b"xref\n0 %d\n0000000000 65535 f \n" % (len(objs) + 1)
-    out += b"".join(b"%010d 00000 n \n" % off for off in offs)
-    out += b"trailer\n<</Size %d/Root 5 0 R>>\nstartxref\n%d\n%%%%EOF\n" % (
-        len(objs) + 1, xref)
-    return bytes(out)
+    return write_pdf(b"%PDF-1.4\n", dict(enumerate(objs, 1)),
+                     {"Root": Ref(5, 0)})
 
 
 def test_style_attr_splits_words():

@@ -14,7 +14,8 @@ import tracemalloc
 import numpy as np
 import pytest
 
-from pdfplumber_spark.kernel.pdfparse import parse_pdf
+from pdfplumber_spark.kernel.pdfparse import Ref, parse_pdf
+from pdfplumber_spark.kernel.pdfwrite import write_pdf
 
 # /F1 widths (glyph space, 1/1000 em), FirstChar 32: the space is 250, the
 # printable ASCII after it 400 + 10 * (code % 7); descent -200
@@ -41,18 +42,8 @@ def one_page_pdf(content: bytes) -> bytes:
                % (len(objs) + 2, font, cn))
     pages = obj(b"<</Type/Pages/Kids[%d 0 R]/Count 1>>" % page)
     cat = obj(b"<</Type/Catalog/Pages %d 0 R>>" % pages)
-    out = bytearray(b"%PDF-1.4\n")
-    offs = []
-    for i, o in enumerate(objs, 1):
-        offs.append(len(out))
-        out += b"%d 0 obj\n" % i + o + b"\nendobj\n"
-    xref = len(out)
-    out += b"xref\n0 %d\n0000000000 65535 f \n" % (len(objs) + 1)
-    for off in offs:
-        out += b"%010d 00000 n \n" % off
-    out += b"trailer\n<</Size %d/Root %d 0 R>>\nstartxref\n%d\n%%%%EOF\n" % (
-        len(objs) + 1, cat, xref)
-    return bytes(out)
+    return write_pdf(b"%PDF-1.4\n", dict(enumerate(objs, 1)),
+                     {"Root": Ref(cat, 0)})
 
 
 def pdf_string(s: str) -> str:
@@ -227,3 +218,26 @@ def test_rotated_and_skewed_matrices_match_across_style_modes(tm):
         assert m[:4] == [a, b, c, d]
         assert (a * 0 + c * descent) + m[4] in (x0, x1)
         assert (b * 0 + d * descent) + m[5] in (y0, y1)
+
+
+BIG = b"1" + b"0" * 400  # an integer no float holds
+
+
+@pytest.mark.parametrize("bad", [
+    b"[" + BIG + b" (xy)] TJ",  # a kern, before any glyph of the TJ
+    BIG + b" 0 Td",
+    b"1 0 0 1 " + BIG + b" 0 Tm",
+    b"/F1 " + BIG + b" Tf",
+], ids=["TJ-kern", "Td", "Tm", "Tf"])
+def test_operand_too_large_for_a_float_drops_only_its_operator(bad):
+    """An operand no float holds makes its operator malformed like any
+    other: the operator is dropped and the page keeps every other char, as
+    if the operator were not there (the whole document failed with
+    OverflowError before)."""
+    def page(op):
+        return one_page_pdf(b"BT /F1 12 Tf 72 700 Td (ab) Tj %s (cd) Tj ET" % op)
+
+    (it,) = parse_pdf(page(bad))
+    (want,) = parse_pdf(page(b""))
+    assert it.ch_text == list("abcd")
+    assert it.ch_num.tobytes() == want.ch_num.tobytes()

@@ -2,7 +2,8 @@
 (pdfminer PDFType3Font semantics — hscale = apply_matrix_norm(matrix,(1,1));
 reference renders these via pdfminer, missing-list item #8 in VERDICT r1)."""
 
-from pdfplumber_spark.kernel.pdfparse import pdf_to_frames
+from pdfplumber_spark.kernel.pdfparse import Ref, pdf_to_frames
+from pdfplumber_spark.kernel.pdfwrite import write_pdf
 
 
 def _type3_pdf() -> bytes:
@@ -29,20 +30,8 @@ def _type3_pdf() -> bytes:
     )
     pages_tree = obj(b"<</Type/Pages/Kids[%d 0 R]/Count 1>>" % page)
     cat = obj(b"<</Type/Catalog/Pages %d 0 R>>" % pages_tree)
-    out = bytearray(b"%PDF-1.4\n")
-    offs = [0]
-    for i, o in enumerate(objs, 1):
-        offs.append(len(out))
-        out += b"%d 0 obj\n" % i + o + b"\nendobj\n"
-    xref = len(out)
-    n = len(objs) + 1
-    out += b"xref\n0 %d\n0000000000 65535 f \n" % n
-    for off in offs[1:]:
-        out += b"%010d 00000 n \n" % off
-    out += b"trailer\n<</Size %d/Root %d 0 R>>\nstartxref\n%d\n%%%%EOF\n" % (
-        n, cat, xref,
-    )
-    return bytes(out)
+    return write_pdf(b"%PDF-1.4\n", dict(enumerate(objs, 1)),
+                     {"Root": Ref(cat, 0)})
 
 
 def test_type3_fontmatrix_widths():
