@@ -16,9 +16,10 @@ executors run — SURVEY §1.3: the corpus-scale path is the DataFrame API in
 ``plans/``). Objects are returned as list-of-dicts like the reference
 (``page.py:416-425``). A page holds the parser's own objects: its chars
 as ``CharArrays``, handed straight to the char kernels, and its lines,
-rects, curves and images as the interpreter's row tuples, which the table
-kernel's edges are built from. Records are built only at the surface
-(``kernel.pdfparse.object_records``), and every derived page masks or
+rects, curves and images as the interpreter's row tuples. Records are
+built only at the surface (``kernel.pdfparse.object_records``; edges are
+``kernel.geom.obj_to_edges`` over those records, and the table kernel takes
+them as ``EdgeArrays.from_records``), and every derived page masks or
 clips every kind the same way.
 """
 
@@ -29,15 +30,12 @@ import math
 from typing import List, NamedTuple, Optional, Union
 
 import numpy as np
-import pandas as pd
 
 from .kernel.geom import (
     bbox_overlap_mask,
     clip_coords,
     coords,
-    curves_to_edges,
-    lines_to_edges,
-    rects_to_edges,
+    obj_to_edges,
     within_bbox_mask,
 )
 from .kernel.layout import (
@@ -48,7 +46,6 @@ from .kernel.layout import (
     simple_text,
 )
 from .kernel.pdfparse import (
-    LINE_COLUMNS,
     ROW_COLUMNS,
     StreamWrapper,
     object_records,
@@ -425,28 +422,12 @@ class Page:
     def hyperlinks(self) -> List[dict]:
         return [a for a in self.annots if a.get("uri") is not None]
 
-    def _edges_frame(self) -> pd.DataFrame:
-        """The page's edge records as a frame: the frame converters over
-        its line, rect and curve rows, in ``EdgeArrays.from_objects``'
-        order."""
-        parts = []
-        for kind, to_edges in (("line", lines_to_edges),
-                               ("rect", rects_to_edges),
-                               ("curve", curves_to_edges)):
-            if self._rows[kind]:
-                f = pd.DataFrame(self._rows[kind], columns=LINE_COLUMNS)
-                f["object_type"] = kind
-                parts.append(to_edges(f))
-        if not parts:
-            return pd.DataFrame(
-                columns=["x0", "x1", "top", "bottom", "width", "height",
-                         "orientation", "object_type"]
-            )
-        return pd.concat(parts, ignore_index=True)
-
     @property
     def edges(self) -> List[dict]:
-        return self._edges_frame().to_dict("records")
+        """The edge records of the page's lines, rects and curves
+        (``geom.obj_to_edges``; the reference's ``container.py`` edges)."""
+        return [e for o in self.lines + self.rects + self.curves
+                for e in obj_to_edges(o)]
 
     # --- text ---------------------------------------------------------------
     def extract_text(self, **kwargs) -> str:
@@ -501,7 +482,7 @@ class Page:
     # --- tables --------------------------------------------------------------
     def _find_tables(self, table_settings: Optional[dict], debug: bool):
         """(text settings, ``tables.find_tables`` result) for this page,
-        on the edges of its line, rect and curve rows."""
+        on its edge records."""
         ts = _resolve_table_settings(table_settings)
         text_settings = {
             k[5:]: ts.pop(k) for k in list(ts) if k.startswith("text_")
@@ -512,11 +493,9 @@ class Page:
             settings, _ = split_word_settings(text_settings)
             words, _, _ = extract_words_ca(
                 self._ca.select(settings.extra_attrs), settings)
-        edges = EdgeArrays.from_objects(
-            *(self._rows[k] for k in ("line", "rect", "curve")))
         return text_settings, find_tables(
-            edges, words=words, page_bbox=self.bbox, debug=debug,
-            edge_frame=self._edges_frame() if debug else None, **ts
+            EdgeArrays.from_records(self.edges), words=words,
+            page_bbox=self.bbox, debug=debug, **ts
         )
 
     def find_tables(self, table_settings: Optional[dict] = None):

@@ -1,8 +1,13 @@
-"""Vectorized bbox / edge geometry over coordinate arrays and object frames.
+"""Vectorized bbox / edge geometry over coordinate arrays and object frames,
+and the object -> edge record converters.
 
-Semantics mirror ``/root/reference/pdfplumber/utils/geometry.py`` (cited
-per-function) but are re-expressed as columnar numpy operations over whole
-object columns, never per-row dict manipulation.
+Semantics mirror the reference's ``pdfplumber/utils/geometry.py`` (cited
+per-function). The masks and clips are columnar numpy operations over whole
+object columns. Objects become edges in one place, the record converters
+(:func:`line_to_edge`, :func:`rect_to_edges`, :func:`curve_to_edges`,
+:func:`obj_to_edges`): ``page.edges``, explicit object-dict table lines and
+``utils`` all call them, and ``tables.EdgeArrays.from_records`` turns their
+records into columns.
 
 Coordinate convention (the reference's, ``page.py:192-197``): origin at the
 page's **top-left**; ``top``/``bottom`` grow downward; ``y0``/``y1`` are the
@@ -72,74 +77,75 @@ def crop_frame(df: pd.DataFrame, bbox) -> pd.DataFrame:
 
 # --- object -> edge decomposition -------------------------------------------
 
-def rects_to_edges(rects: pd.DataFrame) -> pd.DataFrame:
-    """Each rect -> 4 zero-thickness edges (``geometry.py:207-244``).
+def line_to_edge(line: dict) -> dict:
+    """A line IS an edge once oriented (``geometry.py:247-250``)."""
+    out = dict(line)
+    out["orientation"] = "h" if line["top"] == line["bottom"] else "v"
+    return out
 
-    Emitted in the reference's order (top, bottom, left, right) per rect.
-    """
-    if len(rects) == 0:
-        return pd.DataFrame(columns=list(rects.columns) + ["orientation"])
-    n = len(rects)
-    base = pd.concat([rects] * 4, ignore_index=True)
-    part = np.repeat(np.arange(4), n)  # 0=top 1=bottom 2=left 3=right
-    x0 = base["x0"].to_numpy().copy()
-    x1 = base["x1"].to_numpy().copy()
-    top = base["top"].to_numpy().copy()
-    bottom = base["bottom"].to_numpy().copy()
-    doctop = base["doctop"].to_numpy().copy() if "doctop" in base else None
-    width = base["width"].to_numpy().copy()
-    height = base["height"].to_numpy().copy()
-    y0 = base["y0"].to_numpy().copy() if "y0" in base else None
-    y1 = base["y1"].to_numpy().copy() if "y1" in base else None
 
-    t, b, le, r = (part == 0), (part == 1), (part == 2), (part == 3)
-    # top edge: height=0, y0=y1, bottom=top
-    height[t] = 0.0
-    bottom[t] = top[t]
-    if y0 is not None and y1 is not None:
-        y0[t] = y1[t]
-    # bottom edge: height=0, y1=y0, top=old bottom, doctop += height
-    h_orig = base["height"].to_numpy()
-    if y0 is not None and y1 is not None:
-        y1[b] = y0[b]
-    top[b] = top[b] + h_orig[b]
-    if doctop is not None:
-        doctop[b] = doctop[b] + h_orig[b]
-    height[b] = 0.0
-    # left edge: width=0, x1=x0
-    width[le] = 0.0
-    x1[le] = x0[le]
-    # right edge: width=0, x0=x1
-    width[r] = 0.0
-    x0[r] = x1[r]
+def rect_to_edges(rect: dict) -> list:
+    """Four zero-thickness edges of a rect, top, bottom, left, right, each
+    inheriting every rect attr (``geometry.py:207-244``)."""
+    top = dict(rect, object_type="rect_edge", height=0, orientation="h",
+               y0=rect.get("y1"), bottom=rect["top"])
+    bottom = dict(rect, object_type="rect_edge", height=0, orientation="h",
+                  y1=rect.get("y0"),
+                  top=rect["top"] + rect["height"],
+                  doctop=rect.get("doctop", rect["top"]) + rect["height"])
+    left = dict(rect, object_type="rect_edge", width=0, orientation="v",
+                x1=rect["x0"])
+    right = dict(rect, object_type="rect_edge", width=0, orientation="v",
+                 x0=rect["x1"])
+    return [top, bottom, left, right]
 
-    out = base.copy()
-    out["x0"], out["x1"], out["top"], out["bottom"] = x0, x1, top, bottom
-    out["width"], out["height"] = width, height
-    if doctop is not None:
-        out["doctop"] = doctop
-    if y0 is not None:
-        out["y0"] = y0
-    if y1 is not None:
-        out["y1"] = y1
-    out["object_type"] = "rect_edge"
-    out["orientation"] = np.where(part <= 1, "h", "v")
-    # reference emits [top, bottom, left, right] per rect, rect-major order
-    order = np.argsort(np.tile(np.arange(n), 4) * 4 + part, kind="stable")
-    return out.iloc[order].reset_index(drop=True)
+
+def curve_to_edges(curve: dict) -> list:
+    """Consecutive pts pairs as edges, 'v' iff the xs are equal, 'h' iff
+    the ys are, else None (``geometry.py:189-204``)."""
+    pts = curve["pts"]
+    doc_off = curve.get("doctop", curve["top"]) - curve["top"]
+    out = []
+    for (ax, ay), (bx, by) in zip(pts, pts[1:]):
+        ori = "v" if ax == bx else ("h" if ay == by else None)
+        out.append({
+            "object_type": "curve_edge",
+            "x0": min(ax, bx), "x1": max(ax, bx),
+            "top": min(ay, by), "bottom": max(ay, by),
+            "doctop": min(ay, by) + doc_off,
+            "width": abs(ax - bx), "height": abs(ay - by),
+            "orientation": ori,
+        })
+    return out
+
+
+def obj_to_edges(obj: dict) -> list:
+    """An object record's edge records, dispatched on object_type: an
+    ``*_edge`` passes through (``geometry.py:253-260``)."""
+    t = obj["object_type"]
+    if "_edge" in t:
+        return [obj]
+    if t == "line":
+        return [line_to_edge(obj)]
+    return {"rect": rect_to_edges, "curve": curve_to_edges}[t](obj)
 
 
 def lines_to_edges(lines: pd.DataFrame) -> pd.DataFrame:
-    """line -> edge with orientation (h iff top==bottom), ``geometry.py:247-250``."""
-    out = lines.copy()
-    if len(out):
-        out["orientation"] = np.where(
-            out["top"].to_numpy() == out["bottom"].to_numpy(), "h", "v"
-        )
-    else:
-        out["orientation"] = pd.Series([], dtype=object)
-    out["object_type"] = "line"
-    return out
+    """The edge records of a line frame's rows, as a frame (a traced hook
+    name of the benchmark; no package caller)."""
+    return pd.DataFrame([line_to_edge(o) for o in lines.to_dict("records")])
+
+
+def rects_to_edges(rects: pd.DataFrame) -> pd.DataFrame:
+    """:func:`lines_to_edges` for a rect frame."""
+    return pd.DataFrame([e for o in rects.to_dict("records")
+                         for e in rect_to_edges(o)])
+
+
+def curves_to_edges(curves: pd.DataFrame) -> pd.DataFrame:
+    """:func:`lines_to_edges` for a curve frame."""
+    return pd.DataFrame([e for o in curves.to_dict("records")
+                         for e in curve_to_edges(o)])
 
 
 def curve_segments(pts_lists):
@@ -158,43 +164,6 @@ def curve_segments(pts_lists):
     # A segment starts at every point whose successor has the same owner.
     seg = owner[:-1] == owner[1:]
     return owner[:-1][seg], flat[:-1][seg], flat[1:][seg]
-
-
-def curves_to_edges(curves: pd.DataFrame) -> pd.DataFrame:
-    """Consecutive pts pairs -> edges (``geometry.py:189-204``).
-
-    ``pts`` column holds a list of (x, top) pairs per curve. Orientation is
-    'v' iff xs equal, 'h' iff ys equal, else None (oblique).
-    """
-    cols = [
-        "object_type", "x0", "x1", "top", "doctop", "bottom",
-        "width", "height", "orientation",
-    ]
-    pts = curves["pts"].to_list() if len(curves) else []
-    if not any(len(p) for p in pts):
-        return pd.DataFrame(columns=cols)
-    own, a, b = curve_segments(pts)
-    ax, ay, bx, by = a[:, 0], a[:, 1], b[:, 0], b[:, 1]
-    top = np.minimum(ay, by)
-    if "doctop" in curves.columns:
-        dt_adj = (curves["doctop"].to_numpy(dtype=np.float64)
-                  - curves["top"].to_numpy(dtype=np.float64))[own]
-    else:
-        dt_adj = np.zeros(len(own))
-    return pd.DataFrame(
-        {
-            "object_type": "curve_edge",
-            "x0": np.minimum(ax, bx),
-            "x1": np.maximum(ax, bx),
-            "top": top,
-            "doctop": top + dt_adj,
-            "bottom": np.maximum(ay, by),
-            "width": np.abs(ax - bx),
-            "height": np.abs(ay - by),
-            "orientation": curve_orientation(ax, ay, bx, by),
-        },
-        columns=cols,
-    )
 
 
 def curve_orientation(ax, ay, bx, by) -> np.ndarray:
@@ -216,20 +185,3 @@ def edge_mask(orientation, object_type, width, height, ori=None,
     if edge_type is not None:
         mask &= object_type == edge_type
     return mask
-
-
-def filter_edges_frame(
-    edges: pd.DataFrame,
-    orientation=None,
-    edge_type=None,
-    min_length: float = 1,
-) -> pd.DataFrame:
-    """:func:`edge_mask` over an edge frame."""
-    if orientation not in ("v", "h", None):
-        raise ValueError("Orientation must be 'v' or 'h'")
-    if len(edges) == 0:
-        return edges
-    return edges[edge_mask(
-        *(edges[c].to_numpy() for c in ("orientation", "object_type", "width", "height")),
-        orientation, edge_type, min_length,
-    )]

@@ -473,6 +473,18 @@ class _Memo(dict):
         return v
 
 
+def _font_num(v, default):
+    """A font's width, metric or matrix value ``v`` as a float, or
+    ``default``, as for a missing value, when ``v`` is not a number or no
+    float holds it (an integer of 309 digits or more)."""
+    if isinstance(v, (int, float)):
+        try:
+            return float(v)
+        except OverflowError:
+            pass
+    return default
+
+
 class Font:
     """Simple (1-byte) font: widths, encoding, ToUnicode."""
 
@@ -484,7 +496,7 @@ class Font:
         self.widths: Dict[int, float] = {}
         if widths:
             for i, w in enumerate(doc.resolve(widths)):
-                self.widths[self.first_char + i] = float(doc.resolve(w) or 0)
+                self.widths[self.first_char + i] = _font_num(doc.resolve(w), 0.0)
         desc = doc.resolve(spec.get("FontDescriptor")) or {}
         # raw /FontFile (Type1), /FontFile2 (TrueType), /FontFile3
         # (CFF/Type1C) refs kept for lazy embedded-glyph loading
@@ -501,9 +513,8 @@ class Font:
         # LibreOffice emits Ascent/Descent 0 (round-7 element_bbox port:
         # chars sat 0.212 em low on pdf_structure.pdf). The writer-contract
         # default applies only when the key is ABSENT.
-        _desc_v = doc.resolve(desc.get("Descent"))
-        self.descent = (float(_desc_v) if isinstance(_desc_v, (int, float))
-                        else float(FONT_DESCENT))
+        self.descent = _font_num(doc.resolve(desc.get("Descent")),
+                                 float(FONT_DESCENT))
         # PDF RM 9.8.1: /Descent must be negative. PScript5.dll emits a
         # positive value; pdfminer (pdffont.py PDFFont.__init__) forces it
         # negative, and the reference's laparams line grouping on
@@ -511,10 +522,10 @@ class Font:
         # font sizes shift otherwise.
         if self.descent > 0:
             self.descent = -self.descent
-        _asc_v = doc.resolve(desc.get("Ascent"))
-        self.ascent = (float(_asc_v) if isinstance(_asc_v, (int, float))
-                       else float(FONT_ASCENT))
-        self.default_width = float(doc.resolve(desc.get("MissingWidth", 556)) or 556)
+        self.ascent = _font_num(doc.resolve(desc.get("Ascent")),
+                                float(FONT_ASCENT))
+        self.default_width = _font_num(
+            doc.resolve(desc.get("MissingWidth")), 556.0) or 556.0
         if not self.widths:
             # fallback: deterministic base table (ASCII)
             self.widths = {32 + i: float(w) for i, w in enumerate(WIDTHS)}
@@ -547,11 +558,11 @@ class Font:
         self.hscale = 0.001
         if subtype == "Type3":
             fm = doc.resolve(spec.get("FontMatrix")) or [0.001, 0, 0, 0.001, 0, 0]
-            fm = [float(doc.resolve(x) or 0) for x in fm]
+            fm = [_font_num(doc.resolve(x), 0.0) for x in fm]
             self.hscale = fm[0] + fm[2]
             vscale = fm[1] + fm[3]
             bbox = [
-                float(doc.resolve(x) or 0)
+                _font_num(doc.resolve(x), 0.0)
                 for x in (doc.resolve(spec.get("FontBBox")) or (0, 0, 0, 0))
             ]
             if bbox != [0.0, 0.0, 0.0, 0.0]:
@@ -573,7 +584,7 @@ class Font:
             # CIDFontType2: /CIDToGIDMap is Identity (default) or a
             # 2-byte-per-CID stream; kept for CID-keyed glyph rendering
             self._cidtogid_ref = df.get("CIDToGIDMap")
-            self.cid_default = float(doc.resolve(df.get("DW", 1000)) or 1000)
+            self.cid_default = _font_num(doc.resolve(df.get("DW")), 1000.0) or 1000.0
             warr = doc.resolve(df.get("W")) or []
             i = 0
             warr = [doc.resolve(x) for x in warr]
@@ -581,12 +592,15 @@ class Font:
                 if i + 1 < len(warr) and isinstance(warr[i + 1], list):
                     start = int(warr[i])
                     for j, w in enumerate(warr[i + 1]):
-                        self.cid_widths[start + j] = float(w)
+                        w = _font_num(w, None)
+                        if w is not None:  # else the cid keeps /DW
+                            self.cid_widths[start + j] = w
                     i += 2
                 elif i + 2 < len(warr):
-                    a, b, w = int(warr[i]), int(warr[i + 1]), float(warr[i + 2])
-                    for cid in range(a, b + 1):
-                        self.cid_widths[cid] = w
+                    a, b, w = int(warr[i]), int(warr[i + 1]), _font_num(warr[i + 2], None)
+                    if w is not None:
+                        for cid in range(a, b + 1):
+                            self.cid_widths[cid] = w
                     i += 3
                 else:
                     break
@@ -594,9 +608,9 @@ class Font:
             self._fontfile_ref = desc.get("FontFile")
             self._fontfile2_ref = desc.get("FontFile2")
             self._fontfile3_ref = desc.get("FontFile3")
-            _dv = doc.resolve(desc.get("Descent"))
-            if isinstance(_dv, (int, float)):  # explicit 0 stands (see
-                self.descent = float(_dv)      # simple-font note above)
+            # an explicit 0 stands (see the simple-font note above)
+            self.descent = _font_num(doc.resolve(desc.get("Descent")),
+                                     self.descent)
             if self.descent > 0:  # same RM 9.8.1 correction as simple fonts
                 self.descent = -self.descent
 

@@ -3,9 +3,9 @@
 Re-expresses the reference pdfplumber ``table.py`` over numpy arrays:
 
 - :class:`EdgeArrays` — a page's edges as a struct of arrays, built
-  straight from the parser's line/rect/curve rows (``from_interp`` for a
-  parsed page, ``from_objects`` for the facade's possibly derived rows) or
-  from an edge frame (``from_frame``: explicit lines, tests);
+  straight from a parsed page's line/rect/curve rows (``from_interp``, the
+  plans) or from edge records (``from_records``: the facade's
+  ``page.edges``, explicit lines), each such edge keeping its record;
 - ``merge_edges`` — snap to cluster means (``assign_clusters`` plus a
   bincount mean) and interval union per infinite line (one lexsort over
   (orientation, position, start), run ids from a segmented
@@ -26,12 +26,12 @@ Re-expresses the reference pdfplumber ``table.py`` over numpy arrays:
   (``table.py:389-435``);
 - ``find_tables`` — the TableFinder pipeline over those pieces.
 
-The extraction plans and the facade both call ``find_tables`` on
-``EdgeArrays`` of the parser's rows (the plans per page inside their
-``mapInPandas`` task, on the buffers of one parse). ``merge_edges_frame``
-and ``find_intersections`` also take edge frames (tests);
-``find_tables_frame`` is kept only as the benchmark's traced hook name and
-for tests.
+The extraction plans call ``find_tables`` per page inside their
+``mapInPandas`` task, on ``EdgeArrays.from_interp`` of one parse; the
+facade calls it on ``EdgeArrays.from_records(page.edges)``, and its debug
+edge records are those records as merging moved them. ``merge_edges_frame``
+takes an edge frame (tests); ``find_tables_frame`` is kept only as the
+benchmark's traced hook name and for tests.
 """
 
 from __future__ import annotations
@@ -43,7 +43,7 @@ import pandas as pd
 
 from . import layout
 from .cluster import assign_clusters, group_rows_by_cluster
-from .geom import curve_orientation, curve_segments, edge_mask
+from .geom import curve_orientation, curve_segments, edge_mask, obj_to_edges
 from .pdfparse import LINE_COLUMNS
 from .words import CharArrays, split_word_settings
 
@@ -63,41 +63,44 @@ _ROW_PTS = LINE_COLUMNS.index("pts")
 class EdgeArrays:
     """A page's edges as a struct of arrays: the six coordinates,
     ``ori`` ('h', 'v' or None for an oblique curve segment), ``otype`` (the
-    object_type) and ``src``, each edge's row in the source it was built
-    from (the debug records are rebuilt from it)."""
+    object_type) and ``rec``, each edge's record (:meth:`from_records`) or
+    None for an edge built from parser rows or words; ``rec`` itself is
+    None when no edge has a record."""
 
     __slots__ = ("x0", "x1", "top", "bottom", "width", "height", "ori",
-                 "otype", "src")
+                 "otype", "rec")
 
     def __init__(self, x0, x1, top, bottom, width, height, ori, otype,
-                 src=None):
+                 rec=None):
         self.x0, self.x1, self.top, self.bottom, self.width, self.height = (
             np.asarray(v, dtype=np.float64)
             for v in (x0, x1, top, bottom, width, height)
         )
         self.ori = np.asarray(ori, dtype=object)
         self.otype = np.asarray(otype, dtype=object)
-        self.src = np.arange(len(self.x0)) if src is None else src
+        self.rec = rec
 
     def __len__(self) -> int:
         return len(self.x0)
 
     def take(self, idx) -> "EdgeArrays":
-        return EdgeArrays(*(getattr(self, f)[idx] for f in self.__slots__))
+        return EdgeArrays(*(getattr(self, f)[idx] for f in self.__slots__[:8]),
+                          None if self.rec is None else self.rec[idx])
 
     def filter(self, ori=None, edge_type=None, min_length: float = 1) -> "EdgeArrays":
         return self.take(edge_mask(self.ori, self.otype, self.width,
                                    self.height, ori, edge_type, min_length))
 
-    def to_frame(self) -> pd.DataFrame:
-        return pd.DataFrame(dict(zip(
-            EDGE_COLS, (getattr(self, f) for f in self.__slots__[:8]))))
-
     @classmethod
     def concat(cls, parts: List["EdgeArrays"]) -> "EdgeArrays":
-        """Parts in order; ``src`` becomes the position in the result."""
+        """Parts in order; a part without records gives its edges None."""
+        rec = None
+        if any(p.rec is not None for p in parts):
+            rec = np.concatenate([
+                np.full(len(p), None, dtype=object) if p.rec is None else p.rec
+                for p in parts])
         return cls(*(np.concatenate([getattr(p, f) for p in parts])
-                     for f in cls.__slots__[:8]))
+                     for f in cls.__slots__[:8]), rec)
 
     @classmethod
     def from_rows(cls, coords, ori, otype: str) -> "EdgeArrays":
@@ -106,30 +109,31 @@ class EdgeArrays:
         return cls(*a.T, ori, np.full(len(a), otype, dtype=object))
 
     @classmethod
-    def from_frame(cls, df: pd.DataFrame) -> "EdgeArrays":
-        return cls(*(df[c].to_numpy(np.float64) for c in EDGE_COLS[:6]),
-                   *(df[c].to_numpy(object) for c in EDGE_COLS[6:]))
+    def from_records(cls, records: List[dict]) -> "EdgeArrays":
+        """Edges from edge records (``geom.obj_to_edges`` output, explicit
+        edge dicts), each kept as its edge's ``rec``. A missing coordinate
+        reads NaN, which is no line; a missing orientation or object_type
+        reads None."""
+        rec = np.empty(len(records), dtype=object)
+        rec[:] = records
+        return cls(*([r.get(c, np.nan) for r in records] for c in EDGE_COLS[:6]),
+                   *([r.get(c) for r in records] for c in EDGE_COLS[6:]), rec)
 
     @classmethod
     def from_interp(cls, it) -> "EdgeArrays":
-        """A parsed page's edges: :meth:`from_objects` of its rows."""
-        return cls.from_objects(it.lines, it.rects, it.curves)
-
-    @classmethod
-    def from_objects(cls, lines, rects, curves) -> "EdgeArrays":
-        """The edges of a page's parser line, rect and curve rows, in the
-        order and with the arithmetic of ``geom.lines_to_edges`` /
-        ``rects_to_edges`` / ``curves_to_edges`` (``geometry.py:189-250``):
+        """A parsed page's edges, straight from its parser line, rect and
+        curve rows, in the order and with the arithmetic of
+        ``geom.obj_to_edges`` over their records (``geometry.py:189-250``):
         one edge per line (h iff top == bottom), top/bottom/left/right per
         rect, one per consecutive curve point pair (h, v or oblique)."""
         def coords(rows):
             return np.array([[r[i] for i in _ROW_COORDS] for r in rows],
                             dtype=np.float64).reshape(-1, 6)
 
-        ln = coords(lines)
+        ln = coords(it.lines)
         lines = cls.from_rows(
             ln, np.where(ln[:, 2] == ln[:, 3], "h", "v").astype(object), "line")
-        x0, x1, top, bottom, w, h = coords(rects).T
+        x0, x1, top, bottom, w, h = coords(it.rects).T
         zero = np.zeros(len(x0))
         rects = cls.from_rows(
             np.stack([
@@ -142,7 +146,7 @@ class EdgeArrays:
             np.tile(np.array(["h", "h", "v", "v"], dtype=object), len(x0)),
             "rect_edge",
         )
-        _, a, b = curve_segments([r[_ROW_PTS] for r in curves])
+        _, a, b = curve_segments([r[_ROW_PTS] for r in it.curves])
         ax, ay, bx, by = a[:, 0], a[:, 1], b[:, 0], b[:, 1]
         curves = cls.from_rows(
             np.stack([np.minimum(ax, bx), np.maximum(ax, bx),
@@ -151,30 +155,6 @@ class EdgeArrays:
             curve_orientation(ax, ay, bx, by), "curve_edge",
         )
         return cls.concat([lines, rects, curves])
-
-
-def _dict_to_edges(obj: dict) -> List[dict]:
-    """One object dict -> its edge dicts (reference utils.obj_to_edges,
-    geometry.py:253-260) via the frame converters."""
-    from .geom import curves_to_edges, lines_to_edges, rects_to_edges
-
-    t = str(obj.get("object_type") or "")
-    if "_edge" in t:
-        return [obj]
-    conv = {"line": lines_to_edges, "rect": rects_to_edges,
-            "curve": curves_to_edges}.get(t)
-    if conv is None:
-        raise ValueError(f"cannot convert object_type {t!r} to edges")
-    frame = conv(pd.DataFrame([obj]))
-    return frame.to_dict("records")
-
-
-def _edge_frame(rows: List[dict]) -> pd.DataFrame:
-    df = pd.DataFrame(rows)
-    for c in EDGE_COLS:
-        if c not in df.columns:
-            df[c] = np.nan if c not in ("orientation", "object_type") else None
-    return df
 
 
 def merge_edges(
@@ -194,8 +174,8 @@ def merge_edges(
     when its start <= the run's max end + tolerance, and the survivor is
     the run's first edge, its end grown to the run's max end. ``shift`` is
     the move snapping gave each survivor (None when no snap ran) and
-    ``grow`` how far its end grew: the moves :func:`_edge_records` replays
-    onto the dependent attrs."""
+    ``grow`` how far its end grew: the moves :func:`_moved_records` replays
+    onto the edges' records."""
     e = edges.take((edges.ori == "h") | (edges.ori == "v"))
     h = e.ori == "h"
     shift = None
@@ -244,30 +224,38 @@ def merge_edges(
     return out, None if shift is None else shift[order[starts]], grow
 
 
-def _edge_records(source: pd.DataFrame, e: EdgeArrays, shift, grow) -> pd.DataFrame:
-    """The ``source`` rows of merged edges ``e`` with their final
-    coordinates and the dependent attrs moved as the reference's
-    move_object / resize_object move them (``geometry.py:128-186``): a y
-    snap shifts an h edge's doctop and y0/y1, a grown v bottom lowers y0.
-    A column keeps the source's values (and dtype) unless snapping or
-    joining moved some edge along it, as the frame pipeline left it."""
-    out = source.iloc[e.src].reset_index(drop=True)
-    h = e.ori == "h"
-    gh, gv = (grow > 0) & h, (grow > 0) & ~h
-    moved = set()
-    moves = [("y0", gv, -grow)]
-    if shift is not None:
-        moved |= {"x0", "x1"} if (~h).any() else set()
-        moved |= {"top", "bottom"} if h.any() else set()
-        moves += [("doctop", h, shift), ("y1", h, -shift), ("y0", h, -shift)]
-    moved |= {"x1", "width"} if gh.any() else set()
-    moved |= {"bottom", "height"} if gv.any() else set()
-    for c in moved:
-        out[c] = getattr(e, c)
-    for c, m, d in moves:
-        if c in out.columns and m.any():
-            col = out[c].to_numpy()
-            out[c] = np.where(m, col + d, col)
+def _moved_records(e: EdgeArrays, shift, grow) -> List[dict]:
+    """The records of merged edges ``e``: each edge's ``rec`` moved as
+    :func:`merge_edges` moved it, as the reference's move_object /
+    resize_object move a dict (``geometry.py:128-186``). Snapping shifts a
+    v edge's x0/x1, and an h edge's top/bottom with its doctop and y0/y1;
+    a join grows an h edge's x1 and width, or a v edge's bottom and height
+    with its y0. An edge without a record gets its :data:`EDGE_COLS`."""
+    cols = [getattr(e, f).tolist() for f in EdgeArrays.__slots__[:8]]
+    shifts = [None] * len(e) if shift is None else shift.tolist()
+    recs = [None] * len(e) if e.rec is None else e.rec
+    out = []
+    for i, (r, d, g) in enumerate(zip(recs, shifts, grow.tolist())):
+        if r is None:
+            out.append(dict(zip(EDGE_COLS, (c[i] for c in cols))))
+            continue
+        r = dict(r)
+        h = cols[6][i] == "h"
+        if d is not None:
+            moves = ((("top", d), ("bottom", d), ("doctop", d), ("y0", -d),
+                      ("y1", -d)) if h else (("x0", d), ("x1", d)))
+            for k, v in moves:
+                if r.get(k) is not None:
+                    r[k] = r[k] + v
+        if g > 0 and h:
+            r["x1"] = cols[1][i]
+            r["width"] = r["x1"] - r["x0"]
+        elif g > 0:
+            r["bottom"] = cols[3][i]
+            r["height"] = r["height"] + g
+            if r.get("y0") is not None:
+                r["y0"] = r["y0"] - g
+        out.append(r)
     return out
 
 
@@ -278,14 +266,13 @@ def merge_edges_frame(
     join_x_tolerance: float,
     join_y_tolerance: float,
 ) -> pd.DataFrame:
-    """:func:`merge_edges` over an edge frame: the surviving rows, merged."""
-    if len(edges) == 0:
-        return edges
+    """:func:`merge_edges` over an edge frame: the surviving rows, merged
+    (tests)."""
     merged = merge_edges(
-        EdgeArrays.from_frame(edges), snap_x_tolerance, snap_y_tolerance,
-        join_x_tolerance, join_y_tolerance,
+        EdgeArrays.from_records(edges.to_dict("records")), snap_x_tolerance,
+        snap_y_tolerance, join_x_tolerance, join_y_tolerance,
     )
-    return _edge_records(edges, *merged)
+    return pd.DataFrame(_moved_records(*merged), columns=edges.columns)
 
 
 def words_to_edges_h(
@@ -369,14 +356,12 @@ def find_intersections(
     edges, x_tolerance: float = 1, y_tolerance: float = 1
 ) -> Dict[Tuple[float, float], Dict[str, List[Tuple[float, float, float, float]]]]:
     """Vertex map {(x, top): {'v': [v bboxes], 'h': [h bboxes]}} of
-    EdgeArrays or an edge frame.
+    EdgeArrays.
 
     Band θ-join vectorized by numpy broadcasting over the (v, h) cross
     product (``table.py:207-231``); edge lists keep the reference's
     (x0, top)-sorted enumeration order.
     """
-    if isinstance(edges, pd.DataFrame):
-        edges = EdgeArrays.from_frame(edges)
     v = edges.take(edges.ori == "v")
     h = edges.take(edges.ori == "h")
     if len(v) == 0 or len(h) == 0:
@@ -576,16 +561,14 @@ def find_tables(
     intersection_x_tolerance: Optional[float] = None,
     intersection_y_tolerance: Optional[float] = None,
     debug: bool = False,
-    edge_frame: Optional[pd.DataFrame] = None,
 ):
     """The TableFinder pipeline (``table.py:566-671``) over a page's
     EdgeArrays: strategy matrix -> merge_edges -> min-length filter ->
     intersections -> cells -> tables. ``words`` (a word frame or
     WordArrays) feeds the "text" strategy. Returns a list of tables, each a
     list of cell bboxes; ``debug=True`` returns the intermediate state
-    instead (reference page.py:427-431), its edge records rebuilt from the
-    rows of ``edge_frame`` (an edge frame whose rows ``edges.src``
-    indexes) and of the generated edges."""
+    instead (reference page.py:427-431), its edge records each surviving
+    edge's ``rec`` as merging moved it (:func:`_moved_records`)."""
     snap_x = snap_tolerance if snap_x_tolerance is None else snap_x_tolerance
     snap_y = snap_tolerance if snap_y_tolerance is None else snap_y_tolerance
     join_x = join_tolerance if join_x_tolerance is None else join_x_tolerance
@@ -593,8 +576,7 @@ def find_tables(
     int_x = intersection_tolerance if intersection_x_tolerance is None else intersection_x_tolerance
     int_y = intersection_tolerance if intersection_y_tolerance is None else intersection_y_tolerance
 
-    # (edges, the frame whose rows their src indexes: None -> to_frame())
-    parts: List[Tuple[EdgeArrays, Optional[pd.DataFrame]]] = []
+    parts: List[EdgeArrays] = []
     for ori, strat, explicit, w2e, min_words in (
         ("v", vertical_strategy, explicit_vertical_lines, words_to_edges_v, min_words_vertical),
         ("h", horizontal_strategy, explicit_horizontal_lines, words_to_edges_h, min_words_horizontal),
@@ -604,54 +586,38 @@ def find_tables(
                 f"explicit strategy for {ori} requires >= 2 explicit lines"
             )
         if strat == "lines":
-            parts.append((edges.filter(ori), edge_frame))
+            parts.append(edges.filter(ori))
         elif strat == "lines_strict":
-            parts.append((edges.filter(ori, edge_type="line"), edge_frame))
+            parts.append(edges.filter(ori, edge_type="line"))
         elif strat == "text":
             if words is None:
                 raise ValueError("text strategy requires words")
-            parts.append((w2e(words, min_words), None))
+            parts.append(w2e(words, min_words))
         elif strat != "explicit":
             raise ValueError(strat)
         exp_rows = []
         for val in explicit or []:
             if isinstance(val, dict):
-                # object descriptor (reference utils.obj_to_edges,
-                # geometry.py:253-260): an *_edge passes through, a
+                # object descriptor: an *_edge passes through, a
                 # line/rect/curve converts to its edges; only edges of
                 # this orientation are kept (table.py:601-607)
                 exp_rows.extend(
-                    e for e in _dict_to_edges(val) if e["orientation"] == ori
+                    e for e in obj_to_edges(val) if e["orientation"] == ori
                 )
                 continue
             if page_bbox is None:
                 raise ValueError("explicit numeric lines require page_bbox")
-            if ori == "v":
-                exp_rows.append(
-                    {
-                        "x0": val, "x1": val,
-                        "top": page_bbox[1], "bottom": page_bbox[3],
-                        "width": 0.0, "height": page_bbox[3] - page_bbox[1],
-                        "orientation": "v", "object_type": "explicit_edge",
-                    }
-                )
-            else:
-                exp_rows.append(
-                    {
-                        "x0": page_bbox[0], "x1": page_bbox[2],
-                        "top": val, "bottom": val,
-                        "width": page_bbox[2] - page_bbox[0], "height": 0.0,
-                        "orientation": "h", "object_type": "explicit_edge",
-                    }
-                )
+            x0, top, x1, bottom = map(float, page_bbox)
+            val = float(val)
+            coords = ((val, val, top, bottom, 0.0, bottom - top) if ori == "v"
+                      else (x0, x1, val, val, x1 - x0, 0.0))
+            exp_rows.append(dict(zip(EDGE_COLS, (*coords, ori, "explicit_edge"))))
         if exp_rows:
-            frame = _edge_frame(exp_rows)
-            parts.append((EdgeArrays.from_frame(frame), frame))
+            parts.append(EdgeArrays.from_records(exp_rows))
 
-    parts = [(e, f) for e, f in parts if len(e)]
+    parts = [e for e in parts if len(e)]
     all_edges = (
-        EdgeArrays.concat([e for e, _ in parts]) if parts
-        else EdgeArrays.from_rows([], [], "")
+        EdgeArrays.concat(parts) if parts else EdgeArrays.from_rows([], [], "")
     )
     merged, shift, grow = merge_edges(all_edges, snap_x, snap_y, join_x, join_y)
     keep = edge_mask(merged.ori, merged.otype, merged.width, merged.height,
@@ -662,20 +628,16 @@ def find_tables(
     tables = cells_to_tables(cells)
     if not debug:
         return tables
-    records = []
-    if len(final):
-        source = pd.concat(
-            [f.iloc[e.src] if f is not None else e.to_frame() for e, f in parts],
-            ignore_index=True,
-        )
-        frame = _edge_records(source, merged, shift, grow)[keep]
-        records = frame.to_dict("records")
-        # the vertex edge boxes carry the records' values (an integer
-        # explicit line no snap moved stays an int)
-        box = {tuple(map(float, b)): b for b in zip(
-            frame["x0"], frame["top"], frame["x1"], frame["bottom"])}
-        vertices = {p: {k: [box.get(b, b) for b in bs] for k, bs in d.items()}
-                    for p, d in vertices.items()}
+    records = _moved_records(
+        final, None if shift is None else shift[keep], grow[keep])
+    # the vertex edge boxes carry the records' values (an integer
+    # coordinate of an explicit object dict no snap moved stays an int)
+    box = {}
+    for r in records:
+        b = (r["x0"], r["top"], r["x1"], r["bottom"])
+        box[tuple(map(float, b))] = b
+    vertices = {p: {k: [box.get(b, b) for b in bs] for k, bs in d.items()}
+                for p, d in vertices.items()}
     return {
         "edges": records,
         "intersections": vertices,
@@ -686,8 +648,7 @@ def find_tables(
 
 def find_tables_frame(edges: pd.DataFrame, words=None, page_bbox=None,
                       debug: bool = False, **settings):
-    """:func:`find_tables` over an edge frame (the benchmark's traced hook
-    name; tests)."""
-    return find_tables(EdgeArrays.from_frame(edges), words, page_bbox,
-                       debug=debug, edge_frame=edges if debug else None,
-                       **settings)
+    """:func:`find_tables` over an edge frame's records (the benchmark's
+    traced hook name; tests)."""
+    return find_tables(EdgeArrays.from_records(edges.to_dict("records")),
+                       words, page_bbox, debug=debug, **settings)

@@ -171,26 +171,22 @@ class CharArrays:
     )
 
     def __init__(self, chars: pd.DataFrame, extra_attrs: Sequence[str] = ()):
+        """The columns of a char frame. A core column the frame lacks is
+        None, so a kernel reads only the columns it needs (``collate_line``
+        text/x0/x1; ``simple_text`` doctop too); ``doctop`` defaults to
+        ``top`` and ``height`` to ``bottom - top``."""
+        def col(c, dtype=np.float64):
+            return chars[c].to_numpy(dtype) if c in chars.columns else None
+
         self.n = len(chars)
-        self.text = chars["text"].to_numpy(dtype=object)
-        self.x0 = chars["x0"].to_numpy(np.float64)
-        self.x1 = chars["x1"].to_numpy(np.float64)
-        self.top = chars["top"].to_numpy(np.float64)
-        self.bottom = chars["bottom"].to_numpy(np.float64)
-        self.doctop = (
-            chars["doctop"].to_numpy(np.float64)
-            if "doctop" in chars.columns
-            else self.top
-        )
-        self.height = (
-            chars["height"].to_numpy(np.float64)
-            if "height" in chars.columns
-            else self.bottom - self.top
-        )
-        self.size = (
-            chars["size"].to_numpy(np.float64) if "size" in chars.columns else None
-        )
-        self.upright = chars["upright"].to_numpy()
+        self.text = col("text", object)
+        self.x0, self.x1, self.top, self.bottom, self.size = (
+            col(c) for c in ("x0", "x1", "top", "bottom", "size"))
+        self.doctop = col("doctop") if "doctop" in chars.columns else self.top
+        self.height = col("height")
+        if self.height is None and self.top is not None and self.bottom is not None:
+            self.height = self.bottom - self.top
+        self.upright = col("upright", None)
         self.extra = {a: chars[a].to_numpy(dtype=object) for a in extra_attrs}
 
     @classmethod
@@ -241,10 +237,10 @@ class CharArrays:
         """The chars at ``idx`` (indices or a boolean mask), in that order."""
         out = CharArrays.__new__(CharArrays)
         for f in ("text", "x0", "x1", "top", "bottom", "doctop", "height",
-                  "upright"):
-            setattr(out, f, getattr(self, f)[idx])
+                  "size", "upright"):
+            v = getattr(self, f)
+            setattr(out, f, None if v is None else v[idx])
         out.n = len(out.text)
-        out.size = None if self.size is None else self.size[idx]
         out.extra = {a: v[idx] for a, v in self.extra.items()}
         return out
 

@@ -19,6 +19,12 @@ import pandas as pd
 from .kernel.cluster import assign_clusters, group_rows_by_cluster
 from .kernel.cluster import cluster_list as _cluster_list_kernel
 from .kernel import layout
+from .kernel.geom import (  # noqa: F401 - re-exported reference names
+    curve_to_edges,
+    line_to_edge,
+    obj_to_edges,
+    rect_to_edges,
+)
 from .kernel.layout import (
     DEFAULT_X_DENSITY,
     DEFAULT_Y_DENSITY,
@@ -261,62 +267,11 @@ def resize_object(obj: dict, key: str, value) -> dict:
     return out
 
 
-def line_to_edge(line: dict) -> dict:
-    """A line IS an edge once oriented (``geometry.py:247-250``)."""
-    out = dict(line)
-    out["orientation"] = "h" if line["top"] == line["bottom"] else "v"
-    return out
-
-
-def rect_to_edges(rect: dict) -> List[dict]:
-    """Four zero-thickness edges of a rect, each inheriting every rect
-    attr (``geometry.py:207-244``)."""
-    top = dict(rect, object_type="rect_edge", height=0, orientation="h",
-               y0=rect.get("y1"), bottom=rect["top"])
-    bottom = dict(rect, object_type="rect_edge", height=0, orientation="h",
-                  y1=rect.get("y0"),
-                  top=rect["top"] + rect["height"],
-                  doctop=rect.get("doctop", rect["top"]) + rect["height"])
-    left = dict(rect, object_type="rect_edge", width=0, orientation="v",
-                x1=rect["x0"])
-    right = dict(rect, object_type="rect_edge", width=0, orientation="v",
-                 x0=rect["x1"])
-    return [top, bottom, left, right]
-
-
-def curve_to_edges(curve: dict) -> List[dict]:
-    """Consecutive pts pairs as edges (``geometry.py:189-204``)."""
-    pts = curve["pts"]
-    doc_off = curve.get("doctop", curve["top"]) - curve["top"]
-    out = []
-    for (ax, ay), (bx, by) in zip(pts, pts[1:]):
-        ori = "v" if ax == bx else ("h" if ay == by else None)
-        out.append({
-            "object_type": "curve_edge",
-            "x0": min(ax, bx), "x1": max(ax, bx),
-            "top": min(ay, by), "bottom": max(ay, by),
-            "doctop": min(ay, by) + doc_off,
-            "width": abs(ax - bx), "height": abs(ay - by),
-            "orientation": ori,
-        })
-    return out
-
-
-def obj_to_edges(obj: dict) -> List[dict]:
-    """Dispatch on object_type (``geometry.py:253-260``)."""
-    t = obj["object_type"]
-    if "_edge" in t:
-        return [obj]
-    if t == "line":
-        return [line_to_edge(obj)]
-    return {"rect": rect_to_edges, "curve": curve_to_edges}[t](obj)
-
-
 def filter_edges(edges, orientation=None, edge_type=None,
                  min_length: float = 1) -> List[dict]:
     """Orientation/type/min-length predicate; the length that must reach
     ``min_length`` is height for 'v', width for 'h'
-    (``geometry.py:263-278``, kernel filter_edges_frame parity)."""
+    (``geometry.py:263-278``, ``kernel.geom.edge_mask`` parity)."""
     if orientation not in ("v", "h", None):
         raise ValueError("Orientation must be 'v' or 'h'")
     out = []

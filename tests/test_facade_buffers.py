@@ -197,6 +197,22 @@ def test_utils_text_helpers_match_the_page(pdf):
     assert pdf.pages[1].extract_text() == "Page two"
 
 
+def test_utils_char_helpers_read_only_the_keys_they_use():
+    """``collate_line`` reads text, x0 and x1 of each record and
+    ``extract_text_simple`` doctop too (``text.py:761-781``): records with
+    only those keys work. "b" starts 6 after "a" ends, past the default
+    x tolerance of 3; "c" touches "b"; the second line is 20 lower."""
+    line = [{"text": "a", "x0": 0.0, "x1": 4.0},
+            {"text": "c", "x0": 14.0, "x1": 18.0},
+            {"text": "b", "x0": 10.0, "x1": 14.0}]
+    assert utils.collate_line(line) == "a bc"
+    two = [dict(c, doctop=100.0) for c in line] + [
+        {"text": "d", "x0": 0.0, "x1": 4.0, "doctop": 120.0}]
+    assert utils.extract_text_simple(two) == "a bc\nd"
+    boxed = [dict(c, top=c["doctop"], bottom=c["doctop"] + 8) for c in two]
+    assert utils.extract_text_simple(boxed) == "a bc\nd"
+
+
 def test_filter_sees_the_accessor_records(pdf):
     """``filter`` hands its predicate the records the accessors return
     (the reference FilteredPage filters ``parent.objects`` records): they
@@ -279,16 +295,33 @@ def test_dedupe_chars_keeps_the_derived_bbox(small):
     assert "Hi there" in text
 
 
+def content_page(monkeypatch, content: bytes) -> bytes:
+    """A 200x200 page whose content stream is ``content``."""
+    monkeypatch.setattr(pdfgen, "_content_stream", lambda page: content)
+    data = make_pdf([{"width": 200, "height": 200}])
+    monkeypatch.undo()
+    return data
+
+
+# a tagged 0.5-wide ruling, an untagged 2-wide one, a rect and a curve
+TAGGED = (b"/P <</MCID 3>> BDC 0.5 w 10 180 m 100 180 l S EMC\n"
+          b"2 w 10 150 m 100 150 l S\n"
+          b"20 20 30 40 re S\n"
+          b"120 20 m 130 60 170 60 180 20 c S")
+CURVE_EDGE_KEYS = {"object_type", "x0", "x1", "top", "doctop", "bottom",
+                   "width", "height", "orientation"}
+
+
+def edge_records(page) -> list:
+    return [e for o in page.lines + page.rects + page.curves
+            for e in utils.obj_to_edges(o)]
+
+
 def test_line_records_keep_the_parser_values(monkeypatch):
     """A tagged 0.5-wide line next to an untagged 2-wide one: the records
     carry mcid 3 / None and linewidth 0.5 / 2 as written, not a frame's
-    float column."""
-    monkeypatch.setattr(pdfgen, "_content_stream", lambda page: (
-        b"/P <</MCID 3>> BDC 0.5 w 10 180 m 100 180 l S EMC\n"
-        b"2 w 10 150 m 100 150 l S"))
-    data = make_pdf([{"width": 200, "height": 200}])
-    monkeypatch.undo()
-    with api.open(data) as pdf:
+    float column, and so do their edges."""
+    with api.open(content_page(monkeypatch, TAGGED)) as pdf:
         page = pdf.pages[0]
         tagged, plain = page.lines
         assert box(tagged) == (10.0, 20.0, 100.0, 20.0)
@@ -300,11 +333,47 @@ def test_line_records_keep_the_parser_values(monkeypatch):
         assert plain["linewidth"] == 2
         assert '"mcid": 3,' in page.to_json()
 
+        edges = page.edges
+        assert edges == edge_records(page)
+        e_tagged, e_plain = edges[:2]
+        assert e_tagged == dict(tagged, orientation="h")
+        assert type(e_tagged["mcid"]) is int and e_plain["mcid"] is None
+        assert type(e_plain["linewidth"]) is int
+        # the 30x40 rect at (20, 20) bottom-up: top 200 - 60
+        assert [box(e) for e in edges[2:6]] == [
+            (20.0, 140.0, 50.0, 140.0), (20.0, 180.0, 50.0, 180.0),
+            (20.0, 140.0, 20.0, 180.0), (50.0, 140.0, 50.0, 180.0)]
+        assert all(e["page_number"] == 1 for e in edges[:6])
+        assert [set(e) for e in edges[6:]] == [CURVE_EDGE_KEYS] * 3
+
+
+def test_debug_tablefinder_moves_the_edge_records(monkeypatch):
+    """The tagged ruling at top 20 and a ruling at top 21 snap to 20.5 and
+    join: the survivor is the tagged ruling's record, moved as
+    ``utils.move_object`` and grown as ``utils.resize_object`` move it,
+    so it keeps its mcid and page_number."""
+    with api.open(content_page(monkeypatch, TAGGED.replace(
+            b"\n2 w", b"\n50 179 m 150 179 l S\n2 w", 1))) as pdf:
+        page = pdf.pages[0]
+        tagged, partner, plain = (utils.line_to_edge(o) for o in page.lines)
+        assert (tagged["top"], partner["top"]) == (20.0, 21.0)
+        dbg = page.debug_tablefinder()
+    moved = utils.resize_object(utils.move_object(tagged, "v", 0.5), "x1",
+                                partner["x1"])
+    assert (moved["top"], moved["doctop"], moved["y0"], moved["y1"],
+            moved["x1"], moved["width"]) == (20.5, 20.5, 179.5, 179.5,
+                                             150.0, 140.0)
+    h = [e for e in dbg.edges if e["orientation"] == "h"]
+    assert h[:2] == [moved, utils.move_object(plain, "v", 0.0)]
+    assert type(h[0]["mcid"]) is int and h[0]["page_number"] == 1
+
 
 def test_page_edges_per_kind(pdf):
     """4 edges per rect (top, bottom, left, right), 1 per line, one per
-    consecutive point pair of a curve."""
+    consecutive point pair of a curve: the record converters over the
+    page's records."""
     edges = pdf.pages[0].edges
+    assert edges == edge_records(pdf.pages[0])
     by_type = {}
     for e in edges:
         by_type.setdefault(e["object_type"], []).append(e)
@@ -325,6 +394,11 @@ def test_page_edges_per_kind(pdf):
         (None, (min(a[0], b[0]), min(a[1], b[1]), max(a[0], b[0]),
                 max(a[1], b[1]))) for a, b in zip(pts, pts[1:])]
     assert len(edges) == len(lines) + 4 + len(pts) - 1
+    # the line and rect edges carry the page number; a curve edge has the
+    # reference's 9 keys
+    assert all(e["page_number"] == 1
+               for e in by_type["line"] + by_type["rect_edge"])
+    assert [set(e) for e in by_type["curve_edge"]] == [CURVE_EDGE_KEYS] * 2
 
 
 def test_crop_clips_lines_rects_and_curves(pdf):

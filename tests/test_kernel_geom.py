@@ -1,6 +1,7 @@
 import pandas as pd
 import pytest
 
+from pdfplumber_spark import utils
 from pdfplumber_spark.kernel import geom as G
 from reforacle import ref_module
 
@@ -74,19 +75,40 @@ def test_crop_frame_matches_clip_obj():
 
 
 def test_filter_edges_min_length_axis():
-    edges = pd.DataFrame(
-        [
-            {"orientation": "v", "width": 0.0, "height": 5.0, "object_type": "line"},
-            {"orientation": "v", "width": 0.0, "height": 1.0, "object_type": "line"},
-            {"orientation": "h", "width": 5.0, "height": 0.0, "object_type": "rect_edge"},
-            {"orientation": "h", "width": 2.0, "height": 0.0, "object_type": "rect_edge"},
-        ]
-    )
-    out = G.filter_edges_frame(edges, min_length=3)
-    assert len(out) == 2
-    out = G.filter_edges_frame(edges, orientation="h", min_length=3)
-    assert len(out) == 1
-    out = G.filter_edges_frame(edges, edge_type="line", min_length=1)
-    assert len(out) == 2
+    edges = [
+        {"orientation": "v", "width": 0.0, "height": 5.0, "object_type": "line"},
+        {"orientation": "v", "width": 0.0, "height": 1.0, "object_type": "line"},
+        {"orientation": "h", "width": 5.0, "height": 0.0, "object_type": "rect_edge"},
+        {"orientation": "h", "width": 2.0, "height": 0.0, "object_type": "rect_edge"},
+    ]
+    assert utils.filter_edges(edges, min_length=3) == [edges[0], edges[2]]
+    assert utils.filter_edges(edges, orientation="h", min_length=3) == [edges[2]]
+    assert utils.filter_edges(edges, edge_type="line", min_length=1) == edges[:2]
     with pytest.raises(ValueError):
-        G.filter_edges_frame(edges, orientation="x")
+        utils.filter_edges(edges, orientation="x")
+
+
+def test_frame_converters_are_the_record_converters():
+    """Each ``geom.*_to_edges`` frame wrapper gives, row for row, the
+    record converter's edges over the frame's records; both are the
+    written geometry's edges."""
+    lines = [obj(object_type="line", x1=10.0, width=0.0),
+             obj(object_type="line", bottom=5.0, height=0.0)]
+    rects = [obj(), obj(x0=30.0, x1=45.0, width=15.0, doctop=5.0)]
+    curves = [obj(object_type="curve", pts=[(10.0, 5.0), (10.0, 15.0), (20.0, 15.0)]),
+              obj(object_type="curve", pts=[(0.0, 5.0), (3.0, 9.0)])]
+    for to_records, to_frame, objs in (
+        (lambda o: [G.line_to_edge(o)], G.lines_to_edges, lines),
+        (G.rect_to_edges, G.rects_to_edges, rects),
+        (G.curve_to_edges, G.curves_to_edges, curves),
+    ):
+        want = [e for o in objs for e in to_records(o)]
+        assert to_frame(pd.DataFrame(objs)).to_dict("records") == want
+        assert [e for o in objs for e in G.obj_to_edges(o)] == want
+    boxes = [(e["orientation"], e["x0"], e["top"], e["x1"], e["bottom"])
+             for e in G.rect_to_edges(rects[1])]
+    assert boxes == [("h", 30.0, 5.0, 45.0, 5.0), ("h", 30.0, 15.0, 45.0, 15.0),
+                     ("v", 30.0, 5.0, 30.0, 15.0), ("v", 45.0, 5.0, 45.0, 15.0)]
+    assert [(e["orientation"], e["x0"], e["top"], e["x1"], e["bottom"], e["doctop"])
+            for e in G.curve_to_edges(curves[0])] == [
+        ("v", 10.0, 5.0, 10.0, 15.0, 105.0), ("h", 10.0, 15.0, 20.0, 15.0, 115.0)]

@@ -69,7 +69,7 @@ def test_intersections_cells_tables_differential(seed):
     edges = make_grid_edges(rng, nx=int(rng.integers(2, 6)), ny=int(rng.integers(2, 5)))
     merged = rt.merge_edges([dict(e) for e in edges], 3, 3, 3, 3)
     exp_int = rt.edges_to_intersections([dict(e) for e in merged], 1, 1)
-    got_int = T.find_intersections(pd.DataFrame(merged), 1, 1)
+    got_int = T.find_intersections(T.EdgeArrays.from_records(merged), 1, 1)
     assert set(got_int.keys()) == set(exp_int.keys())
     for k in exp_int:
         exp_v = set(map(tuple, ((e["x0"], e["top"], e["x1"], e["bottom"]) for e in exp_int[k]["v"])))
@@ -89,6 +89,10 @@ def test_intersections_cells_tables_differential(seed):
         assert sorted(gt) == sorted(et)
 
 
+def edge_frame(e) -> pd.DataFrame:
+    return pd.DataFrame({c: getattr(e, c) for c in ("x0", "x1", "top", "bottom")})
+
+
 @pytest.mark.parametrize("seed", range(6))
 def test_words_to_edges_differential(seed):
     rt = ref_table()
@@ -98,14 +102,14 @@ def test_words_to_edges_differential(seed):
     wdicts = words.to_dict("records")
 
     exp_h = rt.words_to_edges_h(wdicts, 1)
-    got_h = T.words_to_edges_h(words, 1).to_frame()
+    got_h = edge_frame(T.words_to_edges_h(words, 1))
     key_h = ["x0", "x1", "top", "bottom"]
     assert sorted(tuple(round(e[k], 6) for k in key_h) for e in exp_h) == sorted(
         tuple(round(v, 6) for v in r) for r in got_h[key_h].to_numpy()
     )
 
     exp_v = rt.words_to_edges_v(wdicts, 2)
-    got_v = T.words_to_edges_v(words, 2).to_frame()
+    got_v = edge_frame(T.words_to_edges_v(words, 2))
     assert sorted(tuple(round(e[k], 6) for k in key_h) for e in exp_v) == sorted(
         tuple(round(v, 6) for v in r) for r in got_v[key_h].to_numpy()
     )

@@ -11,6 +11,7 @@ from pdfplumber_spark.kernel.geom import lines_to_edges, rects_to_edges
 from pdfplumber_spark.kernel.pdfparse import pdf_to_frames
 from pdfplumber_spark.kernel.words import CharArrays
 from pdfplumber_spark.kernel.tables import (
+    EdgeArrays,
     extract_table_text,
     find_intersections,
     find_tables_frame,
@@ -62,7 +63,7 @@ def test_warn_intersections_304(warn_frames):
     # reference test_ca_warn_report.py:131-141 (304 = 38x8)
     edges = page_edges(warn_frames, 1)
     merged = merge_edges_frame(edges, 3, 3, 3, 3)
-    ixs = find_intersections(merged, 1, 1)
+    ixs = find_intersections(EdgeArrays.from_records(merged.to_dict("records")), 1, 1)
     assert len(ixs) == 304
 
 

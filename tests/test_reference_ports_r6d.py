@@ -4,6 +4,7 @@ test_ca_warn_report.py / test_nics_report.py / test_dedupe_chars.py,
 with the reference's exact pinned values.
 """
 
+import pandas as pd
 import pytest
 
 from pdfplumber_spark import api
@@ -174,8 +175,6 @@ def test_table_explicit_desc_decimalization(nics):
 
 def test_table_text_without_words():
     """test_table.py:146-148: empty word set -> no text edges."""
-    import pandas as pd
-
     empty = pd.DataFrame(columns=["x0", "x1", "top", "bottom"])
     assert len(T.words_to_edges_h(empty, 3)) == 0
     assert len(T.words_to_edges_v(empty, 3)) == 0
@@ -243,7 +242,7 @@ def test_warn_parse(warn):
 
 def test_warn_edge_merging(warn):
     """test_ca_warn_report.py:79-105: raw edge count + two merge regimes."""
-    edges = warn.pages[0]._edges_frame()
+    edges = pd.DataFrame(warn.pages[0].edges)
     assert len(edges) == 364
     assert len(T.merge_edges_frame(edges, 3, 3, 3, 3)) == 46
     assert len(T.merge_edges_frame(edges, 3, 3, 3, 0)) == 52
@@ -252,7 +251,8 @@ def test_warn_edge_merging(warn):
 def test_warn_vertices(warn):
     """test_ca_warn_report.py:131-141: merged edges -> 304 = 38x8
     intersections."""
-    merged = T.merge_edges_frame(warn.pages[0]._edges_frame(), 3, 3, 3, 3)
+    merged = T.merge_edges_frame(pd.DataFrame(warn.pages[0].edges), 3, 3, 3, 3)
+    merged = T.EdgeArrays.from_records(merged.to_dict("records"))
     assert len(T.find_intersections(merged, 1, 1)) == 304
 
 

@@ -26,7 +26,13 @@ def width(code: int) -> int:
     return WIDTHS[code - 32]
 
 
-def one_page_pdf(content: bytes) -> bytes:
+FONT = (b"<</Type/Font/Subtype/Type1/BaseFont/Helvetica/FirstChar 32"
+        b"/Widths[" + b" ".join(b"%d" % w for w in WIDTHS) +
+        b"]/FontDescriptor<</Descent -200/MissingWidth 500>>>>")
+
+
+def one_page_pdf(content: bytes, font: bytes = FONT) -> bytes:
+    """One 612x792 page showing ``content`` with ``font`` as /F1."""
     objs = []
 
     def obj(b):
@@ -34,9 +40,7 @@ def one_page_pdf(content: bytes) -> bytes:
         return len(objs)
 
     cn = obj(b"<</Length %d>>\nstream\n%s\nendstream" % (len(content), content))
-    font = obj(b"<</Type/Font/Subtype/Type1/BaseFont/Helvetica/FirstChar 32"
-               b"/Widths[" + b" ".join(b"%d" % w for w in WIDTHS) +
-               b"]/FontDescriptor<</Descent -200/MissingWidth 500>>>>")
+    font = obj(font)
     page = obj(b"<</Type/Page/Parent %d 0 R/MediaBox[0 0 612 792]"
                b"/Resources<</Font<</F1 %d 0 R>>>>/Contents %d 0 R>>"
                % (len(objs) + 2, font, cn))
@@ -240,4 +244,46 @@ def test_operand_too_large_for_a_float_drops_only_its_operator(bad):
     (it,) = parse_pdf(page(bad))
     (want,) = parse_pdf(page(b""))
     assert it.ch_text == list("abcd")
+    assert it.ch_num.tobytes() == want.ch_num.tobytes()
+
+
+TYPE1 = (b"<</Type/Font/Subtype/Type1/BaseFont/Helvetica/FirstChar 97"
+         b"/Widths[%s]/FontDescriptor<<%s>>>>")
+TYPE3 = (b"<</Type/Font/Subtype/Type3/FirstChar 97/Widths[500 600]"
+         b"/FontBBox[0 %s 1000 1000]/FontMatrix[%s 0 0 0.001 0 0]>>")
+TYPE0 = (b"<</Type/Font/Subtype/Type0/BaseFont/X/Encoding/Identity-H"
+         b"/DescendantFonts[<</Type/Font/Subtype/CIDFontType2/BaseFont/X"
+         b"%s/W[%s]>>]>>")
+
+
+@pytest.mark.parametrize("font,missing,text", [
+    (TYPE1 % (BIG + b" 500", b"/Descent -200"),
+     TYPE1 % (b"null 500", b"/Descent -200"), b"(ab)"),
+    (TYPE1 % (b"500 600", b"/Descent " + BIG),
+     TYPE1 % (b"500 600", b""), b"(ab)"),
+    (TYPE1 % (b"500 600", b"/Ascent " + BIG),
+     TYPE1 % (b"500 600", b""), b"(ab)"),
+    (TYPE1 % (b"500", b"/MissingWidth " + BIG),  # b has no /Widths entry
+     TYPE1 % (b"500", b""), b"(ab)"),
+    (TYPE3 % (b"-200", BIG), TYPE3 % (b"-200", b"null"), b"(ab)"),
+    (TYPE3 % (BIG, b"0.001"), TYPE3 % (b"null", b"0.001"), b"(ab)"),
+    (TYPE0 % (b"/DW " + BIG, b"97[500]"), TYPE0 % (b"", b"97[500]"),
+     b"<00610062>"),
+    (TYPE0 % (b"", b"97[" + BIG + b" 600]"), TYPE0 % (b"", b"98[600]"),
+     b"<00610062>"),
+    (TYPE0 % (b"", b"97 98 " + BIG), TYPE0 % (b"", b""), b"<00610062>"),
+], ids=["Widths", "Descent", "Ascent", "MissingWidth", "FontMatrix",
+        "FontBBox", "DW", "W-list", "W-range"])
+def test_font_value_too_large_for_a_float_reads_as_missing(font, missing, text):
+    """A font width, metric or matrix value no float holds reads as if it
+    were missing (a /Widths or /FontMatrix entry as null, a /W width as
+    no entry, any other key as absent), where the whole document failed
+    with OverflowError before."""
+    def chars(f):
+        (it,) = parse_pdf(one_page_pdf(b"BT /F1 12 Tf 72 700 Td %s Tj ET" % text, f))
+        return it
+
+    it, want = chars(font), chars(missing)
+    assert it.n_chars == want.n_chars == 2
+    assert it.ch_text == want.ch_text
     assert it.ch_num.tobytes() == want.ch_num.tobytes()
