@@ -18,6 +18,7 @@ CMaps beyond bfchar/bfrange, shading, inline images, encryption.
 
 from __future__ import annotations
 
+import math
 import re
 import zlib
 from typing import Dict, List, Optional, Tuple
@@ -485,6 +486,18 @@ def _font_num(v, default):
     return default
 
 
+def _font_code(v) -> Optional[int]:
+    """A /W start or end code ``v`` as an int (a real truncated, as
+    ``int`` does), or None when ``v`` is not a finite number."""
+    if isinstance(v, int) or (isinstance(v, float) and math.isfinite(v)):
+        return int(v)
+    return None
+
+
+# |code| bound of a /W range: inside int64, far past any cid
+_CODE_MAX = 1 << 62
+
+
 class Font:
     """Simple (1-byte) font: widths, encoding, ToUnicode."""
 
@@ -569,7 +582,11 @@ class Font:
                 self.descent = bbox[1] * vscale * 1000.0
                 self.ascent = bbox[3] * vscale * 1000.0
         self.multibyte = subtype == "Type0"
-        self.cid_widths: Dict[int, float] = {}
+        # /W: cid -> (entry number, width) from the lists, and the
+        # (first, last, entry number, width) columns of the ranges, kept
+        # as intervals; a later entry overrides an earlier one
+        self.cid_widths: Dict[int, Tuple[int, float]] = {}
+        self.cid_ranges: Optional[Tuple[np.ndarray, ...]] = None
         self.cid_default = 1000.0
         if self.multibyte:
             self._load_cid(doc, spec)
@@ -588,22 +605,28 @@ class Font:
             warr = doc.resolve(df.get("W")) or []
             i = 0
             warr = [doc.resolve(x) for x in warr]
+            ranges = []
+            # an entry whose code or width is not a number is dropped, so
+            # its cids keep /DW
             while i < len(warr):
                 if i + 1 < len(warr) and isinstance(warr[i + 1], list):
-                    start = int(warr[i])
+                    start = _font_code(warr[i])
                     for j, w in enumerate(warr[i + 1]):
                         w = _font_num(w, None)
-                        if w is not None:  # else the cid keeps /DW
-                            self.cid_widths[start + j] = w
+                        if start is not None and w is not None:
+                            self.cid_widths[start + j] = (i, w)
                     i += 2
                 elif i + 2 < len(warr):
-                    a, b, w = int(warr[i]), int(warr[i + 1]), _font_num(warr[i + 2], None)
-                    if w is not None:
-                        for cid in range(a, b + 1):
-                            self.cid_widths[cid] = w
+                    a, b = _font_code(warr[i]), _font_code(warr[i + 1])
+                    w = _font_num(warr[i + 2], None)
+                    if a is not None and b is not None and w is not None and a <= b:
+                        # clamped into int64; every cid lies far inside
+                        ranges.append((max(a, -_CODE_MAX), min(b, _CODE_MAX), i, w))
                     i += 3
                 else:
                     break
+            if ranges:
+                self.cid_ranges = tuple(np.array(c) for c in zip(*ranges))
             desc = doc.resolve(df.get("FontDescriptor")) or {}
             self._fontfile_ref = desc.get("FontFile")
             self._fontfile2_ref = desc.get("FontFile2")
@@ -751,7 +774,13 @@ class Font:
 
     def char_width(self, cid: int) -> float:
         if self.multibyte:
-            return self.cid_widths.get(cid, self.cid_default) * 0.001
+            seq, w = self.cid_widths.get(cid, (-1, self.cid_default))
+            if self.cid_ranges is not None:
+                first, last, rseq, rw = self.cid_ranges
+                hit = np.flatnonzero((first <= cid) & (cid <= last) & (rseq > seq))
+                if len(hit):
+                    w = float(rw[hit[-1]])
+            return w * 0.001
         return self.widths.get(cid, self.default_width) * self.hscale
 
     def to_unichr(self, cid: int) -> str:

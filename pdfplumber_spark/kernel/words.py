@@ -1,23 +1,29 @@
 """Char -> word assembly, vectorized over numpy arrays.
 
 Re-expresses the reference's ``WordExtractor``
-(``/root/reference/pdfplumber/utils/text.py:423-688``) as columnar passes:
+(pdfplumber ``utils/text.py:423-688``) as columnar passes,
+each made once over all the chars of a page, never per line or per char:
 
 1. *adjacent* grouping by (upright, extra_attrs) — change-flag cumsum over
    ingestion order (itertools.groupby semantics, ``text.py:667-668``);
-2. per group: cluster chars into lines on the line-direction key
-   (``text.py:641-657``), chained tolerance clustering on distinct values;
-3. stable sort within each line by the char-direction key (``text.py:661``);
-4. word-boundary flags over the line sequence (``char_begins_new_word``,
-   ``text.py:516-591``): regression (cx < ax), intra-line gap measured
-   prev-END -> curr-START (cx > bx + x_tol), inter-line TOP -> TOP
-   (cy > ay + y_tol); blanks end words; split-at-punctuation chars become
-   single-char words (``text.py:593-639``);
-5. word merge: per-word bbox via ``reduceat`` segment aggregation + ordered
-   concat with ligature expansion + first-char attrs (``text.py:490-514``).
+2. lines: chained tolerance clustering of the line-direction key on
+   distinct values (``text.py:641-657``), within each group, in one sort
+   by (group, key);
+3. order: one stable sort by (line, char-direction key) (``text.py:661``),
+   so ingestion order breaks ties;
+4. word-boundary flags between consecutive kept chars
+   (``char_begins_new_word``, ``text.py:516-591``): a new line,
+   regression (cx < ax), intra-line gap measured prev-END -> curr-START
+   (cx > bx + x_tol), inter-line TOP -> TOP (cy > ay + y_tol); blanks
+   end words; split-at-punctuation chars become single-char words
+   (``text.py:593-639``); blank, punctuation and ligature expansion are
+   looked up once per distinct char text;
+5. word merge: word ids by cumsum, per-word bbox via ``reduceat`` segment
+   aggregation, texts sliced out of one join of the expanded char texts,
+   first-char attrs (``text.py:490-514``).
 
-The frame is decomposed into plain numpy arrays once up front; everything
-after is fancy indexing — no pandas in the hot loop.
+Rotated and upright chars differ only in the direction each pass reads,
+so both go through the same passes, their keys picked per char.
 """
 
 from __future__ import annotations
@@ -245,33 +251,66 @@ class CharArrays:
         return out
 
 
-def _line_key_arrays(ca: CharArrays, idx: np.ndarray, line_dir: str) -> np.ndarray:
-    """Line-clustering key values (``text.py:45-51``)."""
-    if line_dir == "ttb":
-        return ca.top[idx]
-    if line_dir == "btt":
-        return -ca.bottom[idx]
-    if line_dir == "ltr":
-        return ca.x0[idx]
-    return -ca.x1[idx]  # rtl
-
-
-def _char_key_arrays(
-    ca: CharArrays, idx: np.ndarray, char_dir: str
-) -> Tuple[np.ndarray, np.ndarray]:
+def _char_key_arrays(ca: CharArrays, char_dir: str) -> Tuple[np.ndarray, np.ndarray]:
     """Primary+secondary in-line sort key (``text.py:54-60``)."""
     if char_dir == "ttb":
-        return ca.top[idx], ca.bottom[idx]
+        return ca.top, ca.bottom
     if char_dir == "btt":
-        t, h = ca.top[idx], ca.height[idx]
-        return -(t + h), -t
+        return -(ca.top + ca.height), -ca.top
     if char_dir == "ltr":
-        x = ca.x0[idx]
-        return x, x
-    return -ca.x1[idx], -ca.x0[idx]  # rtl
+        return ca.x0, ca.x0
+    return -ca.x1, -ca.x0  # rtl
 
 
-# word-column shim (used by layout.py)
+def _axis_arrays(ca: CharArrays, idx, direction: str) -> Tuple[np.ndarray, ...]:
+    """The boundary test's values along ``direction`` (``text.py:531-584``):
+    each char's start and end along the line and its start across it,
+    negated for rtl/btt so one comparison serves every direction."""
+    if direction == "ltr":
+        return ca.x0[idx], ca.x1[idx], ca.top[idx]
+    if direction == "rtl":
+        return -ca.x1[idx], -ca.x0[idx], ca.top[idx]
+    if direction == "ttb":
+        return ca.top[idx], ca.bottom[idx], ca.x0[idx]
+    return -ca.bottom[idx], -ca.top[idx], ca.x0[idx]  # btt
+
+
+def _by_upright(up: np.ndarray, d_up: str, d_rot: str, arrays) -> tuple:
+    """The tuple ``arrays(direction)`` row by row: for direction ``d_up``
+    where ``up`` holds, ``d_rot`` elsewhere (one call when every row
+    shares a direction)."""
+    if d_up == d_rot or up.all():
+        return arrays(d_up)
+    if not up.any():
+        return arrays(d_rot)
+    return tuple(np.where(up, a, b) for a, b in zip(arrays(d_up), arrays(d_rot)))
+
+
+def _line_ids(key: np.ndarray, tol, group: np.ndarray) -> np.ndarray:
+    """Line id per char: :func:`cluster.assign_clusters` of ``key`` with
+    tolerance ``tol`` (a scalar, or per char and constant within a group)
+    inside each adjacent group, numbered by group, then by cluster
+    position. It is :func:`cluster.cluster_ids_for_distinct` over all the
+    groups at once, read on consecutive sorted values."""
+    o = np.lexsort((key, group))
+    k, g = key[o], group[o]
+    t = tol if np.ndim(tol) == 0 else tol[o][1:]
+    # the chained rule on sorted values: a new distinct value past the
+    # tolerance starts a line; with tolerance 0 every distinct value does
+    # (NaNs are one value, as in np.unique)
+    distinct = k[1:] != k[:-1]
+    brk = distinct & (k[1:] > k[:-1] + t)
+    if np.any(t == 0):
+        brk = np.where(t == 0, distinct & ~(np.isnan(k[1:]) & np.isnan(k[:-1])), brk)
+    new = np.empty(len(k), dtype=bool)
+    new[0] = True
+    new[1:] = (g[1:] != g[:-1]) | brk
+    ids = np.empty(len(k), dtype=np.int64)
+    ids[o] = np.cumsum(new) - 1
+    return ids
+
+
+# column shims: the words of layout.py, the chars of the word kernel
 def _f64(col) -> np.ndarray:
     """Column -> float64 ndarray; accepts pandas Series AND the raw numpy
     columns of WordArrays (the no-pandas fast path)."""
@@ -279,6 +318,8 @@ def _f64(col) -> np.ndarray:
 
 
 def line_cluster_values(df, line_dir: str) -> np.ndarray:
+    """Line-clustering key values (``text.py:45-51``) of the chars or
+    words in ``df`` (any mapping of columns)."""
     if line_dir == "ttb":
         return _f64(df["top"])
     if line_dir == "btt":
@@ -288,112 +329,27 @@ def line_cluster_values(df, line_dir: str) -> np.ndarray:
     return -_f64(df["x1"])
 
 
-def _page_text_tables(ca: CharArrays, s: WordSettings):
-    """(is_blank, is_punct, etext) for the whole page in ONE memoized pass.
-
-    Char text values are drawn from tiny per-font tables, so a dict memo
-    turns three per-char Python passes (isspace, punct-set, ligature
-    expansion) into one cached-lookup loop — a hot-path allocation saver.
+def _text_tables(ca: CharArrays, s: WordSettings):
+    """``(codes, is_blank, is_punct, etext, etext_len)``: ``codes`` maps
+    each char to its distinct text; the rest hold, per distinct text,
+    whether it is a blank that ends a word, whether it is split-at
+    punctuation (a word of its own), and the text with ligatures expanded
+    and its length.
 
     NB: `"" in punct` is True for ANY punct string (incl. ""), so
     empty-text chars always split as single-char words — a reference
     quirk (text.py:621: `text in self.split_at_punctuation`)."""
-    n = ca.n
-    keep_blank = s.keep_blank_chars
-    punct = s._punct
-    exp = s._expansions
-    is_blank = np.empty(n, dtype=bool)
-    is_punct = np.empty(n, dtype=bool)
-    etext = np.empty(n, dtype=object) if exp else ca.text
-    memo: dict = {}
-    text = ca.text
-    for i in range(n):
-        t = text[i]
-        r = memo.get(t)
-        if r is None:
-            ts = str(t)
-            b = (not keep_blank) and bool(t) and ts.isspace()
-            p = (ts in punct) and not b
-            e = exp.get(t, t) if exp else t
-            r = memo[t] = (b, p, e)
-        is_blank[i] = r[0]
-        is_punct[i] = r[1]
-        if exp:
-            etext[i] = r[2]
-    return is_blank, is_punct, etext
-
-
-def _boundary_word_ids(
-    ca: CharArrays, idx: np.ndarray, direction: str, s: WordSettings,
-    flags: Tuple[np.ndarray, np.ndarray],
-) -> np.ndarray:
-    """Word id per char of one line (indices ``idx``, already in final char
-    order); -1 marks dropped blanks. Implements the stateful splitter
-    (``text.py:593-639``) via shifts: the reference's ``current_word[-1]``
-    is always the previous *kept* char; forced boundaries at/after
-    punctuation words and after dropped blanks. ``flags`` are the page's
-    (is_blank, is_punct) arrays from ``_page_text_tables``."""
-    n = len(idx)
-    is_blank = flags[0][idx]
-    is_punct = flags[1][idx]
-
-    kept = np.flatnonzero(~is_blank)
-    out = np.full(n, -1, dtype=np.int64)
-    if len(kept) == 0:
-        return out
-
-    if direction in ("ltr", "rtl"):
-        if direction == "ltr":
-            ax = ca.x0[idx]
-            bx = ca.x1[idx]
-            cx = ax
-        else:
-            ax = -ca.x1[idx]
-            bx = -ca.x0[idx]
-            cx = ax
-        ay = ca.top[idx]
-        cy = ay
-        x_is_x = True
-    else:
-        if direction == "ttb":
-            ax = ca.top[idx]
-            bx = ca.bottom[idx]
-            cx = ax
-        else:
-            ax = -ca.bottom[idx]
-            bx = -ca.top[idx]
-            cx = ax
-        ay = ca.x0[idx]
-        cy = ay
-        x_is_x = False
-
-    size = ca.size[idx] if ca.size is not None else None
-    prev = kept[:-1]
-    curr = kept[1:]
-    # intra/inter tolerance swap for vertical text (text.py:557-575);
-    # ratio tolerances key off the *previous* char's size (text.py:629-630)
-    if x_is_x:
-        xt, xtr, yt, ytr = (
-            s.x_tolerance, s.x_tolerance_ratio, s.y_tolerance, s.y_tolerance_ratio,
-        )
-    else:
-        xt, xtr, yt, ytr = (
-            s.y_tolerance, s.y_tolerance_ratio, s.x_tolerance, s.x_tolerance_ratio,
-        )
-    xtol = xt if (xtr is None or size is None) else xtr * size[prev]
-    ytol = yt if (ytr is None or size is None) else ytr * size[prev]
-
-    geo_break = (
-        (cx[curr] < ax[prev])
-        | (cx[curr] > bx[prev] + xtol)
-        | (cy[curr] > ay[prev] + ytol)
-    )
-    forced = is_punct[curr] | is_punct[prev] | ((curr - prev) > 1)
-    new_flag = np.empty(len(kept), dtype=bool)
-    new_flag[0] = True
-    new_flag[1:] = forced | geo_break
-    out[kept] = np.cumsum(new_flag) - 1
-    return out
+    texts = ca.text.tolist()
+    code_of = {t: i for i, t in enumerate(dict.fromkeys(texts))}
+    codes = np.fromiter(map(code_of.__getitem__, texts), np.int64, len(texts))
+    uniq = list(code_of)
+    keep_blank, punct, exp = s.keep_blank_chars, s._punct, s._expansions
+    is_blank = np.array(
+        [not keep_blank and bool(t) and str(t).isspace() for t in uniq], dtype=bool)
+    is_punct = np.array([str(t) in punct for t in uniq], dtype=bool) & ~is_blank
+    etext = np.array([exp.get(t, t) for t in uniq], dtype=object)
+    etext_len = np.array([len(t) for t in etext], dtype=np.int64)
+    return codes, is_blank, is_punct, etext, etext_len
 
 
 def extract_words_frame(
@@ -441,124 +397,104 @@ def extract_words_ca(
     n = ca.n
     char_word_id = np.full(n, -1, dtype=np.int64)
     char_word_pos = np.full(n, -1, dtype=np.int64)
+    empty = (
+        (pd.DataFrame(columns=cols) if as_frame
+         else WordArrays({c: [] for c in cols})),
+        char_word_id, char_word_pos,
+    )
     if n == 0:
-        empty = (
-            pd.DataFrame(columns=cols)
-            if as_frame
-            else WordArrays({c: [] for c in cols})
-        )
-        return empty, char_word_id, char_word_pos
+        return empty
+    codes, is_blank, is_punct, etext, etext_len = _text_tables(ca, s)
 
-    # blank/punct flags + ligature expansion in one memoized pass
-    is_blank, is_punct, etext = _page_text_tables(ca, s)
-    page_flags = (is_blank, is_punct)
-
-    # 1. adjacent grouping by (upright, *extra_attrs)
+    # 1. adjacent grouping by (upright, *extra_attrs); a group's upright is
+    # its first char's, as an int
     change = np.zeros(n, dtype=bool)
     for v in (ca.upright, *ca.extra.values()):
         change[1:] |= v[1:] != v[:-1]
     change[0] = True
-    group_bounds = np.flatnonzero(change)
-    group_bounds = np.append(group_bounds, n)
+    group = np.cumsum(change) - 1
+    g_up = ca.upright[change].astype(np.int64)
+    up = (g_up != 0)[group]
 
-    # output accumulators (one entry per word)
-    w_text: list = []
-    w_x0: list = []
-    w_x1: list = []
-    w_top: list = []
-    w_bottom: list = []
-    w_doctop_adj: list = []
-    w_first: list = []
-    w_upright: list = []
-    w_dir: list = []
-    next_word = 0
+    # 2-3. order by group, line, then the char-direction key; the sort is
+    # stable, so ingestion order breaks ties
+    if s.use_text_flow:
+        d_up = d_rot = s.char_dir
+        order, line = np.arange(n), group
+    else:
+        d_up, d_rot = s.char_dir_for(1), s.char_dir_for(0)
+        l_up, l_rot = s.line_dir_for(1), s.line_dir_for(0)
+        box = {"top": ca.top, "bottom": ca.bottom, "x0": ca.x0, "x1": ca.x1}
+        (key,) = _by_upright(up, l_up, l_rot, lambda d: (line_cluster_values(box, d),))
+        t_up, t_rot = (s.y_tolerance if d in ("ttb", "btt") else s.x_tolerance
+                       for d in (l_up, l_rot))
+        line = _line_ids(key, t_up if t_up == t_rot else np.where(up, t_up, t_rot), group)
+        k1, k2 = _by_upright(up, d_up, d_rot, lambda d: _char_key_arrays(ca, d))
+        order = np.lexsort((k2, k1, line))
+    at = np.flatnonzero(~is_blank[codes[order]])
+    kept = order[at]  # the kept (non-blank) chars in word order
+    if len(kept) == 0:
+        return empty
 
-    for gi in range(len(group_bounds) - 1):
-        gidx = np.arange(group_bounds[gi], group_bounds[gi + 1])
-        upright = int(ca.upright[gidx[0]])
-        char_dir = s.char_dir_for(upright)
+    # 4. word boundaries between consecutive kept chars (text.py:516-639):
+    # a new line, punctuation on either side, a dropped blank between, or
+    # a geometric break: regression (cx < ax), a gap past the previous
+    # char's end (cx > bx + x_tol) or across the line (cy > ay + y_tol),
+    # tolerances swapped for vertical text and ratio tolerances keyed on
+    # the previous char's size
+    prev = kept[:-1]
+    ax, bx, ay = _by_upright(up[kept], d_up, d_rot,
+                             lambda d: _axis_arrays(ca, kept, d))
+    size = ca.size[prev] if ca.size is not None else None
+    tx, ty = (
+        t if (r is None or size is None) else r * size
+        for t, r in ((s.x_tolerance, s.x_tolerance_ratio),
+                     (s.y_tolerance, s.y_tolerance_ratio))
+    )
+    intra, inter = _by_upright(up[prev], d_up, d_rot,
+                               lambda d: (tx, ty) if d in ("ltr", "rtl") else (ty, tx))
+    k_line = line[kept]
+    k_code = codes[kept]
+    k_punct = is_punct[k_code]
+    new = np.empty(len(kept), dtype=bool)
+    new[0] = True
+    new[1:] = (
+        (k_line[1:] != k_line[:-1]) | k_punct[1:] | k_punct[:-1]
+        | (np.diff(at) > 1)
+        | (ax[1:] < ax[:-1]) | (ax[1:] > bx[:-1] + intra)
+        | (ay[1:] > ay[:-1] + inter)
+    )
 
-        if s.use_text_flow:
-            line_slices = [gidx]
-            direction = s.char_dir
-        else:
-            line_dir = s.line_dir_for(upright)
-            vals = _line_key_arrays(ca, gidx, line_dir)
-            tol = s.y_tolerance if line_dir in ("ttb", "btt") else s.x_tolerance
-            cids = assign_clusters(vals, tol)
-            # groups ordered by cluster id; stable within (clustering.py:60-66)
-            order = np.argsort(cids, kind="stable")
-            sorted_cids = cids[order]
-            bounds = np.flatnonzero(np.diff(sorted_cids) != 0) + 1
-            line_slices = [gidx[o] for o in np.split(order, bounds)]
-            direction = char_dir
-
-        for lidx in line_slices:
-            if not s.use_text_flow:
-                k1, k2 = _char_key_arrays(ca, lidx, direction)
-                lidx = lidx[np.lexsort((k2, k1))]  # stable; primary = k1
-            wids = _boundary_word_ids(ca, lidx, direction, s, flags=page_flags)
-            kept_mask = wids >= 0
-            if not kept_mask.any():
-                continue
-            kept_rows = lidx[kept_mask]
-            kept_wids = wids[kept_mask]
-            char_word_id[kept_rows] = kept_wids + next_word
-            # segment starts (kept_wids is nondecreasing over line order)
-            starts = np.flatnonzero(
-                np.concatenate(([True], np.diff(kept_wids) != 0))
-            )
-            pos = np.arange(len(kept_wids)) - starts[
-                np.searchsorted(starts, np.arange(len(kept_wids)), "right") - 1
-            ]
-            char_word_pos[kept_rows] = pos
-            n_words = len(starts)
-
-            # merge (text.py:490-514) via reduceat segment aggregation
-            w_x0.append(np.minimum.reduceat(ca.x0[kept_rows], starts))
-            w_x1.append(np.maximum.reduceat(ca.x1[kept_rows], starts))
-            w_top.append(np.minimum.reduceat(ca.top[kept_rows], starts))
-            w_bottom.append(np.maximum.reduceat(ca.bottom[kept_rows], starts))
-            firsts = kept_rows[starts]
-            w_first.append(firsts)
-            w_doctop_adj.append(ca.doctop[firsts] - ca.top[firsts])
-            seg_text = etext[kept_rows]
-            ends = np.append(starts[1:], len(kept_rows))
-            w_text.extend(
-                "".join(seg_text[a:b]) for a, b in zip(starts, ends)
-            )
-            w_upright.extend([upright] * n_words)
-            w_dir.extend([direction] * n_words)
-            next_word += n_words
-
-    if not w_first:
-        empty = (
-            pd.DataFrame(columns=cols)
-            if as_frame
-            else WordArrays({c: [] for c in cols})
-        )
-        return empty, char_word_id, char_word_pos
-
-    x0 = np.concatenate(w_x0)
-    x1 = np.concatenate(w_x1)
-    top = np.concatenate(w_top)
-    bottom = np.concatenate(w_bottom)
-    doctop_adj = np.concatenate(w_doctop_adj)
-    firsts = np.concatenate(w_first)
+    # 5. merge (text.py:490-514): ids by cumsum, bboxes by reduceat, texts
+    # sliced out of one join of the expanded char texts
+    wid = np.cumsum(new) - 1
+    starts = np.flatnonzero(new)
+    char_word_id[kept] = wid
+    char_word_pos[kept] = np.arange(len(kept)) - starts[wid]
+    x0 = np.minimum.reduceat(ca.x0[kept], starts)
+    x1 = np.maximum.reduceat(ca.x1[kept], starts)
+    top = np.minimum.reduceat(ca.top[kept], starts)
+    bottom = np.maximum.reduceat(ca.bottom[kept], starts)
+    firsts = kept[starts]
+    joined = "".join(etext[k_code].tolist())
+    off = np.zeros(len(kept) + 1, dtype=np.int64)
+    np.cumsum(etext_len[k_code], out=off[1:])
+    ends = np.append(starts[1:], len(kept))
+    w_up = g_up[group[firsts]]
     data = {
-        "text": w_text,
+        "text": [joined[i:j] for i, j in zip(off[starts].tolist(), off[ends].tolist())],
         "x0": x0,
         "x1": x1,
         "top": top,
-        "doctop": top + doctop_adj,
+        "doctop": top + (ca.doctop[firsts] - ca.top[firsts]),
         "bottom": bottom,
-        "upright": w_upright,
+        "upright": w_up.tolist(),
         "height": bottom - top,
         "width": x1 - x0,
-        "direction": w_dir,
+        "direction": np.where(w_up != 0, d_up, d_rot).tolist(),
     }
-    for a in s.extra_attrs:
-        data[a] = ca.extra[a][firsts]
+    for attr in s.extra_attrs:
+        data[attr] = ca.extra[attr][firsts]
     if not as_frame:
         return WordArrays(data), char_word_id, char_word_pos
     return pd.DataFrame(data, columns=cols), char_word_id, char_word_pos

@@ -1,9 +1,11 @@
-"""Seeded random char/edge generators for differential tests."""
+"""Seeded random char/edge generators for differential tests, and the
+hypothesis strategy of adversarial char dicts (``char_dicts``)."""
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+from hypothesis import strategies as st
 
 CHAR_COLS = [
     "text", "fontname", "size", "adv", "upright",
@@ -78,3 +80,36 @@ def chars_frame(rows):
 
 def words_to_dicts(words: pd.DataFrame):
     return words.to_dict("records")
+
+
+TEXTS = st.sampled_from(
+    ["a", "B", "7", " ", ".", "-", "ﬁ", "", "xy", "\t", "…"]
+)
+
+
+@st.composite
+def char_dicts(draw):
+    n = draw(st.integers(1, 60))
+    rows = []
+    for _ in range(n):
+        x0 = draw(st.floats(-50, 500, allow_nan=False, width=32))
+        w = draw(st.floats(0, 30, allow_nan=False, width=32))
+        top = draw(st.floats(-20, 700, allow_nan=False, width=32))
+        h = draw(st.floats(0, 30, allow_nan=False, width=32))
+        rows.append(
+            {
+                "text": draw(TEXTS),
+                "fontname": draw(st.sampled_from(["F1", "F2"])),
+                "size": draw(st.sampled_from([0.0, 4.0, 9.5, 12.0])),
+                "adv": w,
+                "upright": draw(st.sampled_from([0, 1])),
+                "x0": x0,
+                "x1": x0 + w,
+                "top": top,
+                "bottom": top + h,
+                "doctop": top + draw(st.sampled_from([0.0, 792.0])),
+                "width": w,
+                "height": h,
+            }
+        )
+    return rows

@@ -6,43 +6,11 @@ import pandas as pd
 import pytest
 from hypothesis import example, given, settings, strategies as st
 
-from genchars import CHAR_COLS, chars_frame
+from genchars import CHAR_COLS, char_dicts, chars_frame
 from pdfplumber_spark.kernel.cluster import cluster_list
 from pdfplumber_spark.kernel.layout import page_text_ca, simple_text
 from pdfplumber_spark.kernel.words import CharArrays, WordSettings, extract_words_frame
 from reforacle import ref_module
-
-TEXTS = st.sampled_from(
-    ["a", "B", "7", " ", ".", "-", "ﬁ", "", "xy", "\t", "…"]
-)
-
-
-@st.composite
-def char_dicts(draw):
-    n = draw(st.integers(1, 60))
-    rows = []
-    for _ in range(n):
-        x0 = draw(st.floats(-50, 500, allow_nan=False, width=32))
-        w = draw(st.floats(0, 30, allow_nan=False, width=32))
-        top = draw(st.floats(-20, 700, allow_nan=False, width=32))
-        h = draw(st.floats(0, 30, allow_nan=False, width=32))
-        rows.append(
-            {
-                "text": draw(TEXTS),
-                "fontname": draw(st.sampled_from(["F1", "F2"])),
-                "size": draw(st.sampled_from([0.0, 4.0, 9.5, 12.0])),
-                "adv": w,
-                "upright": draw(st.sampled_from([0, 1])),
-                "x0": x0,
-                "x1": x0 + w,
-                "top": top,
-                "bottom": top + h,
-                "doctop": top + draw(st.sampled_from([0.0, 792.0])),
-                "width": w,
-                "height": h,
-            }
-        )
-    return rows
 
 
 @settings(max_examples=100, deadline=None)

@@ -9,6 +9,7 @@ term by term, and a ``style=False`` parse must give the same block as a
 added up in pdfminer's order by a plain loop here.
 """
 
+import time
 import tracemalloc
 
 import numpy as np
@@ -272,13 +273,22 @@ TYPE0 = (b"<</Type/Font/Subtype/Type0/BaseFont/X/Encoding/Identity-H"
     (TYPE0 % (b"", b"97[" + BIG + b" 600]"), TYPE0 % (b"", b"98[600]"),
      b"<00610062>"),
     (TYPE0 % (b"", b"97 98 " + BIG), TYPE0 % (b"", b""), b"<00610062>"),
+    (TYPE0 % (b"", BIG + b".5[500] 98[600]"), TYPE0 % (b"", b"98[600]"),
+     b"<00610062>"),
+    (TYPE0 % (b"", b"/A[500] 98[600]"), TYPE0 % (b"", b"98[600]"),
+     b"<00610062>"),
+    (TYPE0 % (b"", b"97 " + BIG + b".5 500 98[600]"), TYPE0 % (b"", b"98[600]"),
+     b"<00610062>"),
 ], ids=["Widths", "Descent", "Ascent", "MissingWidth", "FontMatrix",
-        "FontBBox", "DW", "W-list", "W-range"])
+        "FontBBox", "DW", "W-list", "W-range", "W-real-start", "W-name-start",
+        "W-real-end"])
 def test_font_value_too_large_for_a_float_reads_as_missing(font, missing, text):
     """A font width, metric or matrix value no float holds reads as if it
     were missing (a /Widths or /FontMatrix entry as null, a /W width as
     no entry, any other key as absent), where the whole document failed
-    with OverflowError before."""
+    with OverflowError before. A /W start or end code that is not a finite
+    number (a real too long for a float reads as infinity) drops its
+    entry, so those cids keep /DW."""
     def chars(f):
         (it,) = parse_pdf(one_page_pdf(b"BT /F1 12 Tf 72 700 Td %s Tj ET" % text, f))
         return it
@@ -287,3 +297,57 @@ def test_font_value_too_large_for_a_float_reads_as_missing(font, missing, text):
     assert it.n_chars == want.n_chars == 2
     assert it.ch_text == want.ch_text
     assert it.ch_num.tobytes() == want.ch_num.tobytes()
+
+
+def _type0_widths(w: bytes, n: int) -> np.ndarray:
+    """The advance of each of the cids 0..n-1 shown in a Type0 font with
+    /W ``w``, at 1 point."""
+    text = b"<%s>" % b"".join(b"%04x" % c for c in range(n))
+    (it,) = parse_pdf(one_page_pdf(b"BT /F1 1 Tf 0 700 Td %s Tj ET" % text,
+                                   TYPE0 % (b"/DW 900", w)))
+    assert it.n_chars == n
+    return it.ch_num[:, 1]
+
+
+# /W entries: (first, last, width) ranges and (start, [widths]) lists; a
+# real code truncates, a null width drops its entry, last < first is empty
+W_ENTRIES = [(0, 9, 300), (5, [510, 520, 530]), (8, 20, 400), (12, [612]),
+             (15, 15, 415), (30.7, [630, 631]), (18, 33, 700), (31, 31, None),
+             (40, 35, 800)]
+
+
+def test_cid_widths_keep_ranges_as_intervals():
+    """Each cid's /W width is that of the last entry naming it, a list
+    entry or a range, else /DW: the same as one explicit width per cid."""
+    want, parts = {}, []
+    for e in W_ENTRIES:
+        if isinstance(e[1], list):
+            want.update((int(e[0]) + j, w) for j, w in enumerate(e[1]))
+            parts.append(b"%r[%s]" % (e[0], b" ".join(b"%d" % w for w in e[1])))
+        else:
+            if e[2] is not None:
+                want.update(dict.fromkeys(range(e[0], e[1] + 1), e[2]))
+            parts.append(b"%d %d %s" % (e[0], e[1], b"null" if e[2] is None else b"%d" % e[2]))
+    explicit = b"0[%s]" % b" ".join(b"%d" % want.get(c, 900) for c in range(42))
+    got = _type0_widths(b" ".join(parts), 42)
+    assert got.tolist() == _type0_widths(explicit, 42).tolist()
+    assert got[[4, 6, 12, 15, 30, 31, 39]].tolist() == pytest.approx(
+        [0.3, 0.52, 0.612, 0.415, 0.7, 0.7, 0.9])
+
+
+def test_huge_cid_range_costs_no_time_or_memory():
+    """``/W [0 99999999 500]`` is a dozen bytes: it must not expand into
+    one entry per cid (minutes and gigabytes)."""
+    data = one_page_pdf(b"BT /F1 12 Tf 72 700 Td <00610062> Tj ET",
+                        TYPE0 % (b"", b"0 99999999 500"))
+    tracemalloc.start()
+    try:
+        t0 = time.perf_counter()
+        (it,) = parse_pdf(data)
+        it.ch_num  # read inside the trace, wherever the block is built
+        dt = time.perf_counter() - t0
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert dt < 0.5 and peak < 2_000_000, (dt, peak)
+    assert it.ch_num[:, 1].tolist() == [6.0, 6.0]
