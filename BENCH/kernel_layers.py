@@ -15,6 +15,8 @@ and sums the wall time of each layer:
 - ``from_interp``: ``CharArrays.from_interp`` of each page with chars;
 - ``extract_words_ca``: default-settings words of each such page;
 - ``page_text_ca``: its plain text (this includes its own words pass);
+- ``page_textmap``: its plain textmap, the text with per-char provenance
+  that search and text lines read (also with its own words pass);
 - ``find_tables``: ``EdgeArrays.from_interp`` and the default (lines)
   ``find_tables`` of every page;
 - ``table_text``: ``extract_table_text`` of each table found (one word
@@ -37,7 +39,7 @@ import time
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 LAYERS = ("parse_pdf", "from_interp", "extract_words_ca", "page_text_ca",
-          "find_tables", "table_text")
+          "page_textmap", "find_tables", "table_text")
 
 
 def cpus() -> int:
@@ -49,7 +51,7 @@ def run_layers(checkout: str, inputs: str) -> dict:
     of ``checkout``: seconds per layer, and the pages and chars seen."""
     sys.path.insert(0, checkout)
     from pdfplumber_spark.kernel import tables as T
-    from pdfplumber_spark.kernel.layout import page_text_ca
+    from pdfplumber_spark.kernel.layout import page_text_ca, page_textmap
     from pdfplumber_spark.kernel.pdfparse import parse_pdf
     from pdfplumber_spark.kernel.words import CharArrays, WordSettings, extract_words_ca
 
@@ -79,6 +81,7 @@ def run_layers(checkout: str, inputs: str) -> dict:
                 timed("extract_words_ca", extract_words_ca, ca, WordSettings(),
                       as_frame=False)
                 timed("page_text_ca", page_text_ca, ca, WordSettings())
+                timed("page_textmap", page_textmap, ca, WordSettings())
             edges = timed("find_tables", T.EdgeArrays.from_interp, it)
             tables = timed("find_tables", T.find_tables, edges,
                            page_bbox=(0.0, 0.0, it.width, it.height))

@@ -35,6 +35,12 @@ and sf0.1 pages corpora use, 80 and 400 docs at seed 42, and two more
 seeds) plus ``ruled``: ``kernel.pdfgen`` pages whose tables are ruled by
 lines, rects or curves, with split and jittered rulings.
 
+The ``textmap`` key hashes, per corpus, each PDF page's ``page_textmap``
+text and provenance bytes, plain and in layout over the page bbox (a
+``None`` textmap, which older kernels gave a page with no words, reads as
+an empty one), so provenance is checked byte for byte, not only through
+the match rows.
+
 The ``parser`` surface hashes, per corpus and for ``style`` False and True,
 every page's parser buffers below any rounding: ``ch_text``, ``ch_font``,
 ``ch_cid``, ``mc_spans``, the bytes of ``ch_num``, ``ch_style`` and the
@@ -336,6 +342,25 @@ def parser_buffers(payload, style: bool) -> list:
             for it in parse_pdf(bytes(payload), style=style)]
 
 
+def textmaps(payload) -> list:
+    """Each page's plain and layout ``page_textmap``: text and provenance
+    bytes."""
+    import numpy as np
+    from pdfplumber_spark.kernel.layout import page_textmap
+    from pdfplumber_spark.kernel.pdfparse import parse_pdf
+    from pdfplumber_spark.kernel.words import CharArrays
+
+    out = []
+    for it in parse_pdf(bytes(payload), style=False):
+        if it.n_chars:
+            ca = CharArrays.from_interp(it)
+            for layout in (False, True):
+                text, prov = page_textmap(ca, WordSettings(), layout, (
+                    0.0, 0.0, it.width, it.height)) or ("", ())
+                out.append((text, np.asarray(prov, dtype=np.int64).tobytes()))
+    return out
+
+
 def fixture_hashes() -> None:
     for name, rows in CORPORA.items():
         h = hashlib.sha256()
@@ -481,6 +506,7 @@ def main() -> None:
                 add("facade[objects,derived,serialize,utils]",
                     outcome(lambda: facade_objects(payload)))
                 add("facade[laparams]", outcome(lambda: facade_laparams(payload)))
+                add("textmap", outcome(lambda: textmaps(payload)))
                 derived = outcome(lambda: facade_derived(payload))
                 for key in ("edges", *DERIVED_SURFACES):
                     add("facade[edges]" if key == "edges"

@@ -465,13 +465,16 @@ class Page:
         """Match records of ``kernel.layout.page_search`` over this page's
         chars; ``return_chars`` maps each match's char positions back to
         char records."""
-        layout = bool(kwargs.pop("layout", False))
-        settings, _ = split_word_settings(kwargs)
+        settings, rest = split_word_settings(kwargs)
+        textmap_kwargs = resolve_layout_kwargs(rest, self.bbox)
+        # provenance indexes the unrendered string: no render directions
+        textmap_kwargs.pop("line_dir_render", None)
+        textmap_kwargs.pop("char_dir_render", None)
         if self._ca.n == 0:
             return []
         recs = page_search(self._ca.select(settings.extra_attrs), pattern,
-                           settings, layout, self.bbox,
-                           **search_kwargs).to_dict("records")
+                           settings, **search_kwargs,
+                           **textmap_kwargs).to_dict("records")
         for r in recs:
             pos = r.pop("char_pos")
             if return_chars:

@@ -11,15 +11,18 @@ text-line plans all call it. ``resolve_layout_kwargs`` turns
 ``extract_text`` kwargs into their arguments.
 
 Re-expresses the reference's WordMap/TextMap
-(``pdfplumber/utils/text.py:95-420,713-781``):
+(``pdfplumber/utils/text.py:95-420,713-781``) as one pass per page:
 
-- ``assemble_text`` — the simple (non-layout) path: words clustered into
-  lines on the line-direction key, joined with single spaces / newlines
-  (``text.py:743-758``).
+- ``_line_order`` — the words in output order plus a line-start flag:
+  words clustered into lines on the line-direction key (one stable
+  argsort), or adjacent runs under use_text_flow. Plain text (joined with
+  single spaces / newlines, ``text.py:743-758``), the plain textmap and
+  layout text all walk it.
+- ``_word_rows`` — every word's source chars, ligature-expanded, as one
+  ``rows`` array sliced by ``offsets``: the provenance of each word's text.
 - ``assemble_text_layout`` — density-based layout imputation: newlines
   imputed from line position / y_density, spaces from word position /
   x_density, with Python banker's ``round`` (``text.py:241-420``).
-- ``assemble_text_plain_map`` — the non-layout textmap with provenance.
 - ``render_directions`` — btt/rtl render post-transforms: reverse lines /
   reverse chars / pad + transpose columns (``text.py:113-143``).
 - ``simple_text`` — extract_text_simple: doctop clusters + ``collate_line``
@@ -44,7 +47,6 @@ from .cluster import assign_clusters, group_rows_by_cluster
 from .words import (
     DEFAULT_X_TOLERANCE,
     DEFAULT_Y_TOLERANCE,
-    LIGATURES,
     CharArrays,
     WordSettings,
     extract_words_ca,
@@ -79,53 +81,71 @@ def render_directions(text: str, line_dir_render: str, char_dir_render: str) -> 
     return "\n".join(lines)
 
 
-def assemble_text(
-    words,
-    line_dir: str = "ttb",
-    char_dir: str = "ltr",
-    x_tolerance: float = DEFAULT_X_TOLERANCE,
-    y_tolerance: float = DEFAULT_Y_TOLERANCE,
-    line_dir_render: Optional[str] = None,
-    char_dir_render: Optional[str] = None,
-    preserve_order: bool = False,
-) -> str:
-    """Non-layout extract_text body (``text.py:730-758``).
+def _line_order(words, line_dir: str, tolerance: float, preserve_order: bool):
+    """``(order, line_start)``: the words in output order and, per output
+    word, whether it starts a line (``text.py:743-758``).
 
-    Words (``WordArrays`` columns) arrive in extractor emission order;
-    they are clustered on the line key (tolerance chooses y vs x by the
-    *render* line direction, a reference quirk at ``text.py:743-747``) and
-    joined.
-    ``preserve_order`` (use_text_flow, issue #982) groups adjacent runs
-    instead of re-sorting clusters, keeping stream order.
-    """
-    if len(words) == 0:
-        return ""
-    ldr = line_dir_render or line_dir
-    cdr = char_dir_render or char_dir
-    vals = line_cluster_values(words, line_dir)
-    tol = y_tolerance if ldr in ("ttb", "btt") else x_tolerance
-    cids = assign_clusters(vals, tol)
-    groups = group_rows_by_cluster(cids, preserve_order=preserve_order)
-    texts = np.asarray(words["text"], dtype=object)
-    base = "\n".join(" ".join(texts[i] for i in grp) for grp in groups)
-    return render_directions(base, ldr, cdr)
+    Lines are the chained clusters of the words' line key, in cluster
+    order with extractor emission order kept inside a cluster (one stable
+    argsort). ``preserve_order`` (use_text_flow, issue #982; the presorted
+    layout textmap) makes each adjacent run of one cluster a line instead,
+    keeping stream order."""
+    cids = assign_clusters(line_cluster_values(words, line_dir), tolerance)
+    order = (np.arange(len(cids)) if preserve_order
+             else np.argsort(cids, kind="stable"))
+    c = cids[order]
+    line_start = np.ones(len(c), dtype=bool)
+    line_start[1:] = c[1:] != c[:-1]
+    return order, line_start
 
 
-def _word_text(word_chars: Tuple[np.ndarray, np.ndarray], expansions: dict):
-    """(text, provenance rows) of one word: each char ligature-expanded,
-    every output character tagged with its source row."""
-    pieces: List[str] = []
-    prow: List[int] = []
-    for t, r in zip(*word_chars):
-        expanded = expansions.get(t, t)
-        pieces.append(expanded)
-        prow.extend([r] * len(expanded))
-    return "".join(pieces), np.asarray(prow, dtype=np.int64)
+def _word_rows(words, cwid: np.ndarray, cwpos: np.ndarray, text: np.ndarray,
+               expansions: dict):
+    """``(rows, offsets)``: every kept char's position in word order, then
+    ``char_word_pos`` order, repeated once per character of its
+    ligature-expanded text; word i owns ``rows[offsets[i]:offsets[i + 1]]``,
+    one row per character of ``words["text"][i]``."""
+    kept = np.flatnonzero(cwid >= 0)
+    wid = cwid[kept]
+    counts = np.bincount(wid, minlength=len(words))
+    chars = np.empty(len(kept), dtype=np.int64)
+    chars[(np.cumsum(counts) - counts)[wid] + cwpos[kept]] = kept
+    t = text[chars].tolist()
+    reps = np.fromiter(map(len, map(expansions.get, t, t)), np.int64, len(t))
+    offsets = np.zeros(len(words) + 1, dtype=np.int64)
+    np.cumsum(np.fromiter(map(len, words["text"]), np.int64, len(words)),
+              out=offsets[1:])
+    return np.repeat(chars, reps), offsets
+
+
+def _ranges(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """The concatenated ``arange(s, s + n)`` of each start s, length n."""
+    return np.repeat(starts - (np.cumsum(lens) - lens), lens) + np.arange(lens.sum())
+
+
+def _provenance(total: int, at: np.ndarray, wids: np.ndarray, rows: np.ndarray,
+                offsets: np.ndarray) -> np.ndarray:
+    """Provenance of a ``total``-char string holding the text of word
+    ``wids[k]`` at offset ``at[k]`` and imputed whitespace (-1) elsewhere."""
+    lens = offsets[wids + 1] - offsets[wids]
+    prov = np.full(total, -1, dtype=np.int64)
+    prov[_ranges(at, lens)] = rows[_ranges(offsets[wids], lens)]
+    return prov
+
+
+def _join_lines(texts, order: np.ndarray, line_start: np.ndarray) -> str:
+    """The words ``texts[order]`` joined by " " within a line and "\\n"
+    between lines."""
+    parts = [""] * (2 * len(order) - 1)
+    parts[::2] = [texts[i] for i in order.tolist()]
+    parts[1::2] = np.where(line_start[1:], "\n", " ").tolist()
+    return "".join(parts)
 
 
 def assemble_text_layout(
     words,
-    word_chars: List[Tuple[np.ndarray, np.ndarray]],
+    rows: np.ndarray,
+    offsets: np.ndarray,
     layout_bbox: Tuple[float, float, float, float],
     layout_width: float = 0,
     layout_height: float = 0,
@@ -140,15 +160,14 @@ def assemble_text_layout(
     char_dir: str = "ltr",
     line_dir_render: Optional[str] = None,
     char_dir_render: Optional[str] = None,
-    expand_ligatures: bool = True,
 ) -> Tuple[str, np.ndarray]:
     """Layout-mode textmap (``text.py:241-420``), returning
     ``(rendered_string, provenance)``.
 
     Words arrive presorted in extractor emission order (the reference's
-    ``presorted=True`` call); ``word_chars[i]`` is word i's
-    ``(texts, rows)`` pair from :func:`build_word_char_arrays`. Provenance
-    indexes refer to those rows; -1 marks imputed whitespace/newlines.
+    ``presorted=True`` call); ``rows``/``offsets`` are their source chars
+    from :func:`_word_rows`, and provenance holds those rows, -1 for
+    imputed whitespace/newlines.
 
     Note: provenance is tracked for the pre-render string (identical to the
     rendered string for ttb/ltr, the only case search() needs here).
@@ -157,8 +176,6 @@ def assemble_text_layout(
     cdr = char_dir_render or char_dir
     if len(words) == 0:
         return "", np.zeros(0, dtype=np.int64)
-
-    expansions = LIGATURES if expand_ligatures else {}
 
     if layout_width_chars and layout_width:
         raise ValueError("`layout_width` and `layout_width_chars` cannot both be set.")
@@ -169,91 +186,73 @@ def assemble_text_layout(
     if not layout_height_chars:
         layout_height_chars = int(round(layout_height / y_density))
 
-    cids = assign_clusters(line_cluster_values(words, line_dir), y_tolerance)
-    line_groups = group_rows_by_cluster(cids, preserve_order=True)
-
+    # presorted: the output order is the emission order
+    _, line_start = _line_order(words, line_dir, y_tolerance, True)
     y_origin = layout_bbox[_BBOX_ORIGIN_IDX[line_dir]]
     x_origin = layout_bbox[_BBOX_ORIGIN_IDX[char_dir]]
-    line_pos_col = _POSITION_COL[line_dir]
-    char_pos_col = _POSITION_COL[char_dir]
     y_adj = -1 if line_dir in ("btt", "rtl") else 1
     x_adj = -1 if char_dir in ("btt", "rtl") else 1
+    y_dist = ((np.asarray(words[_POSITION_COL[line_dir]], dtype=np.float64)
+               - (y_origin + y_shift)) * y_adj / y_density).tolist()
+    x_dist = ((np.asarray(words[_POSITION_COL[char_dir]], dtype=np.float64)
+               - (x_origin + x_shift)) * x_adj / x_density).tolist()
+    texts = words["text"]
 
-    out: List[str] = []
-    prov: List[np.ndarray] = []
+    pieces: List[str] = []
+    src: List[int] = []  # the word each piece is the text of; -1: imputed
     blank = " " * layout_width_chars
-
-    def emit(s: str, rows: Optional[np.ndarray] = None):
-        out.append(s)
-        if rows is None:
-            prov.append(np.full(len(s), -1, dtype=np.int64))
-        else:
-            prov.append(rows)
-
     num_newlines = 0
-    total_len = 0  # chars emitted so far (to test "last char is newline")
     last_char = ""
-
-    line_pos_vals = np.asarray(words[line_pos_col], dtype=np.float64)
-    char_pos_vals = np.asarray(words[char_pos_col], dtype=np.float64)
-
-    for i, grp in enumerate(line_groups):
-        y_dist = (
-            (line_pos_vals[grp[0]] - (y_origin + y_shift)) * y_adj / y_density
-        )
-        prepend = max(int(i > 0), round(y_dist) - num_newlines)
+    bounds = np.append(np.flatnonzero(line_start), len(texts)).tolist()
+    for i, (a, b) in enumerate(zip(bounds, bounds[1:])):
+        prepend = max(int(i > 0), round(y_dist[a]) - num_newlines)
         for _ in range(prepend):
-            if total_len == 0 or last_char == "\n":
-                if blank:
-                    emit(blank)
-                    total_len += len(blank)
-                    last_char = " " if blank else last_char
-            emit("\n")
-            total_len += 1
+            if (not pieces or last_char == "\n") and blank:
+                pieces.append(blank)
+                src.append(-1)
+            pieces.append("\n")
+            src.append(-1)
             last_char = "\n"
         num_newlines += prepend
 
         line_len = 0
-        for wi in grp:
-            x_dist = (
-                (char_pos_vals[wi] - (x_origin + x_shift)) * x_adj / x_density
-            )
-            n_spaces = max(min(1, line_len), round(x_dist) - line_len)
+        for wi in range(a, b):
+            n_spaces = max(min(1, line_len), round(x_dist[wi]) - line_len)
             if n_spaces:
-                emit(" " * n_spaces)
-                total_len += n_spaces
+                pieces.append(" " * n_spaces)
+                src.append(-1)
                 last_char = " "
             line_len += n_spaces
-            txt, rows = _word_text(word_chars[wi], expansions)
+            txt = texts[wi]
             if txt:
-                emit(txt, rows)
-                total_len += len(txt)
+                pieces.append(txt)
+                src.append(wi)
                 last_char = txt[-1]
             line_len += len(txt)
 
         if layout_width_chars - line_len > 0:
-            emit(" " * (layout_width_chars - line_len))
-            total_len += layout_width_chars - line_len
+            pieces.append(" " * (layout_width_chars - line_len))
+            src.append(-1)
             last_char = " "
 
     # trailing blank lines + terminal-newline strip (text.py:404-414);
     # this function is layout-only, so the block is unconditional
-    append = layout_height_chars - (num_newlines + 1)
-    for j in range(append):
+    for j in range(layout_height_chars - (num_newlines + 1)):
         if j > 0 and blank:
-            emit(blank)
-            last_char = " "
-        emit("\n")
-        last_char = "\n"
-    if out and out[-1] == "\n":
-        out.pop()
-        prov.pop()
+            pieces.append(blank)
+            src.append(-1)
+        pieces.append("\n")
+        src.append(-1)
+    if pieces and pieces[-1] == "\n":
+        pieces.pop()
+        src.pop()
 
-    base = "".join(out)
-    provenance = (
-        np.concatenate(prov) if prov else np.zeros(0, dtype=np.int64)
-    )
-    return render_directions(base, ldr, cdr), provenance
+    lens = np.fromiter(map(len, pieces), np.int64, len(pieces))
+    wids = np.asarray(src, dtype=np.int64)
+    is_word = wids >= 0
+    provenance = _provenance(int(lens.sum()), (np.cumsum(lens) - lens)[is_word],
+                             wids[is_word], rows, offsets)
+    return render_directions("".join(pieces), ldr, cdr), provenance
 
 
 def collate_line(ca: CharArrays, tolerance: float = DEFAULT_X_TOLERANCE) -> str:
@@ -312,30 +311,6 @@ def resolve_layout_kwargs(rest: dict, bbox) -> dict:
     return out
 
 
-def build_word_char_arrays(
-    ca_text: np.ndarray,
-    char_word_id: np.ndarray,
-    char_word_pos: np.ndarray,
-    n_words: int,
-) -> list:
-    """Per-word ``(texts, rows)`` pairs in word order, chars within each
-    word in extractor assignment order (``char_word_pos``); ``rows`` are
-    the chars' 0..n-1 positions, the provenance the textmaps carry."""
-    kept = np.flatnonzero(char_word_id >= 0)
-    order = kept[np.lexsort((char_word_pos[kept], char_word_id[kept]))]
-    wids = char_word_id[order]
-    empty = (np.empty(0, dtype=object), np.empty(0, dtype=np.int64))
-    out = [empty] * n_words
-    if len(order) == 0:
-        return out
-    bounds = np.flatnonzero(np.r_[True, wids[1:] != wids[:-1]])
-    bounds = np.append(bounds, len(order))
-    for bi in range(len(bounds) - 1):
-        sl = order[bounds[bi]:bounds[bi + 1]]
-        out[int(wids[bounds[bi]])] = (ca_text[sl], sl.astype(np.int64))
-    return out
-
-
 def page_text_ca(
     ca: CharArrays,
     settings: Optional[WordSettings] = None,
@@ -349,40 +324,33 @@ def page_text_ca(
     one char -> text implementation, no pandas for the char table.
 
     ``ca`` carries ``settings.extra_attrs`` (:meth:`CharArrays.select`).
-    Layout mode spans ``layout_bbox``, by default the chars' extent;
-    ``layout_kwargs`` are the rest of :func:`assemble_text_layout`'s
-    geometry (``layout_width``/``_height`` [``_chars``], ``x``/``y_density``,
+    Plain mode joins the words in :func:`_line_order` order; its line
+    tolerance is chosen by the *render* line direction, y for ttb/btt and
+    x otherwise (a reference quirk at ``text.py:743-747``). Layout mode
+    spans ``layout_bbox``, by default the chars' extent; ``layout_kwargs``
+    are the rest of :func:`assemble_text_layout`'s geometry
+    (``layout_width``/``_height`` [``_chars``], ``x``/``y_density``,
     ``x``/``y_shift``)."""
     s = settings or WordSettings()
     if ca.n == 0:
         return ""
-    if layout and layout_bbox is None:
-        layout_bbox = ca.bbox()
     words, cwid, cwpos = extract_words_ca(ca, s, as_frame=False)
-    if not layout:
-        return assemble_text(
-            words,
-            line_dir=s.line_dir,
-            char_dir=s.char_dir,
-            x_tolerance=s.x_tolerance,
-            y_tolerance=s.y_tolerance,
-            line_dir_render=line_dir_render,
-            char_dir_render=char_dir_render,
-            preserve_order=s.use_text_flow,
+    if layout:
+        text, _ = assemble_text_layout(
+            words, *_word_rows(words, cwid, cwpos, ca.text, s._expansions),
+            layout_bbox=ca.bbox() if layout_bbox is None else layout_bbox,
+            y_tolerance=s.y_tolerance, line_dir=s.line_dir, char_dir=s.char_dir,
+            line_dir_render=line_dir_render, char_dir_render=char_dir_render,
+            **layout_kwargs,
         )
-    text, _ = assemble_text_layout(
-        words,
-        build_word_char_arrays(ca.text, cwid, cwpos, len(words)),
-        layout_bbox=layout_bbox,
-        y_tolerance=s.y_tolerance,
-        line_dir=s.line_dir,
-        char_dir=s.char_dir,
-        line_dir_render=line_dir_render,
-        char_dir_render=char_dir_render,
-        expand_ligatures=s.expand_ligatures,
-        **layout_kwargs,
-    )
-    return text
+        return text
+    if len(words) == 0:
+        return ""
+    ldr = line_dir_render or s.line_dir
+    tol = s.y_tolerance if ldr in ("ttb", "btt") else s.x_tolerance
+    order, line_start = _line_order(words, s.line_dir, tol, s.use_text_flow)
+    return render_directions(_join_lines(words["text"], order, line_start),
+                             ldr, char_dir_render or s.char_dir)
 
 
 def page_textmap(
@@ -390,68 +358,40 @@ def page_textmap(
     settings: Optional[WordSettings] = None,
     layout: bool = False,
     layout_bbox: Optional[Tuple[float, float, float, float]] = None,
-) -> Optional[Tuple[str, np.ndarray]]:
-    """``(rendered, provenance)`` textmap of a page's chars — the reference
+    **layout_kwargs,
+) -> Tuple[str, np.ndarray]:
+    """``(text, provenance)`` textmap of a page's chars — the reference
     get_textmap read by search and extract_text_lines (layout=False is its
     default). ``ca`` carries ``settings.extra_attrs``; provenance indexes
-    its chars by position. Layout mode spans ``layout_bbox``. None when
-    the page has no words."""
+    its chars by position, -1 for imputed whitespace.
+
+    Plain mode is ``page_text_ca``'s string (lines clustered on
+    ``y_tolerance``, no render directions): each word's rows in line
+    order, one -1 per separator. Layout mode spans ``layout_bbox``, by
+    default the chars' extent, and by default its width and height;
+    ``layout_kwargs`` are the rest of :func:`assemble_text_layout`'s
+    geometry."""
     s = settings or WordSettings()
-    if ca.n == 0:
-        return None
     words, cwid, cwpos = extract_words_ca(ca, s, as_frame=False)
     if len(words) == 0:
-        return None
-    word_chars = build_word_char_arrays(ca.text, cwid, cwpos, len(words))
-    if layout:
-        x0, top, x1, bottom = layout_bbox
-        return assemble_text_layout(
-            words, word_chars, layout_bbox=layout_bbox,
-            layout_width=x1 - x0, layout_height=bottom - top,
-            y_tolerance=s.y_tolerance, line_dir=s.line_dir,
-            char_dir=s.char_dir, expand_ligatures=s.expand_ligatures,
-        )
-    return assemble_text_plain_map(
-        words, word_chars, line_dir=s.line_dir, y_tolerance=s.y_tolerance,
-        use_text_flow=s.use_text_flow, expand_ligatures=s.expand_ligatures,
-    )
-
-
-def assemble_text_plain_map(
-    words,
-    word_chars: List[Tuple[np.ndarray, np.ndarray]],
-    line_dir: str = "ttb",
-    y_tolerance: float = DEFAULT_Y_TOLERANCE,
-    use_text_flow: bool = False,
-    expand_ligatures: bool = True,
-) -> Tuple[str, np.ndarray]:
-    """NON-layout textmap with provenance (``text.py`` TextMap with
-    layout=False — the reference default for ``Page.search`` and
-    ``extract_text_lines``): words joined by one space within a line,
-    lines joined by newlines, no positional padding. Line grouping
-    matches ``assemble_text``."""
-    if len(words) == 0:
         return "", np.zeros(0, dtype=np.int64)
-    expansions = LIGATURES if expand_ligatures else {}
-    cids = assign_clusters(line_cluster_values(words, line_dir), y_tolerance)
-    groups = group_rows_by_cluster(cids, preserve_order=use_text_flow)
-    out: List[str] = []
-    prov: List[np.ndarray] = []
-    for gi, grp in enumerate(groups):
-        if gi:
-            out.append("\n")
-            prov.append(np.full(1, -1, dtype=np.int64))
-        for k, wi in enumerate(grp):
-            if k:
-                out.append(" ")
-                prov.append(np.full(1, -1, dtype=np.int64))
-            txt, rows = _word_text(word_chars[wi], expansions)
-            if txt:
-                out.append(txt)
-                prov.append(rows)
-    return "".join(out), (
-        np.concatenate(prov) if prov else np.zeros(0, dtype=np.int64)
-    )
+    rows, offsets = _word_rows(words, cwid, cwpos, ca.text, s._expansions)
+    if layout:
+        bbox = ca.bbox() if layout_bbox is None else layout_bbox
+        for k, size in (("layout_width", bbox[2] - bbox[0]),
+                        ("layout_height", bbox[3] - bbox[1])):
+            if k not in layout_kwargs and k + "_chars" not in layout_kwargs:
+                layout_kwargs[k] = size
+        return assemble_text_layout(
+            words, rows, offsets, layout_bbox=bbox, y_tolerance=s.y_tolerance,
+            line_dir=s.line_dir, char_dir=s.char_dir, **layout_kwargs,
+        )
+    order, line_start = _line_order(words, s.line_dir, s.y_tolerance,
+                                    s.use_text_flow)
+    lens = np.diff(offsets)[order]
+    at = np.cumsum(lens + 1) - (lens + 1)  # each word after one separator
+    return (_join_lines(words["text"], order, line_start),
+            _provenance(int(lens.sum()) + len(order) - 1, at, order, rows, offsets))
 
 
 # extract_text_lines(strip=True): each line, its edge spaces trimmed
@@ -521,15 +461,15 @@ def page_search(
     ca: CharArrays,
     pattern,
     settings: Optional[WordSettings] = None,
-    layout: bool = False,
-    layout_bbox: Optional[Tuple[float, float, float, float]] = None,
-    **search_kwargs,
+    regex: bool = True,
+    case: bool = True,
+    main_group: int = 0,
+    **textmap_kwargs,
 ) -> pd.DataFrame:
     """Textmap + :func:`search_text` for one page — the one search path
     behind ``Page.search``, ``Page.extract_text_lines`` and the Spark
-    search and text-line plans. ``search_kwargs`` are search_text's
-    ``regex``/``case``/``main_group``."""
-    tm = page_textmap(ca, settings, layout, layout_bbox)
-    if tm is None:
-        return pd.DataFrame(columns=_MATCH_COLS)
-    return search_text(*tm, ca, pattern, **search_kwargs)
+    search and text-line plans. ``textmap_kwargs`` are
+    :func:`page_textmap`'s ``layout``, ``layout_bbox`` and layout
+    geometry."""
+    return search_text(*page_textmap(ca, settings, **textmap_kwargs), ca,
+                       pattern, regex=regex, case=case, main_group=main_group)

@@ -262,3 +262,30 @@ def test_search_layout_honours_word_settings():
             assert p.search("fine", layout=layout, expand_ligatures=False) == []
             hits = p.search("ﬁne", layout=layout, expand_ligatures=False)
             assert [m["text"] for m in hits] == ["ﬁne"]
+
+
+@pytest.mark.parametrize("kw", [
+    {"x_density": 3}, {"y_density": 6}, {"x_shift": 40}, {"y_shift": 30},
+    {"layout_width": 200}, {"layout_width_chars": 30},
+    {"layout_height": 100}, {"layout_height_chars": 40},
+])
+def test_search_layout_honours_layout_settings(kw):
+    """Layout search and text lines read the layout geometry as
+    ``extract_text(layout=True)`` does (reference get_textmap passes it to
+    to_textmap): every match's offsets index that text."""
+    from pdfplumber_spark.kernel.pdfgen import make_pdf
+
+    pdf_bytes = make_pdf([{"width": 300, "height": 200, "texts": [
+        {"x": 20, "top": 20, "size": 12, "text": "alpha beta"},
+        {"x": 60, "top": 50, "size": 12, "text": "Gamma delta"},
+    ]}])
+    with pdfplumber.open(pdf_bytes) as pdf:
+        p = pdf.pages[0]
+        text = p.extract_text(layout=True, **kw)
+        for matches in (p.search(r"beta\s+Gamma", layout=True, **kw),
+                        p.search(r"(?s).+", layout=True, **kw),
+                        p.extract_text_lines(layout=True, **kw)):
+            assert matches
+            for m in matches:
+                assert m["text"] == text[m["start"]:m["end"]]
+        assert p.search(r"(?s).+", layout=True, **kw)[0]["end"] == len(text)

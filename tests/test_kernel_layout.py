@@ -102,17 +102,12 @@ def test_search_differential(seed):
     exp = tm.search(r"[a-zA-Z]{3,}", return_chars=False, return_groups=False)
 
     df = chars_frame(rows)
-    from pdfplumber_spark.kernel.layout import (
-        assemble_text_layout,
-        build_word_char_arrays,
-    )
-    from pdfplumber_spark.kernel.words import extract_words_ca
+    from pdfplumber_spark.kernel.layout import page_textmap
 
     ca = CharArrays(df)
-    words, cwid, cwpos = extract_words_ca(ca, WordSettings(), as_frame=False)
-    wc = build_word_char_arrays(ca.text, cwid, cwpos, len(words))
-    rendered, prov = assemble_text_layout(
-        words, wc, layout_bbox=ca.bbox(), layout_width=612, layout_height=792,
+    rendered, prov = page_textmap(
+        ca, WordSettings(), layout=True, layout_bbox=ca.bbox(),
+        layout_width=612, layout_height=792,
     )
     assert rendered == tm.as_string
     got = search_text(rendered, prov, CharArrays(df), r"[a-zA-Z]{3,}")
