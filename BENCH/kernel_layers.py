@@ -27,6 +27,7 @@ rounds, then one JSON line with every run and the ``cpus`` the runs had.
 """
 
 import argparse
+import inspect
 import json
 import os
 import pickle
@@ -55,6 +56,9 @@ def run_layers(checkout: str, inputs: str) -> dict:
     from pdfplumber_spark.kernel.pdfparse import parse_pdf
     from pdfplumber_spark.kernel.words import CharArrays, WordSettings, extract_words_ca
 
+    # an older kernel builds a DataFrame unless told not to
+    words_kw = ({"as_frame": False} if "as_frame" in
+                inspect.signature(extract_words_ca).parameters else {})
     with open(inputs, "rb") as f:
         payloads = pickle.load(f)
     secs = dict.fromkeys(LAYERS, 0.0)
@@ -79,7 +83,7 @@ def run_layers(checkout: str, inputs: str) -> dict:
                 chars += it.n_chars
                 ca = timed("from_interp", CharArrays.from_interp, it)
                 timed("extract_words_ca", extract_words_ca, ca, WordSettings(),
-                      as_frame=False)
+                      **words_kw)
                 timed("page_text_ca", page_text_ca, ca, WordSettings())
                 timed("page_textmap", page_textmap, ca, WordSettings())
             edges = timed("find_tables", T.EdgeArrays.from_interp, it)

@@ -13,7 +13,10 @@ prints one sha256 prefix per (corpus, surface):
   plain/layout, ``extract_text_lines``, ``dedupe_chars().extract_text``,
   ``extract_words`` with ``extra_attrs``, and ``find_tables`` /
   ``extract_tables`` / ``debug_tablefinder`` under every table strategy,
-  numeric and object-dict explicit lines included;
+  numeric and object-dict explicit lines included; ``extract_tables``
+  under each cell text setting of ``TABLE_TEXT_SETTINGS``, one
+  ``facade[table_text_settings:<name>]`` key each (layout, its
+  densities, shift, width in chars and render directions);
 - the facade's object surfaces: ``chars``/``lines``/``rects``/``curves``/
   ``images`` records; ``crop``, ``within_bbox``, ``outside_bbox`` and
   ``filter`` pages, each read through ``chars``, ``extract_text``,
@@ -36,10 +39,10 @@ seeds) plus ``ruled``: ``kernel.pdfgen`` pages whose tables are ruled by
 lines, rects or curves, with split and jittered rulings.
 
 The ``textmap`` key hashes, per corpus, each PDF page's ``page_textmap``
-text and provenance bytes, plain and in layout over the page bbox (a
-``None`` textmap, which older kernels gave a page with no words, reads as
-an empty one), so provenance is checked byte for byte, not only through
-the match rows.
+text and provenance bytes, plain and in layout over the page bbox, its
+width and height passed explicitly (a ``None`` textmap, which older
+kernels gave a page with no words, reads as an empty one), so provenance
+is checked byte for byte, not only through the match rows.
 
 The ``parser`` surface hashes, per corpus and for ``style`` False and True,
 every page's parser buffers below any rounding: ``ch_text``, ``ch_font``,
@@ -110,6 +113,21 @@ TABLE_SETTINGS = {
                      explicit_horizontal_lines=EXPLICIT_H),
     "lines_v,text_h,nosnap": dict(horizontal_strategy="text",
                                   snap_tolerance=0, join_y_tolerance=1),
+}
+
+
+# text settings of table cells: layout alone, each layout geometry and
+# render direction with it, and a render direction in plain mode
+LAYOUT = {"text_layout": True}
+TABLE_TEXT_SETTINGS = {
+    "layout": LAYOUT,
+    "layout,x_density=3": dict(LAYOUT, text_x_density=3),
+    "layout,y_density=5": dict(LAYOUT, text_y_density=5),
+    "layout,x_shift=10": dict(LAYOUT, text_x_shift=10),
+    "layout,line_dir_render=btt": dict(LAYOUT, text_line_dir_render="btt"),
+    "layout,char_dir_render=rtl": dict(LAYOUT, text_char_dir_render="rtl"),
+    "layout,layout_width_chars=40": dict(LAYOUT, text_layout_width_chars=40),
+    "char_dir_render=rtl": {"text_char_dir_render": "rtl"},
 }
 
 
@@ -254,6 +272,12 @@ def facade_words_tables(payload) -> list:
     return out
 
 
+def facade_table_text(payload, ts: dict) -> list:
+    """Each page's ``extract_tables`` under the text settings ``ts``."""
+    with pdfplumber.open(bytes(payload)) as pdf:
+        return [outcome(lambda: p.extract_tables(ts)) for p in pdf.pages]
+
+
 def tablefinder_state(d) -> tuple:
     """A ``debug_tablefinder()`` result's edges, intersections, cells and
     table cells."""
@@ -355,8 +379,9 @@ def textmaps(payload) -> list:
         if it.n_chars:
             ca = CharArrays.from_interp(it)
             for layout in (False, True):
-                text, prov = page_textmap(ca, WordSettings(), layout, (
-                    0.0, 0.0, it.width, it.height)) or ("", ())
+                text, prov = page_textmap(
+                    ca, WordSettings(), layout, (0.0, 0.0, it.width, it.height),
+                    layout_width=it.width, layout_height=it.height) or ("", ())
                 out.append((text, np.asarray(prov, dtype=np.int64).tobytes()))
     return out
 
@@ -506,6 +531,9 @@ def main() -> None:
                 add("facade[objects,derived,serialize,utils]",
                     outcome(lambda: facade_objects(payload)))
                 add("facade[laparams]", outcome(lambda: facade_laparams(payload)))
+                for tname, ts in TABLE_TEXT_SETTINGS.items():
+                    add(f"facade[table_text_settings:{tname}]",
+                        outcome(lambda: facade_table_text(payload, ts)))
                 add("textmap", outcome(lambda: textmaps(payload)))
                 derived = outcome(lambda: facade_derived(payload))
                 for key in ("edges", *DERIVED_SURFACES):

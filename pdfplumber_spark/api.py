@@ -42,8 +42,8 @@ from .kernel.layout import (
     STRIP_LINES,
     page_search,
     page_text_ca,
-    resolve_layout_kwargs,
     simple_text,
+    text_args,
 )
 from .kernel.pdfparse import (
     ROW_COLUMNS,
@@ -62,8 +62,8 @@ from .kernel.words import (
     CharArrays,
     dedupe_keep_mask,
     extract_words_ca,
-    split_word_settings,
 )
+
 
 def _attr_filter(include_attrs=None, exclude_attrs=None):
     """convert.py:33-56 semantics."""
@@ -431,20 +431,15 @@ class Page:
 
     # --- text ---------------------------------------------------------------
     def extract_text(self, **kwargs) -> str:
-        settings, rest = split_word_settings(kwargs)
-        return page_text_ca(
-            self._ca.select(settings.extra_attrs), settings,
-            **resolve_layout_kwargs(rest, self.bbox)
-        )
+        settings, text_kwargs = text_args(kwargs, self.bbox)
+        return page_text_ca(self._ca, settings, **text_kwargs)
 
     def extract_text_simple(self, **kwargs) -> str:
         return simple_text(self._ca, **kwargs)
 
     def extract_words(self, **kwargs) -> List[dict]:
-        settings, _ = split_word_settings(kwargs)
-        words, _, _ = extract_words_ca(
-            self._ca.select(settings.extra_attrs), settings)
-        return words.to_dict("records")
+        settings, _ = text_args(kwargs, self.bbox)
+        return extract_words_ca(self._ca, settings)[0].records()
 
     def search(self, pattern, regex: bool = True, case: bool = True,
                main_group: int = 0, return_chars: bool = True,
@@ -465,15 +460,13 @@ class Page:
         """Match records of ``kernel.layout.page_search`` over this page's
         chars; ``return_chars`` maps each match's char positions back to
         char records."""
-        settings, rest = split_word_settings(kwargs)
-        textmap_kwargs = resolve_layout_kwargs(rest, self.bbox)
+        settings, textmap_kwargs = text_args(kwargs, self.bbox)
         # provenance indexes the unrendered string: no render directions
         textmap_kwargs.pop("line_dir_render", None)
         textmap_kwargs.pop("char_dir_render", None)
         if self._ca.n == 0:
             return []
-        recs = page_search(self._ca.select(settings.extra_attrs), pattern,
-                           settings, **search_kwargs,
+        recs = page_search(self._ca, pattern, settings, **search_kwargs,
                            **textmap_kwargs).to_dict("records")
         for r in recs:
             pos = r.pop("char_pos")
@@ -493,9 +486,8 @@ class Page:
         words = None
         if "text" in (ts.get("vertical_strategy", "lines"),
                       ts.get("horizontal_strategy", "lines")):
-            settings, _ = split_word_settings(text_settings)
-            words, _, _ = extract_words_ca(
-                self._ca.select(settings.extra_attrs), settings)
+            settings, _ = text_args(text_settings, self.bbox)
+            words = extract_words_ca(self._ca, settings)[0]
         return text_settings, find_tables(
             EdgeArrays.from_records(self.edges), words=words,
             page_bbox=self.bbox, debug=debug, **ts

@@ -7,8 +7,10 @@ buffers, a facade page's chars, or char records).
 provenance-carrying textmap of a page's :class:`CharArrays` and
 ``search_text`` maps each regex match back to its chars' bbox.
 ``Page.search``, ``Page.extract_text_lines`` and the Spark search and
-text-line plans all call it. ``resolve_layout_kwargs`` turns
-``extract_text`` kwargs into their arguments.
+text-line plans all call it. ``text_args`` is the one place
+``extract_text`` kwargs become word settings and layout geometry for
+both: every caller (the facade, ``utils``, table cells and the text plan)
+passes chars plus those kwargs.
 
 Re-expresses the reference's WordMap/TextMap
 (``pdfplumber/utils/text.py:95-420,713-781``) as one pass per page:
@@ -51,6 +53,7 @@ from .words import (
     WordSettings,
     extract_words_ca,
     line_cluster_values,
+    split_word_settings,
     validate_directions,
 )
 
@@ -286,29 +289,32 @@ _LAYOUT_KEYS = (
 )
 
 
-def resolve_layout_kwargs(rest: dict, bbox) -> dict:
-    """Pop ``extract_text``'s layout and render kwargs out of ``rest`` ->
-    keyword arguments for :func:`page_text_ca`.
+def text_args(kwargs: dict, bbox) -> Tuple[WordSettings, dict]:
+    """``extract_text`` keyword arguments -> ``(WordSettings, keyword
+    arguments for page_text_ca / page_textmap)``: the one place text
+    settings are resolved.
 
     ``bbox`` supplies the layout defaults: ``layout_bbox`` itself and the
     ``layout_width``/``layout_height`` extent. Only a default-derived
     width/height yields to ``*_chars``; an explicit one conflicts
     (reference WordMap.to_textmap raises — test_utils.py:386-394). Render
-    directions apply to both layout and plain assembly."""
-    out = {"layout": bool(rest.pop("layout", False))}
+    directions apply to both layout and plain assembly; other keys are
+    ignored."""
+    settings, rest = split_word_settings(kwargs)
+    out = {"layout": bool(rest.get("layout", False))}
     for k in ("line_dir_render", "char_dir_render"):
         if k in rest:
-            out[k] = rest.pop(k)
+            out[k] = rest[k]
     if out["layout"]:
-        out["layout_bbox"] = rest.pop("layout_bbox", bbox)
+        out["layout_bbox"] = rest.get("layout_bbox", bbox)
         for k in _LAYOUT_KEYS:
             if k in rest:
-                out[k] = rest.pop(k)
+                out[k] = rest[k]
         if "layout_width" not in out and "layout_width_chars" not in out:
             out["layout_width"] = bbox[2] - bbox[0]
         if "layout_height" not in out and "layout_height_chars" not in out:
             out["layout_height"] = bbox[3] - bbox[1]
-    return out
+    return settings, out
 
 
 def page_text_ca(
@@ -323,7 +329,6 @@ def page_text_ca(
     """extract_text (``text.py:713-758``) straight from CharArrays — the
     one char -> text implementation, no pandas for the char table.
 
-    ``ca`` carries ``settings.extra_attrs`` (:meth:`CharArrays.select`).
     Plain mode joins the words in :func:`_line_order` order; its line
     tolerance is chosen by the *render* line direction, y for ttb/btt and
     x otherwise (a reference quirk at ``text.py:743-747``). Layout mode
@@ -334,7 +339,7 @@ def page_text_ca(
     s = settings or WordSettings()
     if ca.n == 0:
         return ""
-    words, cwid, cwpos = extract_words_ca(ca, s, as_frame=False)
+    words, cwid, cwpos = extract_words_ca(ca, s)
     if layout:
         text, _ = assemble_text_layout(
             words, *_word_rows(words, cwid, cwpos, ca.text, s._expansions),
@@ -362,28 +367,25 @@ def page_textmap(
 ) -> Tuple[str, np.ndarray]:
     """``(text, provenance)`` textmap of a page's chars — the reference
     get_textmap read by search and extract_text_lines (layout=False is its
-    default). ``ca`` carries ``settings.extra_attrs``; provenance indexes
-    its chars by position, -1 for imputed whitespace.
+    default). Provenance indexes ``ca``'s chars by position, -1 for
+    imputed whitespace.
 
     Plain mode is ``page_text_ca``'s string (lines clustered on
     ``y_tolerance``, no render directions): each word's rows in line
     order, one -1 per separator. Layout mode spans ``layout_bbox``, by
-    default the chars' extent, and by default its width and height;
+    default the chars' extent, as in :func:`page_text_ca`;
     ``layout_kwargs`` are the rest of :func:`assemble_text_layout`'s
-    geometry."""
+    geometry (:func:`text_args` gives them)."""
     s = settings or WordSettings()
-    words, cwid, cwpos = extract_words_ca(ca, s, as_frame=False)
+    words, cwid, cwpos = extract_words_ca(ca, s)
     if len(words) == 0:
         return "", np.zeros(0, dtype=np.int64)
     rows, offsets = _word_rows(words, cwid, cwpos, ca.text, s._expansions)
     if layout:
-        bbox = ca.bbox() if layout_bbox is None else layout_bbox
-        for k, size in (("layout_width", bbox[2] - bbox[0]),
-                        ("layout_height", bbox[3] - bbox[1])):
-            if k not in layout_kwargs and k + "_chars" not in layout_kwargs:
-                layout_kwargs[k] = size
         return assemble_text_layout(
-            words, rows, offsets, layout_bbox=bbox, y_tolerance=s.y_tolerance,
+            words, rows, offsets,
+            layout_bbox=ca.bbox() if layout_bbox is None else layout_bbox,
+            y_tolerance=s.y_tolerance,
             line_dir=s.line_dir, char_dir=s.char_dir, **layout_kwargs,
         )
     order, line_start = _line_order(words, s.line_dir, s.y_tolerance,

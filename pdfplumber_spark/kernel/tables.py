@@ -45,7 +45,7 @@ from . import layout
 from .cluster import assign_clusters, group_rows_by_cluster
 from .geom import curve_orientation, curve_segments, edge_mask, obj_to_edges
 from .pdfparse import LINE_COLUMNS
-from .words import CharArrays, split_word_settings
+from .words import CharArrays
 
 DEFAULT_SNAP_TOLERANCE = 3
 DEFAULT_JOIN_TOLERANCE = 3
@@ -497,14 +497,13 @@ def extract_table_text(
     IMPORTANT: chars come from the whole *page*, not a table crop
     (``table.py:401``): a char belongs to a cell when its centre lies in the
     half-open cell box (``table.py:404-410``). Merged (missing) cells ->
-    None, empty -> "".
+    None, empty -> "". Each cell's text is ``utils.extract_text`` of its
+    chars under ``text_settings``; when ``"layout"`` is among them, the
+    layout bbox, width and height are the cell's.
     """
-    ts = dict(text_settings or {})
-    layout_mode = bool(ts.pop("layout", False))
-    settings, _ = split_word_settings(ts)
-    ca = page_chars.select(settings.extra_attrs)
-    hmid = (ca.x0 + ca.x1) / 2
-    vmid = (ca.top + ca.bottom) / 2
+    ts = text_settings or {}
+    hmid = (page_chars.x0 + page_chars.x1) / 2
+    vmid = (page_chars.top + page_chars.bottom) / 2
 
     def inside(idx, bbox):
         x0, top, x1, bottom = bbox
@@ -514,7 +513,7 @@ def extract_table_text(
     out = []
     for row in table_rows(cells):
         present = [c for c in row if c]
-        row_idx = inside(np.arange(ca.n), (
+        row_idx = inside(np.arange(page_chars.n), (
             min(c[0] for c in present), min(c[1] for c in present),
             max(c[2] for c in present), max(c[3] for c in present),
         ))
@@ -527,15 +526,15 @@ def extract_table_text(
             if len(idx) == 0:
                 arr.append("")
                 continue
-            kwargs = {}
-            if layout_mode:
-                kwargs = dict(
-                    layout=True, layout_bbox=cell,
-                    layout_width=cell[2] - cell[0],
-                    layout_height=cell[3] - cell[1],
-                )
+            cell_ts = ts
+            if "layout" in ts:
+                cell_ts = {**ts, "layout_bbox": cell,
+                           "layout_width": cell[2] - cell[0],
+                           "layout_height": cell[3] - cell[1]}
+            settings, kwargs = layout.text_args(cell_ts, cell)
             # looked up per call so the traced benchmark's wrapper sees it
-            arr.append(layout.page_text_ca(ca.take(idx), settings, **kwargs))
+            arr.append(layout.page_text_ca(page_chars.take(idx), settings,
+                                           **kwargs))
         out.append(arr)
     return out
 

@@ -31,7 +31,7 @@ from __future__ import annotations
 import copy
 import string as _string
 from dataclasses import dataclass, field
-from typing import Optional, Sequence, Tuple
+from typing import List, Optional, Sequence, Tuple
 
 import numpy as np
 import pandas as pd
@@ -222,10 +222,10 @@ class CharArrays:
         return self
 
     def select(self, attrs: Sequence[str]) -> "CharArrays":
-        """These chars carrying exactly the ``attrs`` columns in ``extra``,
-        the form the word kernels take (they group chars on every
-        ``extra`` column); a name missing from ``extra`` is read from the
-        core fields (``size``, ``x0``, ...)."""
+        """These chars carrying exactly the ``attrs`` columns in ``extra``
+        (the word kernel groups chars on every ``extra`` column, so it
+        selects its settings' ``extra_attrs`` first); a name missing from
+        ``extra`` is read from the core fields (``size``, ``x0``, ...)."""
         out = copy.copy(self)
         out.extra = {
             a: self.extra[a] if a in self.extra or a not in _CORE
@@ -312,8 +312,8 @@ def _line_ids(key: np.ndarray, tol, group: np.ndarray) -> np.ndarray:
 
 # column shims: the words of layout.py, the chars of the word kernel
 def _f64(col) -> np.ndarray:
-    """Column -> float64 ndarray; accepts pandas Series AND the raw numpy
-    columns of WordArrays (the no-pandas fast path)."""
+    """Column -> float64 ndarray; accepts pandas Series and the numpy
+    columns of WordArrays."""
     return np.asarray(col, dtype=np.float64)
 
 
@@ -355,26 +355,18 @@ def _text_tables(ca: CharArrays, s: WordSettings):
 def extract_words_frame(
     chars: pd.DataFrame, settings: Optional[WordSettings] = None
 ):
-    """Extract words from a char frame (one page, ingestion order).
-
-    Returns ``(words, char_word_id, char_word_pos)`` where ``words`` has one
-    row per word in the reference's emission order, ``char_word_id[i]`` maps
-    the i-th char row to its word index (-1 = dropped blank) and
-    ``char_word_pos[i]`` is the char's position within its word (assignment
-    order — differs from input order for btt/rtl lines). Word columns: text,
-    x0, x1, top, doctop, bottom, upright, height, width, direction
-    (+extra_attrs).
-    """
+    """:func:`extract_words_ca` over a char frame, its words as a DataFrame
+    (the traced benchmark's hook name; the package calls the array form)."""
     s = settings or WordSettings()
-    return extract_words_ca(CharArrays(chars, s.extra_attrs), s)
+    words, cwid, cwpos = extract_words_ca(CharArrays(chars, s.extra_attrs), s)
+    return pd.DataFrame(dict(words)), cwid, cwpos
 
 
 class WordArrays(dict):
-    """Column dict standing in for the words DataFrame on the no-pandas
-    fast path (``as_frame=False``): same ``words[col]`` access, but values
-    are raw numpy arrays / lists and ``len()`` counts ROWS like a frame.
-    Building a real pandas frame costs ~1.8 ms/page — ~15% of single-core
-    extraction — and the text-assembly consumers only read columns."""
+    """One page's words as columns: ``words[col]`` is a numpy array (the
+    numeric columns) or a list, and ``len()`` counts words, not columns.
+    The kernels read columns; :meth:`records` gives the word dicts of the
+    public ``extract_words``."""
 
     __slots__ = ()
 
@@ -382,26 +374,36 @@ class WordArrays(dict):
         t = self.get("text")
         return 0 if t is None else len(t)
 
+    def records(self) -> List[dict]:
+        """One dict per word, keys in column order, values native Python
+        scalars (what ``DataFrame.to_dict("records")`` gives)."""
+        cols = list(self)
+        vals = (v.tolist() if isinstance(v, np.ndarray) else v
+                for v in self.values())
+        return [dict(zip(cols, row)) for row in zip(*vals)]
+
 
 def extract_words_ca(
     ca: CharArrays, settings: Optional[WordSettings] = None,
-    as_frame: bool = True,
-):
-    """Array-native form of extract_words_frame (same returns); the
-    extraction fast path calls this straight from parser buffers.
-    ``as_frame=False`` skips the pandas DataFrame build and returns
-    :class:`WordArrays` (column-compatible for the assembly consumers)."""
+) -> Tuple[WordArrays, np.ndarray, np.ndarray]:
+    """Words of one page's chars (ingestion order), the one word kernel.
+
+    Returns ``(words, char_word_id, char_word_pos)``: ``words`` holds one
+    row per word in the reference's emission order, ``char_word_id[i]``
+    maps the i-th char to its word index (-1 = dropped blank) and
+    ``char_word_pos[i]`` is the char's position within its word
+    (assignment order, which differs from input order for btt/rtl lines).
+    Word columns: text, x0, x1, top, doctop, bottom, upright, height,
+    width, direction, then ``settings.extra_attrs``. Chars group on
+    exactly those extra attrs, whatever other columns ``ca`` carries."""
     s = settings or WordSettings()
+    ca = ca.select(s.extra_attrs)
     cols = ["text", "x0", "x1", "top", "doctop", "bottom", "upright",
             "height", "width", "direction", *s.extra_attrs]
     n = ca.n
     char_word_id = np.full(n, -1, dtype=np.int64)
     char_word_pos = np.full(n, -1, dtype=np.int64)
-    empty = (
-        (pd.DataFrame(columns=cols) if as_frame
-         else WordArrays({c: [] for c in cols})),
-        char_word_id, char_word_pos,
-    )
+    empty = WordArrays({c: [] for c in cols}), char_word_id, char_word_pos
     if n == 0:
         return empty
     codes, is_blank, is_punct, etext, etext_len = _text_tables(ca, s)
@@ -495,9 +497,7 @@ def extract_words_ca(
     }
     for attr in s.extra_attrs:
         data[attr] = ca.extra[attr][firsts]
-    if not as_frame:
-        return WordArrays(data), char_word_id, char_word_pos
-    return pd.DataFrame(data, columns=cols), char_word_id, char_word_pos
+    return WordArrays(data), char_word_id, char_word_pos
 
 
 def dedupe_keep_mask(

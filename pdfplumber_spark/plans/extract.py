@@ -162,7 +162,7 @@ def _payload_rows_inner(url: str, data: bytes, layout: bool, dedupe: bool) -> li
             # parser buffers -> CharArrays, no pandas; parse_pdf and
             # page_text_ca are looked up per call so the traced benchmark's
             # wrappers see them
-            from ..kernel.layout import page_text_ca
+            from ..kernel.layout import page_text_ca, text_args
 
             interps = pdfparse.parse_pdf(data, style=False)
             if not interps:
@@ -180,14 +180,9 @@ def _payload_rows_inner(url: str, data: bytes, layout: bool, dedupe: bool) -> li
                             ca.doctop, ca.x0,
                         ))
                         n = ca.n
-                    kwargs = {}
-                    if layout:
-                        w, h = float(it.width), float(it.height)
-                        kwargs = dict(
-                            layout=True, layout_bbox=(0.0, 0.0, w, h),
-                            layout_width=w, layout_height=h,
-                        )
-                    txt = page_text_ca(ca, WordSettings(), **kwargs)
+                    settings, kwargs = text_args({"layout": layout}, (
+                        0.0, 0.0, float(it.width), float(it.height)))
+                    txt = page_text_ca(ca, settings, **kwargs)
                 rows.append(
                     (url, it.page_number, txt, n,
                      txt.count(" ") + 1 if txt else 0, "ok", None)
@@ -350,9 +345,7 @@ def _payload_to_word_frames(url: str, payload, s: WordSettings) -> list:
     pages = []
     for it in interps:
         if it.n_chars:
-            words = extract_words_ca(
-                CharArrays.from_interp(it, s.extra_attrs), s, as_frame=False
-            )[0]
+            words = extract_words_ca(CharArrays.from_interp(it, s.extra_attrs), s)[0]
             if len(words):
                 pages.append((it.page_number, words))
     if not pages:
@@ -414,7 +407,7 @@ def _payload_to_table_rows(
         ca = CharArrays.from_interp(it)
         words = None
         if "text" in (vertical_strategy, horizontal_strategy):
-            words = extract_words_ca(ca, WordSettings(), as_frame=False)[0]
+            words = extract_words_ca(ca, WordSettings())[0]
         try:
             tables = T.find_tables(
                 T.EdgeArrays.from_interp(it),

@@ -29,8 +29,8 @@ from .kernel.layout import (
     DEFAULT_X_DENSITY,
     DEFAULT_Y_DENSITY,
     page_text_ca,
-    resolve_layout_kwargs,
     simple_text,
+    text_args,
 )
 from .kernel.words import (
     DEFAULT_X_TOLERANCE,
@@ -38,7 +38,6 @@ from .kernel.words import (
     CharArrays,
     dedupe_keep_mask,
     extract_words_ca,
-    split_word_settings,
 )
 
 __all__ = [
@@ -367,12 +366,9 @@ def extract_text(chars, **kwargs) -> str:
     ca = _char_arrays(chars)
     if ca is None:
         return ""
-    settings, rest = split_word_settings(kwargs)
-    bbox = rest.pop("layout_bbox", None)
-    if bbox is None:
-        bbox = ca.bbox()
-    return page_text_ca(ca.select(settings.extra_attrs), settings,
-                        **resolve_layout_kwargs(rest, bbox))
+    settings, text_kwargs = text_args(
+        kwargs, kwargs.get("layout_bbox") or ca.bbox())
+    return page_text_ca(ca, settings, **text_kwargs)
 
 
 def extract_text_simple(chars, x_tolerance=DEFAULT_X_TOLERANCE,
@@ -391,9 +387,8 @@ def extract_words(chars, **kwargs) -> List[dict]:
     ca = _char_arrays(chars)
     if ca is None:
         return []
-    settings, _ = split_word_settings(kwargs)
-    words, _, _ = extract_words_ca(ca.select(settings.extra_attrs), settings)
-    return words.to_dict("records")
+    settings, _ = text_args(kwargs, ca.bbox())
+    return extract_words_ca(ca, settings)[0].records()
 
 
 def collate_line(line_chars, tolerance=DEFAULT_X_TOLERANCE) -> str:

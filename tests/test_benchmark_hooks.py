@@ -52,7 +52,7 @@ def test_hook_only_names_agree_with_the_plans_path():
     words = hook("pdfplumber_spark.plans.extract", "extract_words_frame")(
         frames["chars"], WordSettings())[0]
     want_words = extract_words_ca(CharArrays.from_interp(it), WordSettings())[0]
-    assert words.to_dict("records") == want_words.to_dict("records")
+    assert words.to_dict("records") == want_words.records()
     assert "Prose" in list(words["text"])
 
     records = []

@@ -184,6 +184,29 @@ def test_layout_fast_path_byte_identical_pdfgen(layout, dedupe):
     assert "Revenue grew by 12 percent" in text
 
 
+@pytest.mark.parametrize("layout", [False, True])
+def test_dedupe_text_plan_does_not_group_on_the_dedupe_key(layout):
+    """The dedupe text plan reads each char's fontname for the dedupe key,
+    but default word settings group on no font: one line drawn right to
+    left in two fonts reads left to right, as ``dedupe_chars()`` then
+    ``extract_text`` and the plan without dedupe read it."""
+    from pdfplumber_spark import api
+    from pdfplumber_spark.kernel.pdfgen import make_pdf
+    from pdfplumber_spark.plans.extract import _payload_to_text_rows
+
+    data = make_pdf([{"width": 612, "height": 792, "texts": [
+        {"x": 200, "top": 100, "size": 10, "text": "delta"},
+        {"x": 140, "top": 100, "size": 10, "text": "beta", "font": "F2"},
+        {"x": 72, "top": 100, "size": 10, "text": "alpha"},
+    ]}])
+    with api.open(data) as pdf:
+        facade = pdf.pages[0].dedupe_chars().extract_text(layout=layout)
+    ((_, _, deduped, *_),) = _payload_to_text_rows("u", data, layout, True)
+    ((_, _, plain, *_),) = _payload_to_text_rows("u", data, layout, False)
+    assert deduped == facade == plain
+    assert " ".join(deduped.split()) == "alpha beta delta"
+
+
 def test_layout_fast_path_byte_identical():
     """page_text_ca on parser buffers must be byte-identical to
     page_text_ca(layout=True) on the char frame's arrays — including the

@@ -318,6 +318,73 @@ def test_cell_text_half_open_boxes():
     assert T.extract_table_text(cells, CharArrays(chars)) == [["a", "b"], ["c", ""]]
 
 
+# cell text settings that each change a cell's text; "layout" among them
+# makes the cell the layout bbox and extent
+CELL_TEXT_SETTINGS = {
+    "x_density": {"layout": True, "x_density": 3},
+    "y_density": {"layout": True, "y_density": 5},
+    "x_shift": {"layout": True, "x_shift": 10},
+    "line_dir_render": {"layout": True, "line_dir_render": "btt"},
+    "layout_char_dir_render": {"layout": True, "char_dir_render": "rtl"},
+    "char_dir_render": {"char_dir_render": "rtl"},
+}
+
+
+@pytest.mark.parametrize("ts", CELL_TEXT_SETTINGS.values(), ids=CELL_TEXT_SETTINGS)
+def test_cell_text_honours_text_settings(ts):
+    """Each cell's text is ``utils.extract_text`` of the chars centred in
+    the half-open cell under the table's text settings (``table.py:
+    399-435``), in layout mode over the cell's bbox and extent."""
+    from pdfplumber_spark import utils
+
+    with api.open(lattice("rects")) as pdf:
+        page = pdf.pages[0]
+        got = page.extract_tables({f"text_{k}": v for k, v in ts.items()})
+        chars = page.chars
+    want = []
+    for top, bottom in zip(YS, YS[1:]):
+        want.append([])
+        for x0, x1 in zip(XS, XS[1:]):
+            inside = [c for c in chars if x0 <= (c["x0"] + c["x1"]) / 2 < x1
+                      and top <= (c["top"] + c["bottom"]) / 2 < bottom]
+            geometry = {}
+            if "layout" in ts:
+                geometry = dict(layout_bbox=(x0, top, x1, bottom),
+                                layout_width=x1 - x0, layout_height=bottom - top)
+            want[-1].append(utils.extract_text(inside, **ts, **geometry))
+    assert got == [want]
+    # each word's chars start 4pt right of their 100 x 30pt cell's corner
+    # and dy = 7.3pt below it (the glyph box under a text top 8pt down)
+    dy = 8 + (FONT_ASCENT - FONT_DESCENT) / 1000 * SIZE - SIZE
+    if ts.get("x_density") == 3:
+        # round(100 / 3) = 33 columns by round(30 / 13) = 2 lines, the word
+        # on line round(dy / 13) = 1 after round(4 / 3) = 1 space
+        assert round(dy / 13) == 1
+        assert want == [[" " * 33 + "\n" + f" {cell_text(i, j)}".ljust(33)
+                         for i in range(len(XS) - 1)] for j in range(len(YS) - 1)]
+    if ts.get("y_density") == 5:
+        # round(100 / 7.25) = 14 columns by 30 / 5 = 6 lines, the word on
+        # line round(dy / 5) = 1 after round(4 / 7.25) = 1 space; the
+        # terminal newline goes (``text.py:404-414``), so 5 lines remain
+        assert round(dy / 5) == 1
+        blank = " " * 14
+        assert want == [["\n".join([blank, f" {cell_text(i, j)}".ljust(14),
+                                    blank, blank, blank])
+                         for i in range(len(XS) - 1)] for j in range(len(YS) - 1)]
+
+
+def test_cell_layout_rebinds_the_width():
+    """In layout mode a cell's width is its own, so a width in chars
+    conflicts with it, as in the reference's rebinding."""
+    with api.open(lattice("rects")) as pdf:
+        page = pdf.pages[0]
+        with pytest.raises(ValueError, match="layout_width"):
+            page.extract_tables({"text_layout": True, "text_layout_width_chars": 40})
+        (table,) = page.find_tables()
+        grid = table.extract(layout=True, x_density=3)
+    assert {len(ln) for row in grid for t in row for ln in t.split("\n")} == {33}
+
+
 def test_tables_schema_order():
     rows = X._payload_to_table_rows("u", lattice("lines"))
     assert all(len(r) == len(TABLES_SCHEMA.fields) for r in rows)

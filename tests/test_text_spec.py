@@ -51,7 +51,7 @@ def assert_text_matches_spec(ca, rows, kw, render, layout_kwargs, bbox):
               "layout_height": bbox[3] - bbox[1]}
     for layout in (False, True):
         # older kernels gave None, not an empty textmap, for no words
-        text, provenance = page_textmap(ca, s, layout, bbox) or ("", [])
+        text, provenance = page_textmap(ca, s, layout, **extent) or ("", [])
         assert (text, [int(i) for i in provenance]) == \
             spec.textmap(rows, wordmap, layout, **extent)
 
@@ -76,6 +76,11 @@ def at(text, x0, top, upright=1):
          render=("ltr", "ttb"), layout="extent")
 @example(rows=[at("a", 0.0, 0.0), at("b", 50.0, 3.0)], name="xy_tolerances",
          render=(None, None), layout="density_shift")
+# one empty-text char, so one empty word, and a zero-size bbox: the
+# layout textmap over that bbox is empty
+@example(rows=[dict(at("", 0.0, 0.0, upright=0), x1=0.0, bottom=0.0, size=0.0, adv=0.0,
+                    width=0.0, height=0.0)],
+         name="btt_rtl", render=(None, None), layout="chars")
 def test_text_matches_the_spec_on_char_sets(rows, name, render, layout):
     kw = SETTINGS[name]
     ca = CharArrays(pd.DataFrame(rows, columns=CHAR_COLS), kw.get("extra_attrs", ()))

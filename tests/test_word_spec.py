@@ -35,11 +35,11 @@ def assert_matches_spec(ca: CharArrays, rows: list, kw: dict):
     want, want_id, want_pos = WordSpec(**kw).extract(rows)
     assert cwid.tolist() == want_id
     assert cwpos.tolist() == want_pos
-    assert got.to_dict("records") == want
+    assert got.records() == want
 
 
-def char(text, x0, x1, size=10.0, upright=1):
-    return {"text": text, "fontname": "F1", "size": size, "adv": x1 - x0,
+def char(text, x0, x1, size=10.0, upright=1, fontname="F1"):
+    return {"text": text, "fontname": fontname, "size": size, "adv": x1 - x0,
             "upright": upright, "x0": x0, "x1": x1, "top": 0.0, "bottom": 10.0,
             "doctop": 0.0, "width": x1 - x0, "height": 10.0}
 
@@ -51,9 +51,14 @@ def char(text, x0, x1, size=10.0, upright=1):
 # the ratio tolerance is the previous char's: 0.3 * 12 lets a 2pt gap pass
 @example(rows=[char("a", 0.0, 5.0, size=12.0), char("b", 7.0, 9.0, size=4.0)],
          name="tolerance_ratios")
+# a font change splits a word only when fontname is an extra attr
+@example(rows=[char("a", 0.0, 5.0), char("b", 5.0, 10.0, fontname="F2")],
+         name="default")
 def test_words_match_the_spec_on_char_sets(rows, name):
     kw = SETTINGS[name]
-    ca = CharArrays(pd.DataFrame(rows, columns=CHAR_COLS), kw.get("extra_attrs", ()))
+    # the chars carry fontname under every setting: the kernel groups on
+    # the settings' extra_attrs alone
+    ca = CharArrays(pd.DataFrame(rows, columns=CHAR_COLS), ("fontname",))
     assert_matches_spec(ca, rows, kw)
 
 
@@ -83,6 +88,5 @@ def test_words_match_the_spec_on_corpus_pages(pages, name):
     kw = SETTINGS[name]
     assert len(pages) > 40 and sum(ca.n for ca, _ in pages) > 10_000
     assert any((ca.upright == 0).any() for ca, _ in pages)  # rotated pages
-    for ca, rows in pages:
-        view = ca if "extra_attrs" in kw else ca.select(())
-        assert_matches_spec(view, rows, kw)
+    for ca, rows in pages:  # ca carries fontname under every setting
+        assert_matches_spec(ca, rows, kw)

@@ -167,7 +167,10 @@ class TextSpec:
             if j > 0:
                 out += blank_line
             out.append(("\n", -1))
-        if out[-1] == ("\n", -1):
+        # words whose texts are all empty, in a zero-size layout, tag
+        # nothing: the reference would index the empty list and raise
+        # IndexError; the kernel's layout text is then empty
+        if out and out[-1] == ("\n", -1):
             out.pop()
         return out
 
