@@ -24,6 +24,12 @@ Layout:
 
 __version__ = "0.1.0"
 
+from . import _worker_imports  # noqa: E402
+
+# every Python worker that unpickles a package UDF imports the package, so
+# this runs once per worker, after its first task's import setup
+_worker_imports.install()
+
 from . import utils  # noqa: E402,F401  (reference `pdfplumber.utils` parity)
 
 
