@@ -5,7 +5,9 @@ input, run interleaved so the checkouts share the machine's state.
                                    [--rounds 3] CHECKOUT [CHECKOUT ...]
 
 The input is ``perfbench.inputs.make_input(workload, seed)`` of this
-checkout; its PDF payloads are written once to a temporary file. Each round
+checkout, or with ``--workload shapes`` the ``BENCH/shapes.py`` corpus
+(200 one-page PDFs of hand-written content streams) at that seed; its PDF
+payloads are written once to a temporary file. Each round
 runs every checkout once, each in a fresh process that imports
 ``pdfplumber_spark`` from that checkout, in an order that alternates from
 round to round. A run walks every PDF payload serially, as the plans do,
@@ -98,9 +100,15 @@ def run_layers(checkout: str, inputs: str) -> dict:
 
 def write_payloads(workload: str, seed: int, path: str) -> int:
     sys.path.insert(0, HERE)
-    from perfbench.inputs import make_input
+    if workload == "shapes":
+        sys.path.insert(0, os.path.join(HERE, "BENCH"))
+        from shapes import shapes_rows
+        rows = shapes_rows(seed=seed)
+    else:
+        from perfbench.inputs import make_input
+        rows = make_input(workload, seed)
 
-    payloads = [bytes(d["html"]) for d in make_input(workload, seed)
+    payloads = [bytes(d["html"]) for d in rows
                 if isinstance(d["html"], (bytes, bytearray))
                 and bytes(d["html"][:5]) == b"%PDF-"]
     with open(path, "wb") as f:

@@ -36,7 +36,11 @@ returns, so a per-page or per-payload frame split hashes the same. The
 corpora are ``sources.corpus.generate_rows`` inputs (the sizes the sf0.01
 and sf0.1 pages corpora use, 80 and 400 docs at seed 42, and two more
 seeds) plus ``ruled``: ``kernel.pdfgen`` pages whose tables are ruled by
-lines, rects or curves, with split and jittered rulings.
+lines, rects or curves, with split and jittered rulings, and ``shapes``
+(``BENCH/shapes.py``): hand-written content streams in the shapes real
+producers write (TJ kerning, a Tj per word, the text-state operators,
+hex and escaped strings, marked content, inline images, nested q/Q and
+dense paths).
 
 The ``textmap`` key hashes, per corpus, each PDF page's ``page_textmap``
 text and provenance bytes, plain and in layout over the page bbox, its
@@ -88,6 +92,9 @@ from pdfplumber_spark.plans import extract as X  # noqa: E402
 from pdfplumber_spark.plans import search as S  # noqa: E402
 from pdfplumber_spark.schemas import OBJECTS_SCHEMA  # noqa: E402
 from pdfplumber_spark.sources.corpus import generate_rows  # noqa: E402
+
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from shapes import shapes_rows  # noqa: E402
 
 # the lattice family's column rulings (corpus._pdf_table_lattice), as ints
 EXPLICIT_V = [72, 172, 272, 372, 472]
@@ -197,6 +204,7 @@ CORPORA = {
     "seed7": lambda: generate_rows(n_docs=120, seed=7, mega_pages=6),
     "seed123": lambda: generate_rows(n_docs=120, seed=123),
     "ruled": ruled_rows,
+    "shapes": shapes_rows,
 }
 
 

@@ -64,24 +64,53 @@ _BBOX_ORIGIN_IDX = {"ttb": 1, "btt": 3, "ltr": 0, "rtl": 2}
 _POSITION_COL = {"ttb": "top", "btt": "bottom", "ltr": "x0", "rtl": "x1"}
 
 
-def render_directions(text: str, line_dir_render: str, char_dir_render: str) -> str:
-    """Post-transform for non-(ttb,ltr) render directions (``text.py:113-143``)."""
+def render_order(text: str, line_dir_render: str,
+                 char_dir_render: str) -> Optional[np.ndarray]:
+    """The render post-transform (``text.py:113-143``) as an index array:
+    for each character of the rendered string, the position in ``text`` it
+    is read from, -1 for a padding space and -2 for a line break. None for
+    ttb/ltr, which renders ``text`` as it is. Lines are reversed for
+    btt/rtl line rendering and characters within a line for rtl; for
+    ltr/rtl lines the lines, padded to one width (on the left for btt
+    characters), are read as columns."""
     validate_directions(line_dir_render, char_dir_render, "_render")
     if char_dir_render == "ltr" and line_dir_render == "ttb":
-        return text
-    lines = text.split("\n")
+        return None
+    breaks = [i for i, c in enumerate(text) if c == "\n"]
+    lines = [np.arange(a, b, dtype=np.int64)
+             for a, b in zip([0] + [i + 1 for i in breaks], breaks + [len(text)])]
     if line_dir_render in ("btt", "rtl"):
         lines = lines[::-1]
     if char_dir_render == "rtl":
         lines = [ln[::-1] for ln in lines]
     if line_dir_render in ("rtl", "ltr"):
         width = max(map(len, lines))
-        if char_dir_render == "btt":
-            lines = [(" " * (width - len(ln))) + ln for ln in lines]
-        else:
-            lines = [ln + (" " * (width - len(ln))) for ln in lines]
-        return "\n".join("".join(ln[i] for ln in lines) for i in range(width))
-    return "\n".join(lines)
+        grid = np.full((len(lines), width), -1, dtype=np.int64)
+        for row, ln in zip(grid, lines):
+            if char_dir_render == "btt":
+                row[width - len(ln):] = ln
+            else:
+                row[:len(ln)] = ln
+        lines = list(grid.T)
+    if not lines:  # no columns
+        return np.zeros(0, dtype=np.int64)
+    out = [np.full(1, -2, dtype=np.int64)] * (2 * len(lines) - 1)
+    out[::2] = lines
+    return np.concatenate(out)
+
+
+def render_take(text: str, order: Optional[np.ndarray]) -> str:
+    """``text`` read through :func:`render_order`'s ``order``."""
+    if order is None:
+        return text
+    codes = np.frombuffer((text + "\n ").encode("utf-32-le", "surrogatepass"),
+                          dtype=np.uint32)
+    return codes[order].tobytes().decode("utf-32-le", "surrogatepass")
+
+
+def render_directions(text: str, line_dir_render: str, char_dir_render: str) -> str:
+    """``text`` rendered in the given directions (:func:`render_order`)."""
+    return render_take(text, render_order(text, line_dir_render, char_dir_render))
 
 
 def _line_order(words, line_dir: str, tolerance: float, preserve_order: bool):
@@ -172,8 +201,10 @@ def assemble_text_layout(
     from :func:`_word_rows`, and provenance holds those rows, -1 for
     imputed whitespace/newlines.
 
-    Note: provenance is tracked for the pre-render string (identical to the
-    rendered string for ttb/ltr, the only case search() needs here).
+    The string is rendered in ``line_dir_render``/``char_dir_render``
+    (default: ``line_dir``/``char_dir``), and the provenance with it: both
+    are read through one :func:`render_order`, each character keeping its
+    source row, a padding space or line break -1.
     """
     ldr = line_dir_render or line_dir
     cdr = char_dir_render or char_dir
@@ -255,7 +286,13 @@ def assemble_text_layout(
     is_word = wids >= 0
     provenance = _provenance(int(lens.sum()), (np.cumsum(lens) - lens)[is_word],
                              wids[is_word], rows, offsets)
-    return render_directions("".join(pieces), ldr, cdr), provenance
+    # the string and its provenance read through one render order
+    text = "".join(pieces)
+    order = render_order(text, ldr, cdr)
+    if order is None:
+        return text, provenance
+    return (render_take(text, order),
+            np.append(provenance, (-1, -1))[order])
 
 
 def collate_line(ca: CharArrays, tolerance: float = DEFAULT_X_TOLERANCE) -> str:

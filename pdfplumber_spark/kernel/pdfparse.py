@@ -30,6 +30,7 @@ from .pdfgen import FONT_ASCENT, FONT_DESCENT, WIDTHS
 from .words import NUM_FIELDS, STYLE_ATTRS, CharArrays
 
 MATRIX_ID = (1, 0, 0, 1, 0, 0)  # ints, pdfminer MATRIX_IDENTITY parity
+_NUM_TYPES = frozenset((int, float))
 
 
 def mat_mult(m1, m0):
@@ -104,25 +105,59 @@ def bind_refs(v, doc, depth: int = 0):
 _WS = b"\x00\t\n\x0c\r "
 _DELIM = b"()<>[]{}/%"
 
-_NAME_CACHE: Dict[bytes, "Name"] = {}
 _KW_CACHE: Dict[str, tuple] = {}
 
 
-def _intern_name(raw: bytes) -> "Name":
-    """Names repeat heavily (/Tf /F1 /Length ...) — memoize decode+alloc."""
-    nm = _NAME_CACHE.get(raw)
-    if nm is None:
-        if b"#" in raw:
-            dec = re.sub(
-                rb"#([0-9A-Fa-f]{2})",
-                lambda m: bytes([int(m.group(1), 16)]), raw,
-            )
-        else:
-            dec = raw
-        nm = Name(dec.decode("latin-1"))
-        if len(_NAME_CACHE) < 8192:
-            _NAME_CACHE[raw] = nm
-    return nm
+class _Memo(dict):
+    """``fn(key)``, computed on a key's first lookup and kept while the
+    memo holds fewer than ``limit`` keys. Read per glyph or token as
+    ``memo[key]`` or ``map(memo.__getitem__, keys)``: a hit costs about
+    half of a ``functools.cache`` call (28 vs 58 ns on CPython 3.11)."""
+
+    __slots__ = ("fn", "limit")
+
+    def __init__(self, fn, limit: Optional[int] = None):
+        super().__init__()
+        self.fn = fn
+        self.limit = limit
+
+    def __missing__(self, key):
+        v = self.fn(key)
+        if self.limit is None or len(self) < self.limit:
+            self[key] = v
+        return v
+
+
+def _name(raw: bytes) -> "Name":
+    """A name token's value (after its '/'), ``#xx`` escapes decoded."""
+    if b"#" in raw:
+        raw = re.sub(rb"#([0-9A-Fa-f]{2})",
+                     lambda m: bytes([int(m.group(1), 16)]), raw)
+    return Name(raw.decode("latin-1"))
+
+
+def _content_number(t: bytes):
+    """A content-stream number token's value: a float if it has a '.'."""
+    return float(t) if b"." in t else int(t)
+
+
+# names (/Tf /F1 /Length ...) and content-stream numbers repeat heavily:
+# each token is decoded once
+_NAMES = _Memo(_name, 8192)
+_NUMS = _Memo(_content_number, 16384)
+
+
+def _number_run(run: bytes):
+    """The values of whitespace-separated number tokens (each with at most
+    one '.'), by :func:`_content_number`'s rule: all ints or all floats in
+    one C-level map, a mix through the memo."""
+    parts = run.split()
+    dots = run.count(b".")
+    if not dots:
+        return map(int, parts)
+    if dots == len(parts):
+        return map(float, parts)
+    return map(_NUMS.__getitem__, parts)
 
 
 def _intern_kw(op: str) -> tuple:
@@ -134,21 +169,45 @@ def _intern_kw(op: str) -> tuple:
     return kw
 
 
-# one-shot lexer regex: leading ws/comments + the common token kinds.
-# Strings '(', hex '<..>', bare '>' fall through to the slow path.
+# one-shot lexer regex: leading ws/comments + one token, told apart by its
+# group number. What the groups leave (a string, a hex string, a bare '>',
+# a keyword opening with ')', the end of the data) matches group 7 and
+# goes to Lexer._next_token_slow.
 _LEX_RE = re.compile(
     # the ws/comment prefix is ATOMIC (possessive, Python 3.11+): with a
     # backtrackable `(?:[ws]+|%…)*` a long NUL/space run followed by a
     # char no token group accepts (e.g. `(`) explodes combinatorially —
     # issue-848.pdf spent >60 s in ONE re.match here.
     rb"(?:[\x00\t\n\x0c\r ]++|%[^\r\n]*+)*+"
-    rb"(?:(?P<name>/[^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"
-    rb"|(?P<num>[+\-.0-9][0-9.+\-Ee]*)"
-    rb"|(?P<dopen><<)"
-    rb"|(?P<dclose>>>)"
-    rb"|(?P<brk>[\[\]{}])"
-    rb"|(?P<kw>[^\x00\t\n\x0c\r ()<>\[\]{}/%]+)"
-    rb")"
+    rb"(?:/([^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"  # 1: name
+    rb"|([+\-.0-9][0-9.+\-Ee]*)"  # 2: number
+    rb"|(<<)"  # 3
+    rb"|(>>)"  # 4
+    rb"|([\[\]{}])"  # 5
+    rb"|([^\x00\t\n\x0c\r ()<>\[\]{}/%]+)"  # 6: keyword
+    rb"|([()<>]|\Z))"  # 7: the slow path's
+)
+
+# the object parser's token regex (_parse_container): _LEX_RE's groups,
+# after a first one that reads a reference spelled "num gen R" as one token
+_OBJ_TOKEN_RE = re.compile(
+    rb"(?:[\x00\t\n\x0c\r ]++|%[^\r\n]*+)*+"
+    rb"(?:(\d++)[\x00\t\n\x0c\r ]++(\d++)[\x00\t\n\x0c\r ]++R"
+    rb"(?![^\x00\t\n\x0c\r ()<>\[\]{}/%])"  # 1, 2: num gen R
+    rb"|/([^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"  # 3: name
+    rb"|([+\-.0-9][0-9.+\-Ee]*)"  # 4: number
+    rb"|(<<)"  # 5
+    rb"|(>>)"  # 6
+    rb"|([\[\]{}])"  # 7
+    rb"|([^\x00\t\n\x0c\r ()<>\[\]{}/%]+)"  # 8: keyword
+    rb"|([()<>]|\Z))"  # 9: the slow path's
+)
+
+# what follows the first number of an "num gen R" reference: the gen
+# number's token and the keyword R, each as _LEX_RE reads it
+_REF_TAIL_RE = re.compile(
+    rb"(?:[\x00\t\n\x0c\r ]++|%[^\r\n]*+)*+([+\-.0-9][0-9.+\-Ee]*+)"
+    rb"(?:[\x00\t\n\x0c\r ]++|%[^\r\n]*+)*+R(?![^\x00\t\n\x0c\r ()<>\[\]{}/%])"
 )
 
 
@@ -160,6 +219,26 @@ _FLAT_NUMS_RE = re.compile(
     rb"[\t\n\x0c\r ]*+"
     rb"((?:[+\-]?+(?:\d++\.?+\d*+|\.\d++)(?:[\t\n\x0c\r ]++|(?=\])))*+)\]"
 )
+
+
+def _num_value(t: bytes):
+    """A number token's value: a float if it has a '.', 'e' or 'E', else
+    an int; 0 if float() or int() rejects it."""
+    try:
+        if b"." in t or b"e" in t or b"E" in t:
+            return float(t)
+        return int(t)
+    except ValueError:
+        return 0
+
+
+_OBJ_NUMS = _Memo(_num_value, 8192)
+
+
+def _flat_numbers(m) -> list:
+    """The values of a _FLAT_NUMS_RE match (their rule is the content
+    scanner's)."""
+    return list(_number_run(m[1]))
 
 
 class Lexer:
@@ -183,30 +262,22 @@ class Lexer:
                 return
 
     def next_token(self):
-        # fast path: one C-engine regex match covers ws/comments + the
-        # common token kinds (names, numbers, dict/array delims, keywords)
         m = _LEX_RE.match(self.data, self.pos)
-        if m is not None:
-            g = m.lastgroup
-            self.pos = m.end()
-            if g == "num":
-                tok = m.group("num")
-                try:
-                    if b"." in tok or b"e" in tok or b"E" in tok:
-                        return float(tok)
-                    return int(tok)
-                except ValueError:
-                    return 0
-            if g == "name":
-                return _intern_name(m.group("name")[1:])
-            if g == "kw":
-                return _intern_kw(m.group("kw").decode("latin-1"))
-            if g == "dopen":
-                return "<<"
-            if g == "dclose":
-                return ">>"
-            return m.group(g).decode("latin-1")  # [ ] { }
-        return self._next_token_slow()
+        k = m.lastindex
+        if k == 7:
+            return self._next_token_slow()
+        self.pos = m.end()
+        if k == 2:
+            return _num_value(m[2])
+        if k == 1:
+            return _NAMES[m[1]]
+        if k == 6:
+            return _intern_kw(m[6].decode("latin-1"))
+        if k == 3:
+            return "<<"
+        if k == 4:
+            return ">>"
+        return m[5].decode("latin-1")  # [ ] { }
 
     def _next_token_slow(self):
         """What _LEX_RE leaves: EOF, strings, hex strings, a bare '>' and
@@ -287,52 +358,135 @@ class Lexer:
 
 def parse_object(lex: Lexer):
     """Parse one object; resolves R-references into Ref markers."""
-    tok = lex.next_token()
-    return _parse_from(lex, tok)
+    return _parse_from(lex, lex.next_token())
+
+
+_KW_VALUES = {"true": True, "false": False, "null": None}
+_ARRAY = object()  # the key slot of an array frame in _parse_container
+_NO_KEY = object()  # the key slot of a dict frame between entries
 
 
 def _parse_from(lex: Lexer, tok):
-    if tok == "<<":
-        d: Dict[str, object] = {}
-        while True:
-            k = lex.next_token()
-            if k == ">>" or k is None:
-                break
-            v = parse_object(lex)
-            if isinstance(k, Name):
-                d[str(k)] = v
-        return d
-    if tok == "[":
-        m = _FLAT_NUMS_RE.match(lex.data, lex.pos)
+    """The object that token ``tok`` starts, the rest read from ``lex``:
+    a dict or array (:func:`_parse_container`), ``num gen R`` as a Ref,
+    true/false/null, or the token itself."""
+    if tok == "<<" or tok == "[":
+        return _parse_container(lex, tok == "<<")
+    if type(tok) is int:
+        m = _REF_TAIL_RE.match(lex.data, lex.pos)
+        if m is not None:
+            gen = _num_value(m[1])
+            if type(gen) is int:
+                lex.pos = m.end()
+                return Ref(tok, gen)
+        return tok
+    if type(tok) is tuple:
+        return _KW_VALUES.get(tok[1], tok)
+    return tok
+
+
+def _parse_container(lex: Lexer, is_dict: bool):
+    """The dict (after its ``<<``) or array (after its ``[``) at
+    ``lex.pos``, nested containers included, in one scan of _OBJ_TOKEN_RE
+    with an explicit stack of the open containers.
+
+    A dict reads a key token, ending at ``>>`` or the end of the data,
+    then a value object; only a name key is stored. An array reads value
+    objects up to ``]`` or the end. In a value, ``<<`` and ``[`` open a
+    container, an int followed by ``gen R`` is a Ref, true/false/null
+    are themselves, and any other token (``>>`` and ``]`` too) is its own
+    value. An array of plain numbers is read by one _FLAT_NUMS_RE match.
+    The scan restarts after what it did not read itself: a token of the
+    Lexer's slow path, a flat array, a reference spelled other than
+    ``num gen R``."""
+    data = lex.data
+    scan = _OBJ_TOKEN_RE.finditer
+    pos = lex.pos
+    if is_dict:
+        cur, key = {}, _NO_KEY
+    else:
+        m = _FLAT_NUMS_RE.match(data, pos)
         if m is not None:
             lex.pos = m.end()
-            return [float(t) if b"." in t else int(t) for t in m[1].split()]
-        arr = []
-        while True:
-            t = lex.next_token()
-            if t == "]" or t is None:
+            return _flat_numbers(m)
+        cur, key = [], _ARRAY
+    frames = []  # the enclosing containers, as (container, key slot)
+    v = None  # a container just closed
+    while True:
+        for m in scan(data, pos):
+            k = m.lastindex
+            jump = None  # where the scan restarts, if not after m
+            if k == 4:
+                t = _OBJ_NUMS[m[4]]
+            elif k == 3:
+                t = _NAMES[m[3]]
+            elif k == 2:  # num gen R
+                if key is _NO_KEY:  # a key token is the first number alone
+                    t = int(m[1])
+                    jump = m.end(1)
+                else:
+                    t = Ref(int(m[1]), int(m[2]))
+            elif k == 8:
+                t = _intern_kw(m[8].decode("latin-1"))
+            elif k == 5:
+                t = "<<"
+            elif k == 6:
+                t = ">>"
+            elif k == 7:
+                t = m[7].decode("latin-1")  # [ ] { }
+            else:  # past the end of the data, a match starts at the end
+                lex.pos = max(m.start(), pos)
+                t = lex._next_token_slow()
+                jump = lex.pos
+            if key is _NO_KEY:
+                if t != ">>" and t is not None:
+                    key = t
+                else:
+                    v = cur
+            elif key is not _ARRAY or (t != "]" and t is not None):
+                if t == "<<":
+                    frames.append((cur, key))
+                    cur, key = {}, _NO_KEY
+                elif t == "[" and (fm := _FLAT_NUMS_RE.match(data, m.end())) is None:
+                    frames.append((cur, key))
+                    cur, key = [], _ARRAY
+                else:
+                    if t == "[":
+                        t = _flat_numbers(fm)
+                        jump = fm.end()
+                    elif type(t) is int:
+                        tail = _REF_TAIL_RE.match(data, m.end())
+                        if tail is not None:
+                            gen = _num_value(tail[1])
+                            if type(gen) is int:
+                                t = Ref(t, gen)
+                                jump = tail.end()
+                    elif type(t) is tuple:
+                        t = _KW_VALUES.get(t[1], t)
+                    if key is _ARRAY:
+                        cur.append(t)
+                    else:
+                        if isinstance(key, Name):
+                            cur[str(key)] = t
+                        key = _NO_KEY
+            else:
+                v = cur
+            if v is not None:
+                # the container just closed is a value of the one around it
+                if not frames:
+                    lex.pos = m.end() if jump is None else jump
+                    return v
+                cur, key = frames.pop()
+                if key is _ARRAY:
+                    cur.append(v)
+                else:
+                    if isinstance(key, Name):
+                        cur[str(key)] = v
+                    key = _NO_KEY
+                v = None
+            if jump is not None:
+                pos = jump
                 break
-            arr.append(_parse_from(lex, t))
-        return arr
-    if isinstance(tok, int):
-        # possible "num gen R" reference
-        save = lex.pos
-        t2 = lex.next_token()
-        if isinstance(t2, int):
-            t3 = lex.next_token()
-            if t3 == ("kw", "R"):
-                return Ref(tok, t2)
-        lex.pos = save
-        return tok
-    if isinstance(tok, tuple) and tok[0] == "kw":
-        kw = tok[1]
-        if kw == "true":
-            return True
-        if kw == "false":
-            return False
-        if kw == "null":
-            return None
-    return tok
 
 
 # WinAnsiEncoding differences from latin-1 in 0x80-0x9f (ISO 32000 annex D)
@@ -457,23 +611,6 @@ def normalize_fontname(name: str) -> str:
     return str(prefix)[2:-1] + suffix_new
 
 
-class _Memo(dict):
-    """``fn(key)``, computed on a key's first lookup. Read per glyph as
-    ``map(memo.__getitem__, cids)``: a hit costs about half of a
-    ``functools.cache`` call (28 vs 58 ns on CPython 3.11), about 3% of a
-    serial parse of text-heavy PDFs."""
-
-    __slots__ = ("fn",)
-
-    def __init__(self, fn):
-        super().__init__()
-        self.fn = fn
-
-    def __missing__(self, key):
-        v = self[key] = self.fn(key)
-        return v
-
-
 def _font_num(v, default):
     """A font's width, metric or matrix value ``v`` as a float, or
     ``default``, as for a missing value, when ``v`` is not a number or no
@@ -508,8 +645,19 @@ class Font:
         widths = doc.resolve(spec.get("Widths"))
         self.widths: Dict[int, float] = {}
         if widths:
-            for i, w in enumerate(doc.resolve(widths)):
-                self.widths[self.first_char + i] = _font_num(doc.resolve(w), 0.0)
+            widths = doc.resolve(widths)
+            try:
+                # a list of plain numbers (no refs), from an int FirstChar
+                if (type(self.first_char) is not int
+                        or not _NUM_TYPES.issuperset(map(type, widths))):
+                    raise TypeError
+                self.widths = dict(zip(range(self.first_char, self.first_char
+                                             + len(widths)),
+                                       map(float, widths)))
+            except (TypeError, OverflowError):
+                for i, w in enumerate(widths):
+                    self.widths[self.first_char + i] = _font_num(
+                        doc.resolve(w), 0.0)
         desc = doc.resolve(spec.get("FontDescriptor")) or {}
         # raw /FontFile (Type1), /FontFile2 (TrueType), /FontFile3
         # (CFF/Type1C) refs kept for lazy embedded-glyph loading
@@ -750,8 +898,8 @@ class Font:
                 r"<([0-9A-Fa-f]+)>\s*<([0-9A-Fa-f]+)>\s*<([0-9A-Fa-f]+)>", body
             ):
                 lo, hi, dst = (int(cm.group(i), 16) for i in (1, 2, 3))
-                for k in range(lo, hi + 1):
-                    out[k] = chr(dst + (k - lo))
+                out.update(zip(range(lo, hi + 1),
+                               map(chr, range(dst, dst + hi + 1 - lo))))
             for cm in re.finditer(
                 r"<([0-9A-Fa-f]+)>\s*<([0-9A-Fa-f]+)>\s*\[(.*?)\]", body, re.S
             ):
@@ -1544,21 +1692,61 @@ class PDFDocument:
 
 # --- content stream interpretation -----------------------------------------
 
-# fast content-stream scanner: one regex match per token, its leading
-# whitespace and comments included (possessively, as in _LEX_RE), for the
-# overwhelmingly common token kinds; strings/hex/dicts/arrays delegate to
-# the full Lexer. Only trailing whitespace and comments match nothing.
+# the content-stream scanner's token regex, walked once per stream with
+# finditer (content_ops): each match is a token with its leading whitespace
+# and comments (possessive, as in _LEX_RE), told apart by its group number
+# alone. Numbers come first, so "12Tf" is 12 then Tf and "1.2.3" is 1.2
+# then .3; a run of two or more numbers each followed by whitespace
+# ("1 0 0 1 72 700 " before Tm) is one match, split once. Strings are one match each: plain,
+# hex, or with escapes (decoded by _unescape). What is left (a string
+# with nested parentheses, an unterminated one, "<<", a nested "[", the
+# end of the data) matches group 10 and goes to the full Lexer /
+# _parse_from, and the scan restarts where they stopped.
+_CONTENT_NUM = rb"[+-]?(?:\d+\.\d*|\.\d+|\d+)"
 _CONTENT_TOKEN_RE = re.compile(
     rb"(?:[\s\x00]++|%[^\r\n]*+)*+"
-    rb"(?:(?P<num>[+-]?(?:\d+\.\d*|\.\d+|\d+))"
-    rb"|/(?P<name>[^\s\x00/()<>\[\]{}%]*)"
-    rb"|(?P<delim><<|\[|\(|<)"
-    rb"|(?P<op>[^\s\x00/()<>\[\]{}%]+)"
-    rb"|(?P<skip>[\]>}{)]))"
+    rb"(?:((?:" + _CONTENT_NUM + rb"\s++){2,}+)"  # 1: numbers, each before ws
+    rb"|(" + _CONTENT_NUM + rb")"  # 2: a number
+    rb"|([^\s\x00/()<>\[\]{}%]+)"  # 3: operator
+    rb"|/([^\s\x00/()<>\[\]{}%]*)"  # 4: name
+    rb"|\(([^()\\]*+)\)"  # 5: plain string
+    rb"|(\[)"  # 6: array open
+    rb"|([\]>}{)])"  # 7: array close, or a stray delimiter
+    rb"|<(?!<)([^>]*+)>"  # 8: hex string
+    rb"|\(((?:[^()\\]++|\\[\s\S])*+)\)"  # 9: string with escapes
+    rb"|(<<|[(<]|\Z))"  # 10: hard token, or the end
 )
+_NON_HEX_RE = re.compile(rb"[^0-9A-Fa-f]")
+_ESCAPE_RE = re.compile(rb"\\([0-7]{1,3}|\r\n|[\s\S])")
+_ESCAPES = {b"n": b"\n", b"r": b"\r", b"t": b"\t", b"b": b"\b", b"f": b"\f",
+            b"\r\n": b"", b"\r": b"", b"\n": b""}
 
 
-_PLAIN_STR_RE = re.compile(rb"[^()\\]*")
+def _hex_string(s: bytes) -> bytes:
+    """A hex string's bytes, as Lexer reads them: every non-hex character
+    dropped, an odd last digit padded with 0."""
+    try:
+        return bytes.fromhex(s.decode("latin-1"))
+    except ValueError:
+        s = _NON_HEX_RE.sub(b"", s)
+        return bytes.fromhex((s + b"0" if len(s) % 2 else s).decode())
+
+
+def _escape(m) -> bytes:
+    e = m[1]
+    v = _ESCAPES.get(e)
+    if v is not None:
+        return v
+    if 0x30 <= e[0] <= 0x37:
+        return bytes((int(e, 8) & 0xFF,))
+    return e  # \( \) \\ and any other escaped character stand for themselves
+
+
+def _unescape(s: bytes) -> bytes:
+    """A literal string's bytes, as Lexer reads them: \\n \\r \\t \\b \\f,
+    up to three octal digits, a backslash before a line end dropped with
+    it, and before any other character dropped."""
+    return _ESCAPE_RE.sub(_escape, s)
 
 
 _INLINE_KEY_ABBREV = {
@@ -1637,70 +1825,122 @@ def _read_inline_image(data: bytes, pos: int, n: int):
     return attrs, img, pos2
 
 
-def tokenize_content(data: bytes):
-    """Yield the same token values Lexer.next_token produces, much faster
-    for typical content streams: regex scan for numbers/names/operators,
-    inline parse of flat arrays (TJ), plain-string fast path (no escapes /
-    nesting); everything else delegates to the full Lexer."""
-    pos = 0
+def content_ops(data: bytes, stack: list):
+    """Scan a content stream once: push each operand onto ``stack`` and
+    yield each operator (bytes) when it is reached, its operands on top of
+    the stack. Operand values are the Lexer's: a number with a '.' is a
+    float, any other an int; names decode ``#xx``; a top-level array (TJ,
+    d) collects its items, an operator inside it as a ``("kw", op)`` token;
+    a stray ``]``, ``>``, ``}``, ``{`` or ``)`` is skipped. ``BI … EI`` is
+    read whole: its StreamObj is pushed and ``b"BI"`` yielded (a malformed
+    one is skipped to its ``EI``)."""
     n = len(data)
     lex = Lexer(data, 0)
-    match = _CONTENT_TOKEN_RE.match
-    str_match = _PLAIN_STR_RE.match
+    scan = _CONTENT_TOKEN_RE.finditer
+    num = _NUMS.__getitem__
     arr = None  # the open top-level array (TJ operands), if any
-
+    push, push_all = stack.append, stack.extend
+    pos = 0
     while True:
-        m = match(data, pos)
-        if m is None:
-            if arr is not None:
-                yield arr
-            return
-        pos = m.end()
-        g = m.lastgroup
-        if g == "num":
-            t = m.group("num")
-            tok = float(t) if b"." in t else int(t)
-        elif g == "name":
-            tok = _intern_name(m.group("name"))
-        elif g == "op":
-            op = m.group("op").decode("latin-1")
-            if op == "BI" and arr is None:
-                # inline image (ISO 32000 §8.9.7): parse the abbreviated
-                # dict up to ID, slice the sample data, yield one token
-                try:
-                    attrs, img, pos = _read_inline_image(data, pos, n)
-                    yield ("iiop", "INLINE_IMAGE", attrs, img)
-                except Exception:  # noqa: BLE001 — malformed: skip to EI
-                    end = data.find(b"EI", pos)
-                    pos = n if end == -1 else end + 2
-                continue
-            tok = _intern_kw(op)
-        elif g == "skip":
-            if arr is None or m.group("skip") != b"]":
-                continue
-            tok, arr = arr, None
-        else:  # delim: ( < << [
-            d = m.group("delim")
-            if d == b"(":
-                e = str_match(data, pos).end()
-                if e < n and data[e] == 0x29:  # ')': no escapes or nesting
-                    tok, pos = data[pos:e], e + 1
+        for m in scan(data, pos):
+            k = m.lastindex
+            if k == 1:  # numbers
+                push_all(_number_run(m[1]))
+            elif k == 3:  # operator
+                op = m[3]
+                if arr is not None:
+                    push(_intern_kw(op.decode("latin-1")))
+                elif op == b"BI":
+                    break
                 else:
-                    lex.pos = pos - 1
-                    tok, pos = lex.next_token(), lex.pos
-            elif d == b"[" and arr is None:
+                    yield op
+            elif k == 2:  # a number
+                push(num(m[2]))
+            elif k == 4:  # name
+                push(_NAMES[m[4]])
+            elif k == 5:  # plain string
+                push(m[5])
+            elif k == 6:  # [
+                if arr is not None:
+                    break
                 arr = []
+                push, push_all = arr.append, arr.extend
+            elif k == 7:  # ] > } { )
+                if arr is not None and m[7] == b"]":
+                    stack.append(arr)
+                    arr = None
+                    push, push_all = stack.append, stack.extend
+            elif k == 8:  # hex string
+                push(_hex_string(m[8]))
+            elif k == 9:  # string with escapes
+                push(_unescape(m[9]))
+            else:
+                break
+        k = m.lastindex
+        if k == 3:  # BI
+            # inline image (ISO 32000 §8.9.7): the abbreviated dict up to
+            # ID, then the sample data
+            try:
+                attrs, img, pos = _read_inline_image(data, m.end(), n)
+            except Exception:  # noqa: BLE001 — malformed: skip to EI
+                end = data.find(b"EI", m.end())
+                pos = n if end == -1 else end + 2
                 continue
-            elif d == b"<":  # hex string
-                lex.pos = m.start("delim")
-                tok, pos = lex.next_token(), lex.pos
-            else:  # << or a nested [: the object parser
-                lex.pos = pos
-                tok, pos = _parse_from(lex, "<<" if d == b"<<" else "["), lex.pos
-        if arr is None:
-            yield tok
-        else:
-            arr.append(tok)
+            push(StreamObj(attrs, img))
+            yield b"BI"
+            continue
+        d = m[k]
+        if not d:  # the end of the data
+            if arr is not None:
+                stack.append(arr)
+            return
+        if d == b"(" or d == b"<":  # escaped/nested string, hex string
+            lex.pos = m.start(k)
+            push(lex.next_token())
+        else:  # << or a nested [
+            lex.pos = m.end()
+            push(_parse_from(lex, "<<" if d == b"<<" else "["))
+        pos = lex.pos
+
+
+def _number(v):
+    """A numeric operand with its ORIGINAL int/float type preserved
+    (pdfminer parity: '1 0 0 1 45.83 660.69 Tm' serializes as
+    (1, 0, 0, 1, 45.83, 660.69) — ints stay ints). An int no float holds
+    raises OverflowError here, inside its operator, not later in float
+    arithmetic on the state it would reach; an operand float() rejects
+    reads as 0."""
+    if isinstance(v, float):
+        return v
+    if isinstance(v, int):
+        float(v)
+        return v
+    try:
+        return float(v)
+    except (TypeError, ValueError):
+        return 0
+
+
+def _pop_numbers(stack: list, n: int) -> list:
+    """The top ``n`` operands, popped, in stack order, each as
+    :func:`_number` reads it; IndexError if the stack holds fewer."""
+    vals = stack[-n:]
+    del stack[-n:]
+    if len(vals) < n:
+        raise IndexError("operand stack underflow")
+    if _NUM_TYPES.issuperset(map(type, vals)):
+        float(max(map(abs, vals)))  # the OverflowError of an int too large
+        return vals
+    return [_number(v) for v in vals]
+
+
+def _pop_floats(stack: list, n: int) -> list:
+    """The top ``n`` operands, popped, in stack order, as floats."""
+    vals = stack[-n:]
+    del stack[-n:]
+    if len(vals) < n:
+        raise IndexError("operand stack underflow")
+    return list(map(float, vals))
 
 
 CHAR_COLUMNS = [
@@ -1968,29 +2208,20 @@ class PageInterpreter:
         return self
 
     def _exec(self, content: bytes, base_ctm, fonts=None, res=None, depth=0):
+        """Run one content stream: :func:`content_ops` scans it once, and
+        each operator runs its handler from ``ops``, a table keyed on the
+        operator's bytes. A handler pops its own operands and leaves the
+        rest on the stack; an unknown operator drops them all, and so does
+        a malformed one (an IndexError, ValueError, TypeError or
+        OverflowError: an integer operand too large for a float), not the
+        page."""
         doc = self.doc
         fonts = self.fonts if fonts is None else fonts
         res = self.resources if res is None else res
         stack: List[object] = []
+        pop = stack.pop
         gs_stack: List[tuple] = []
         ctm = base_ctm
-
-        def npop():
-            """Numeric operand with its ORIGINAL int/float type preserved
-            (pdfminer parity: '1 0 0 1 45.83 660.69 Tm' serializes as
-            (1, 0, 0, 1, 45.83, 660.69) — ints stay ints). An int no float
-            holds raises OverflowError here, inside its operator, not
-            later in float arithmetic on the state it would reach."""
-            v = stack.pop()
-            if isinstance(v, float):
-                return v
-            if isinstance(v, int):
-                float(v)
-                return v
-            try:
-                return float(v)
-            except (TypeError, ValueError):
-                return 0
 
         # graphics state
         linewidth = 1
@@ -2043,280 +2274,337 @@ class PageInterpreter:
                                 stroke_pattern, fill_pattern)
             path = []
 
-        for tok in tokenize_content(content):
-            if type(tok) is not tuple:
-                stack.append(tok)
-                continue
-            op = tok[1]
-            try:
-                if op == "q":
-                    # text state (Tc/Tw/Tz/TL/Tf/Ts) is PART of the
-                    # graphics state (ISO 32000 §9.3.1) — a -0.02 Tc set
-                    # inside a q..Q block must not leak into later text
-                    # (round-5 reference-port finding, issue-987)
-                    gs_stack.append((ctm, linewidth, stroke_color,
-                                     fill_color, charspace, wordspace,
-                                     scaling, leading, rise, font,
-                                     fontsize, dash, scs_name, ncs_name,
-                                     stroke_pattern, fill_pattern))
-                elif op == "Q":
-                    if gs_stack:
-                        (ctm, linewidth, stroke_color, fill_color,
-                         charspace, wordspace, scaling, leading, rise,
-                         font, fontsize, dash, scs_name, ncs_name,
-                         stroke_pattern, fill_pattern) = gs_stack.pop()
-                elif op == "cm":
-                    f_, e_, d_, c_, b_, a_ = (npop() for _ in range(6))
-                    ctm = mat_mult((a_, b_, c_, d_, e_, f_), ctm)
-                elif op == "w":
-                    linewidth = npop()
-                elif op == "d":
-                    ph = npop()
-                    arr = stack.pop() if stack else []
-                    dash = (list(arr) if isinstance(arr, (list, tuple))
-                            else [], ph)
-                elif op == "BT":
-                    tm = MATRIX_ID
-                    chain = None
-                elif op == "ET":
-                    pass
-                elif op == "Tf":
-                    fontsize = float(stack.pop())
-                    fname = stack.pop()
-                    font = fonts.get(str(fname))
-                elif op == "Td":
-                    ty = npop(); tx = npop()
-                    tm = mat_translate(tm, tx, ty)
-                    chain = None
-                elif op == "TD":
-                    ty = npop(); tx = npop()
-                    leading = -ty
-                    tm = mat_translate(tm, tx, ty)
-                    chain = None
-                elif op == "Tm":
-                    f_, e_, d_, c_, b_, a_ = (npop() for _ in range(6))
-                    tm = (a_, b_, c_, d_, e_, f_)
-                    chain = None
-                elif op == "T*":
-                    tm = mat_translate(tm, 0, -leading)
-                    chain = None
-                elif op == "TL":
-                    leading = npop()
-                elif op == "Tc":
-                    charspace = float(stack.pop())
-                elif op == "Tw":
-                    wordspace = float(stack.pop())
-                elif op == "Tz":
-                    scaling = float(stack.pop())
-                elif op == "Ts":
-                    rise = float(stack.pop())
-                elif op == "Tj":
-                    show_string(stack.pop())
-                elif op == "'":
-                    tm = mat_translate(tm, 0, -leading)
-                    chain = None
-                    show_string(stack.pop())
-                elif op == '"':
-                    s = stack.pop()
-                    charspace = float(stack.pop())
-                    wordspace = float(stack.pop())
-                    tm = mat_translate(tm, 0, -leading)
-                    chain = None
-                    show_string(s)
-                elif op == "TJ":
-                    show(stack.pop())
-                elif op == "m":
-                    y = float(stack.pop()); x = float(stack.pop())
-                    if cur:
-                        path.append(cur)
-                    cur = [("m", x, y)]
-                elif op == "l":
-                    y = float(stack.pop()); x = float(stack.pop())
-                    cur.append(("l", x, y))
-                elif op == "c":
-                    y3 = float(stack.pop()); x3 = float(stack.pop())
-                    y2 = float(stack.pop()); x2 = float(stack.pop())
-                    y1_ = float(stack.pop()); x1_ = float(stack.pop())
-                    cur.extend([("c1", x1_, y1_), ("c2", x2, y2), ("c", x3, y3)])
-                elif op == "v":
-                    y3 = float(stack.pop()); x3 = float(stack.pop())
-                    y2 = float(stack.pop()); x2 = float(stack.pop())
-                    cur.extend([("c2", x2, y2), ("c", x3, y3)])
-                elif op == "y":
-                    y3 = float(stack.pop()); x3 = float(stack.pop())
-                    y1_ = float(stack.pop()); x1_ = float(stack.pop())
-                    cur.extend([("c1", x1_, y1_), ("c", x3, y3)])
-                elif op == "h":
-                    if cur:
-                        cur.append(("h", cur[0][1], cur[0][2]))
-                elif op == "re":
-                    hh = float(stack.pop()); ww = float(stack.pop())
-                    y = float(stack.pop()); x = float(stack.pop())
-                    if cur:
-                        path.append(cur)
-                    cur = [
-                        ("m", x, y), ("l", x + ww, y), ("l", x + ww, y + hh),
-                        ("l", x, y + hh), ("h", x, y),
-                    ]
-                    path.append(cur)
-                    cur = []
-                elif op in ("S",):
-                    paint(True, False)
-                elif op == "s":
-                    if cur:
-                        cur.append(("h", cur[0][1], cur[0][2]))
-                    paint(True, False)
-                elif op in ("f", "F"):
-                    paint(False, True)
-                elif op == "f*":
-                    paint(False, True, True)
-                elif op == "B":
-                    paint(True, True)
-                elif op == "B*":
-                    paint(True, True, True)
-                elif op in ("b", "b*"):
-                    if cur:
-                        cur.append(("h", cur[0][1], cur[0][2]))
-                    paint(True, True, op == "b*")
-                elif op == "n":
-                    if cur:
-                        path.append(cur)
-                        cur = []
-                    path = []
-                elif op in ("g", "G"):
-                    v = npop()
-                    if op == "g":
-                        fill_color = (v,)
-                        ncs_name = "DeviceGray"
-                    else:
-                        stroke_color = (v,)
-                        scs_name = "DeviceGray"
-                elif op in ("rg", "RG"):
-                    b_ = npop(); g_ = npop(); r_ = npop()
-                    if op == "rg":
-                        fill_color = (r_, g_, b_)
-                        ncs_name = "DeviceRGB"
-                    else:
-                        stroke_color = (r_, g_, b_)
-                        scs_name = "DeviceRGB"
-                elif op in ("k", "K"):
-                    kk = npop(); yy = npop()
-                    mm = npop(); cc = npop()
-                    if op == "k":
-                        fill_color = (cc, mm, yy, kk)
-                        ncs_name = "DeviceCMYK"
-                    else:
-                        stroke_color = (cc, mm, yy, kk)
-                        scs_name = "DeviceCMYK"
-                elif op in ("cs", "CS"):
-                    csname = self._colorspace_name(str(stack.pop()) if stack
-                                                   else "", res)
-                    if op == "cs":
-                        ncs_name = csname
-                    else:
-                        scs_name = csname
-                elif op in ("sc", "scn", "SC", "SCN"):
-                    # scn/SCN with a Pattern colorspace: trailing /Name
-                    pat = None
-                    if (op in ("scn", "SCN") and stack
-                            and not isinstance(stack[-1], (int, float))):
-                        pat = str(stack.pop())
-                    vals = []
-                    while stack and isinstance(stack[-1], (int, float)):
-                        vals.append(stack.pop())
-                    vals.reverse()
-                    if vals or pat is not None:
-                        if op in ("sc", "scn"):
-                            fill_color = tuple(vals) if vals else None
-                            fill_pattern = pat
-                        else:
-                            stroke_color = tuple(vals) if vals else None
-                            stroke_pattern = pat
-                elif op == "Do":
-                    xname = str(stack.pop()) if stack else None
-                    xdict = doc.resolve((res or {}).get("XObject")) or {}
-                    xo = doc.resolve(xdict.get(xname))
-                    if isinstance(xo, StreamObj):
-                        subtype = str(doc.resolve(xo.attrs.get("Subtype", "")))
-                        if subtype == "Image":
-                            self._emit_image(xname, xo, ctm)
-                        elif subtype == "Form" and depth < 8:
-                            xres = doc.resolve(xo.attrs.get("Resources"))
-                            xres = xres if isinstance(xres, dict) else res
-                            mtx = doc.resolve(xo.attrs.get("Matrix"))
-                            if mtx:
-                                fm = tuple(
-                                    float(doc.resolve(v)) for v in mtx
-                                )
-                                form_ctm = mat_mult(fm, ctm)
-                            else:
-                                form_ctm = ctm
-                            xfonts = (
-                                self._load_fonts(xres) if xres is not res else fonts
-                            )
-                            try:
-                                self._exec(
-                                    xo.get_data(doc), form_ctm, xfonts, xres,
-                                    depth + 1,
-                                )
-                            except Exception:  # noqa: BLE001
-                                pass
-                elif op == "BDC":
-                    props = stack.pop() if stack else None
-                    tag = stack.pop() if stack else None
-                    if isinstance(props, Name):
-                        plist = doc.resolve((res or {}).get("Properties")) or {}
-                        props = doc.resolve(plist.get(str(props)))
-                    mcid = None
-                    if isinstance(props, dict) and "MCID" in props:
-                        try:
-                            mcid = int(doc.resolve(props["MCID"]))
-                        except (TypeError, ValueError):
-                            mcid = None
-                    self.mc_spans.append(
-                        (len(self.ch_text), mcid, str(tag) if tag is not None else None)
-                    )
-                    self._cur_mc = (
-                        mcid, str(tag) if tag is not None else None
-                    )
-                elif op == "BMC":
-                    tag = stack.pop() if stack else None
-                    self.mc_spans.append(
-                        (len(self.ch_text), None, str(tag) if tag is not None else None)
-                    )
-                    self._cur_mc = (
-                        None, str(tag) if tag is not None else None
-                    )
-                elif op == "EMC":
-                    self.mc_spans.append((len(self.ch_text), None, None))
-                    self._cur_mc = (None, None)
-                elif op == "INLINE_IMAGE":
-                    # tokenizer-parsed BI..ID..EI (reference: pdfminer
-                    # emits inline images as LTImage too)
-                    self._emit_image(
-                        "Inline", StreamObj(tok[2], tok[3]), ctm
-                    )
-                elif op in ("BI", "ID", "EI"):
-                    # malformed inline image skipped inside
-                    # tokenize_content; stray ID/EI just clear operands
-                    stack.clear()
+        def close_path():
+            if cur:
+                cur.append(("h", cur[0][1], cur[0][2]))
+
+        # -- graphics state
+        def op_q():
+            # text state (Tc/Tw/Tz/TL/Tf/Ts) is PART of the graphics state
+            # (ISO 32000 §9.3.1) — a -0.02 Tc set inside a q..Q block must
+            # not leak into later text (round-5 reference-port finding,
+            # issue-987)
+            gs_stack.append((ctm, linewidth, stroke_color, fill_color,
+                             charspace, wordspace, scaling, leading, rise,
+                             font, fontsize, dash, scs_name, ncs_name,
+                             stroke_pattern, fill_pattern))
+
+        def op_Q():
+            nonlocal ctm, linewidth, stroke_color, fill_color, charspace, \
+                wordspace, scaling, leading, rise, font, fontsize, dash, \
+                scs_name, ncs_name, stroke_pattern, fill_pattern
+            if gs_stack:
+                (ctm, linewidth, stroke_color, fill_color, charspace,
+                 wordspace, scaling, leading, rise, font, fontsize, dash,
+                 scs_name, ncs_name, stroke_pattern, fill_pattern) = gs_stack.pop()
+
+        def op_cm():
+            nonlocal ctm
+            ctm = mat_mult(_pop_numbers(stack, 6), ctm)
+
+        def op_w():
+            nonlocal linewidth
+            linewidth = _number(pop())
+
+        def op_d():
+            nonlocal dash
+            ph = _number(pop())
+            arr = pop() if stack else []
+            dash = (list(arr) if isinstance(arr, (list, tuple)) else [], ph)
+
+        # -- text objects, state and positioning
+        def op_BT():
+            nonlocal tm, chain
+            tm = MATRIX_ID
+            chain = None
+
+        def op_ET():
+            pass
+
+        def op_Tf():
+            nonlocal fontsize, font
+            fontsize = float(pop())
+            font = fonts.get(str(pop()))
+
+        def op_Td():
+            nonlocal tm, chain
+            tm = mat_translate(tm, *_pop_numbers(stack, 2))
+            chain = None
+
+        def op_TD():
+            nonlocal tm, chain, leading
+            tx, ty = _pop_numbers(stack, 2)
+            leading = -ty
+            tm = mat_translate(tm, tx, ty)
+            chain = None
+
+        def op_Tm():
+            nonlocal tm, chain
+            tm = tuple(_pop_numbers(stack, 6))
+            chain = None
+
+        def op_Tstar():
+            nonlocal tm, chain
+            tm = mat_translate(tm, 0, -leading)
+            chain = None
+
+        def op_TL():
+            nonlocal leading
+            leading = _number(pop())
+
+        def op_Tc():
+            nonlocal charspace
+            charspace = float(pop())
+
+        def op_Tw():
+            nonlocal wordspace
+            wordspace = float(pop())
+
+        def op_Tz():
+            nonlocal scaling
+            scaling = float(pop())
+
+        def op_Ts():
+            nonlocal rise
+            rise = float(pop())
+
+        # -- text showing
+        def op_Tj():
+            show_string(pop())
+
+        def op_quote():
+            op_Tstar()
+            show_string(pop())
+
+        def op_dquote():
+            nonlocal charspace, wordspace
+            s = pop()
+            charspace = float(pop())
+            wordspace = float(pop())
+            op_Tstar()
+            show_string(s)
+
+        def op_TJ():
+            show(pop())
+
+        # -- path construction and painting
+        def op_m():
+            nonlocal cur
+            x, y = _pop_floats(stack, 2)
+            if cur:
+                path.append(cur)
+            cur = [("m", x, y)]
+
+        def op_l():
+            x, y = _pop_floats(stack, 2)
+            cur.append(("l", x, y))
+
+        def op_c():
+            x1, y1, x2, y2, x3, y3 = _pop_floats(stack, 6)
+            cur.extend([("c1", x1, y1), ("c2", x2, y2), ("c", x3, y3)])
+
+        def op_v():
+            x2, y2, x3, y3 = _pop_floats(stack, 4)
+            cur.extend([("c2", x2, y2), ("c", x3, y3)])
+
+        def op_y():
+            x1, y1, x3, y3 = _pop_floats(stack, 4)
+            cur.extend([("c1", x1, y1), ("c", x3, y3)])
+
+        def op_re():
+            nonlocal cur
+            x, y, ww, hh = _pop_floats(stack, 4)
+            if cur:
+                path.append(cur)
+            path.append([("m", x, y), ("l", x + ww, y), ("l", x + ww, y + hh),
+                         ("l", x, y + hh), ("h", x, y)])
+            cur = []
+
+        def op_s():
+            close_path()
+            paint(True, False)
+
+        def op_b():
+            close_path()
+            paint(True, True)
+
+        def op_bstar():
+            close_path()
+            paint(True, True, True)
+
+        def op_n():
+            nonlocal path, cur
+            if cur:
+                path.append(cur)
+                cur = []
+            path = []
+
+        # -- colour
+        def op_g():
+            nonlocal fill_color, ncs_name
+            fill_color = (_number(pop()),)
+            ncs_name = "DeviceGray"
+
+        def op_G():
+            nonlocal stroke_color, scs_name
+            stroke_color = (_number(pop()),)
+            scs_name = "DeviceGray"
+
+        def op_rg():
+            nonlocal fill_color, ncs_name
+            fill_color = tuple(_pop_numbers(stack, 3))
+            ncs_name = "DeviceRGB"
+
+        def op_RG():
+            nonlocal stroke_color, scs_name
+            stroke_color = tuple(_pop_numbers(stack, 3))
+            scs_name = "DeviceRGB"
+
+        def op_k():
+            nonlocal fill_color, ncs_name
+            fill_color = tuple(_pop_numbers(stack, 4))
+            ncs_name = "DeviceCMYK"
+
+        def op_K():
+            nonlocal stroke_color, scs_name
+            stroke_color = tuple(_pop_numbers(stack, 4))
+            scs_name = "DeviceCMYK"
+
+        def op_cs():
+            nonlocal ncs_name
+            ncs_name = self._colorspace_name(str(pop()) if stack else "", res)
+
+        def op_CS():
+            nonlocal scs_name
+            scs_name = self._colorspace_name(str(pop()) if stack else "", res)
+
+        def set_color(pattern_ok: bool):
+            """The operands of sc/scn (``pattern_ok``: scn/SCN, whose
+            Pattern colour space takes a trailing /Name): the colour and
+            pattern, or None if there are neither."""
+            pat = None
+            if pattern_ok and stack and not isinstance(stack[-1], (int, float)):
+                pat = str(pop())
+            vals = []
+            while stack and isinstance(stack[-1], (int, float)):
+                vals.append(pop())
+            vals.reverse()
+            if vals or pat is not None:
+                return tuple(vals) if vals else None, pat
+            return None
+
+        def op_sc(pattern_ok=False):
+            nonlocal fill_color, fill_pattern
+            got = set_color(pattern_ok)
+            if got is not None:
+                fill_color, fill_pattern = got
+
+        def op_SC(pattern_ok=False):
+            nonlocal stroke_color, stroke_pattern
+            got = set_color(pattern_ok)
+            if got is not None:
+                stroke_color, stroke_pattern = got
+
+        # -- XObjects, inline images and marked content
+        def op_Do():
+            xname = str(pop()) if stack else None
+            xdict = doc.resolve((res or {}).get("XObject")) or {}
+            xo = doc.resolve(xdict.get(xname))
+            if not isinstance(xo, StreamObj):
+                return
+            subtype = str(doc.resolve(xo.attrs.get("Subtype", "")))
+            if subtype == "Image":
+                self._emit_image(xname, xo, ctm)
+            elif subtype == "Form" and depth < 8:
+                xres = doc.resolve(xo.attrs.get("Resources"))
+                xres = xres if isinstance(xres, dict) else res
+                mtx = doc.resolve(xo.attrs.get("Matrix"))
+                if mtx:
+                    fm = tuple(float(doc.resolve(v)) for v in mtx)
+                    form_ctm = mat_mult(fm, ctm)
                 else:
-                    # unknown operator: drop its operands
-                    stack.clear()
+                    form_ctm = ctm
+                xfonts = self._load_fonts(xres) if xres is not res else fonts
+                try:
+                    self._exec(xo.get_data(doc), form_ctm, xfonts, xres,
+                               depth + 1)
+                except Exception:  # noqa: BLE001
+                    pass
+
+        def op_BI():
+            # content_ops parsed BI..ID..EI (reference: pdfminer emits
+            # inline images as LTImage too)
+            self._emit_image("Inline", pop(), ctm)
+
+        def marked(mcid, tag):
+            tag = str(tag) if tag is not None else None
+            self.mc_spans.append((len(self.ch_text), mcid, tag))
+            self._cur_mc = (mcid, tag)
+
+        def op_BDC():
+            props = pop() if stack else None
+            tag = pop() if stack else None
+            if isinstance(props, Name):
+                plist = doc.resolve((res or {}).get("Properties")) or {}
+                props = doc.resolve(plist.get(str(props)))
+            mcid = None
+            if isinstance(props, dict) and "MCID" in props:
+                try:
+                    mcid = int(doc.resolve(props["MCID"]))
+                except (TypeError, ValueError):
+                    mcid = None
+            marked(mcid, tag)
+
+        def op_BMC():
+            marked(None, pop() if stack else None)
+
+        def op_EMC():
+            self.mc_spans.append((len(self.ch_text), None, None))
+            self._cur_mc = (None, None)
+
+        ops = {
+            b"q": op_q, b"Q": op_Q, b"cm": op_cm, b"w": op_w, b"d": op_d,
+            b"BT": op_BT, b"ET": op_ET, b"Tf": op_Tf, b"Td": op_Td,
+            b"TD": op_TD, b"Tm": op_Tm, b"T*": op_Tstar, b"TL": op_TL,
+            b"Tc": op_Tc, b"Tw": op_Tw, b"Tz": op_Tz, b"Ts": op_Ts,
+            b"Tj": op_Tj, b"'": op_quote, b'"': op_dquote, b"TJ": op_TJ,
+            b"m": op_m, b"l": op_l, b"c": op_c, b"v": op_v, b"y": op_y,
+            b"h": close_path, b"re": op_re,
+            b"S": lambda: paint(True, False), b"s": op_s,
+            b"f": lambda: paint(False, True), b"F": lambda: paint(False, True),
+            b"f*": lambda: paint(False, True, True),
+            b"B": lambda: paint(True, True),
+            b"B*": lambda: paint(True, True, True),
+            b"b": op_b, b"b*": op_bstar, b"n": op_n,
+            b"g": op_g, b"G": op_G, b"rg": op_rg, b"RG": op_RG, b"k": op_k,
+            b"K": op_K, b"cs": op_cs, b"CS": op_CS,
+            b"sc": op_sc, b"scn": lambda: op_sc(True),
+            b"SC": op_SC, b"SCN": lambda: op_SC(True),
+            b"Do": op_Do, b"BI": op_BI,
+            b"BDC": op_BDC, b"BMC": op_BMC, b"EMC": op_EMC,
+        }
+        get, clear = ops.get, stack.clear
+        for op in content_ops(content, stack):
+            # an unknown operator (a stray ID or EI too) drops its operands
+            try:
+                get(op, clear)()
             except (IndexError, ValueError, TypeError, OverflowError):
-                # a malformed operator (OverflowError: an integer operand
-                # too large for a float) drops its operands, not the page
-                stack.clear()
+                clear()
 
     def _render_string(self, seq, tm, ctm, chain, font, fontsize,
                        scaling_pct, charspace_raw, wordspace_raw, rise, style):
         """Record one text-showing operator (pdfminer's render_string) for
         the page's emission pass, :meth:`_emit_chars`: text, font and cid
-        append now (``mc_spans`` count chars), and each string run records
-        its state, its place in its text ``chain`` and the TJ kerning before
-        it. Returns the chain, which later runs continue until the next
-        line-matrix reset. ``style``: (stroke, fill, ncs, stroke pattern,
-        fill pattern)."""
+        append now (``mc_spans`` count chars), and the operator's strings
+        record one run: its state, its place in its text ``chain`` and the
+        TJ kerning before each glyph. Returns the chain, which later runs
+        continue until the next line-matrix reset. ``style``: (stroke,
+        fill, ncs, stroke pattern, fill pattern).
+
+        One run per operator is the per-string runs of render_string
+        merged: they share the operator's state, and a string after the
+        first always takes the charspace before its first glyph, as any
+        glyph but a run's first does."""
         scaling = scaling_pct * 0.01
         charspace = charspace_raw * scaling
         wordspace = 0.0 if font.multibyte else wordspace_raw * scaling
@@ -2325,46 +2613,55 @@ class PageInterpreter:
             chain = len(self._chains)
             self._chains.append([])
         pending = self._chains[chain]  # TJ kern terms before its next glyph
-        num = None
+        n0 = len(self.ch_text)
+        cids: List[int] = []
+        run = run_style = None
         needcharspace = False
-        for item in seq:
-            if isinstance(item, (int, float)):
-                pending.append(-(item * dxscale))
+        try:
+            for item in seq:
+                if isinstance(item, (int, float)):
+                    pending.append(-(item * dxscale))
+                    needcharspace = True
+                    continue
+                if not isinstance(item, (bytes, bytearray)) or not item:
+                    continue
+                if run is None:
+                    a, b, c, d, e, f = mat_mult(tm, ctm)
+                    descent = font.get_descent() * fontsize
+                    y = 0.0  # render_string moves a chain along x only
+                    run = (
+                        chain, needcharspace, fontsize, scaling, charspace,
+                        wordspace, a, b, e, f, y * c, y * d,
+                        a * 0 + c * (descent + rise),
+                        b * 0 + d * (descent + rise),
+                        c * (descent + rise + fontsize),
+                        d * (descent + rise + fontsize),
+                        1.0 if (0 < a * d * scaling and b * c <= 0) else 0.0,
+                    )
+                    if self.style:
+                        stroke, fill, *names = style
+                        run_style = (
+                            a, b, c, d,
+                            None if stroke is None else list(stroke),
+                            None if fill is None else list(fill), *names)
+                if pending:
+                    at = n0 + len(cids)
+                    self._kerns.extend([(at, t) for t in pending])
+                    pending.clear()
+                cids += font.decode(item) if font.multibyte else item
                 needcharspace = True
-                continue
-            if not isinstance(item, (bytes, bytearray)) or not item:
-                continue
-            if num is None:
-                a, b, c, d, e, f = mat_mult(tm, ctm)
-                descent = font.get_descent() * fontsize
-                y = 0.0  # render_string moves a chain along x only
-                num = (
-                    fontsize, scaling, charspace, wordspace, a, b, e, f,
-                    y * c, y * d,
-                    a * 0 + c * (descent + rise), b * 0 + d * (descent + rise),
-                    c * (descent + rise + fontsize),
-                    d * (descent + rise + fontsize),
-                    1.0 if (0 < a * d * scaling and b * c <= 0) else 0.0,
-                )
-                stroke, fill, *names = style
-                run_style = (
-                    a, b, c, d, None if stroke is None else list(stroke),
-                    None if fill is None else list(fill), *names)
-            n0 = len(self.ch_text)
-            cids = font.decode(item)
-            self.ch_text.extend(map(font.glyph_text.__getitem__, cids))
-            self._ch_width.extend(map(font.glyph_width.__getitem__, cids))
-            n = len(self.ch_text) - n0
-            self.ch_cid.extend(cids)
-            self.ch_font.extend([font.basefont] * n)
-            self._kerns.extend((n0, t) for t in pending)
-            pending.clear()
-            self._runs.append((n, chain, needcharspace, *num))
-            if self.style:
-                self._run_style.append(run_style)
-            needcharspace = True
-        if num is not None:
-            self._note_kind("char")
+        finally:
+            # the strings before an operand that raised stay recorded
+            if cids:
+                self.ch_text.extend(map(font.glyph_text.__getitem__, cids))
+                self._ch_width.extend(map(font.glyph_width.__getitem__, cids))
+                self.ch_cid.extend(cids)
+                self.ch_font.extend([font.basefont] * len(cids))
+                self._runs.append((len(cids), *run))
+                if self.style:
+                    self._run_style.append(run_style)
+                if "char" not in self.kind_order:
+                    self.kind_order.append("char")
         return chain
 
     def _emit_chars(self):
@@ -2403,26 +2700,38 @@ class PageInterpreter:
             cols.insert(0, pre)
         if wordspace.any():
             cols.append(np.where(np.array(self.ch_cid) == 32, wordspace, 0.0))
-        kerns = np.array(self._kerns, dtype=np.float64).reshape(-1, 2)
-        k_at = kerns[:, 0].astype(np.int64)
-        nkern = np.bincount(k_at, minlength=n)
-        slots = nkern + len(cols)
-        # each glyph's first slot in its chain (a chain's glyphs, in
-        # emission order, are its order)
+        ncols = len(cols)
         g_chain = np.repeat(chain, lens)
-        order = np.argsort(g_chain, kind="stable")
-        chain_len = np.bincount(g_chain, weights=slots,
-                                minlength=len(self._chains)).astype(np.int64)
-        off = np.empty(n, dtype=np.int64)
-        off[order] = np.cumsum(slots[order]) - slots[order]
-        off -= (np.cumsum(chain_len) - chain_len)[g_chain]
-        k_rank = np.arange(len(k_at)) - (np.cumsum(nkern) - nkern)[k_at]
-        x = _chain_sums(
-            np.concatenate((g_chain[k_at], np.repeat(g_chain, len(cols)))),
-            np.concatenate((off[k_at] + k_rank, (
-                (off + nkern)[:, None] + np.arange(len(cols))).ravel())),
-            np.concatenate((kerns[:, 1], np.column_stack(cols).ravel())),
-            chain_len, g_chain, off + nkern + has_pre)
+        if not self._kerns and (chain[1:] >= chain[:-1]).all():
+            # no kern terms, and each chain's runs in a row: a glyph's first
+            # slot is its place in its chain times the columns
+            off = (np.arange(n) - np.searchsorted(g_chain, g_chain)) * ncols
+            chain_len = np.bincount(g_chain, minlength=len(self._chains)) * ncols
+            x = _chain_sums(
+                np.repeat(g_chain, ncols),
+                (off[:, None] + np.arange(ncols)).ravel(),
+                np.column_stack(cols).ravel(), chain_len, g_chain,
+                off + has_pre)
+        else:
+            kerns = np.array(self._kerns, dtype=np.float64).reshape(-1, 2)
+            k_at = kerns[:, 0].astype(np.int64)
+            nkern = np.bincount(k_at, minlength=n)
+            slots = nkern + ncols
+            # each glyph's first slot in its chain (a chain's glyphs, in
+            # emission order, are its order)
+            order = np.argsort(g_chain, kind="stable")
+            chain_len = np.bincount(g_chain, weights=slots,
+                                    minlength=len(self._chains)).astype(np.int64)
+            off = np.empty(n, dtype=np.int64)
+            off[order] = np.cumsum(slots[order]) - slots[order]
+            off -= (np.cumsum(chain_len) - chain_len)[g_chain]
+            k_rank = np.arange(len(k_at)) - (np.cumsum(nkern) - nkern)[k_at]
+            x = _chain_sums(
+                np.concatenate((g_chain[k_at], np.repeat(g_chain, ncols))),
+                np.concatenate((off[k_at] + k_rank, (
+                    (off + nkern)[:, None] + np.arange(ncols)).ravel())),
+                np.concatenate((kerns[:, 1], np.column_stack(cols).ravel())),
+                chain_len, g_chain, off + nkern + has_pre)
         # mat_translate(matrix, x, y), then mat_apply at the box corners
         ex = x * a + yc + e
         fy = x * b + yd + f
@@ -2514,16 +2823,19 @@ class PageInterpreter:
     def _emit_path(self, sub, ctm, linewidth, stroke, fill, evenodd,
                    stroke_color, fill_color, dash=None,
                    stroke_pattern=None, fill_pattern=None):
-        pts_dev = [mat_apply(ctm, px, py) for (_, px, py) in sub]
+        # mat_apply(ctm, x, y) at each point, then the y flip
+        a, b, c, d, e, f = ctm
+        pts_dev = [(a * px + c * py + e, b * px + d * py + f)
+                   for (_, px, py) in sub]
         kinds = "".join(k[0] for (k, _, _) in sub)
         if len(pts_dev) < 2:
             return
-        xs = [p[0] for p in pts_dev]
-        ys = [p[1] for p in pts_dev]
+        xs, ys = zip(*pts_dev)
         x0, x1 = min(xs), max(xs)
         y0, y1 = min(ys), max(ys)
-        top, bottom = self._flip(y1), self._flip(y0)
-        pts_top = [(px, self._flip(py)) for (px, py) in pts_dev]
+        flip_h = self._flip_h
+        top, bottom = flip_h - y1, flip_h - y0
+        pts_top = [(px, flip_h - py) for (px, py) in pts_dev]
         # reference `path` attr (page.py:392): drawing commands with
         # top-left coords; our flattened (tag, x, y) triples regroup as
         # m/l single points, c1+c2+c = cubic ('c', p1, p2, p3), c2+c =

@@ -289,3 +289,26 @@ def test_search_layout_honours_layout_settings(kw):
             for m in matches:
                 assert m["text"] == text[m["start"]:m["end"]]
         assert p.search(r"(?s).+", layout=True, **kw)[0]["end"] == len(text)
+
+
+@pytest.mark.parametrize("kw", [{"line_dir": "btt"}, {"char_dir": "rtl"}])
+def test_search_layout_in_other_directions_finds_the_words(kw):
+    """The layout textmap's provenance is rendered with its string, so a
+    match in a btt or rtl layout maps back to the words' chars."""
+    from pdfplumber_spark.kernel.pdfgen import make_pdf
+
+    pdf_bytes = make_pdf([{"width": 612, "height": 792, "texts": [
+        {"x": 72, "top": 100, "size": 12, "text": "alpha beta"},
+        {"x": 72, "top": 130, "size": 12, "text": "Gamma delta"},
+    ]}])
+    with pdfplumber.open(pdf_bytes) as pdf:
+        p = pdf.pages[0]
+        words = {w["text"]: w for w in p.extract_words()}
+        text = p.extract_text(layout=True, **kw)
+        matches = p.search(r"\w+", layout=True, **kw)
+        assert sorted(m["text"] for m in matches) == sorted(words)
+        for m in matches:
+            assert m["text"] == text[m["start"]:m["end"]]
+            w = words[m["text"]]
+            assert (m["x0"], m["top"], m["x1"], m["bottom"]) == \
+                (w["x0"], w["top"], w["x1"], w["bottom"])

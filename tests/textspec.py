@@ -18,7 +18,8 @@ its source char (-1 for imputed whitespace), like ``TextMap.tuples``.
   and not rendered, so search offsets index ``extract_text``'s string;
   layout mode is ``to_textmap(layout=True)`` over presorted words (the
   reference's ``chars_to_textmap`` call): lines are adjacent runs of one
-  cluster, and the string is rendered in the settings' directions.
+  cluster, and the string is rendered in the settings' directions, each
+  character's source carried through the render.
 """
 
 from __future__ import annotations
@@ -51,28 +52,45 @@ def cluster_objects(objs, key, tolerance, preserve_order):
     return [line for _, line in lines]
 
 
-def render(text, line_dir_render, char_dir_render):
-    """``TextMap.to_string``: lines reversed for btt/rtl line rendering,
-    chars reversed for rtl, and for ltr/rtl lines the padded lines read
-    as columns."""
+def render_tagged(tagged, line_dir_render, char_dir_render):
+    """``TextMap.to_string`` over ``(char, source)`` pairs: lines reversed
+    for btt/rtl line rendering, chars reversed for rtl, and for ltr/rtl
+    lines the padded lines read as columns. Each char keeps its source; a
+    padding space and each line break the render joins with are
+    ``(" ", -1)`` and ``("\\n", -1)``."""
     if (line_dir_render, char_dir_render) == ("ttb", "ltr"):
-        return text
-    lines = text.split("\n")
+        return list(tagged)
+    lines = [[]]
+    for c, i in tagged:
+        if c == "\n":
+            lines.append([])
+        else:
+            lines[-1].append((c, i))
     if line_dir_render in ("btt", "rtl"):
         lines.reverse()
     if char_dir_render == "rtl":
-        lines = ["".join(reversed(ln)) for ln in lines]
-    if line_dir_render not in ("rtl", "ltr"):
-        return "\n".join(lines)
-    width = max(len(ln) for ln in lines)
-    if char_dir_render == "btt":
-        lines = [ln.rjust(width) for ln in lines]
-    else:
-        lines = [ln.ljust(width) for ln in lines]
-    columns = []
-    for i in range(width):
-        columns.append("".join(ln[i] for ln in lines))
-    return "\n".join(columns)
+        lines = [list(reversed(ln)) for ln in lines]
+    if line_dir_render in ("rtl", "ltr"):
+        width = max(len(ln) for ln in lines)
+        for ln in lines:
+            pad = [(" ", -1)] * (width - len(ln))
+            if char_dir_render == "btt":
+                ln[:0] = pad
+            else:
+                ln.extend(pad)
+        lines = [[ln[i] for ln in lines] for i in range(width)]
+    out = []
+    for k, ln in enumerate(lines):
+        if k:
+            out.append(("\n", -1))
+        out.extend(ln)
+    return out
+
+
+def render(text, line_dir_render, char_dir_render):
+    """``text`` rendered (:func:`render_tagged`)."""
+    return "".join(c for c, _ in render_tagged(
+        [(c, -1) for c in text], line_dir_render, char_dir_render))
 
 
 class TextSpec:
@@ -192,15 +210,16 @@ class TextSpec:
 
     def textmap(self, chars, wordmap=None, layout=False, **layout_kwargs):
         """``(text, provenance)``: the string and each of its characters'
-        source char position, -1 for imputed whitespace. The provenance is
-        the unrendered string's; the layout string is rendered in the
-        settings' own directions, like ``TextMap.as_string``, so the two
-        line up only for ttb/ltr."""
+        source char position, -1 for imputed whitespace. The layout textmap
+        is rendered in the settings' own directions, like
+        ``TextMap.as_string``, each character carrying its source through
+        the render (a padding space or line break: -1), so the string and
+        the provenance line up in every direction."""
         if wordmap is None:
             wordmap = self.wordmap(chars)
         if not layout:
             tagged = self.plain(chars, wordmap, self.words.y_tolerance)
-            return "".join(c for c, _ in tagged), [i for _, i in tagged]
-        tagged = self.layout(chars, wordmap, **layout_kwargs)
-        return (render("".join(c for c, _ in tagged), self.words.line_dir,
-                       self.words.char_dir), [i for _, i in tagged])
+        else:
+            tagged = render_tagged(self.layout(chars, wordmap, **layout_kwargs),
+                                   self.words.line_dir, self.words.char_dir)
+        return "".join(c for c, _ in tagged), [i for _, i in tagged]
