@@ -7,9 +7,10 @@ Two kinds of input, both a function of ``--seed`` alone and written by this
 script (no code of either checkout makes them):
 
 - lexer inputs: random byte strings of PDF object and content syntax
-  (numbers in every spelling, names with ``#xx``, plain, nested, escaped and
-  unbalanced strings, hex strings, dicts, arrays, refs, keywords, comments,
-  NULs, stray delimiters, inline images). Each goes through
+  (numbers in every spelling, ints longer than ``int()`` parses, names
+  with ``#xx``, plain, nested, escaped and unbalanced strings, hex
+  strings, dicts, arrays, refs, keywords, comments, NULs, stray
+  delimiters, inline images). Each goes through
   ``parse_object`` until it stops advancing, through ``Lexer.next_token``
   to the end, and through the content scanner (``content_ops``, or an
   older checkout's ``tokenize_content``) as one token list;
@@ -19,8 +20,9 @@ script (no code of either checkout makes them):
   Form XObjects (``Do``, with and without their own resources and
   matrix), marked content (``BDC`` with an inline dict or a
   ``/Properties`` name, ``BMC``, ``EMC``), paths, colours, inline images
-  and the odd malformed operand. Each page is parsed with ``style``
-  False and True, and its parser buffers are compared: ``ch_text``,
+  and the odd malformed operand (ints no float holds, also beside reals
+  that read as inf). Each page is parsed with ``style`` False and True, and
+  its parser buffers are compared: ``ch_text``,
   ``ch_font``, ``ch_cid``, ``mc_spans``, the bytes of ``ch_num``,
   ``ch_style``, the line/rect/curve rows, the image rows and the kind
   order.
@@ -44,7 +46,10 @@ import tempfile
 
 NUMBERS = (b"0", b"1", b"-1", b"+3", b"5.", b"-.5", b".5", b"1.2.3", b"12.50",
            b"1e3", b"-2E-1", b"007", b".", b"-", b"+", b"1-2", b"3.4.", b"99999",
-           b"1" + b"0" * 320, b"-" + b"9" * 330, b"0.000001", b"612", b"792")
+           b"1" + b"0" * 320, b"-" + b"9" * 330, b"0.000001", b"612", b"792",
+           b"1" + b"0" * 400 + b".", b"9" * 4400)
+# a real no float holds (it reads as inf) and an int no float holds
+INF, BIG = b"1" + b"0" * 400 + b".", b"1" + b"0" * 400
 NAMES = (b"/F1", b"/Type", b"/A#20B", b"/#41", b"/", b"/MCID", b"/Length",
          b"/Span", b"/P", b"/R", b"/ActualText", b"/W", b"/BBox")
 KEYWORDS = (b"R", b"obj", b"endobj", b"true", b"false", b"null", b"Tj", b"TJ",
@@ -83,7 +88,8 @@ def rand_object(rng: random.Random, depth: int = 0) -> bytes:
     if k == 6:
         return rng.choice(KEYWORDS)
     if k == 7:
-        return b"%d %d R" % (rng.randrange(20), rng.randrange(3))
+        return b"%s %d R" % (rng.choice((b"%d" % rng.randrange(20), b"9" * 4400)),
+                             rng.randrange(3))
     if k in (8, 9):
         items = [rand_object(rng, depth + 1) for _ in range(rng.randrange(5))]
         return b"[" + rng.choice(WS).join(items) + rng.choice((b"]", b"]", b""))
@@ -179,7 +185,9 @@ def text_op(rng: random.Random) -> bytes:
     return rng.choice((b"Tj", b"1 Td", b"(x) 5 Tj", b"/F9 9 Tf", b"Tf",
                        b"1 2 3 4 5 Tm", b"TJ", b"[(a) Tj] TJ", b"xyz",
                        b"1" + b"0" * 320 + b" Tc", b"3 " + b"9" * 330 + b" Td",
-                       b"[(a) 1" + b"0" * 320 + b" (b)] TJ"))
+                       b"[(a) 1" + b"0" * 320 + b" (b)] TJ",
+                       b"1 0 0 1 %s %s Tm" % tuple(rng.sample((INF, BIG), 2)),
+                       b"%s %s 0 rg" % tuple(rng.sample((INF, BIG), 2))))
 
 
 def path_op(rng: random.Random) -> bytes:

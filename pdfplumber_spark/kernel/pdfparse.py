@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import math
 import re
+import sys
 import zlib
 from typing import Dict, List, Optional, Tuple
 
@@ -31,6 +32,7 @@ from .words import NUM_FIELDS, STYLE_ATTRS, CharArrays
 
 MATRIX_ID = (1, 0, 0, 1, 0, 0)  # ints, pdfminer MATRIX_IDENTITY parity
 _NUM_TYPES = frozenset((int, float))
+_FLOAT_MAX = sys.float_info.max
 
 
 def mat_mult(m1, m0):
@@ -188,22 +190,7 @@ _LEX_RE = re.compile(
     rb"|([()<>]|\Z))"  # 7: the slow path's
 )
 
-# the object parser's token regex (_parse_container): _LEX_RE's groups,
-# after a first one that reads a reference spelled "num gen R" as one token
-_OBJ_TOKEN_RE = re.compile(
-    rb"(?:[\x00\t\n\x0c\r ]++|%[^\r\n]*+)*+"
-    rb"(?:(\d++)[\x00\t\n\x0c\r ]++(\d++)[\x00\t\n\x0c\r ]++R"
-    rb"(?![^\x00\t\n\x0c\r ()<>\[\]{}/%])"  # 1, 2: num gen R
-    rb"|/([^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"  # 3: name
-    rb"|([+\-.0-9][0-9.+\-Ee]*)"  # 4: number
-    rb"|(<<)"  # 5
-    rb"|(>>)"  # 6
-    rb"|([\[\]{}])"  # 7
-    rb"|([^\x00\t\n\x0c\r ()<>\[\]{}/%]+)"  # 8: keyword
-    rb"|([()<>]|\Z))"  # 9: the slow path's
-)
-
-# what follows the first number of an "num gen R" reference: the gen
+# what follows the first number of a "num gen R" reference: the gen
 # number's token and the keyword R, each as _LEX_RE reads it
 _REF_TAIL_RE = re.compile(
     rb"(?:[\x00\t\n\x0c\r ]++|%[^\r\n]*+)*+([+\-.0-9][0-9.+\-Ee]*+)"
@@ -235,6 +222,22 @@ def _num_value(t: bytes):
 _OBJ_NUMS = _Memo(_num_value, 8192)
 
 
+def _token(m):
+    """The token of a _LEX_RE match of groups 1-6."""
+    k = m.lastindex
+    if k == 2:
+        return _OBJ_NUMS[m[2]]
+    if k == 1:
+        return _NAMES[m[1]]
+    if k == 6:
+        return _intern_kw(m[6].decode("latin-1"))
+    if k == 3:
+        return "<<"
+    if k == 4:
+        return ">>"
+    return m[5].decode("latin-1")  # [ ] { }
+
+
 def _flat_numbers(m) -> list:
     """The values of a _FLAT_NUMS_RE match (their rule is the content
     scanner's)."""
@@ -263,21 +266,10 @@ class Lexer:
 
     def next_token(self):
         m = _LEX_RE.match(self.data, self.pos)
-        k = m.lastindex
-        if k == 7:
+        if m.lastindex == 7:
             return self._next_token_slow()
         self.pos = m.end()
-        if k == 2:
-            return _num_value(m[2])
-        if k == 1:
-            return _NAMES[m[1]]
-        if k == 6:
-            return _intern_kw(m[6].decode("latin-1"))
-        if k == 3:
-            return "<<"
-        if k == 4:
-            return ">>"
-        return m[5].decode("latin-1")  # [ ] { }
+        return _token(m)
 
     def _next_token_slow(self):
         """What _LEX_RE leaves: EOF, strings, hex strings, a bare '>' and
@@ -368,39 +360,44 @@ _NO_KEY = object()  # the key slot of a dict frame between entries
 
 def _parse_from(lex: Lexer, tok):
     """The object that token ``tok`` starts, the rest read from ``lex``:
-    a dict or array (:func:`_parse_container`), ``num gen R`` as a Ref,
-    true/false/null, or the token itself."""
+    a dict or array (:func:`_parse_container`), else :func:`_scalar`."""
     if tok == "<<" or tok == "[":
         return _parse_container(lex, tok == "<<")
+    v, lex.pos = _scalar(lex.data, tok, lex.pos)
+    return v
+
+
+def _scalar(data: bytes, tok, end: int):
+    """The value that token ``tok`` (ending at ``end``) starts when it
+    opens no container, and where that value ends: an int followed by
+    ``gen R`` (gen an int) is a Ref, true/false/null are themselves, any
+    other token is its own value."""
     if type(tok) is int:
-        m = _REF_TAIL_RE.match(lex.data, lex.pos)
+        m = _REF_TAIL_RE.match(data, end)
         if m is not None:
             gen = _num_value(m[1])
             if type(gen) is int:
-                lex.pos = m.end()
-                return Ref(tok, gen)
-        return tok
-    if type(tok) is tuple:
-        return _KW_VALUES.get(tok[1], tok)
-    return tok
+                return Ref(tok, gen), m.end()
+    elif type(tok) is tuple:
+        return _KW_VALUES.get(tok[1], tok), end
+    return tok, end
 
 
 def _parse_container(lex: Lexer, is_dict: bool):
     """The dict (after its ``<<``) or array (after its ``[``) at
-    ``lex.pos``, nested containers included, in one scan of _OBJ_TOKEN_RE
-    with an explicit stack of the open containers.
+    ``lex.pos``, nested containers included, in one scan of the Lexer's
+    _LEX_RE with an explicit stack of the open containers.
 
     A dict reads a key token, ending at ``>>`` or the end of the data,
     then a value object; only a name key is stored. An array reads value
     objects up to ``]`` or the end. In a value, ``<<`` and ``[`` open a
-    container, an int followed by ``gen R`` is a Ref, true/false/null
-    are themselves, and any other token (``>>`` and ``]`` too) is its own
-    value. An array of plain numbers is read by one _FLAT_NUMS_RE match.
-    The scan restarts after what it did not read itself: a token of the
-    Lexer's slow path, a flat array, a reference spelled other than
-    ``num gen R``."""
+    container and any other token is read by :func:`_scalar` (``>>`` and
+    ``]`` are their own values). An array of plain numbers is read by one
+    _FLAT_NUMS_RE match. The scan restarts after what it did not read
+    itself: a token of the Lexer's slow path, a flat array, the tail of a
+    reference."""
     data = lex.data
-    scan = _OBJ_TOKEN_RE.finditer
+    scan = _LEX_RE.finditer
     pos = lex.pos
     if is_dict:
         cur, key = {}, _NO_KEY
@@ -414,30 +411,16 @@ def _parse_container(lex: Lexer, is_dict: bool):
     v = None  # a container just closed
     while True:
         for m in scan(data, pos):
-            k = m.lastindex
-            jump = None  # where the scan restarts, if not after m
-            if k == 4:
-                t = _OBJ_NUMS[m[4]]
-            elif k == 3:
-                t = _NAMES[m[3]]
-            elif k == 2:  # num gen R
-                if key is _NO_KEY:  # a key token is the first number alone
-                    t = int(m[1])
-                    jump = m.end(1)
-                else:
-                    t = Ref(int(m[1]), int(m[2]))
-            elif k == 8:
-                t = _intern_kw(m[8].decode("latin-1"))
-            elif k == 5:
-                t = "<<"
-            elif k == 6:
-                t = ">>"
-            elif k == 7:
-                t = m[7].decode("latin-1")  # [ ] { }
-            else:  # past the end of the data, a match starts at the end
+            if m.lastindex == 7:
+                # the slow path's token (past the end of the data, a match
+                # starts at the end); the scan restarts after it
                 lex.pos = max(m.start(), pos)
                 t = lex._next_token_slow()
-                jump = lex.pos
+                end = jump = lex.pos
+            else:
+                t = _token(m)
+                end = m.end()
+                jump = None  # where the scan restarts, if not at end
             if key is _NO_KEY:
                 if t != ">>" and t is not None:
                     key = t
@@ -447,22 +430,17 @@ def _parse_container(lex: Lexer, is_dict: bool):
                 if t == "<<":
                     frames.append((cur, key))
                     cur, key = {}, _NO_KEY
-                elif t == "[" and (fm := _FLAT_NUMS_RE.match(data, m.end())) is None:
+                elif t == "[" and (fm := _FLAT_NUMS_RE.match(data, end)) is None:
                     frames.append((cur, key))
                     cur, key = [], _ARRAY
                 else:
                     if t == "[":
                         t = _flat_numbers(fm)
                         jump = fm.end()
-                    elif type(t) is int:
-                        tail = _REF_TAIL_RE.match(data, m.end())
-                        if tail is not None:
-                            gen = _num_value(tail[1])
-                            if type(gen) is int:
-                                t = Ref(t, gen)
-                                jump = tail.end()
-                    elif type(t) is tuple:
-                        t = _KW_VALUES.get(t[1], t)
+                    else:
+                        t, after = _scalar(data, t, end)
+                        if after != end:
+                            jump = after
                     if key is _ARRAY:
                         cur.append(t)
                     else:
@@ -474,7 +452,7 @@ def _parse_container(lex: Lexer, is_dict: bool):
             if v is not None:
                 # the container just closed is a value of the one around it
                 if not frames:
-                    lex.pos = m.end() if jump is None else jump
+                    lex.pos = end if jump is None else jump
                     return v
                 cur, key = frames.pop()
                 if key is _ARRAY:
@@ -645,19 +623,8 @@ class Font:
         widths = doc.resolve(spec.get("Widths"))
         self.widths: Dict[int, float] = {}
         if widths:
-            widths = doc.resolve(widths)
-            try:
-                # a list of plain numbers (no refs), from an int FirstChar
-                if (type(self.first_char) is not int
-                        or not _NUM_TYPES.issuperset(map(type, widths))):
-                    raise TypeError
-                self.widths = dict(zip(range(self.first_char, self.first_char
-                                             + len(widths)),
-                                       map(float, widths)))
-            except (TypeError, OverflowError):
-                for i, w in enumerate(widths):
-                    self.widths[self.first_char + i] = _font_num(
-                        doc.resolve(w), 0.0)
+            for i, w in enumerate(doc.resolve(widths)):
+                self.widths[self.first_char + i] = _font_num(doc.resolve(w), 0.0)
         desc = doc.resolve(spec.get("FontDescriptor")) or {}
         # raw /FontFile (Type1), /FontFile2 (TrueType), /FontFile3
         # (CFF/Type1C) refs kept for lazy embedded-glyph loading
@@ -1697,11 +1664,11 @@ class PDFDocument:
 # and comments (possessive, as in _LEX_RE), told apart by its group number
 # alone. Numbers come first, so "12Tf" is 12 then Tf and "1.2.3" is 1.2
 # then .3; a run of two or more numbers each followed by whitespace
-# ("1 0 0 1 72 700 " before Tm) is one match, split once. Strings are one match each: plain,
-# hex, or with escapes (decoded by _unescape). What is left (a string
-# with nested parentheses, an unterminated one, "<<", a nested "[", the
-# end of the data) matches group 10 and goes to the full Lexer /
-# _parse_from, and the scan restarts where they stopped.
+# ("1 0 0 1 72 700 " before Tm) is one match, split once. Strings are one
+# match each: plain, hex, or with escapes (decoded by _unescape). What is
+# left (a string with nested parentheses, an unterminated one, "<<", a
+# nested "[", the end of the data) matches group 10 and goes to the full
+# Lexer / _parse_from, and the scan restarts where they stopped.
 _CONTENT_NUM = rb"[+-]?(?:\d+\.\d*|\.\d+|\d+)"
 _CONTENT_TOKEN_RE = re.compile(
     rb"(?:[\s\x00]++|%[^\r\n]*+)*+"
@@ -1929,7 +1896,10 @@ def _pop_numbers(stack: list, n: int) -> list:
     if len(vals) < n:
         raise IndexError("operand stack underflow")
     if _NUM_TYPES.issuperset(map(type, vals)):
-        float(max(map(abs, vals)))  # the OverflowError of an int too large
+        if max(map(abs, vals)) > _FLOAT_MAX:  # an int too large, or inf
+            for v in vals:
+                if type(v) is int:
+                    float(v)  # the OverflowError of an int too large
         return vals
     return [_number(v) for v in vals]
 
@@ -2660,8 +2630,10 @@ class PageInterpreter:
                 self._runs.append((len(cids), *run))
                 if self.style:
                     self._run_style.append(run_style)
-                if "char" not in self.kind_order:
-                    self.kind_order.append("char")
+        # an operator that raised notes no char kind, though its strings
+        # before the operand stay recorded
+        if cids:
+            self._note_kind("char")
         return chain
 
     def _emit_chars(self):
@@ -2700,38 +2672,26 @@ class PageInterpreter:
             cols.insert(0, pre)
         if wordspace.any():
             cols.append(np.where(np.array(self.ch_cid) == 32, wordspace, 0.0))
-        ncols = len(cols)
+        kerns = np.array(self._kerns, dtype=np.float64).reshape(-1, 2)
+        k_at = kerns[:, 0].astype(np.int64)
+        nkern = np.bincount(k_at, minlength=n)
+        slots = nkern + len(cols)
+        # each glyph's first slot in its chain (a chain's glyphs, in
+        # emission order, are its order)
         g_chain = np.repeat(chain, lens)
-        if not self._kerns and (chain[1:] >= chain[:-1]).all():
-            # no kern terms, and each chain's runs in a row: a glyph's first
-            # slot is its place in its chain times the columns
-            off = (np.arange(n) - np.searchsorted(g_chain, g_chain)) * ncols
-            chain_len = np.bincount(g_chain, minlength=len(self._chains)) * ncols
-            x = _chain_sums(
-                np.repeat(g_chain, ncols),
-                (off[:, None] + np.arange(ncols)).ravel(),
-                np.column_stack(cols).ravel(), chain_len, g_chain,
-                off + has_pre)
-        else:
-            kerns = np.array(self._kerns, dtype=np.float64).reshape(-1, 2)
-            k_at = kerns[:, 0].astype(np.int64)
-            nkern = np.bincount(k_at, minlength=n)
-            slots = nkern + ncols
-            # each glyph's first slot in its chain (a chain's glyphs, in
-            # emission order, are its order)
-            order = np.argsort(g_chain, kind="stable")
-            chain_len = np.bincount(g_chain, weights=slots,
-                                    minlength=len(self._chains)).astype(np.int64)
-            off = np.empty(n, dtype=np.int64)
-            off[order] = np.cumsum(slots[order]) - slots[order]
-            off -= (np.cumsum(chain_len) - chain_len)[g_chain]
-            k_rank = np.arange(len(k_at)) - (np.cumsum(nkern) - nkern)[k_at]
-            x = _chain_sums(
-                np.concatenate((g_chain[k_at], np.repeat(g_chain, ncols))),
-                np.concatenate((off[k_at] + k_rank, (
-                    (off + nkern)[:, None] + np.arange(ncols)).ravel())),
-                np.concatenate((kerns[:, 1], np.column_stack(cols).ravel())),
-                chain_len, g_chain, off + nkern + has_pre)
+        order = np.argsort(g_chain, kind="stable")
+        chain_len = np.bincount(g_chain, weights=slots,
+                                minlength=len(self._chains)).astype(np.int64)
+        off = np.empty(n, dtype=np.int64)
+        off[order] = np.cumsum(slots[order]) - slots[order]
+        off -= (np.cumsum(chain_len) - chain_len)[g_chain]
+        k_rank = np.arange(len(k_at)) - (np.cumsum(nkern) - nkern)[k_at]
+        x = _chain_sums(
+            np.concatenate((g_chain[k_at], np.repeat(g_chain, len(cols)))),
+            np.concatenate((off[k_at] + k_rank, (
+                (off + nkern)[:, None] + np.arange(len(cols))).ravel())),
+            np.concatenate((kerns[:, 1], np.column_stack(cols).ravel())),
+            chain_len, g_chain, off + nkern + has_pre)
         # mat_translate(matrix, x, y), then mat_apply at the box corners
         ex = x * a + yc + e
         fy = x * b + yd + f

@@ -63,6 +63,15 @@ def test_array_of_references():
     assert typed(got) == [("R", 1, 0), ("R", 2, 0), ("int", 7)]
 
 
+def test_number_int_rejects_is_0_also_in_a_reference():
+    """A number token longer than int() parses (4300 digits on CPython)
+    is 0, as the object number of ``num gen R`` too."""
+    huge = b"9" * 4400
+    assert typed(parse(b"[" + huge + b" 0 R 1]")) == [("R", 0, 0), ("int", 1)]
+    got = parse(b"<</A " + huge + b" 0 R/B 2>>")
+    assert typed([got["A"], got["B"]]) == [("R", 0, 0), ("int", 2)]
+
+
 def test_array_ends_where_its_bracket_does():
     lex = Lexer(b"[1 2] 3 [/A 4]<</K [5.5]>>")
     assert parse_object(lex) == [1, 2]

@@ -248,6 +248,41 @@ def test_operand_too_large_for_a_float_drops_only_its_operator(bad):
     assert it.ch_num.tobytes() == want.ch_num.tobytes()
 
 
+INF = BIG + b"."  # a real no float holds: it reads as infinity
+
+
+@pytest.mark.parametrize("bad", [
+    b"1 0 0 1 " + INF + b" " + BIG + b" Tm",
+    b"1 0 0 1 " + BIG + b" " + INF + b" Tm",
+    INF + b" " + BIG + b" 0 rg",
+    BIG + b" 0 " + INF + b" rg",
+], ids=["Tm-inf-first", "Tm-int-first", "rg-inf-first", "rg-int-first"])
+def test_int_too_large_beside_an_infinite_real_drops_its_operator(bad):
+    """An int no float holds drops its operator whatever its other
+    operands are: a real that reads as infinity beside it does not hide
+    it, in either order, and the page keeps the state from before."""
+    def page(op):
+        return one_page_pdf(b"BT /F1 12 Tf 72 700 Td (ab) Tj %s (cd) Tj ET" % op)
+
+    for style in (False, True):
+        (it,) = parse_pdf(page(bad), style=style)
+        (want,) = parse_pdf(page(b""), style=style)
+        assert it.ch_text == list("abcd")
+        assert it.ch_num.tobytes() == want.ch_num.tobytes()
+        assert it.ch_style == want.ch_style
+
+
+def test_text_operator_that_raises_keeps_its_glyphs_but_notes_no_chars():
+    """A TJ whose kern no float holds keeps the glyphs of the strings
+    before that kern, but notes no char kind: the page's kind order has
+    chars only from the next text-showing operator on."""
+    (it,) = parse_pdf(one_page_pdf(
+        b"BT /F1 12 Tf 72 700 Td [(a) " + BIG + b" (b)] TJ ET "
+        b"0 0 5 5 re S BT /F1 12 Tf (c) Tj ET"))
+    assert it.ch_text == ["a", "c"]
+    assert it.kind_order == ["rect", "char"]
+
+
 TYPE1 = (b"<</Type/Font/Subtype/Type1/BaseFont/Helvetica/FirstChar 97"
          b"/Widths[%s]/FontDescriptor<<%s>>>>")
 TYPE3 = (b"<</Type/Font/Subtype/Type3/FirstChar 97/Widths[500 600]"
